@@ -84,7 +84,7 @@ object SparkEntry {
     // CSV sink + source round trip on numeric columns (header + explicit
     // read schema); oracle sees only the parquet original.
     "q_csv_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+      val tmp = graft.Spill.newDir("graft_csv")
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .write.mode("overwrite").option("header", "true").csv(s"$tmp/li")
       s.read
@@ -98,7 +98,7 @@ object SparkEntry {
     // predicate pushdown into the ORC scan on read-back, oracle sees only
     // the original parquet.
     "q_orc_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+      val tmp = graft.Spill.newDir("graft_orc")
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"), col("l_returnflag"))
         .write.mode("overwrite").orc(s"$tmp/li")
@@ -113,7 +113,7 @@ object SparkEntry {
     // explicit schema; the oracle sees only the original parquet, so any
     // escaping infidelity breaks the hash match.
     "q_jsonl_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+      val tmp = graft.Spill.newDir("graft_jsonl")
       t(s, dir, "documents").select(col("doc_id"), col("text"), col("lang"))
         .write.mode("overwrite").json(s"$tmp/docs")
       s.read
@@ -123,7 +123,7 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
     "q_textint_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_textint").toString
+      val tmp = graft.Spill.newDir("graft_textint")
       val ints = t(s, dir, "lineitem").select(col("l_orderkey").cast("int").as("value"))
       graft.sources.TextIntIO.writePartitioned(ints, s"$tmp/ints")
       graft.sources.TextIntIO.sort(graft.sources.TextIntIO.read(s, s"$tmp/ints"))
@@ -133,7 +133,7 @@ object SparkEntry {
     // (TextIntSource) instead of LineRecordReader. chunkSize forces many
     // splits so the snap protocol is exercised, not just planned.
     "q_textint_v2" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_textint_v2").toString
+      val tmp = graft.Spill.newDir("graft_textint_v2")
       val ints = t(s, dir, "lineitem").select(col("l_orderkey").cast("int").as("value"))
       // both halves of the connector: the V2 SINK writes range-partitioned
       // sorted parts (TeraSort contract), the V2 SCAN chunk-splits them back

@@ -1,9 +1,10 @@
 package graft.sources.v2
 
-import java.io.BufferedInputStream
+import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
@@ -14,6 +15,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 connector for the reference's native format: flat text of
   * whitespace-delimited base-10 integers. This is the connector-level
@@ -63,6 +65,18 @@ class TextIntSource extends TableProvider with DataSourceRegister {
 object TextIntTable {
   val Schema: StructType =
     StructType(Seq(StructField("value", IntegerType, nullable = false)))
+
+  /** The active session's Hadoop conf: what the driver plans and commits
+    * with, and what [[broadcastConf]] ships to the tasks.
+    */
+  def hadoopConf(): Configuration = SparkSession.active.sessionState.newHadoopConf()
+
+  /** [[hadoopConf]], broadcast once per scan or write so every task
+    * resolves the same filesystem as the driver, without re-parsing
+    * `core-default.xml` per task.
+    */
+  def broadcastConf(): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf()))
 }
 
 class TextIntTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -111,11 +125,11 @@ class TextIntWrite(path: String, doTruncate: Boolean, queryId: String)
   override def description(): String = s"textint sink $path truncate=$doTruncate"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    TextIntWriterFactory(path, queryId)
+    TextIntWriterFactory(path, queryId, TextIntTable.broadcastConf())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(TextIntTable.hadoopConf())
     if (doTruncate && fs.exists(root))
       fs.listStatus(root).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
         .foreach(s => fs.delete(s.getPath, false))
@@ -128,25 +142,28 @@ class TextIntWrite(path: String, doTruncate: Boolean, queryId: String)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(TextIntTable.hadoopConf())
     messages.collect { case m: TextIntCommitMessage => m }
       .foreach(m => fs.delete(new Path(m.tmpPath), false): Unit)
   }
 }
 
-case class TextIntWriterFactory(path: String, queryId: String) extends DataWriterFactory {
+case class TextIntWriterFactory(
+    path: String, queryId: String, conf: Broadcast[SerializableConfiguration])
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new TextIntDataWriter(path, queryId, partitionId, taskId)
+    new TextIntDataWriter(path, queryId, partitionId, taskId, conf.value.value)
 }
 
 /** Streams one partition to a hidden temp file, space-delimited (the
   * reference's exact format: single spaces, no trailing delimiter).
   */
-class TextIntDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long)
+class TextIntDataWriter(
+    path: String, queryId: String, partitionId: Int, taskId: Long, conf: Configuration)
     extends DataWriter[InternalRow] {
   private val tmp = new Path(path, s".$queryId-$partitionId-$taskId.tmp")
+  private val fs = tmp.getFileSystem(conf)
   private val out = {
-    val fs = tmp.getFileSystem(new Configuration())
     fs.mkdirs(new Path(path))
     new java.io.BufferedOutputStream(fs.create(tmp, true), 64 * 1024)
   }
@@ -169,7 +186,7 @@ class TextIntDataWriter(path: String, queryId: String, partitionId: Int, taskId:
 
   override def abort(): Unit = {
     closeOnce()
-    tmp.getFileSystem(new Configuration()).delete(tmp, false): Unit
+    fs.delete(tmp, false): Unit
   }
 
   override def close(): Unit = closeOnce()
@@ -193,9 +210,8 @@ class TextIntScan(path: String, chunkSize: Long, lenient: Boolean) extends Scan 
     * (`ServerHandler.java:43-52`) — the driver never touches file contents.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(TextIntTable.hadoopConf())
     val status = fs.getFileStatus(root)
     val files =
       if (status.isDirectory)
@@ -212,37 +228,76 @@ class TextIntScan(path: String, chunkSize: Long, lenient: Boolean) extends Scan 
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new TextIntReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory =
+    TextIntReaderFactory(TextIntTable.broadcastConf())
 }
 
 case class TextIntInputPartition(file: String, start: Long, end: Long, lenient: Boolean)
     extends InputPartition
 
-class TextIntReaderFactory extends PartitionReaderFactory {
+case class TextIntReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TextIntPartitionReader(partition.asInstanceOf[TextIntInputPartition])
+    new TextIntPartitionReader(partition.asInstanceOf[TextIntInputPartition], conf.value.value)
+}
+
+object TextIntPartitionReader {
+  /** Bytes per bulk read; a token may straddle two consecutive reads. */
+  val BufBytes: Int = 64 * 1024
+  private val MaxNegMagnitude = 2147483648L // -Int.MinValue
+
+  private def isWs(b: Byte): Boolean = b == ' ' || b == '\n' || b == '\r' || b == '\t'
 }
 
 /** Streams one byte range, emitting every integer token the range owns.
-  * O(1) memory: one 64 KB buffer, one token builder, one reused mutable row.
+  *
+  * Bulk-buffer design: the range is read from the Hadoop stream in
+  * `BufBytes` blocks into the reader's own `byte[]`, and the scan walks that
+  * array by index, accumulating each token's digits into a `long` — no
+  * per-byte stream call and no per-token `String`. O(1) memory: one buffer,
+  * one reused mutable row and, only when `lenient = false`, a copy of the
+  * current token's bytes so the error can name it.
+  *
+  * Token contract: a token is a maximal run of bytes other than the
+  * delimiters `' '`, `'\n'`, `'\r'` and `'\t'`. It parses exactly as
+  * `Integer.parseInt` parses its bytes read as ISO-8859-1 chars: at most one
+  * leading `+` or `-`, then one or more ASCII digits (leading zeros allowed),
+  * with a value inside the `Int` range. Any other token — a lone sign, an
+  * overflow, or any other byte, non-ASCII bytes included — is malformed:
+  * dropped when `lenient`, else a `NumberFormatException` naming it.
   */
-class TextIntPartitionReader(p: TextIntInputPartition) extends PartitionReader[InternalRow] {
+class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
+    extends PartitionReader[InternalRow] {
+  import TextIntPartitionReader._
 
-  private var pos: Long = if (p.start == 0) 0L else p.start - 1
-  private val in: BufferedInputStream = {
+  // file offset of buf(0); reading starts at start-1 (see the boundary snap)
+  private var bufPos: Long = math.max(0L, p.start - 1)
+  private val in: FSDataInputStream = {
     val hp = new Path(p.file)
-    // executors resolve the filesystem from a fresh conf: correct for
-    // file:// and default-fs URIs; a cluster deployment would broadcast the
-    // session's Hadoop conf here
-    val stream = hp.getFileSystem(new Configuration()).open(hp)
-    stream.seek(pos)
-    new BufferedInputStream(stream, 64 * 1024)
+    val stream = hp.getFileSystem(conf).open(hp)
+    stream.seek(bufPos)
+    stream
   }
+  private val buf = new Array[Byte](BufBytes)
+  private var lim = 0 // bytes of buf filled by the last read
+  private var i = 0 // next unscanned byte of buf
   private val row = new SpecificInternalRow(Seq(IntegerType))
-  private val sb = new java.lang.StringBuilder(12)
+  private var tok: Array[Byte] = if (p.lenient) null else new Array[Byte](16)
+  private var tokLen = 0
 
-  private def readByte(): Int = { val b = in.read(); if (b >= 0) pos += 1; b }
-  private def isWs(b: Int): Boolean = b == ' ' || b == '\n' || b == '\r' || b == '\t'
+  /** Reads the next block into `buf`; false at end of file. */
+  private def refill(): Boolean = {
+    bufPos += lim
+    lim = math.max(0, in.read(buf, 0, BufBytes))
+    i = 0
+    lim > 0
+  }
+
+  private def keep(b: Byte): Unit = {
+    if (tokLen == tok.length) tok = java.util.Arrays.copyOf(tok, tokLen * 2)
+    tok(tokLen) = b
+    tokLen += 1
+  }
 
   // boundary snap (`preprocessStart`, NodeHandler.java:119-156): discard
   // through the first delimiter; reading from start-1 means a clean
@@ -250,33 +305,77 @@ class TextIntPartitionReader(p: TextIntInputPartition) extends PartitionReader[I
   // while a token spanning the boundary is discarded here and owned by the
   // split to the left (which reads past its own end to finish it)
   if (p.start > 0) {
-    var b = readByte()
-    while (b != -1 && !isWs(b)) b = readByte()
+    var b: Byte = 0
+    while ((i < lim || refill()) && { b = buf(i); i += 1; !isWs(b) }) ()
   }
 
   override def next(): Boolean = {
     while (true) {
-      var b = readByte()
-      while (b != -1 && isWs(b)) b = readByte()
-      if (b == -1) return false
-      val tokenStart = pos - 1
+      var b = ' '.toByte
+      while (isWs(b)) {
+        if (i == lim && !refill()) return false
+        b = buf(i)
+        i += 1
+      }
+      val tokenStart = bufPos + i - 1
       // a token starting at/after `end` belongs to the next split
       if (tokenStart >= p.end) return false
-      sb.setLength(0)
-      // finish the token even if it crosses `end` (`preprocessEnd`,
-      // NodeHandler.java:158-200)
-      while (b != -1 && !isWs(b)) { sb.append(b.toChar); b = readByte() }
-      try {
-        row.setInt(0, java.lang.Integer.parseInt(sb.toString))
-        return true
-      } catch {
-        case _: NumberFormatException if p.lenient => () // drop and continue
-        case e: NumberFormatException =>
-          throw new NumberFormatException(
-            s"textint: unparseable token '$sb' in ${p.file} at byte $tokenStart")
-      }
+      if (parseToken(tokenStart)) return true
     }
     false // unreachable
+  }
+
+  /** Scans the token whose first byte is `buf(i - 1)` to its end, finishing
+    * it even if it crosses `end` (`preprocessEnd`, NodeHandler.java:158-200),
+    * and leaves `i` on the delimiter after it. True when the token parsed
+    * and its value is in `row`; false when a lenient reader dropped it.
+    */
+  private def parseToken(tokenStart: Long): Boolean = {
+    val a = buf
+    var j = i - 1
+    var n = lim
+    var neg = false
+    var digits = 0
+    var acc = 0L // saturates just past MaxNegMagnitude
+    var ok = true
+    if (tok != null) tokLen = 0
+    val c0 = a(j)
+    if (c0 == '-' || c0 == '+') {
+      neg = c0 == '-'
+      if (tok != null) keep(c0)
+      j += 1
+    }
+    var more = true
+    while (more) {
+      if (j == n) {
+        // at end of file refill() leaves lim = 0: j = 0 keeps i == lim so
+        // the next call to next() sees the end instead of stale bytes
+        more = refill()
+        j = 0
+        n = lim
+      }
+      if (more) {
+        val c = a(j)
+        if (isWs(c)) more = false
+        else {
+          j += 1
+          if (tok != null) keep(c)
+          val d = c - '0'
+          if (d >= 0 && d <= 9) {
+            digits += 1
+            if (ok) { acc = acc * 10 + d; ok = acc <= MaxNegMagnitude }
+          } else ok = false
+        }
+      }
+    }
+    i = j
+    if (ok && digits > 0 && (neg || acc < MaxNegMagnitude)) {
+      row.setInt(0, (if (neg) -acc else acc).toInt)
+      true
+    } else if (p.lenient) false // drop and continue
+    else throw new NumberFormatException(
+      s"textint: unparseable token '${new String(tok, 0, tokLen, StandardCharsets.UTF_8)}'" +
+        s" in ${p.file} at byte $tokenStart")
   }
 
   override def get(): InternalRow = row

@@ -58,7 +58,7 @@ class PropertySpec extends SparkSpec {
 
   test("property: text-int round trip preserves the multiset, sorted") {
     check("textint", 10, Prop.forAll(genInts) { xs =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_prop").toString
+      val tmp = Spill.newDir("graft_prop")
       TextIntIO.writePartitioned(xs.toDF("value"), s"$tmp/t")
       val back = TextIntIO.sort(TextIntIO.read(spark, s"$tmp/t")).as[Int].collect()
       back.toList == xs.sorted
@@ -79,12 +79,41 @@ class PropertySpec extends SparkSpec {
       sep <- Gen.oneOf(" ", "  ", "\n", " \n ")
     } yield (xs, cs, sep)
     check("textint-v2", 15, Prop.forAll(gen) { case (xs, cs, sep) =>
-      val dir = java.nio.file.Files.createTempDirectory("prop_v2")
+      val dir = java.nio.file.Paths.get(Spill.newDir("prop_v2"))
       java.nio.file.Files.write(dir.resolve("f.txt"),
         xs.mkString(sep).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val got = spark.read.format("textint").option("chunkSize", cs.toLong)
         .load(dir.toString).as[Int].collect().toList
       got.sorted == xs.sorted
+    })
+  }
+
+  // Signed, zero-padded, overflowing and malformed ASCII tokens: the V2
+  // reader keeps exactly the tokens Integer.parseInt accepts, in file order.
+  private val genToken: Gen[String] = {
+    val sign = Gen.oneOf("", "+", "-")
+    Gen.frequency(
+      4 -> Gen.chooseNum(Int.MinValue, Int.MaxValue).map(_.toString),
+      2 -> (for { s <- sign; z <- Gen.chooseNum(0, 12); v <- Gen.chooseNum(0, Int.MaxValue) }
+        yield s + "0" * z + v),
+      1 -> (for { s <- sign; v <- Gen.chooseNum(2147483647L, Long.MaxValue) }
+        yield s + v + (if (v % 3 == 0) "9" * 10 else "")),
+      1 -> Gen.oneOf("", "-", "+", "+-1", "--2", "1x", "0x10", "1e3", "1.0", "1_000"))
+  }
+
+  test("property: V2 textint scan == parseInt-filtered tokens, in order") {
+    val gen = for {
+      toks <- Gen.listOf(genToken)
+      cs <- Gen.chooseNum(1, 64)
+      sep <- Gen.oneOf(" ", "\t", "\r\n", "  \n")
+    } yield (toks, cs, sep)
+    check("textint-v2-tokens", 15, Prop.forAll(gen) { case (toks, cs, sep) =>
+      val dir = java.nio.file.Paths.get(Spill.newDir("prop_v2_tok"))
+      java.nio.file.Files.write(dir.resolve("f.txt"),
+        toks.mkString(sep).getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      val got = spark.read.format("textint").option("chunkSize", cs.toLong)
+        .load(dir.toString).as[Int].collect().toList
+      got == toks.flatMap(t => scala.util.Try(Integer.parseInt(t)).toOption)
     })
   }
 

@@ -7,7 +7,7 @@ import graft.sources.TextIntIO
 class TextIntIOSpec extends SparkSpec {
 
   test("read: lenient mode drops malformed tokens, strict mode raises") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bad").resolve("f.txt")
+    val tmp = Paths.get(Spill.newDir("graft_bad")).resolve("f.txt")
     java.nio.file.Files.writeString(tmp, "1 2 oops 4")
     import spark.implicits._
     val lenientVals = graft.sources.TextIntIO.read(spark, tmp.toString)
@@ -21,8 +21,7 @@ class TextIntIOSpec extends SparkSpec {
       messages(ex).mkString(" | "))
   }
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = Spill.newDir(prefix)
 
   private def writeInput(xs: Seq[Int]): String = {
     val dir = tmp("textint")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,7 @@ class TextIntSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeTemp(content: String): String = {
-    val dir = Files.createTempDirectory("graft_textint_v2")
+    val dir = Paths.get(Spill.newDir("graft_textint_v2"))
     Files.write(dir.resolve("part-00000.txt"), content.getBytes(StandardCharsets.UTF_8))
     dir.toString
   }
@@ -71,7 +71,7 @@ class TextIntSourceSpec extends SparkSpec {
   }
 
   test("directory input: all part files read, underscore/dot files skipped") {
-    val dir = Files.createTempDirectory("graft_textint_dir")
+    val dir = Paths.get(Spill.newDir("graft_textint_dir"))
     Files.write(dir.resolve("a.txt"), "1 2".getBytes(StandardCharsets.UTF_8))
     Files.write(dir.resolve("b.txt"), "3 4".getBytes(StandardCharsets.UTF_8))
     Files.write(dir.resolve("_SUCCESS"), "99".getBytes(StandardCharsets.UTF_8))
@@ -79,7 +79,7 @@ class TextIntSourceSpec extends SparkSpec {
   }
 
   test("V2 write: round trip preserves the multiset; files are space-joined") {
-    val tmp = Files.createTempDirectory("graft_v2w").toString + "/out"
+    val tmp = Spill.newDir("graft_v2w") + "/out"
     val xs = Seq(5, -3, 999999, 0, 1000000, 42)
     xs.toDF("value").coalesce(2).write.format("textint").mode("append").save(tmp)
     assert(readV2(tmp, 16).sorted == xs.sorted)
@@ -96,14 +96,14 @@ class TextIntSourceSpec extends SparkSpec {
   }
 
   test("V2 write: overwrite truncates old parts atomically in the commit") {
-    val tmp = Files.createTempDirectory("graft_v2o").toString + "/out"
+    val tmp = Spill.newDir("graft_v2o") + "/out"
     Seq(1, 2, 3).toDF("value").write.format("textint").mode("append").save(tmp)
     Seq(9, 8).toDF("value").write.format("textint").mode("overwrite").save(tmp)
     assert(readV2(tmp, 64).sorted == Seq(8, 9))
   }
 
   test("V2 write of a range-partitioned sort: part concat IS the total order") {
-    val tmp = Files.createTempDirectory("graft_v2s").toString + "/out"
+    val tmp = Spill.newDir("graft_v2s") + "/out"
     val ints = sf("lineitem").select(col("l_orderkey").cast("int").as("value"))
     ints.repartitionByRange(4, col("value")).sortWithinPartitions("value")
       .write.format("textint").mode("append").save(tmp)
@@ -118,11 +118,83 @@ class TextIntSourceSpec extends SparkSpec {
 
   test("end-to-end: V2 scan of a TeraSort-partitioned write, totally sorted") {
     val ints = sf("lineitem").select(col("l_orderkey").cast("int").as("value"))
-    val tmp = Files.createTempDirectory("graft_textint_rt").toString
+    val tmp = Spill.newDir("graft_textint_rt")
     graft.sources.TextIntIO.writePartitioned(ints, s"$tmp/ints")
     val back = spark.read.format("textint").option("chunkSize", 4096)
       .load(s"$tmp/ints").orderBy("value").as[Int].collect().toSeq
     val expected = ints.as[Int].collect().toSeq.sorted
     assert(back == expected)
+  }
+
+  // The reader parses BYTES: Integer.parseInt of the token's bytes read as
+  // ISO-8859-1 chars is its exact oracle. (parseInt of the decoded string
+  // would accept non-ASCII digits such as U+0663 '٣'; the reader must not.)
+  private def parseIntOfBytes(t: String): Option[Int] = scala.util.Try(Integer.parseInt(
+    new String(t.getBytes(StandardCharsets.UTF_8), StandardCharsets.ISO_8859_1))).toOption
+
+  test("byte-level parse matches Integer.parseInt token for token, any chunkSize") {
+    val tokens = Seq("+7", "-0", "007", "-", "+", "2147483647", "2147483648",
+      "-2147483648", "-2147483649", "0" * 28 + "42", "9" * 25, "٣", "12")
+    val delims = Seq(" ", "\r\n", "\t", "  \n")
+    val content = tokens.zipWithIndex.map { case (t, k) => t + delims(k % delims.size) }.mkString
+    val expected = tokens.flatMap(parseIntOfBytes)
+    assert(expected == Seq(7, 0, 7, Int.MaxValue, Int.MinValue, 42, 12))
+    val path = writeTemp(content)
+    (1L to 40L).foreach { cs =>
+      assert(readV2(path, cs) == expected, s"chunkSize=$cs")
+    }
+    val strict = spark.read.format("textint").option("lenient", false).load(path)
+    val e = intercept[org.apache.spark.SparkException](strict.collect())
+    assert(e.getCause.getMessage.contains("unparseable token '-' "), e.getCause.getMessage)
+  }
+
+  test("tokens straddling the reader's buffer refill parse whole") {
+    import graft.sources.v2.TextIntPartitionReader.BufBytes
+    // split 0 refills at BufBytes and 2*BufBytes: one good and one bad
+    // token straddle those two offsets
+    val pad = "7 " * ((BufBytes - 4) / 2)
+    val mid = " 5" * ((BufBytes - 12) / 2)
+    val content = pad + "-2147483648" + mid + " 12x34567 3"
+    assert(content.indexOf("-2147483648") < BufBytes &&
+      content.indexOf("-2147483648") + 11 > BufBytes)
+    assert(content.indexOf("12x34567") < 2 * BufBytes &&
+      content.indexOf("12x34567") + 8 > 2 * BufBytes)
+    val expected = content.split(" ").toSeq.filter(_.nonEmpty).flatMap(parseIntOfBytes)
+    val path = writeTemp(content)
+    Seq(4L * BufBytes, BufBytes - 3L, BufBytes.toLong, BufBytes + 1L, 40000L).foreach { cs =>
+      assert(readV2(path, cs) == expected, s"chunkSize=$cs")
+    }
+    val strict = spark.read.format("textint").option("lenient", false).load(path)
+    val e = intercept[org.apache.spark.SparkException](strict.collect())
+    assert(e.getCause.getMessage.contains("unparseable token '12x34567' "),
+      e.getCause.getMessage)
+  }
+
+  test("a token running to end of file ends the scan when the last read fills the buffer") {
+    import graft.sources.v2.TextIntPartitionReader.BufBytes
+    Seq(BufBytes, 2 * BufBytes).foreach { len =>
+      val content = ("123 " * (len / 4)).dropRight(1) + "9" // ends in a digit, no delimiter
+      assert(content.length == len)
+      val expected = content.split(" ").toSeq.map(_.toInt)
+      val path = writeTemp(content)
+      // BufBytes + 1 starts the last split of the 2*BufBytes file at BufBytes + 1,
+      // so that split reads exactly BufBytes bytes from start - 1
+      Seq(4L * BufBytes, BufBytes.toLong, BufBytes + 1L, BufBytes - 3L, 40000L).foreach { cs =>
+        assert(readV2(path, cs) == expected, s"len=$len chunkSize=$cs")
+      }
+    }
+  }
+
+  test("V2 write: a part file is byte-identical to mkString(\" \") across flushes") {
+    val rng = new scala.util.Random(11)
+    val xs = Seq(Int.MinValue, Int.MaxValue, 0, -1, 9, 10, 99, 100, 999999999,
+      1000000000, -1000000000) ++ Seq.fill(100000)(rng.nextInt())
+    val out = Paths.get(Spill.newDir("graft_v2b")).resolve("out")
+    xs.toDF("value").coalesce(1).write.format("textint").mode("append").save(out.toString)
+    val parts = out.toFile.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(","))
+    val body = Files.readAllBytes(parts.head.toPath)
+    assert(body.length > 8 * 64 * 1024) // many flushes of the writer's 64 KiB buffer
+    assert(java.util.Arrays.equals(body, xs.mkString(" ").getBytes(StandardCharsets.US_ASCII)))
   }
 }
