@@ -98,6 +98,9 @@ case class PhashBucketItem(
   * cap) participates only in intra (hamming-0) emission, never in
   * cross-group pairing — the exact-dedup registry entry without the
   * quadratic pairing cost.
+  *
+  * PERSISTED STATE-STORE SCHEMA (pinned in StreamingOpsSpec): changing it
+  * breaks checkpoint resume, as the [[FpRegistry]] note describes.
   */
 case class PhashBucket(groups: List[(Long, Seq[Long], List[Long], Boolean)])
 
@@ -123,6 +126,9 @@ case class MinhashBucketItem(
   * group identity (identical signatures share every band, so one entry
   * per distinct signature bounds the state exactly like the phash
   * distinct-hash registry).
+  *
+  * PERSISTED STATE-STORE SCHEMA (pinned in StreamingOpsSpec): changing it
+  * breaks checkpoint resume, as the [[FpRegistry]] note describes.
   */
 case class MinhashBucket(groups: List[(Long, Seq[Long], List[Long], Boolean)])
 
@@ -145,6 +151,9 @@ case class EmbedForgetEvent(op: String, vec_id: Long, embedding: Seq[Float])
   * (rep id, the raw embedding, its L2 norm, member ids id-ascending,
   * frozen flag) per DISTINCT vector — the same exact-dedup-first state
   * shape as [[PhashBucket]], with the norm precomputed once per group.
+  *
+  * PERSISTED STATE-STORE SCHEMA (pinned in StreamingOpsSpec): changing it
+  * breaks checkpoint resume, as the [[FpRegistry]] note describes.
   */
 case class EmbedBucket(groups: List[(Long, Seq[Float], Double, List[Long], Boolean)])
 
@@ -161,6 +170,9 @@ case class EmbedPairRow(id_a: Long, id_b: Long, cos_bp: Long)
   * state store by sc — each task holds only its sc keys' blocks,
   * O(√nlist·d) per key, never the full O(nlist·d) array the r16 closure
   * shipped to every task.
+  *
+  * PERSISTED STATE-STORE SCHEMA (pinned in StreamingOpsSpec): changing it
+  * breaks checkpoint resume, as the [[FpRegistry]] note describes.
   */
 case class HierCellState(
     block: List[(Long, Seq[Float], Double)],
@@ -239,6 +251,121 @@ case class FpRegistry(
   * purge/degrade/unknown-content noop).
   */
 case class ForgetEventRow(fp_md5: String, doc_id: Long, action: String, rep: Option[Long])
+
+/** One key's EXACT-CONTENT group registry — the per-key state machine of
+  * every streaming near-dup operator ([[StreamingOps.phashPairsForgetStream]],
+  * [[StreamingOps.minhashPairsForgetStream]],
+  * [[StreamingOps.embedForgetStream]], [[StreamingOps.cellForgetStream]]
+  * and the per-cell registries of [[StreamingOps.cellNearDupStreamHier]]).
+  * The callers differ only in what they key by, what content identifies a
+  * group, and how two contents score; the update rule is this one.
+  *
+  * Groups are (rep, content, member ids, frozen), taken from the key's
+  * persisted state and handed back by [[groups]]. Member-id → group and
+  * content → group lookups are transient hash indexes rebuilt per
+  * micro-batch invocation, so per-event bookkeeping is O(1); only the cross
+  * loop below is O(active groups) per distinct arrival — O(cap) capped.
+  *
+  *  - INGEST of an id already a member: nothing.
+  *  - INGEST of content equal to a group's: intra pairs (value
+  *    `intraValue`) against the group's members when `home`, then — unless
+  *    the group is frozen — cross pairs against the key's OTHER unfrozen
+  *    groups at the group's content; the id joins the group.
+  *  - INGEST of new content: while fewer than `cap` unfrozen groups exist
+  *    (`cap` = 0: no cap), cross pairs against every unfrozen group, then
+  *    founds a new unfrozen group. At the cap the founder is recorded
+  *    FROZEN when `home` and dropped otherwise: a frozen group never
+  *    cross-pairs (pairing cost stays ≤ cap² per key) but its later exact
+  *    duplicates still emit intra pairs, so exact-duplicate recall is
+  *    unconditional. The cap counts in arrival order; a batch cap that
+  *    retro-drops a whole bucket has no streaming equivalent.
+  *  - FORGET of a member: it leaves its group and the rep re-elects by the
+  *    batch min rule. A group whose last member leaves is PURGED: its
+  *    content is forgotten (a fresh arrival of it founds a new group and
+  *    cross-pairs normally) and, if unfrozen, it frees its cap slot. A
+  *    forget of a non-member id is a noop. Forgets are silent state edits:
+  *    a stream cannot un-emit, so the contract is on FUTURE emission —
+  *    later arrivals pair as if the forgotten id had never been ingested.
+  *
+  * [[applyBatch]] orders one micro-batch by (id, ingest-before-forget), so
+  * a same-batch ingest and forget of one id leaves it forgotten. A cross
+  * pair is emitted when `cross` scores the two contents `Some(value)`;
+  * `cross` = None turns cross pairing off for the key. Two contents are
+  * exact duplicates when their `key`s are equal (the content itself by
+  * default). Pairs go to `out` as (min id, max id, value).
+  */
+private final class ExactGroups[C](
+    state: Seq[(Long, C, List[Long], Boolean)],
+    cap: Int,
+    home: Boolean,
+    intraValue: Long,
+    cross: Option[(C, C) => Option[Long]],
+    out: scala.collection.mutable.Builder[(Long, Long, Long), _],
+    key: C => Any = (c: C) => c) {
+  private val gs = scala.collection.mutable.ArrayBuffer.from(state)
+  private val byMember = scala.collection.mutable.HashMap.empty[Long, Int]
+  private val byContent = scala.collection.mutable.HashMap.empty[Any, Int]
+  gs.indices.foreach { i =>
+    gs(i)._3.foreach(byMember(_) = i)
+    byContent.getOrElseUpdate(key(gs(i)._2), i)
+  }
+  private var nActive = gs.count(!_._4)
+
+  def contains(id: Long): Boolean = byMember.contains(id)
+
+  def ingest(id: Long, c: C): Unit = if (!contains(id)) byContent.get(key(c)) match {
+    case Some(gi) =>
+      val (rep, gc, members, frozen) = gs(gi)
+      if (home) members.foreach(pair(id, _, intraValue))
+      if (!frozen) crossPairs(id, gc, gi)
+      gs(gi) = (rep, gc, members :+ id, frozen)
+      byMember(id) = gi
+    case None =>
+      val frozen = cap > 0 && nActive >= cap
+      if (!frozen) { crossPairs(id, c, -1); nActive += 1 }
+      if (!frozen || home) {
+        byContent(key(c)) = gs.length
+        byMember(id) = gs.length
+        gs += ((id, c, List(id), frozen))
+      }
+  }
+
+  def forget(id: Long): Unit = byMember.remove(id).foreach { gi =>
+    val (rep, c, members, frozen) = gs(gi)
+    val left = members.filterNot(_ == id)
+    if (left.nonEmpty) gs(gi) = (left.min, c, left, frozen)
+    else {
+      // purged in place so indexes stay valid; `groups` drops it
+      gs(gi) = (rep, c, Nil, frozen)
+      if (byContent.get(key(c)).contains(gi)) byContent -= key(c)
+      if (!frozen) nActive -= 1
+    }
+  }
+
+  def applyBatch(events: Iterator[(String, Long, C)]): Unit =
+    events.toList.sortBy(e => (e._2, e._1 != "ingest")).foreach { case (op, id, c) =>
+      if (op == "forget") forget(id) else ingest(id, c)
+    }
+
+  def groups: List[(Long, C, List[Long], Boolean)] = gs.filter(_._3.nonEmpty).toList
+
+  /** Persists [[groups]] to the key's state, or removes the key when none is left. */
+  def saveTo[S](state: GroupState[S])(wrap: List[(Long, C, List[Long], Boolean)] => S): Unit =
+    groups match {
+      case Nil => state.remove()
+      case live => state.update(wrap(live))
+    }
+
+  private def crossPairs(id: Long, c: C, self: Int): Unit = cross.foreach { score =>
+    gs.indices.foreach { oi =>
+      val (_, oc, om, ofrozen) = gs(oi)
+      if (oi != self && !ofrozen) score(c, oc).foreach(v => om.foreach(pair(id, _, v)))
+    }
+  }
+
+  private def pair(a: Long, b: Long, v: Long): Unit =
+    out += ((math.min(a, b), math.max(a, b), v))
+}
 
 /** Structured Streaming surface — north-star extension; the reference has no
   * data-plane streaming (its only loop is the 5 s control-plane heartbeat,
@@ -820,39 +947,24 @@ object StreamingOps {
     * twin of [[graft.operators.MultimodalOps.phashPairs]], extending the
     * incremental-dedup family ([[dedupIngest]] is the exact-hash member)
     * to the media modality, with the same EXACT-DEDUP-FIRST default as the
-    * batch operator: per band bucket the state is a list of exact hash
-    * GROUPS (one bands vector per distinct hash + its member ids), not raw
-    * items. An arriving item either joins its exact group — emitting
-    * hamming-0 pairs against the group's members, handled ONLY in the
-    * hash's band-0 bucket so each intra pair is emitted once — or founds a
-    * new group after pairing (popcount-of-XOR ≤ `maxDist`) against every
-    * OTHER group's members in the bucket. Cross pairs inherit the
-    * group-level distance (Hamming depends only on the hash). Within a
-    * micro-batch items process id-ascending, so the emitted pair set
-    * equals the batch operator's over everything streamed so far, MODULO
-    * two documented deltas: cross pairs colliding in several bands are
-    * emitted once per band (the batch groupBy-min dedup has no streaming
-    * equivalent without all-pairs state — downstream
-    * `dropDuplicates(id_a, id_b)` is the dedup), and a `maxBucket` cap —
-    * counted in DISTINCT hashes, the batch cap's unit — stops NEW groups
-    * from CROSS-pairing in a hot bucket from its (maxBucket+1)-th
-    * distinct hash onward while members of existing groups still land
-    * (exact-duplicate saturation can no longer kill near-dup recall — the
-    * measured ×100 failure mode of raw-item capping). In non-zero bands an
-    * over-cap founder is simply not recorded; in the BAND-0 bucket — the
-    * designated home of intra (hamming-0) emission — it is recorded as a
-    * FROZEN group instead: frozen groups never cross-pair (cost stays
-    * ≤ cap² per bucket) but their later exact duplicates still emit intra
-    * pairs, so hamming-0 recall is UNCONDITIONAL even when a group's
-    * band-0 bucket was saturated before its founder arrived (r12 left
-    * that gap: such a group existed only in other bands and its exact-dup
-    * pairs were silently lost). The frozen entries are exactly the state
-    * an incremental EXACT dedup must keep anyway (one entry per distinct
-    * hash). The batch cap retro-drops the whole bucket; a stream cannot
-    * un-emit (spec pins parity in the uncapped configuration). State is
-    * O(buckets · min(distinct-hashes, cap)) hashes for pairing plus the
-    * band-0 exact-dedup registry + member id lists — the same state a
-    * production incremental dedup keeps.
+    * batch operator: per band bucket (`k:v`, one per band of the hash) the
+    * state is an [[ExactGroups]] registry of exact-hash groups, not raw
+    * items. Cross pairs score the popcount-of-XOR Hamming distance of the
+    * two hashes and emit when ≤ `maxDist`; they inherit the group-level
+    * distance (Hamming depends only on the hash). Intra (hamming-0) pairs
+    * emit ONLY in the hash's band-0 bucket, so each lands once; past the
+    * `maxBucket` cap — counted in DISTINCT hashes, the batch cap's unit —
+    * a founder is recorded frozen there and dropped in the other bands, so
+    * exact-duplicate saturation can no longer kill near-dup recall (the
+    * measured ×100 failure mode of raw-item capping) and hamming-0 recall
+    * stays unconditional. Within a micro-batch items process id-ascending,
+    * so the emitted pair set equals the batch operator's over everything
+    * streamed so far, MODULO two documented deltas: a cross pair colliding
+    * in several bands is emitted once per shared band (downstream
+    * `dropDuplicates(id_a, id_b)` is the dedup), and the cap is
+    * arrival-order (spec pins parity uncapped). State is
+    * O(buckets · min(distinct-hashes, cap)) hashes plus the band-0
+    * exact-dedup registry and member id lists.
     */
   def phashPairsStream(
       items: Dataset[PhashItem],
@@ -865,26 +977,14 @@ object StreamingOps {
   }
 
   /** [[phashPairsStream]] with TAKEDOWN support — the perceptual-media
-    * registry made deletable at ingest time (the
-    * [[minhashPairsForgetStream]] discipline on the second band-bucket
-    * twin; takedown requests name images as often as text). One event
-    * stream carries ingests and forgets; [[phashPairsStream]] is this
-    * operator fed all-ingest events — ONE state machine for both.
-    *
-    * Forget semantics, per band bucket of the named hash: the media id
-    * leaves its exact-hash group's member list; the group rep re-elects
-    * by the batch min rule; a group whose last member leaves is PURGED —
-    * the hash is forgotten, a fresh arrival of the same content founds a
-    * new group and cross-pairs normally (re-admission), and a purged
-    * unfrozen group frees its cap slot. Forgets are SILENT state edits
-    * (retraction of published pairs is the downstream batch
-    * [[graft.operators.DedupOps.dedupForget]]'s job — q_media_forget);
-    * the pinned contract is on FUTURE emission: post-takedown arrivals
-    * pair exactly as if the tombstoned media had never been ingested.
-    * Within a micro-batch events apply in (media_id,
-    * ingest-before-forget) order — a same-batch ingest+takedown resolves
-    * with the takedown winning. A forget of unknown content or a
-    * non-member id is a noop.
+    * registry made deletable at ingest time (takedown requests name images
+    * as often as text). One event stream carries ingests and forgets, each
+    * routed to every band bucket of the named hash; [[phashPairsStream]] is
+    * this operator fed all-ingest events. The forget rules — rep
+    * re-election, purge and re-admission, freed cap slots, takedown winning
+    * within a micro-batch — are [[ExactGroups]]'. Retracting published
+    * pairs is the downstream batch
+    * [[graft.operators.DedupOps.dedupForget]]'s job (q_media_forget).
     */
   def phashPairsForgetStream(
       events: Dataset[PhashForgetEvent],
@@ -898,75 +998,19 @@ object StreamingOps {
       .groupByKey(_.bkey)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
         (bkey: String, batch: Iterator[PhashBucketItem], state: GroupState[PhashBucket]) => {
-          def ham(a: Seq[Long], b: Seq[Long]): Long =
-            a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y).toLong }.sum
-          val isBandZero = bkey.startsWith("0:")
-          var groups = state.getOption.map(_.groups).getOrElse(Nil)
           val out = List.newBuilder[(Long, Long, Long)]
-          batch.toList
-            .sortBy(it => (it.media_id, if (it.op == "ingest") 0 else 1))
-            .foreach { it =>
-            if (it.op == "forget") {
-              groups.indexWhere(_._3.contains(it.media_id)) match {
-                case gi if gi >= 0 =>
-                  val (_, bs, members, frozen) = groups(gi)
-                  val left = members.filterNot(_ == it.media_id)
-                  if (left.isEmpty)
-                    // purge: the hash is forgotten (re-admission open);
-                    // an unfrozen purge frees its cap slot via the
-                    // groups.count(!_._4) recount below
-                    groups = groups.patch(gi, Nil, 1)
-                  else
-                    // re-elect the rep by the batch min rule
-                    groups = groups.updated(gi, (left.min, bs, left, frozen))
-                case _ => // unknown content / non-member id: noop
-              }
-            } else {
-            val seen = groups.exists(_._3.contains(it.media_id))
-            if (!seen) groups.indexWhere(_._2 == it.bands) match {
-              case gi if gi >= 0 =>
-                // exact-duplicate arrival: hamming-0 pairs once (band 0,
-                // frozen or not — exact-dup recall is unconditional),
-                // cross pairs against the bucket's OTHER unfrozen groups
-                // (the batch output is member-level), membership recorded
-                // in every bucket the hash lives in
-                val (rep, bs, members, frozen) = groups(gi)
-                if (isBandZero) members.foreach { id =>
-                  out += ((math.min(id, it.media_id), math.max(id, it.media_id), 0L))
-                }
-                if (!frozen) groups.foreach { case (r, obs, omembers, ofrozen) =>
-                  if (r != rep && !ofrozen) {
-                    val d = ham(obs, it.bands)
-                    if (d <= maxDist) omembers.foreach { id =>
-                      out += ((math.min(id, it.media_id), math.max(id, it.media_id), d))
-                    }
-                  }
-                }
-                groups = groups.updated(gi, (rep, bs, members :+ it.media_id, frozen))
-              case _ =>
-                val capped = maxBucket > 0 &&
-                  groups.count(!_._4) >= maxBucket
-                if (!capped) {
-                  groups.foreach { case (_, bs, members, ofrozen) =>
-                    if (!ofrozen) {
-                      val d = ham(bs, it.bands)
-                      if (d <= maxDist) members.foreach { id =>
-                        out += ((math.min(id, it.media_id), math.max(id, it.media_id), d))
-                      }
-                    }
-                  }
-                  groups = groups :+ ((it.media_id, it.bands, List(it.media_id), false))
-                } else if (isBandZero) {
-                  // band 0 is where intra pairs emit: record the group
-                  // FROZEN so later exact duplicates still pair, without
-                  // re-opening the quadratic cross-pairing the cap bounds
-                  groups = groups :+ ((it.media_id, it.bands, List(it.media_id), true))
-                }
-            }
-            }
-          }
-          if (groups.isEmpty) state.remove()
-          else state.update(PhashBucket(groups))
+          // band 0 is the home of intra (hamming-0) pairs, so each is
+          // emitted once, and of the frozen over-cap founders they need;
+          // elsewhere an over-cap founder is not recorded
+          val reg = new ExactGroups[Seq[Long]](
+            state.getOption.map(_.groups).getOrElse(Nil), maxBucket,
+            home = bkey.startsWith("0:"), intraValue = 0L,
+            cross = Some { (a, b) =>
+              val d = a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y).toLong }.sum
+              if (d <= maxDist) Some(d) else None
+            }, out)
+          reg.applyBatch(batch.map(it => (it.op, it.media_id, it.bands)))
+          reg.saveTo(state)(PhashBucket(_))
           out.result()
         })
       .flatMap(_.map { case (a, b, d) => PhashPairRow(a, b, d) })
@@ -994,39 +1038,21 @@ object StreamingOps {
     * way. Docs with no 3-shingle (< 3 tokens) drop, matching their
     * absence from the batch explode.
     *
-    * Pairing stage — [[phashPairsStream]]'s per-band-bucket discipline
-    * with the full signature as the exact-group identity: an arrival
-    * either joins its signature's group (emitting a pair event against
-    * each member — identical signatures share EVERY band in the batch
-    * operator, so intra emission runs in every bucket, giving the pair
-    * its full `n_shared_bands` multiplicity) or founds a new group after
-    * pairing against every other unfrozen group's members in the bucket.
-    * Emitted events are (id_a, id_b, band); uncapped, over any arrival
-    * order and micro-batch slicing, `groupBy(id_a, id_b).count()` over
-    * the emitted events equals the batch operator's
-    * (id_a, id_b, n_shared_bands) exactly (spec-pinned) — each unordered
-    * pair emits exactly once per shared band, when its later member
-    * arrives in that band's bucket.
-    *
-    * `maxBucket` > 0 is the hot-bucket guard in the family's
-    * arrival-order form, counted in DISTINCT SIGNATURES (the group
-    * unit): from a bucket's (maxBucket+1)-th distinct signature onward,
-    * new groups are recorded FROZEN — they never cross-pair (per-bucket
-    * pairing cost stays ≤ cap²) but their later exact-signature
-    * duplicates still emit intra events in every band, so
-    * identical-content recall is unconditional. The batch cap
-    * retro-drops the whole over-cap bucket (`wholesale_drop`); a stream
-    * cannot un-emit — the documented capped-mode delta of every twin in
-    * the family (parity is pinned uncapped).
-    *
-    * State is O(buckets · min(distinct-sigs, cap)) signatures plus
-    * member id lists — `numHashes` longs per distinct signature per
-    * band, the registry an incremental text dedup keeps anyway. Ingest
-    * cost contract ([[embedNearDupStream]]'s discipline): bookkeeping
-    * (seen check, exact-group lookup) is O(1) per arrival via transient
-    * hash indexes rebuilt per micro-batch invocation; the cross-pairing
-    * loop is O(active groups) per DISTINCT arrival — inherent to the
-    * semantics, O(cap) capped.
+    * Pairing stage — per band bucket (the band index plus its `r`
+    * signature rows) an [[ExactGroups]] registry with the full signature
+    * as the exact-group identity. Every collision emits its band: identical
+    * signatures share EVERY band in the batch operator, so intra pairs and
+    * frozen over-cap founders live in every bucket, and a cross pair emits
+    * once per shared band, when its later member arrives in that band's
+    * bucket. Uncapped, over any arrival order and micro-batch slicing,
+    * `groupBy(id_a, id_b).count()` over the emitted (id_a, id_b, band)
+    * events equals the batch operator's (id_a, id_b, n_shared_bands)
+    * exactly (spec-pinned). `maxBucket` > 0 is the hot-bucket guard in the
+    * registry's arrival-order form, counted in DISTINCT SIGNATURES; the
+    * batch cap retro-drops the whole over-cap bucket (`wholesale_drop`), a
+    * stream cannot un-emit — the family's capped-mode delta (parity is
+    * pinned uncapped). State is O(buckets · min(distinct-sigs, cap))
+    * signatures plus member id lists.
     */
   def minhashPairsStream(
       docs: DataFrame,
@@ -1043,37 +1069,18 @@ object StreamingOps {
       numHashes, bands, maxBucket)
   }
 
-  /** [[minhashPairsStream]] with TAKEDOWN support — the near-dup
-    * registry twin made deletable (the [[forgetStream]] discipline
-    * applied to band-bucket state; previously only the EXACT-dedup
-    * registry had a tombstone path). One event stream carries ingests
-    * and forgets; [[minhashPairsStream]] is exactly this operator fed
-    * all-ingest events, so there is ONE state machine for both (the
-    * shared-helper anti-drift rule).
-    *
-    * Forget semantics, per band bucket of the named content: the doc
-    * leaves its exact-signature group's member list; the group rep
-    * re-elects by the batch min rule (min of surviving members); a
-    * group whose last member leaves is PURGED — its signature is
-    * forgotten and a fresh arrival of the same content founds a new
-    * group (and cross-pairs normally), the re-admission contract.
-    * Forgets are SILENT state edits (a stream cannot un-emit pairs
-    * already produced — retracting published pairs is the downstream
-    * batch [[graft.operators.DedupOps.dedupForget]]'s job); the
-    * observable contract is on FUTURE emission: an arrival after a
-    * takedown pairs exactly as if the tombstoned docs had never been
-    * ingested (spec-pinned against the batch operator over surviving
-    * docs, including across a checkpoint resume). Within a micro-batch,
-    * events apply in (doc_id, ingest-before-forget) order — a same-batch
-    * ingest+takedown of one doc resolves with the takedown winning
-    * ([[forgetStream]]'s rule). A forget of unknown content or a
-    * non-member id is a noop.
-    *
-    * Capped mode: forgetting a FROZEN group's member edits it in place;
-    * a purged UNFROZEN group frees its cap slot (nActive decrements), so
-    * deletion capacity recovers exactly like [[forgetStream]]'s. Unlike
-    * the untracked COUNT there, band state keeps every member id, so
-    * forgets here are always exact — the cap only bounds cross-pairing.
+  /** [[minhashPairsStream]] with TAKEDOWN support — the text near-dup
+    * registry made deletable. One event stream carries ingests and
+    * forgets, each routed to every band bucket of the named content's
+    * signature; [[minhashPairsStream]] is this operator fed all-ingest
+    * events. The forget rules — rep re-election, purge and re-admission,
+    * freed cap slots, takedown winning within a micro-batch — are
+    * [[ExactGroups]]'; band state keeps every member id, so forgets are
+    * always exact (unlike [[forgetStream]]'s untracked count). The pinned
+    * contract is on future emission: an arrival after a takedown pairs as
+    * if the tombstoned docs had never been ingested (spec-pinned against
+    * the batch operator over surviving docs, across a checkpoint resume
+    * too).
     */
   def minhashPairsForgetStream(
       events: Dataset[ForgetEvent],
@@ -1100,89 +1107,21 @@ object StreamingOps {
       .groupByKey(_.bkey)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
         (_: String, batch: Iterator[MinhashBucketItem], state: GroupState[MinhashBucket]) => {
-          // transient per-invocation indexes over the persisted List state
-          // (the [[embedNearDupStream]]/phash discipline): member-id → group
-          // index for the seen check AND the forget lookup, signature →
-          // group index for the exact-group lookup — per-arrival
-          // BOOKKEEPING is O(1) instead of the r17 `indexWhere`/`exists`
-          // scans (quadratic per bucket on the uncapped path). The
-          // cross-pairing loop stays O(active groups) per DISTINCT arrival
-          // — the operator's semantics (every new signature pairs against
-          // each group), O(cap) when `maxBucket` > 0. Purges blank the
-          // group in place (indices stay stable within the batch) and the
-          // final state.update filters the empties out.
-          val groups = scala.collection.mutable.ArrayBuffer.empty[
-            (Long, Seq[Long], List[Long], Boolean)]
-          state.getOption.foreach(_.groups.foreach(groups += _))
-          val memberIdx = scala.collection.mutable.HashMap.empty[Long, Int]
-          val sigIdx = scala.collection.mutable.HashMap.empty[Seq[Long], Int]
-          groups.zipWithIndex.foreach { case (g, i) =>
-            g._3.foreach(memberIdx(_) = i)
-            if (!sigIdx.contains(g._2)) sigIdx(g._2) = i
-          }
-          var nActive = groups.count(!_._4)
-          val out = List.newBuilder[(Long, Long, Int)]
-          batch.toList
-            .sortBy(it => (it.doc_id, if (it.op == "ingest") 0 else 1))
-            .foreach { it =>
-            if (it.op == "forget") memberIdx.get(it.doc_id).foreach { gi =>
-              val (rep, sig, members, frozen) = groups(gi)
-              val left = members.filterNot(_ == it.doc_id)
-              memberIdx -= it.doc_id
-              if (left.isEmpty) {
-                // purge: forget the signature so the same content
-                // re-admits as new; an unfrozen purge frees its cap slot
-                groups(gi) = (rep, sig, Nil, frozen)
-                if (sigIdx.get(sig).contains(gi)) sigIdx -= sig
-                if (!frozen) nActive -= 1
-              } else
-                // re-elect the rep by the batch min rule
-                groups(gi) = (left.min, sig, left, frozen)
-            } else if (!memberIdx.contains(it.doc_id)) sigIdx.get(it.sig) match {
-              case Some(gi) =>
-                // exact-signature arrival: intra events in EVERY band (the
-                // batch pair carries n_shared_bands = bands for identical
-                // signatures), cross events against the bucket's other
-                // unfrozen groups
-                val (rep, sig, members, frozen) = groups(gi)
-                members.foreach { id =>
-                  out += ((math.min(id, it.doc_id), math.max(id, it.doc_id), it.band))
-                }
-                if (!frozen) groups.zipWithIndex.foreach { case ((_, _, om, ofz), oi) =>
-                  if (oi != gi && !ofz) om.foreach { id =>
-                    out += ((math.min(id, it.doc_id), math.max(id, it.doc_id), it.band))
-                  }
-                }
-                groups(gi) = (rep, sig, members :+ it.doc_id, frozen)
-                memberIdx(it.doc_id) = gi
-              case None =>
-                val capped = maxBucket > 0 && nActive >= maxBucket
-                if (!capped) {
-                  groups.foreach { case (_, _, om, ofz) =>
-                    if (!ofz) om.foreach { id =>
-                      out += ((math.min(id, it.doc_id), math.max(id, it.doc_id), it.band))
-                    }
-                  }
-                  sigIdx(it.sig) = groups.length
-                  memberIdx(it.doc_id) = groups.length
-                  groups += ((it.doc_id, it.sig, List(it.doc_id), false))
-                  nActive += 1
-                } else {
-                  // over-cap founder: recorded frozen (in every band — the
-                  // intra-recall home is every shared bucket here), so its
-                  // exact-signature duplicates still emit intra events
-                  sigIdx(it.sig) = groups.length
-                  memberIdx(it.doc_id) = groups.length
-                  groups += ((it.doc_id, it.sig, List(it.doc_id), true))
-                }
-            }
-          }
-          val kept = groups.filter(_._3.nonEmpty).toList
-          if (kept.isEmpty) state.remove()
-          else state.update(MinhashBucket(kept))
+          val items = batch.toList
+          val band = items.head.band
+          val out = List.newBuilder[(Long, Long, Long)]
+          // identical signatures share every band, so intra pairs and
+          // frozen founders live in every bucket; each collision emits
+          // its band (the batch n_shared_bands is the per-pair count)
+          val reg = new ExactGroups[Seq[Long]](
+            state.getOption.map(_.groups).getOrElse(Nil), maxBucket,
+            home = true, intraValue = band,
+            cross = Some((_, _) => Some(band.toLong)), out)
+          reg.applyBatch(items.iterator.map(it => (it.op, it.doc_id, it.sig)))
+          reg.saveTo(state)(MinhashBucket(_))
           out.result()
         })
-      .flatMap(_.map { case (a, b, k) => MinhashPairRow(a, b, k) })
+      .flatMap(_.map { case (a, b, k) => MinhashPairRow(a, b, k.toInt) })
   }
 
   /** Streaming embedding-cosine near-dup detection — the
@@ -1192,35 +1131,22 @@ object StreamingOps {
     * text, [[phashPairsStream]] perceptual media, this one embeddings):
     * each arrival lands in its single sign-LSH bucket (the batch
     * operator's `signBucket` over the first `bits` dims, computed
-    * executor-side — one bucket per item, no per-band duplication), where
-    * the state is the exact-dedup group list. An exact duplicate joins
-    * its group — emitting intra pairs at cos_bp = 10000 against the
-    * members — and cross pairs inherit the REP-level cosine (identical
-    * vectors, identical dot: the batch member-re-attach rule); a new
-    * distinct vector pairs against the bucket's other groups at the
-    * double-exact batch arithmetic (float-elem dots accumulated
-    * left-to-right, `floor(c·10⁴ + 0.5)` — bit-identical to
-    * `vec_dot` + `roundBp`) before founding its own group. Over any batch
-    * slicing the emitted pair set equals the UNCAPPED batch operator's
-    * (spec-pinned parity; id-ascending processing inside each
-    * micro-batch). `maxBucket` > 0 applies the [[phashPairsStream]]
-    * frozen-group discipline: beyond the cap new groups only register for
-    * intra emission (exact-dup recall unconditional) and never
-    * cross-pair — arrival-order capping, vs the batch's id-rank
-    * participation cap (parity is pinned uncapped, the family's
-    * documented delta). `bits` is pinned per stream — a stream cannot
-    * re-shard its key space mid-flight; production re-buckets offline
-    * with [[rebucketRegistry]] (`SimOps.autoSignBits` of the current
-    * registry → rebuilt per-bucket state → resume via `initialState`)
-    * when the registry outgrows the space.
-    * State: one entry per distinct vector per bucket + member id lists —
-    * the exact-dedup registry an incremental dedup keeps anyway. Ingest
-    * cost contract: bookkeeping (seen check, exact-group lookup) is O(1)
-    * per arrival via transient hash indexes rebuilt per micro-batch
-    * invocation; the rep-dot cross-pairing is O(active groups) per
-    * DISTINCT arrival — inherent to the semantics, O(cap) when
-    * `maxBucket` > 0 and O(bucket's distinct corpus) uncapped (same
-    * caveat as the state size).
+    * executor-side — one bucket per item, no per-band duplication), whose
+    * state is an [[ExactGroups]] registry of exact-vector groups. Intra
+    * pairs score cos_bp = 10000; cross pairs score the REP-level cosine
+    * (identical vectors, identical dot: the batch member-re-attach rule)
+    * at the double-exact batch arithmetic (float-elem dots accumulated
+    * left-to-right, `floor(c·10⁴ + 0.5)` — bit-identical to `vec_dot` +
+    * `roundBp`) and emit when ≥ `thresholdBp`. Over any batch slicing the
+    * emitted pair set equals the UNCAPPED batch operator's (spec-pinned
+    * parity); `maxBucket` > 0 is the registry's arrival-order cap, vs the
+    * batch's id-rank participation cap (the family's documented delta).
+    * `bits` is pinned per stream — a stream cannot re-shard its key space
+    * mid-flight; production re-buckets offline with [[rebucketRegistry]]
+    * (`SimOps.autoSignBits` of the current registry → rebuilt per-bucket
+    * state → resume via `initialState`) when the registry outgrows the
+    * space. State: one entry per distinct vector per bucket + member id
+    * lists; the cross loop is O(bucket's distinct corpus) uncapped.
     */
   def embedNearDupStream(
       items: Dataset[EmbedItem],
@@ -1235,28 +1161,14 @@ object StreamingOps {
   }
 
   /** [[embedNearDupStream]] with TAKEDOWN support — the EMBEDDING
-    * streaming registry made deletable, completing the family: with
-    * [[minhashPairsForgetStream]] (text) and [[phashPairsForgetStream]]
-    * (media), every streaming near-dup registry now has a tombstone
-    * path, mirroring the batch forget trio
-    * (q_dedup_forget / q_media_forget / q_embed_forget). One event
-    * stream carries ingests and forgets; [[embedNearDupStream]] is this
-    * operator fed all-ingest events — ONE state machine for both.
-    *
-    * Forget semantics, in the vector's single sign-LSH bucket: the id
-    * leaves its exact-vector group's member list; the group rep
-    * re-elects by the batch min rule; a group whose last member leaves
-    * is PURGED — the vector is forgotten, a fresh arrival of the same
-    * embedding founds a new group and cross-pairs normally
-    * (re-admission), and a purged unfrozen group frees its cap slot.
-    * Forgets are SILENT state edits (retraction of published pairs is
-    * batch [[graft.operators.DedupOps.dedupForget]]'s job —
-    * q_embed_forget); the pinned contract is on FUTURE emission:
-    * post-takedown arrivals pair exactly as if the tombstoned vectors
-    * had never been ingested. Within a micro-batch events apply in
-    * (vec_id, ingest-before-forget) order — a same-batch
-    * ingest+takedown resolves with the takedown winning. A forget of
-    * unknown content or a non-member id is a noop.
+    * streaming registry made deletable, mirroring the batch forget trio
+    * (q_dedup_forget / q_media_forget / q_embed_forget). One event stream
+    * carries ingests and forgets, each routed to the vector's single
+    * sign-LSH bucket; [[embedNearDupStream]] is this operator fed
+    * all-ingest events. The forget rules — rep re-election, purge and
+    * re-admission, freed cap slots, takedown winning within a micro-batch
+    * — are [[ExactGroups]]'. Retracting published pairs is batch
+    * [[graft.operators.DedupOps.dedupForget]]'s job (q_embed_forget).
     */
   def embedForgetStream(
       events: Dataset[EmbedForgetEvent],
@@ -1265,107 +1177,10 @@ object StreamingOps {
       maxBucket: Int = 0,
       initialState: Option[Dataset[(Int, EmbedBucket)]] = None): Dataset[EmbedPairRow] = {
     import events.sparkSession.implicits._
-    def dot(a: Seq[Float], b: Seq[Float]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    def bp(c: Double): Long = math.floor(c * 10000.0 + 0.5).toLong
     def bucketOf(e: Seq[Float]): Int =
       (0 until math.min(bits, e.length)).map(i => if (e(i) >= 0f) 1 << i else 0).sum
-    val grouped = events.groupByKey(it => bucketOf(it.embedding))
-    val update =
-        (bucket: Int, batch: Iterator[EmbedForgetEvent], state: GroupState[EmbedBucket]) => {
-          // transient per-invocation indexes over the persisted List state:
-          // member-id → group index (seen check AND forget lookup) and
-          // embedding → group index (exact-dup lookup), so per-arrival
-          // BOOKKEEPING is O(1) instead of the O(groups·members) linear
-          // scans r13 shipped. The cross-pairing loop below stays
-          // O(active groups) per distinct arrival — that is the
-          // operator's semantics (every new vector must dot against each
-          // group rep), bounded by `maxBucket` when capped. Purges blank
-          // the group in place (indices stay stable within the batch);
-          // the final state.update filters the empties out.
-          val groups = scala.collection.mutable.ArrayBuffer.empty[
-            (Long, Seq[Float], Double, List[Long], Boolean)]
-          state.getOption.foreach(_.groups.foreach(groups += _))
-          val memberIdx = scala.collection.mutable.HashMap.empty[Long, Int]
-          val embIdx = scala.collection.mutable.HashMap.empty[Seq[Float], Int]
-          groups.zipWithIndex.foreach { case (g, i) =>
-            g._4.foreach(memberIdx(_) = i)
-            if (!embIdx.contains(g._2)) embIdx(g._2) = i
-          }
-          var nActive = groups.count(!_._5)
-          val out = List.newBuilder[(Long, Long, Long)]
-          batch.toList
-            .sortBy(it => (it.vec_id, if (it.op == "ingest") 0 else 1))
-            .foreach { it =>
-            if (it.op == "forget") memberIdx.get(it.vec_id).foreach { gi =>
-              val (_, e, nr, members, frozen) = groups(gi)
-              val left = members.filterNot(_ == it.vec_id)
-              memberIdx -= it.vec_id
-              if (left.isEmpty) {
-                // purge: the vector is forgotten (re-admission open); an
-                // unfrozen purge frees its cap slot
-                groups(gi) = (0L, e, nr, Nil, frozen)
-                if (embIdx.get(e).contains(gi)) embIdx -= e
-                if (!frozen) nActive -= 1
-              } else
-                // re-elect the rep by the batch min rule
-                groups(gi) = (left.min, e, nr, left, frozen)
-            } else if (!memberIdx.contains(it.vec_id)) embIdx.get(it.embedding) match {
-              case Some(gi) =>
-                val (rep, e, nr, members, frozen) = groups(gi)
-                members.foreach { id =>
-                  out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), 10000L))
-                }
-                if (!frozen) groups.zipWithIndex.foreach { case ((_, oe, onr, om, ofz), oi) =>
-                  if (oi != gi && !ofz) {
-                    val c = bp(dot(e, oe) / (nr * onr))
-                    if (c >= thresholdBp) om.foreach { id =>
-                      out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                    }
-                  }
-                }
-                groups(gi) = (rep, e, nr, members :+ it.vec_id, frozen)
-                memberIdx(it.vec_id) = gi
-              case None =>
-                val nr = math.sqrt(dot(it.embedding, it.embedding))
-                val capped = maxBucket > 0 && nActive >= maxBucket
-                if (!capped) {
-                  groups.foreach { case (_, oe, onr, om, ofz) =>
-                    if (!ofz) {
-                      val c = bp(dot(it.embedding, oe) / (nr * onr))
-                      if (c >= thresholdBp) om.foreach { id =>
-                        out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                      }
-                    }
-                  }
-                  embIdx(it.embedding) = groups.length
-                  memberIdx(it.vec_id) = groups.length
-                  groups += ((it.vec_id, it.embedding, nr, List(it.vec_id), false))
-                  nActive += 1
-                } else {
-                  // frozen: exact-dup registry entry — intra pairs only
-                  embIdx(it.embedding) = groups.length
-                  memberIdx(it.vec_id) = groups.length
-                  groups += ((it.vec_id, it.embedding, nr, List(it.vec_id), true))
-                }
-            }
-          }
-          val kept = groups.filter(_._4.nonEmpty).toList
-          if (kept.isEmpty) state.remove()
-          else state.update(EmbedBucket(kept))
-          out.result()
-        }
-    (initialState match {
-      case Some(init) => grouped.mapGroupsWithState(
-        GroupStateTimeout.NoTimeout,
-        init.groupByKey(_._1).mapValues(_._2))(update)
-      case None => grouped.mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
-    })
-      .flatMap(_.map { case (a, b, c) => EmbedPairRow(a, b, c) })
+    embedGroupsStream(events.sparkSession, events.groupByKey(it => bucketOf(it.embedding)),
+      thresholdBp, maxBucket, (_: Int) => true, initialState)
   }
 
   /** Streaming CELL-GEOMETRY near-dup detection — the loose-threshold
@@ -1378,13 +1193,10 @@ object StreamingOps {
     * state by CELL, not by sign bucket. Each arrival is assigned
     * executor-side to its nearest centroid from a PINNED snapshot
     * (`centroids`, c_id-ascending argmax with strict `>` — exactly
-    * `SimOps.cellArgmax`'s tie-break; a vector with no finite similarity
-    * is dropped, the batch `c_id >= 0` contract), and the per-cell state
-    * is the same exact-dedup group registry as [[embedNearDupStream]] —
-    * identical update discipline (intra pairs at 10000 bp, cross pairs at
-    * the rep-level double-exact cosine, id-ascending within a
-    * micro-batch, `maxCell` frozen-group capping; arrival-order cap vs
-    * the batch id-rank cap, parity pinned uncapped).
+    * `SimOps.cellArgmax`'s tie-break), and each cell's state is the
+    * [[embedNearDupStream]] registry, scored the same way (intra pairs at
+    * 10000 bp, cross pairs at the rep-level double-exact cosine ≥
+    * `thresholdBp`, `maxCell` the [[ExactGroups]] cap).
     *
     * The snapshot is pinned for the stream's lifetime for the same
     * reason [[embedNearDupStream]] pins `bits`: a stream cannot re-shard
@@ -1425,19 +1237,11 @@ object StreamingOps {
   }
 
   /** [[cellNearDupStream]] with TAKEDOWN support — the CELL-GEOMETRY
-    * embedding registry made deletable (the last of the four streaming
-    * near-dup registries: minhash-band, phash-band, sign-LSH embed, and
-    * this one all now carry the [[minhashPairsForgetStream]] forget
-    * discipline). One event stream carries ingests and forgets;
-    * [[cellNearDupStream]] is this operator fed all-ingest events — ONE
-    * state machine for both. Forget semantics in the vector's cell:
-    * member removed from its exact-embedding group, rep re-elected by
-    * the batch min rule, emptied groups purged (re-admission open; a
-    * purged unfrozen group frees its cap slot); events apply in
-    * (vec_id, ingest-before-forget) order; unknown content is a noop.
-    * Forgets are silent state edits — the pinned contract is on future
-    * emission (batch parity over survivors), and the cluster repair
-    * downstream is batch q_embed_forget's job.
+    * embedding registry made deletable. One event stream carries ingests
+    * and forgets, each routed to the vector's cell; [[cellNearDupStream]]
+    * is this operator fed all-ingest events. The forget rules are
+    * [[ExactGroups]]'; the cluster repair downstream is batch
+    * q_embed_forget's job.
     */
   def cellForgetStream(
       events: Dataset[EmbedForgetEvent],
@@ -1451,84 +1255,34 @@ object StreamingOps {
       .map(it => (keyOf(it.embedding), it))
       .groupByKey(_._1)
       .mapValues(_._2)
-    val update =
-        (cell: Long, batch: Iterator[EmbedForgetEvent], state: GroupState[EmbedBucket]) => {
-          // identical state discipline to embedForgetStream's update —
-          // transient O(1) indexes, (id, ingest-first) in-batch order,
-          // frozen groups past the cap, purge-in-place on forget; the
-          // reserved -1 cell (non-assignable vectors) additionally skips
-          // BOTH cross loops — its similarities are non-finite by
-          // construction, and batch drops these vectors before pairing
-          // (intra emission still runs)
-          val groups = scala.collection.mutable.ArrayBuffer.empty[
-            (Long, Seq[Float], Double, List[Long], Boolean)]
-          state.getOption.foreach(_.groups.foreach(groups += _))
-          val memberIdx = scala.collection.mutable.HashMap.empty[Long, Int]
-          val embIdx = scala.collection.mutable.HashMap.empty[Seq[Float], Int]
-          groups.zipWithIndex.foreach { case (g, i) =>
-            g._4.foreach(memberIdx(_) = i)
-            if (!embIdx.contains(g._2)) embIdx(g._2) = i
-          }
-          var nActive = groups.count(!_._5)
-          val out = List.newBuilder[(Long, Long, Long)]
-          batch.toList
-            .sortBy(it => (it.vec_id, if (it.op == "ingest") 0 else 1))
-            .foreach { it =>
-            if (it.op == "forget") memberIdx.get(it.vec_id).foreach { gi =>
-              val (_, e, nr, members, frozen) = groups(gi)
-              val left = members.filterNot(_ == it.vec_id)
-              memberIdx -= it.vec_id
-              if (left.isEmpty) {
-                groups(gi) = (0L, e, nr, Nil, frozen)
-                if (embIdx.get(e).contains(gi)) embIdx -= e
-                if (!frozen) nActive -= 1
-              } else
-                groups(gi) = (left.min, e, nr, left, frozen)
-            } else if (!memberIdx.contains(it.vec_id)) embIdx.get(it.embedding) match {
-              case Some(gi) =>
-                val (rep, e, nr, members, frozen) = groups(gi)
-                members.foreach { id =>
-                  out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), 10000L))
-                }
-                if (cell >= 0 && !frozen) groups.zipWithIndex.foreach {
-                  case ((_, oe, onr, om, ofz), oi) =>
-                  if (oi != gi && !ofz) {
-                    val c = bpOf(dotF(e, oe) / (nr * onr))
-                    if (c >= thresholdBp) om.foreach { id =>
-                      out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                    }
-                  }
-                }
-                groups(gi) = (rep, e, nr, members :+ it.vec_id, frozen)
-                memberIdx(it.vec_id) = gi
-              case None =>
-                val nr = math.sqrt(dotF(it.embedding, it.embedding))
-                val capped = maxCell > 0 && nActive >= maxCell
-                if (!capped) {
-                  if (cell >= 0) groups.foreach { case (_, oe, onr, om, ofz) =>
-                    if (!ofz) {
-                      val c = bpOf(dotF(it.embedding, oe) / (nr * onr))
-                      if (c >= thresholdBp) om.foreach { id =>
-                        out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                      }
-                    }
-                  }
-                  embIdx(it.embedding) = groups.length
-                  memberIdx(it.vec_id) = groups.length
-                  groups += ((it.vec_id, it.embedding, nr, List(it.vec_id), false))
-                  nActive += 1
-                } else {
-                  embIdx(it.embedding) = groups.length
-                  memberIdx(it.vec_id) = groups.length
-                  groups += ((it.vec_id, it.embedding, nr, List(it.vec_id), true))
-                }
-            }
-          }
-          val kept = groups.filter(_._4.nonEmpty).toList
-          if (kept.isEmpty) state.remove()
-          else state.update(EmbedBucket(kept))
-          out.result()
-        }
+    // the reserved -1 cell (non-assignable vectors) skips cross pairing:
+    // its similarities are non-finite, and batch drops these vectors
+    // before pairing (intra emission still runs)
+    embedGroupsStream(events.sparkSession, keyed, thresholdBp, maxCell,
+      (cell: Long) => cell >= 0, initialState)
+  }
+
+  /** The [[EmbedBucket]]-state stream [[embedForgetStream]] and
+    * [[cellForgetStream]] share: one [[ExactGroups]] registry per key
+    * ([[embedGroups]]); keys where `crosses` is false never cross-pair.
+    * `initialState` seeds the per-key registries (the offline rebuilds).
+    */
+  private def embedGroupsStream[K: org.apache.spark.sql.Encoder](
+      spark: org.apache.spark.sql.SparkSession,
+      keyed: org.apache.spark.sql.KeyValueGroupedDataset[K, EmbedForgetEvent],
+      thresholdBp: Int,
+      cap: Int,
+      crosses: K => Boolean,
+      initialState: Option[Dataset[(K, EmbedBucket)]]): Dataset[EmbedPairRow] = {
+    import spark.implicits._
+    val update = (key: K, batch: Iterator[EmbedForgetEvent], state: GroupState[EmbedBucket]) => {
+      val out = List.newBuilder[(Long, Long, Long)]
+      val reg = embedGroups(state.getOption.getOrElse(EmbedBucket(Nil)),
+        cap, thresholdBp, crosses(key), out)
+      reg.applyBatch(batch.map(it => (it.op, it.vec_id, (it.embedding, normF(it.embedding)))))
+      reg.saveTo(state)(embedBucket)
+      out.result()
+    }
     (initialState match {
       case Some(init) => keyed.mapGroupsWithState(
         GroupStateTimeout.NoTimeout,
@@ -1537,6 +1291,29 @@ object StreamingOps {
     })
       .flatMap(_.map { case (a, b, c) => EmbedPairRow(a, b, c) })
   }
+
+  /** An [[EmbedBucket]] as an [[ExactGroups]] registry: content is
+    * (embedding, norm), identified by the embedding; intra pairs score
+    * 10000 bp, cross pairs the rep-level cosine — double-exact batch
+    * arithmetic ([[dotF]], [[bpOf]]), kept when ≥ `thresholdBp`.
+    */
+  private def embedGroups(
+      b: EmbedBucket,
+      cap: Int,
+      thresholdBp: Int,
+      crosses: Boolean,
+      out: scala.collection.mutable.Builder[(Long, Long, Long), _]
+  ): ExactGroups[(Seq[Float], Double)] =
+    new ExactGroups[(Seq[Float], Double)](
+      b.groups.map { case (rep, e, n, members, frozen) => (rep, (e, n), members, frozen) },
+      cap, home = true, intraValue = 10000L,
+      cross = if (!crosses) None else Some { case ((e, n), (oe, on)) =>
+        Some(bpOf(dotF(e, oe) / (n * on))).filter(_ >= thresholdBp)
+      }, out, key = _._1)
+
+  private def embedBucket(
+      groups: List[(Long, (Seq[Float], Double), List[Long], Boolean)]): EmbedBucket =
+    EmbedBucket(groups.map { case (rep, (e, n), members, frozen) => (rep, e, n, members, frozen) })
 
   /** TWO-LEVEL streaming cell near-dup — [[cellNearDupStream]]'s pair
     * semantics under the HIERARCHICAL quantizer's keying
@@ -1555,9 +1332,11 @@ object StreamingOps {
     *    micro-batch;
     *  - the stateful update assigns each arrival to its in-block cell
     *    (strict `>`, c_id-asc — [[nearestCellHier]]'s second level) and
-    *    runs [[cellNearDupStream]]'s per-cell registry discipline inside
-    *    the supercell's state (pairs only ever form within a cell, so
-    *    co-locating a supercell's cells changes no pair).
+    *    ingests it into that cell's [[ExactGroups]] registry, scored as
+    *    in [[cellNearDupStream]], inside the supercell's state (pairs
+    *    only ever form within a cell, so co-locating a supercell's cells
+    *    changes no pair). The stream is ingest-only, and an id already a
+    *    member of ANY cell of the supercell is ignored.
     *
     * State checkpoint cost per TOUCHED key per micro-batch is the key's
     * block + registries (O(√nlist·d + ingested)); untouched keys are not
@@ -1609,75 +1388,24 @@ object StreamingOps {
         (sc: Long, batch: Iterator[EmbedItem], state: GroupState[HierCellState]) => {
           val st = state.getOption.getOrElse(HierCellState(Nil, Nil))
           val block = st.block.toIndexedSeq
-          // one flat-discipline registry per cell of this supercell —
-          // transient O(1) indexes over (cell, embedding) and member ids,
-          // id-ascending in-batch order, per-cell frozen-group capping
-          val cells = scala.collection.mutable.LinkedHashMap.empty[Long,
-            scala.collection.mutable.ArrayBuffer[(Long, Seq[Float], Double, List[Long], Boolean)]]
-          st.cells.foreach { case (c, b) =>
-            val buf = scala.collection.mutable.ArrayBuffer.empty[
-              (Long, Seq[Float], Double, List[Long], Boolean)]
-            b.groups.foreach(buf += _)
-            cells(c) = buf
-          }
-          val memberIds = scala.collection.mutable.HashSet.empty[Long]
-          val embIdx = scala.collection.mutable.HashMap.empty[(Long, Seq[Float]), Int]
-          val nActive = scala.collection.mutable.HashMap.empty[Long, Int]
-          cells.foreach { case (c, buf) =>
-            buf.zipWithIndex.foreach { case (g, i) =>
-              g._4.foreach(memberIds += _)
-              if (!embIdx.contains((c, g._2))) embIdx((c, g._2)) = i
-            }
-            nActive(c) = buf.count(!_._5)
-          }
           val out = List.newBuilder[(Long, Long, Long)]
+          // one flat-discipline registry per cell of this supercell; an id
+          // is a member of the supercell whichever cell holds it
+          val cells = scala.collection.mutable.LinkedHashMap.empty[
+            Long, ExactGroups[(Seq[Float], Double)]]
+          st.cells.foreach { case (c, b) =>
+            cells(c) = embedGroups(b, maxCell, thresholdBp, c >= 0, out)
+          }
           batch.toList.sortBy(_.vec_id).foreach { it =>
-            if (!memberIds.contains(it.vec_id)) {
+            if (!cells.valuesIterator.exists(_.contains(it.vec_id))) {
               val cell = if (sc < 0) -1L else nearestCell(block, it.embedding)
-              val buf = cells.getOrElseUpdate(cell,
-                scala.collection.mutable.ArrayBuffer.empty)
-              embIdx.get((cell, it.embedding)) match {
-                case Some(gi) =>
-                  val (rep, e, nr, members, frozen) = buf(gi)
-                  members.foreach { id =>
-                    out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), 10000L))
-                  }
-                  if (cell >= 0 && !frozen) buf.foreach { case (r, oe, onr, om, ofz) =>
-                    if (r != rep && !ofz) {
-                      val c = bpOf(dotF(e, oe) / (nr * onr))
-                      if (c >= thresholdBp) om.foreach { id =>
-                        out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                      }
-                    }
-                  }
-                  buf(gi) = (rep, e, nr, members :+ it.vec_id, frozen)
-                  memberIds += it.vec_id
-                case None =>
-                  val nr = math.sqrt(dotF(it.embedding, it.embedding))
-                  val capped = maxCell > 0 && nActive.getOrElse(cell, 0) >= maxCell
-                  if (!capped) {
-                    if (cell >= 0) buf.foreach { case (_, oe, onr, om, ofz) =>
-                      if (!ofz) {
-                        val c = bpOf(dotF(it.embedding, oe) / (nr * onr))
-                        if (c >= thresholdBp) om.foreach { id =>
-                          out += ((math.min(id, it.vec_id), math.max(id, it.vec_id), c))
-                        }
-                      }
-                    }
-                    embIdx((cell, it.embedding)) = buf.length
-                    buf += ((it.vec_id, it.embedding, nr, List(it.vec_id), false))
-                    nActive(cell) = nActive.getOrElse(cell, 0) + 1
-                  } else {
-                    embIdx((cell, it.embedding)) = buf.length
-                    buf += ((it.vec_id, it.embedding, nr, List(it.vec_id), true))
-                  }
-                  memberIds += it.vec_id
-              }
+              cells.getOrElseUpdate(cell,
+                embedGroups(EmbedBucket(Nil), maxCell, thresholdBp, cell >= 0, out))
+                .ingest(it.vec_id, (it.embedding, normF(it.embedding)))
             }
           }
           state.update(HierCellState(st.block,
-            cells.toList.map { case (c, buf) => (c, EmbedBucket(buf.toList)) }
-              .sortBy(_._1)))
+            cells.toList.map { case (c, g) => (c, embedBucket(g.groups)) }.sortBy(_._1)))
           out.result()
         }
     keyed.mapGroupsWithState(
@@ -1734,7 +1462,7 @@ object StreamingOps {
         .select(col("c_id"), col("ce"))
         .as[(Long, Seq[Float])].collect().toSeq)
     val state = centroids
-      .map { case (c, e) => (nearestCell(sups, e), (c, e, math.sqrt(dotF(e, e)))) }
+      .map { case (c, e) => (nearestCell(sups, e), (c, e, normF(e))) }
       .filter(_._1 >= 0L)
       .groupByKey(_._1)
       .mapGroups { (sc, ms) =>
@@ -1775,17 +1503,7 @@ object StreamingOps {
       sups: IndexedSeq[(Long, Seq[Float], Double)],
       blockState: Dataset[(Long, HierCellState)]): Dataset[(Long, HierCellState)] = {
     import items.sparkSession.implicits._
-    val groupsBySc = items.toDF()
-      .groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("rep"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      .select(col("rep"), col("embedding"), col("members"))
-      .as[(Long, Seq[Float], Seq[Long])]
-      .map { case (rep, e, members) =>
-        var s = 0.0; var i = 0
-        while (i < e.length) { s += e(i).toDouble * e(i).toDouble; i += 1 }
-        (nearestCell(sups, e), (rep, e, math.sqrt(s), members.toList, false))
-      }
+    val groupsBySc = exactGroupsOf(items).map(g => (nearestCell(sups, g._2), g))
     groupsBySc.groupByKey(_._1)
       .cogroup(blockState.groupByKey(_._1)) { (sc, gs, bs) =>
         val st = bs.toSeq.headOption.map(_._2).getOrElse(HierCellState(Nil, Nil))
@@ -1818,17 +1536,8 @@ object StreamingOps {
       centroids: Seq[(Long, Seq[Float])]): Dataset[(Long, EmbedBucket)] = {
     import items.sparkSession.implicits._
     val keyOf = cellKeyFn(centroids)
-    items.toDF()
-      .groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("rep"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      .select(col("rep"), col("embedding"), col("members"))
-      .as[(Long, Seq[Float], Seq[Long])]
-      .map { case (rep, e, members) =>
-        var s = 0.0; var i = 0
-        while (i < e.length) { s += e(i).toDouble * e(i).toDouble; i += 1 }
-        (keyOf(e), (rep, e, math.sqrt(s), members.toList, false))
-      }
+    exactGroupsOf(items)
+      .map(g => (keyOf(g._2), g))
       .groupByKey(_._1)
       .mapGroups { (cell, gs) =>
         (cell, EmbedBucket(gs.map(_._2).toList.sortBy(_._1)))
@@ -1854,9 +1563,7 @@ object StreamingOps {
     */
   private def centSnapshot(
       centroids: Seq[(Long, Seq[Float])]): IndexedSeq[(Long, Seq[Float], Double)] =
-    centroids.sortBy(_._1).map { case (c, e) =>
-      (c, e, math.sqrt(dotF(e, e)))
-    }.toIndexedSeq
+    centroids.sortBy(_._1).map { case (c, e) => (c, e, normF(e)) }.toIndexedSeq
 
   /** Nearest centroid by cosine over the snapshot — strict `>` with
     * c_id-ascending iteration reproduces `SimOps.cellArgmax`'s
@@ -1866,7 +1573,7 @@ object StreamingOps {
     */
   private def nearestCell(
       cents: IndexedSeq[(Long, Seq[Float], Double)], e: Seq[Float]): Long = {
-    val en = math.sqrt(dotF(e, e))
+    val en = normF(e)
     var best = -1L
     var bs = Double.NegativeInfinity
     var i = 0
@@ -1937,6 +1644,9 @@ object StreamingOps {
     s
   }
 
+  /** L2 norm by [[dotF]]. */
+  private def normF(e: Seq[Float]): Double = math.sqrt(dotF(e, e))
+
   /** `floor(c·10⁴ + 0.5)` — the batch `roundBp` rule. */
   private def bpOf(c: Double): Long = math.floor(c * 10000.0 + 0.5).toLong
 
@@ -1963,24 +1673,32 @@ object StreamingOps {
   def rebucketRegistry(
       items: Dataset[EmbedItem], bits: Int): Dataset[(Int, EmbedBucket)] = {
     import items.sparkSession.implicits._
+    exactGroupsOf(items).toDF("rep", "e", "norm", "members", "frozen")
+      .select(
+        graft.operators.SimOps.signBucket(col("e"), bits).cast("int").as("bucket"),
+        struct(col("rep"), col("e"), col("norm"), col("members"), col("frozen")).as("g"))
+      .groupBy(col("bucket"))
+      .agg(sort_array(collect_list(col("g"))).as("gs"))
+      .as[(Int, List[(Long, Seq[Float], Double, List[Long], Boolean)])]
+      .map { case (b, gs) => (b, EmbedBucket(gs)) }
+  }
+
+  /** The exact-dedup groups of an ingested corpus, rebuilt offline for
+    * [[rebucketRegistry]], [[recellRegistry]] and [[recellRegistryHier]]:
+    * one unfrozen group per distinct embedding, rep = min id, members
+    * id-ascending (deterministic whatever the original arrival order), norm
+    * by [[normF]] (cheaper to recompute than to ship).
+    */
+  private def exactGroupsOf(
+      items: Dataset[EmbedItem]): Dataset[(Long, Seq[Float], Double, List[Long], Boolean)] = {
+    import items.sparkSession.implicits._
     items.toDF()
       .groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("rep"),
         sort_array(collect_list(col("vec_id"))).as("members"))
-      .select(
-        graft.operators.SimOps.signBucket(col("embedding"), bits)
-          .cast("int").as("bucket"),
-        struct(col("rep"), col("embedding").as("e"), col("members")).as("g"))
-      .groupBy(col("bucket"))
-      .agg(sort_array(collect_list(col("g"))).as("gs"))
-      .as[(Int, Seq[(Long, Seq[Float], Seq[Long])])]
-      .map { case (b, gs) =>
-        (b, EmbedBucket(gs.map { case (rep, e, members) =>
-          var s = 0.0; var i = 0
-          while (i < e.length) { s += e(i).toDouble * e(i).toDouble; i += 1 }
-          (rep, e, math.sqrt(s), members.toList, false)
-        }.toList))
-      }
+      .select(col("rep"), col("embedding"), col("members"))
+      .as[(Long, Seq[Float], List[Long])]
+      .map { case (rep, e, members) => (rep, e, normF(e), members, false) }
   }
 
   /** Streaming user-journey transitions — the WATERMARK-BOUND twin of

@@ -2003,4 +2003,143 @@ class StreamingOpsSpec extends SparkSpec {
       assert(got == Set((0L, 1L, 4L), (10L, 11L, 0L)), s"got: $got")
     } finally q.stop()
   }
+
+  /** Feeds `batches` through a streaming operator one micro-batch at a
+    * time and returns the rows each micro-batch emitted, in batch order.
+    */
+  private def emittedPerBatch[E: org.apache.spark.sql.Encoder, R](
+      op: org.apache.spark.sql.Dataset[E] => org.apache.spark.sql.Dataset[R],
+      batches: Seq[Seq[E]]): Seq[Seq[R]] = {
+    val input = MemoryStream[E]
+    val rows = scala.collection.mutable.ArrayBuffer.empty[R]
+    val q = op(input.toDS()).writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[R], _: Long) =>
+        val got = df.collect()
+        rows.synchronized(rows ++= got): Unit
+      }
+      .outputMode("update").start()
+    try batches.map { b =>
+      val before = rows.synchronized(rows.length)
+      input.addData(b)
+      q.processAllAvailable()
+      rows.synchronized(rows.drop(before).toSeq)
+    } finally q.stop()
+  }
+
+  /** The four streaming forget operators behind one signature:
+    * (cap, micro-batches of (op, id, content label)) → the (id_a, id_b)
+    * pairs each micro-batch emitted. Labels a–d name four distinct
+    * contents, each near every other:
+    *  - phash: hashes sharing bands 0–6, band 7 = 7/8/6/9 (Hamming ≤ 4);
+    *  - minhash: one sentence with a different last word, picked so that
+    *    signature bands 1–3 are shared by all four and band 0 differs
+    *    for each (any bucket holding c or d also holds a and b);
+    *  - embed and cell: 4-d vectors in one sign bucket and one cell,
+    *    pairwise cosine ≥ 0.99.
+    */
+  private lazy val forgetOps: Seq[(String, (Int, Seq[Seq[(String, Long, Char)]]) => Seq[Set[(Long, Long)]])] = {
+    import graft.streaming.EmbedForgetEvent
+    val hash = Map('a' -> 7L, 'b' -> 8L, 'c' -> 6L, 'd' -> 9L)
+      .map { case (l, last) => l -> ((0L to 6L) :+ last) }
+    val text = Map('a' -> "bravo", 'b' -> "charlie", 'c' -> "delta", 'd' -> "whiskey")
+      .map { case (l, w) => l -> s"the takedown request names a photo of the old harbour at dusk $w" }
+    val vec = Map('a' -> Seq(1f, 0f, 0f, 0f), 'b' -> Seq(1f, 0.05f, 0f, 0f),
+      'c' -> Seq(1f, 0f, 0.05f, 0f), 'd' -> Seq(1f, 0.1f, 0f, 0f))
+    def embedEvents(bs: Seq[Seq[(String, Long, Char)]]) =
+      bs.map(_.map { case (op, id, l) => EmbedForgetEvent(op, id, vec(l)) })
+    def embedPairs(rows: Seq[Seq[EmbedPairRow]]) = rows.map(_.map(p => (p.id_a, p.id_b)).toSet)
+    Seq(
+      "phashPairsForgetStream" -> { (cap: Int, bs: Seq[Seq[(String, Long, Char)]]) =>
+        emittedPerBatch[PhashForgetEvent, PhashPairRow](
+          StreamingOps.phashPairsForgetStream(_, maxBucket = cap),
+          bs.map(_.map { case (op, id, l) => PhashForgetEvent(op, id, hash(l)) }))
+          .map(_.map(p => (p.id_a, p.id_b)).toSet)
+      },
+      "minhashPairsForgetStream" -> { (cap: Int, bs: Seq[Seq[(String, Long, Char)]]) =>
+        emittedPerBatch[ForgetEvent, MinhashPairRow](
+          StreamingOps.minhashPairsForgetStream(_, maxBucket = cap),
+          bs.map(_.map { case (op, id, l) => ForgetEvent(op, id, text(l)) }))
+          .map(_.map(p => (p.id_a, p.id_b)).toSet)
+      },
+      "embedForgetStream" -> { (cap: Int, bs: Seq[Seq[(String, Long, Char)]]) =>
+        embedPairs(emittedPerBatch[EmbedForgetEvent, EmbedPairRow](
+          StreamingOps.embedForgetStream(_, maxBucket = cap), embedEvents(bs)))
+      },
+      "cellForgetStream" -> { (cap: Int, bs: Seq[Seq[(String, Long, Char)]]) =>
+        embedPairs(emittedPerBatch[EmbedForgetEvent, EmbedPairRow](
+          StreamingOps.cellForgetStream(_, Seq((0L, Seq(1f, 1f, 1f, 1f))), maxCell = cap),
+          embedEvents(bs)))
+      })
+  }
+
+  test("forget operators: a capped takedown frees its slot; the frozen group still never pairs") {
+    // cap 2: a and b found the two unfrozen groups and pair; c, near
+    // both, arrives over the cap and is recorded frozen, emitting no
+    // pair. Forgetting a purges its group and frees a slot, so d, near
+    // b and c, founds an unfrozen group and pairs with b alone. Without
+    // the forget d is over the cap and pairs with no one.
+    forgetOps.foreach { case (name, run) =>
+      val ab = Seq(("ingest", 1L, 'a'), ("ingest", 2L, 'b'))
+      val c = Seq(("ingest", 3L, 'c'))
+      val d = Seq(("ingest", 4L, 'd'))
+      val forgot = run(2, Seq(ab, c, Seq(("forget", 1L, 'a')), d))
+      assert(forgot == Seq(Set((1L, 2L)), Set(), Set(), Set((2L, 4L))), s"$name: $forgot")
+      val control = run(2, Seq(ab, c, d))
+      assert(control == Seq(Set((1L, 2L)), Set(), Set()), s"$name without the forget: $control")
+      // the slot is free within the takedown's own micro-batch too (the
+      // batch applies id-ascending: forget 1 before ingest 4)
+      val sameBatch = run(2, Seq(ab, c, Seq(("forget", 1L, 'a'), ("ingest", 4L, 'd'))))
+      assert(sameBatch == Seq(Set((1L, 2L)), Set(), Set((2L, 4L))), s"$name same batch: $sameBatch")
+    }
+  }
+
+  test("forget operators: same-batch ingest+forget of one id — the takedown wins") {
+    forgetOps.foreach { case (name, run) =>
+      val got = run(0, Seq(
+        // listed forget-first: the batch applies in (id, ingest-before-
+        // forget) order, so id 1 ends forgotten whatever the arrival order
+        Seq(("forget", 1L, 'a'), ("ingest", 1L, 'a')),
+        // an exact duplicate of the forgotten content founds a new group
+        Seq(("ingest", 2L, 'a')),
+        // a second ingest of the live id 2 does nothing
+        Seq(("ingest", 2L, 'a')),
+        // a third copy pairs with 2 only: 1 is not a member
+        Seq(("ingest", 3L, 'a'))))
+      assert(got == Seq(Set(), Set(), Set(), Set((2L, 3L))), s"$name: $got")
+    }
+  }
+
+  test("phashPairsStream: exact multiplicities — hamming-0 pairs once, near pairs once per shared band") {
+    import graft.operators.{MediaRow, MultimodalOps}
+    val docs = (0 until 24).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
+    val media = MultimodalOps.plantPhashCorpus(MultimodalOps.asMedia(docs))
+    val planted = MultimodalOps.phashBands(media.as[MediaRow])
+      .collect().map(p => PhashItem(p.media_id, p.bands)).sortBy(_.media_id).toSeq
+    // plus an exact copy of the first item, so hamming-0 pairs exist
+    val items = planted :+ PhashItem(planted.map(_.media_id).max + 1L, planted.head.bands)
+    val (b1, b2) = items.splitAt(10)
+    val got = emittedPerBatch[PhashItem, PhashPairRow](
+      StreamingOps.phashPairsStream(_, maxDist = 6), Seq(b1, b2)).flatten
+      .groupBy(p => (p.id_a, p.id_b, p.hamming)).map { case (k, v) => k -> v.length }
+    val expected = (for {
+      i <- items.indices; j <- (i + 1) until items.length
+      a = items(i); b = items(j)
+      d = a.bands.zip(b.bands).map { case (x, y) => java.lang.Long.bitCount(x ^ y).toLong }.sum
+      if d <= 6
+      shared = a.bands.zip(b.bands).count { case (x, y) => x == y }
+    } yield (math.min(a.media_id, b.media_id), math.max(a.media_id, b.media_id), d) ->
+      (if (d == 0) 1 else shared)).toMap
+    assert(expected.keys.exists(_._3 == 0) && expected.keys.exists(_._3 > 0))
+    assert(got == expected, s"stream ${got.size} vs brute force ${expected.size}")
+  }
+
+  test("near-dup registry state schemas are pinned: a change breaks checkpoint resume") {
+    import org.apache.spark.sql.Encoders
+    import graft.streaming.{EmbedBucket, HierCellState, MinhashBucket, PhashBucket}
+    val bandGroups = "{\"type\":\"struct\",\"fields\":[{\"name\":\"groups\",\"type\":{\"type\":\"array\",\"elementType\":{\"type\":\"struct\",\"fields\":[{\"name\":\"_1\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_2\",\"type\":{\"type\":\"array\",\"elementType\":\"long\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_3\",\"type\":{\"type\":\"array\",\"elementType\":\"long\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_4\",\"type\":\"boolean\",\"nullable\":false,\"metadata\":{}}]},\"containsNull\":true},\"nullable\":true,\"metadata\":{}}]}"
+    assert(Encoders.product[PhashBucket].schema.json == bandGroups)
+    assert(Encoders.product[MinhashBucket].schema.json == bandGroups)
+    assert(Encoders.product[EmbedBucket].schema.json == "{\"type\":\"struct\",\"fields\":[{\"name\":\"groups\",\"type\":{\"type\":\"array\",\"elementType\":{\"type\":\"struct\",\"fields\":[{\"name\":\"_1\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_2\",\"type\":{\"type\":\"array\",\"elementType\":\"float\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_3\",\"type\":\"double\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_4\",\"type\":{\"type\":\"array\",\"elementType\":\"long\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_5\",\"type\":\"boolean\",\"nullable\":false,\"metadata\":{}}]},\"containsNull\":true},\"nullable\":true,\"metadata\":{}}]}")
+    assert(Encoders.product[HierCellState].schema.json == "{\"type\":\"struct\",\"fields\":[{\"name\":\"block\",\"type\":{\"type\":\"array\",\"elementType\":{\"type\":\"struct\",\"fields\":[{\"name\":\"_1\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_2\",\"type\":{\"type\":\"array\",\"elementType\":\"float\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_3\",\"type\":\"double\",\"nullable\":false,\"metadata\":{}}]},\"containsNull\":true},\"nullable\":true,\"metadata\":{}},{\"name\":\"cells\",\"type\":{\"type\":\"array\",\"elementType\":{\"type\":\"struct\",\"fields\":[{\"name\":\"_1\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_2\",\"type\":{\"type\":\"struct\",\"fields\":[{\"name\":\"groups\",\"type\":{\"type\":\"array\",\"elementType\":{\"type\":\"struct\",\"fields\":[{\"name\":\"_1\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_2\",\"type\":{\"type\":\"array\",\"elementType\":\"float\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_3\",\"type\":\"double\",\"nullable\":false,\"metadata\":{}},{\"name\":\"_4\",\"type\":{\"type\":\"array\",\"elementType\":\"long\",\"containsNull\":false},\"nullable\":true,\"metadata\":{}},{\"name\":\"_5\",\"type\":\"boolean\",\"nullable\":false,\"metadata\":{}}]},\"containsNull\":true},\"nullable\":true,\"metadata\":{}}]},\"nullable\":true,\"metadata\":{}}]},\"containsNull\":true},\"nullable\":true,\"metadata\":{}}]}")
+  }
 }
