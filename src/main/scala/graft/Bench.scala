@@ -227,17 +227,7 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = GraftSession
-        .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      // r19: localCheckpoint-unpersist WARN spam consumed the driver's
-      // entire 2000-char stdout tail — silence the benign floody loggers
-      GraftSession.quietHarnessLogs()
-      s
-    }
+    def newSession(): SparkSession = GraftSession.harness("graft")
     var spark = newSession()
 
     // optional comma-separated subset for isolated profiling runs; the

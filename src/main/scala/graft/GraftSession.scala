@@ -102,6 +102,21 @@ object GraftSession {
 
   def get(): SparkSession = builder().getOrCreate()
 
+  /** The one session the harness mains (Bench, Verify and the tools) run
+    * in: `local[n]` with `n` shuffle partitions, where `n` is
+    * `SPARK_GRAFT_CPUS` (default 4), WARN logging and
+    * [[quietHarnessLogs]]. Per-run conf goes through `spark.conf.set`
+    * after the session is built.
+    */
+  def harness(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(master = s"local[$cpus]", shufflePartitions = cpus,
+      appName = appName).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietHarnessLogs()
+    spark
+  }
+
   /** Silence benign-but-floody loggers in HARNESS sessions (Bench/Verify).
     *
     * The iterative closures (connected components, label propagation,

@@ -18,8 +18,14 @@ final class JobStats private (listener: SparkListener, spark: SparkSession) {
   private[graft] val taskTimeMs = new AtomicLong
   private[graft] val bytesRead = new AtomicLong
 
-  def snapshot: JobStats.Snapshot =
+  /** The counters once every event posted so far has been delivered: the
+    * listener bus is async, so the last tasks of a job that has just
+    * returned may not have reached the listener yet.
+    */
+  def snapshot: JobStats.Snapshot = {
+    org.apache.spark.deploy.graftshim.ListenerBus.drain(spark.sparkContext)
     JobStats.Snapshot(tasksCompleted.get, tasksFailed.get, taskTimeMs.get, bytesRead.get)
+  }
 
   /** Detach from the listener bus. */
   def close(): Unit = spark.sparkContext.removeSparkListener(listener)

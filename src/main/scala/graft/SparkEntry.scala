@@ -1548,8 +1548,9 @@ object SparkEntry {
     // TRAINED-index recall audit: the same fixture seeds Lloyd-refined
     // through exact vs two-level (hier) assignment, both probed with the
     // identical exact flat probe — the recall delta prices the megacell
-    // TRAINING approximation alone, oracle-verified (KnnScaleCheck's
-    // trainedrecall mode is this audit at √N-seed scale + c2s-hier).
+    // TRAINING approximation alone, oracle-verified (SKEW_scale.txt,
+    // round 18, "megacell TRAINING quality + convergence" has this audit
+    // at √N-seed scale + c2s-hier).
     "q_recall_audit_ivf_trained" -> ((s, dir) =>
       SimOps.ivfTrainedRecallAudit(t(s, dir, "embeddings"),
         queryPred = col("vec_id") < 5,
@@ -1646,7 +1647,8 @@ object SparkEntry {
     // Centroids are √N-SIZED (the faiss nlist ∝ √N rule, hash-sampled so
     // the oracle reproduces it): the declared shape IS the scale-safe one
     // — a fixed cell set at x100 data was a measured ~10,000x pair blowup,
-    // and constant occupancy leaves assignment quadratic (KnnScaleCheck).
+    // and constant occupancy leaves assignment quadratic (SKEW_scale.txt,
+    // round 12, "knnGraph OCCUPANCY-PRESERVING nlist").
     "q_knn_graph" -> ((s, dir) =>
       SimOps.knnGraph(t(s, dir, "embeddings"),
         centroidPred = SimOps.sqrtCentroidPred(t(s, dir, "embeddings")))),
@@ -1754,7 +1756,8 @@ object SparkEntry {
     // floor(dims / bits) (every embedding dimension hashes exactly once)
     // — recovers the boundary recall a single corpus-sized table trades
     // away (measured: 75% vs 5.4% of anchor-sample truth at sf0.1,
-    // ~tables x amplification at every decade; CapAuditGrowth).
+    // ~tables x amplification at every decade; SKEW_scale.txt, round 13,
+    // "near-dup RECALL audit + OR-amplified remedy").
     "q_embed_neardup_multi" -> ((s, dir) => {
       val planted = SimOps.plantedVectors(t(s, dir, "embeddings"))
       val bits = SimOps.autoSignBits(planted)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,18 +11,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GraftSession, not a bare builder: queries need the engine's session
     // conf (nanosAsLong, UTC) AND the GraftExtensions function registry
     // (vec_dot) to resolve.
-    val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r19: localCheckpoint-unpersist WARN spam flooded harness stderr —
-    // silence the benign floody loggers in dump sessions too
-    GraftSession.quietHarnessLogs()
+    val spark = GraftSession.harness("graft")
     new java.io.File(outDir).mkdirs()
     // failures land in errors.json, not just stderr: a dump where broken
     // queries are silently ABSENT reads as 100% pass to any consumer that

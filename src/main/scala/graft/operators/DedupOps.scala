@@ -470,8 +470,9 @@ object DedupOps {
     * emit pairs with similarity ≥ `thresholdBp` basis points. Never
     * all-pairs: only docs sharing ≥1 shingle meet in the join.
     *
-    * MEASURED growth law of the pairing volume (graft.tools.JaccardGrowth,
-    * round 11), separating the two ways a corpus grows:
+    * MEASURED growth law of the pairing volume (SKEW_scale.txt, round 11,
+    * "jaccardPairs pairing-volume growth law"), separating the two ways a
+    * corpus grows:
     *
     *  - KEYED growth (more distinct content — ScaleGen's suffixed
     *    replication): postings multiply but never lengthen; candidate
@@ -555,9 +556,9 @@ object DedupOps {
     //  - sf0.1 (50 K docs): md5-based hash60 LOST (4.5 s → 5.8 s) — the
     //    3-word keys are short enough that hashing, not shuffle, is the
     //    bottleneck;
-    //  - 10× scale (50 K docs, graft.tools.HashTradeCheck, interleaved
-    //    min-of-two): TIE — 4.81 s string vs 4.75 s xxhash64
-    //    (HASH_trade.txt). Shuffle does not dominate yet even one decade
+    //  - 10× scale (50 K docs, interleaved min-of-two): TIE — 4.81 s
+    //    string vs 4.75 s xxhash64 (HASH_trade.txt, "jaccardPairs
+    //    postings-key trade"). Shuffle does not dominate yet even one decade
     //    up; the crossover is further out than the verdict guessed.
     // `hashPostingsKey` switches to the codegen'd xxhash64 (no md5 cost).
     // Results are identical up to 64-bit hash collisions merging two

@@ -461,10 +461,11 @@ object MultimodalOps {
     * unfinishable: the saturating content period turns corpus growth
     * into quadratic exact-dup re-attach volume). The cap pins the
     * fixture's content — and its cost — independent of SF; the dense
-    * plant's GROWTH law is measured in PhashScaleCheck on the uncapped
-    * variant with `strideMod` scaled ∝ corpus (content period growing
-    * with the corpus, the SKEW r15 lesson), where exact-dup group sizes
-    * stay bounded and the decades finish.
+    * plant's GROWTH law is measured (SKEW_scale.txt, round 16,
+    * "dense-phash re-pricing") on the uncapped variant with `strideMod`
+    * scaled ∝ corpus (content period growing with the corpus, the SKEW
+    * r15 lesson), where exact-dup group sizes stay bounded and the
+    * decades finish.
     */
   def plantPhashCorpusDense(
       media: DataFrame,
@@ -546,7 +547,8 @@ object MultimodalOps {
     *    vectors collapse to one representative (min id) BEFORE any
     *    banding — the production order (cheap exact groups strike first,
     *    perceptual LSH only ever sees unique sketches). Measured law
-    *    (graft.tools.PhashScaleCheck + SKEW_scale.txt): the band-key
+    *    (SKEW_scale.txt, round 11, "phashPairs pairing-volume growth
+    *    law"): the band-key
     *    space is FIXED at `grid · 2^grid` (grid=8: 2,048 buckets), so
     *    raw-hash occupancy grows linearly with the corpus and uncapped
     *    pairing quadratically (6.7 M → 677 M → 67.7 B candidates at
@@ -679,7 +681,8 @@ object MultimodalOps {
     * (grid = [[autoPhashGrid]], with the DuckDB oracle deriving the same
     * grid from the same probe count and replaying the derived
     * fingerprint). Measured at ×100
-    * (PhashScaleCheck/SKEW_scale.txt): rep universe 1,099 → grid=8 still
+    * (SKEW_scale.txt, round 11, "phashPairs pairing-volume growth law",
+    * exact-dedup-first rows): rep universe 1,099 → grid=8 still
     * caps its hottest bucket (139 > 64); grid=16 holds hottest at 86 with
     * 2.4× the in-cap candidate volume.
     */

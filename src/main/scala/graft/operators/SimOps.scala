@@ -298,8 +298,9 @@ object SimOps {
     * IDENTICALLY (exact flat probe at `nProbe`), so the per-variant
     * recall against one brute-force truth prices the TRAINING-side
     * approximation alone (the search-side price is
-    * [[ivfRecallSweepHier]]'s curve; KnnScaleCheck's trainedrecall mode
-    * is this audit at the √N-seed scale plus the c2s-hier variant).
+    * [[ivfRecallSweepHier]]'s curve; SKEW_scale.txt, round 18, "megacell
+    * TRAINING quality + convergence" has this audit at the √N-seed scale
+    * plus the c2s-hier variant).
     * Hit counts left-join the variant list ([[mrlRecallSweep]]'s
     * zero-row discipline). Output: (variant, n_hits, recall_bp), one
     * row per variant ('exact', 'hier'), ordered.
@@ -756,7 +757,8 @@ object SimOps {
     * (csim desc, c_id asc) selection. The window path materializes and
     * SHUFFLES every (vector, centroid) row with its embedding for the
     * per-vector sort — O(N·nlist) rows, i.e. O(N²/perCell) under
-    * occupancy-preserving nlist (measured 23.5 s at ×100, KnnScaleCheck);
+    * occupancy-preserving nlist (measured 23.5 s at ×100: SKEW_scale.txt,
+    * round 12, "knnGraph OCCUPANCY-PRESERVING nlist");
     * an aggregation-operator argmax (`max_by`) hits ObjectHashAggregate's
     * sort-based fallback on the same exploded stream and OOMs. This shape
     * does the identical FLOPs with zero extra rows and no shuffle beyond
@@ -802,7 +804,8 @@ object SimOps {
     * O(√nlist·d): each task hash-builds only the blocks landing in its
     * sc_id partition (1M centroids → a ~1k-entry supercenter broadcast +
     * ~1k 1k-entry blocks SPREAD across tasks, where the flat array would
-    * be ~GBs ON EVERY executor — measured: KnnScaleCheck's nlist=1M row,
+    * be ~GBs ON EVERY executor — measured: the nlist=1M row of
+    * SKEW_scale.txt, round 16, "megacells",
     * where the flat fold's single collected array fails the driver and
     * hier completes). `superProbes` > 1 scans that many
     * nearest supercells' blocks and keeps the best cell across them
@@ -861,8 +864,8 @@ object SimOps {
     // c2s gives it — vector assignments then differ only where the
     // vector's best in-block cell changes; fixture agreement spec-pinned).
     // Declared queries keep the exact stage: c2sHier is the
-    // megacell-training knob (refineCentroids/KnnScaleCheck), not a
-    // default.
+    // megacell-training knob (refineCentroids; SKEW_scale.txt, round 17,
+    // "megacells TRAINING + two-level c2s"), not a default.
     val c2sN = cents.select(
       col("c_id").as("cid0"), col("ce").as("e"), col("cn").as("nrm"))
     val c2s = (if (c2sHier) cellArgmaxHier(c2sN, sup, "cid0")
@@ -1017,7 +1020,8 @@ object SimOps {
       // (with `c2sHier` additionally two-leveling the centroid→supercell
       // stage) — the megacell-TRAINING path: nothing else about the Lloyd
       // update changes, so the fixture-scale declared queries (hier=false)
-      // are untouched while KnnScaleCheck can train nlist ≥ 1M
+      // are untouched while nlist ≥ 1M trains (SKEW_scale.txt, round 17,
+      // "megacells TRAINING + two-level c2s")
       val assigned = (if (hier) cellArgmaxHier(n, c, idCol, c2sHier = c2sHier)
         else cellArgmax(n, c, idCol))
         .select(col("c_id"), col("e"))
@@ -1067,7 +1071,8 @@ object SimOps {
     * CONSTANT (`perCell`) as the corpus grows — exactly how production IVF
     * sizes nlist (nlist ∝ N), with no count pass, no global sort, and a
     * deterministic, engine-mirrorable rule ([[hashCentroidPredSql]]).
-    * Measured (KnnScaleCheck, SKEW_scale.txt): a FIXED 16-cell set at
+    * Measured (SKEW_scale.txt, round 11, "knnGraph occupancy growth
+    * law"): a FIXED 16-cell set at
     * ×100 data is a ~10,000× pair blowup (O(Σ cell²) with occupancy
     * ×100); occupancy-preserving sizing holds the same run to ~12× wall.
     */
@@ -1084,7 +1089,8 @@ object SimOps {
     * in-cell pairing O(N·perCell) = O(N²/nlist), so total work minimizes
     * at nlist ≈ √N — O(N^1.5) — where CONSTANT occupancy (nlist = N/64)
     * leaves assignment quadratic (O(N²/64), the measured residual after
-    * the [[cellArgmax]] shuffle fix: KnnScaleCheck r12). One count()
+    * the [[cellArgmax]] shuffle fix: SKEW_scale.txt, round 12, "knnGraph
+    * OCCUPANCY-PRESERVING nlist"). One count()
     * action derives perCell = max(4, ⌈√N⌉); the predicate itself stays
     * the deterministic id-hash rule, so the oracle reproduces it from the
     * same corpus ([[sqrtCentroidPredSql]]).
@@ -1281,7 +1287,8 @@ object SimOps {
     * (source, candidate) pair cannot duplicate (each candidate has ONE
     * home cell). SimOpsSpec pins that probes=2 recall dominates probes=1.
     *
-    * Scale law (measured, r11 `KnnScaleCheck` + SKEW_scale.txt): the cost
+    * Scale law (measured, SKEW_scale.txt, round 11, "knnGraph occupancy
+    * growth law"): the cost
     * driver is per-cell OCCUPANCY, not corpus size — O(Σ cell²) means
     * growing the corpus N× over a FIXED cell set multiplies pairing by N²
     * (x100 data over the declared 16 cells: a ~10,000x pair blowup,
@@ -1599,10 +1606,10 @@ object SimOps {
     * contract as [[nearDupPairs]]; cost is `tables`× the single-table
     * bucket pairing, bounded by tables·2^bits·cap²/2. Requires (and
     * ENFORCES, via [[embDim]] read from the corpus) tables·bits ≤
-    * embedding dim. SCALE DISCIPLINE (measured,
-    * CapAuditGrowth r13): FIXED 8×4 tables hit the cap wall exactly like
-    * fixed single-table bits (found → 0 by ×10); the production
-    * configuration derives `bits` = [[autoSignBits]] (caps idle) and
+    * embedding dim. SCALE DISCIPLINE (measured, SKEW_scale.txt, round 13,
+    * "near-dup RECALL audit + OR-amplified remedy"): FIXED 8×4 tables
+    * hit the cap wall exactly like fixed single-table bits (found → 0
+    * by ×10); the production configuration derives `bits` = [[autoSignBits]] (caps idle) and
     * `tables` = ⌊dims / bits⌋ (every dimension hashes once) — the
     * declared q_embed_neardup_multi shape, measured at 75% of
     * anchor-sample truth at sf0.1 vs 5.4% single-table, with ~tables×

@@ -14,10 +14,7 @@ import graft.{GraftSession, SparkEntry}
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <q1>[,<q2>...]")
-    val spark = GraftSession
-      .builder(master = "local[4]", shufflePartitions = 4)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness("graft-explain")
     args(1).split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, args(0)).explain("formatted")

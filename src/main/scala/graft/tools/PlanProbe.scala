@@ -123,11 +123,7 @@ object PlanProbe {
       if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted.toArray
       else args(1).split(',').map(_.trim).filter(_.nonEmpty)
     val full = args.length > 2 && args(2) == "full"
-    val spark = graft.GraftSession
-      .builder(master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
-        shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.harness("graft-planprobe")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
       println(s"[planprobe] $n ${budget(df)}")

@@ -42,11 +42,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness("graft-scalegen")
 
     def table(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

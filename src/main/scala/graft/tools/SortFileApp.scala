@@ -1,10 +1,11 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, JobStats}
 import graft.sources.TextIntIO
 
 /** CLI mirroring the reference's client (`Client.java:20-34`): submit a
-  * "sort this file" job and get back the sorted output path.
+  * "sort this file" job and get back the sorted output path, the elapsed
+  * time and the job's [[graft.JobStats]] (`ServerHandler.java:66-75`).
   *
   * Usage: SortFileApp <input.txt> <output> [chunkBytes] [--single-file]
   *
@@ -24,17 +25,18 @@ object SortFileApp {
     val Array(in, out) = args.take(2)
     val chunkBytes = args.drop(2).find(_.forall(_.isDigit)).map(_.toLong)
     val single = args.contains("--single-file")
-    val builder = GraftSession.builder(appName = "graft-sortfile")
-    chunkBytes.foreach(b => builder.config("spark.sql.files.maxPartitionBytes", b.toString))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness("graft-sortfile")
+    chunkBytes.foreach(b => spark.conf.set("spark.sql.files.maxPartitionBytes", b.toString))
+    val stats = JobStats.attach(spark)
     val t0 = System.nanoTime()
     val df = TextIntIO.read(spark, in)
     if (single) TextIntIO.writeSingleFile(df, out)
     else TextIntIO.writePartitioned(df, out)
-    // job statistics — the reference prints elapsed + task stats
-    // (`ServerHandler.java:66-75`); Spark task metrics live in the UI/listeners.
-    println(s"Processed File: $out (${(System.nanoTime() - t0) / 1000000} ms elapsed)")
+    val ms = (System.nanoTime() - t0) / 1000000
+    val s = stats.snapshot
+    println(s"Processed File: $out ($ms ms elapsed)")
+    println(s"tasks=${s.tasksCompleted} failed_attempts=${s.tasksFailed} " +
+      f"task_s=${s.taskTimeMs / 1000.0}%.1f bytes_read=${s.bytesRead}")
     spark.stop()
   }
 }

@@ -90,7 +90,7 @@ class CacheLifecycleSpec extends SparkSpec {
     // is a knob, not a hard-coded tmpdir — a cluster points it at shared
     // scratch and every Spill consumer follows
     import spark.implicits._
-    val scratch = java.nio.file.Files.createTempDirectory("graft-scratch-knob")
+    val scratch = java.nio.file.Paths.get(Spill.newDir("graft-scratch-knob"))
     sys.props("graft.spill.dir") = scratch.toString
     try {
       val d = Spill.newDir("knoptest")
@@ -113,7 +113,7 @@ class CacheLifecycleSpec extends SparkSpec {
     val pairs = ((1L to 8L).map(i => (i, i + 1)) :+ (20L, 21L))
       .toDF("id_a", "id_b")
     val expected = operators.DedupOps.dedupClusters(pairs).collect().toSet
-    val ckdir = java.nio.file.Files.createTempDirectory("graft-reliable-ck")
+    val ckdir = java.nio.file.Paths.get(Spill.newDir("graft-reliable-ck"))
     spark.conf.set(Checkpoints.ConfKey, ckdir.toString)
     try {
       val got = operators.DedupOps.dedupClusters(pairs).collect().toSet

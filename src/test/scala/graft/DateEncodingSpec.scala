@@ -34,7 +34,7 @@ class DateEncodingSpec extends SparkSpec {
   }
 
   test("TPC-H date surface is invariant under TIMESTAMP -> DATE re-encoding") {
-    val dir = java.nio.file.Files.createTempDirectory("date-enc").toString
+    val dir = Spill.newDir("date-enc")
     for (t <- Seq("lineitem", "orders", "part")) {
       val base = sf(t)
       val recoded = dateCols.getOrElse(t, Nil).filter(base.columns.contains)

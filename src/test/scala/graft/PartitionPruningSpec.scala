@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -25,7 +23,7 @@ class PartitionPruningSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_part").toFile.getAbsolutePath
+    val d = Spill.newDir("graft_part")
     sf("documents").write.mode("overwrite").partitionBy("lang").parquet(d)
     d
   }
@@ -66,7 +64,7 @@ class PartitionPruningSpec extends SparkSpec {
       // the dim must be a real scan: a literal filter over a local
       // relation constant-folds away (ConvertToLocalRelation) and the
       // DPP rule then sees no selective filter to reuse
-      val dimDir = Files.createTempDirectory("graft_dim").toFile.getAbsolutePath
+      val dimDir = Spill.newDir("graft_dim")
       langs.map(l => (l, s"name_$l")).toSeq.toDF("lang", "lang_name")
         .write.mode("overwrite").parquet(dimDir)
       val dim = spark.read.parquet(dimDir)

@@ -569,7 +569,7 @@ class SimOpsSpec extends SparkSpec {
     // embeddings: a double[] re-encode must change nothing — vec_dot
     // widens floats per-element and every downstream accumulation is
     // already double, so widening first is bit-identical
-    val dir = java.nio.file.Files.createTempDirectory("emb-enc").toString
+    val dir = Spill.newDir("emb-enc")
     sf("embeddings")
       .withColumn("embedding", col("embedding").cast("array<double>"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -393,7 +393,7 @@ class StreamingOpsSpec extends SparkSpec {
     // batches, feed more data while it is down, restart from the SAME
     // checkpoint — the recovered state store must carry the pre-crash
     // counts exactly once and the offsets must replay the downtime data.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recovery").toString
+    val ckpt = Spill.newDir("graft-recovery")
     val input = MemoryStream[StreamEvent]
     val counts = input.toDF().groupBy(col("user_id")).agg(count(lit(1)).as("n"))
     def start() = counts.writeStream.format("memory").queryName("recov")
@@ -438,7 +438,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streaming file sink -> compactParquet: the OPTIMIZE maintenance loop") {
     import graft.operators.LayoutOps
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = Spill.newDir("graft-compact")
     val (ingest, compacted) = (s"$base/ingest", s"$base/compacted")
     val input = MemoryStream[StreamEvent]
     // append sink: every micro-batch commits its own part-files -> the
@@ -466,7 +466,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("foreachBatch CDC: streamed change batches maintain the base table") {
     import graft.operators.MergeOps
     import graft.streaming.ChangeRow
-    val base = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val base = Spill.newDir("graft-cdc")
     val tbl = s"$base/table"
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v").write.parquet(tbl)
@@ -498,7 +498,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("foreachBatch join-view IVM: streamed inserts maintain the join by append") {
     import graft.operators.MergeOps
     import graft.streaming.JoinDelta
-    val base = java.nio.file.Files.createTempDirectory("graft-ivmjoin").toString
+    val base = Spill.newDir("graft-ivmjoin")
     val (aDir, bDir, vDir) = (s"$base/a", s"$base/b", s"$base/view")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "a_v").write.parquet(aDir)
     Seq((1L, "x"), (3L, "y")).toDF("k", "b_w").write.parquet(bDir)
@@ -540,7 +540,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("foreachBatch gap-fill/EWMA: maintained grid view equals batch ewmaHourly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ewma").toString
+    val base = Spill.newDir("graft-ewma")
     val hourlyDir = s"$base/hourly"
     // empty maintained hourly table with the operator's schema
     Seq.empty[(String, Timestamp, Long)].toDF("event_type", "bucket", "v_bp")
@@ -582,7 +582,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("foreachBatch seasonal loop: maintained cells recompute batch seasonalProfile") {
-    val base = java.nio.file.Files.createTempDirectory("graft-seasonal").toString
+    val base = Spill.newDir("graft-seasonal")
     val cellDir = s"$base/cells"
     Seq.empty[(String, Long, Long, Long)]
       .toDF("event_type", "hour", "n_events", "v_bp")
@@ -937,8 +937,8 @@ class StreamingOpsSpec extends SparkSpec {
     val bandsOf = decoded.map(p => p.media_id -> p.bands).toMap
     val readmit = PhashItem(decoded.map(_.media_id).max + 1L, bandsOf(tombIds.head))
     val late = late0 :+ readmit
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-phforget").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-phforget-out").toString
+    val ckpt = Spill.newDir("graft-phforget")
+    val outDir = Spill.newDir("graft-phforget-out")
     val input = MemoryStream[PhashForgetEvent]
     // memory sink cannot recover from a checkpoint — foreachBatch (a
     // replayable sink) records every emission with its batch id, so the
@@ -1041,7 +1041,7 @@ class StreamingOpsSpec extends SparkSpec {
     // batch while down, restart from the SAME checkpoint — the recovered
     // band state must already exclude the tombstones, so post-restart
     // emission equals the survivor-batch expectation of the live test.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mhforget").toString
+    val ckpt = Spill.newDir("graft-mhforget")
     val corpus = graft.operators.DedupOps.plantedCorpus(sf("documents"))
     val rows = corpus.select(col("doc_id"), col("text")).as[(Long, String)].collect()
       .sortBy { case (id, _) => (id * 2654435761L) % 1000003L }
@@ -1052,7 +1052,7 @@ class StreamingOpsSpec extends SparkSpec {
     val tombIds = batchAll.flatMap(p => Seq(p._1, p._2))
       .filter(initialIds.contains).distinct.sorted.take(5).toSet
     val textOf = rows.toMap
-    val outDir = java.nio.file.Files.createTempDirectory("graft-mhforget-out").toString
+    val outDir = Spill.newDir("graft-mhforget-out")
     val input = MemoryStream[ForgetEvent]
     // memory sink cannot recover from a checkpoint — foreachBatch (a
     // replayable sink) records every emission with its batch id, so the
@@ -1462,8 +1462,8 @@ class StreamingOpsSpec extends SparkSpec {
     val embOf = rows.toMap
     val readmit = (rows.map(_._1).max + 1L, embOf(tombIds.head))
     val late = late0 :+ readmit
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-embforget").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-embforget-out").toString
+    val ckpt = Spill.newDir("graft-embforget")
+    val outDir = Spill.newDir("graft-embforget-out")
     val input = MemoryStream[EmbedForgetEvent]
     def start() = StreamingOps.embedForgetStream(input.toDS())
       .writeStream
@@ -1663,8 +1663,8 @@ class StreamingOpsSpec extends SparkSpec {
     val embOf = rows.toMap
     val readmit = (rows.map(_._1).max + 1L, embOf(tombIds.head))
     val late = late0 :+ readmit
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cellforget").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-cellforget-out").toString
+    val ckpt = Spill.newDir("graft-cellforget")
+    val outDir = Spill.newDir("graft-cellforget-out")
     val input = MemoryStream[EmbedForgetEvent]
     def start() = StreamingOps.cellForgetStream(input.toDS(), snap)
       .writeStream

@@ -64,7 +64,7 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("the three parquet ts encodings round-trip to the expected dtypes") {
-    val dir = java.nio.file.Files.createTempDirectory("ts-enc").toString
+    val dir = Spill.newDir("ts-enc")
     val paths = writeEncoded(dir)
     assert(spark.read.parquet(paths("ns_long")).schema("ts").dataType == LongType)
     assert(spark.read.parquet(paths("us_ntz")).schema("ts").dataType == TimestampNTZType)
@@ -72,7 +72,7 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("event/asof/range surface is encoding-invariant across all three") {
-    val dir = java.nio.file.Files.createTempDirectory("ts-enc").toString
+    val dir = Spill.newDir("ts-enc")
     val paths = writeEncoded(dir)
     val surface: Seq[(String, DataFrame => DataFrame)] = Seq(
       "tumblingAgg" -> (e => EventOps.tumblingAgg(e, "hour")),
