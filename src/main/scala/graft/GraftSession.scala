@@ -19,6 +19,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is a local[32] default — a real cluster wants ~2-3x total cores or AQE's
   * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` sized to
   * data/128MB.
+  *
+  * Minimum-partition rule: AQE coalesces a shuffle to no fewer than
+  * `4 × shufflePartitions` partitions (`coalescePartitions.minPartitionNum`,
+  * a constant beside `initialPartitionNum` at 8×), unless that would make them
+  * smaller than `minPartitionSize`. Every session the repository builds sets
+  * `shufflePartitions` to its core count, so that is four waves per core,
+  * which bound the tail a retried or straggling task adds to its stage to
+  * about a quarter; at Spark's default of one partition per core, the paper
+  * sort's final stage ran a second wave for its one injected fault. The rule
+  * is scale-neutral: the advisory size still caps every partition (which
+  * governs at 100 TB), and the 64k `minPartitionSize` floor still governs
+  * shuffles too small to fill the cores.
   */
 object GraftSession {
 
@@ -67,6 +79,11 @@ object GraftSession {
       // Overridable for cluster profiles (SPARK_GRAFT_MIN_PARTITION_SIZE).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      // Minimum-partition rule (scaladoc above): AQE's coalescing target is
+      // max(min(advisory, bytes / (4 × shufflePartitions)), minPartitionSize)
+      // instead of Spark's default bytes / defaultParallelism.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
+        (shufflePartitions * 4).toString)
       // r20 (guide §2.2 "fewer, larger partitions"): let AQE coalesce the
       // LAST stage of cached plans too. By default Spark pins a cached
       // plan's output partitioning (canChangeCachedPlanOutputPartitioning

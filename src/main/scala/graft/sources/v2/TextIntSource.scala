@@ -303,13 +303,17 @@ class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
   // through the first delimiter; reading from start-1 means a clean
   // boundary (delimiter at start-1) discards nothing but that delimiter,
   // while a token spanning the boundary is discarded here and owned by the
-  // split to the left (which reads past its own end to finish it)
-  if (p.start > 0) {
-    var b: Byte = 0
-    while ((i < lim || refill()) && { b = buf(i); i += 1; !isWs(b) }) ()
-  }
+  // split to the left (which reads past its own end to finish it). It runs
+  // in the first next(), not the constructor: the task's input metrics
+  // count only the bytes read after the reader is created.
+  private var snapped = p.start == 0
 
   override def next(): Boolean = {
+    if (!snapped) {
+      var b: Byte = 0
+      while ((i < lim || refill()) && { b = buf(i); i += 1; !isWs(b) }) ()
+      snapped = true
+    }
     while (true) {
       var b = ' '.toByte
       while (isWs(b)) {

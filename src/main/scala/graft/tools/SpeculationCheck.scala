@@ -22,16 +22,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
   * real executor JVMs, the minimal topology where speculation can complete.
   * It is a separate main that SpeculationSpec forks into its own JVM (one
   * driver per JVM). Exit 0 = a speculative attempt launched and the job's
-  * result was correct; 2 = it never fired; 1 = crash.
+  * result was correct; 2 = it never fired; 1 = crash. The workers' work
+  * directory (executor logs) is a [[graft.Spill]] directory, printed as
+  * `WORK_DIR=…` and deleted when the JVM exits.
   */
 object SpeculationCheck {
 
   def main(args: Array[String]): Unit = {
     val clusterConf = new org.apache.spark.SparkConf()
       .set("spark.ui.enabled", "false")
+    val workDir = graft.Spill.newDir("graft-speculation-work")
+    println(s"WORK_DIR=$workDir")
     val masterUrl = org.apache.spark.deploy.graftshim.DualHostCluster
       .start(clusterConf, coresPerWorker = 2, memMbPerWorker = 1536,
-        workDirRoot = "/tmp/graft-speculation-work")
+        workDirRoot = workDir)
     val spark = graft.GraftSession
       .builder(master = masterUrl, shufflePartitions = 4)
       // ship the forked JVM's full classpath to the executor JVMs (the

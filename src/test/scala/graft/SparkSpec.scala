@@ -6,11 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites. `local[8,2]` enables in-task retry
   * (maxTaskFailures=2) so fault-tolerance parity tests can inject a
   * first-attempt failure — the moral equivalent of the reference's
-  * `checkFail` fault injection (`Server.java:87-96`).
+  * `checkFail` fault injection (`Server.java:87-96`). Logs at WARN with
+  * [[GraftSession.quietHarnessLogs]], as the harness session does.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession =
-    GraftSession.builder(master = "local[8,2]", shufflePartitions = 8).getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder(master = "local[8,2]", shufflePartitions = 8).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    GraftSession.quietHarnessLogs()
+    s
+  }
   def sf(name: String, dir: String = "/root/testdata/sf0.001") =
     spark.read.parquet(s"$dir/$name.parquet")
 }

@@ -36,5 +36,10 @@ class SpeculationSpec extends SparkSpec {
       .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
     assert(code === 0, s"SpeculationCheck exited $code; tail:\n${out.takeRight(4000)}")
     assert(out.toString.contains("SPECULATIVE_ATTEMPTS="))
+    // the workers' work dir (executor logs) goes with the forked JVM
+    val workDir = out.toString.linesIterator.find(_.startsWith("WORK_DIR="))
+      .map(_.stripPrefix("WORK_DIR="))
+    assert(workDir.isDefined, s"no WORK_DIR line; tail:\n${out.takeRight(4000)}")
+    assert(!new java.io.File(workDir.get).exists(), s"${workDir.get} outlived the JVM")
   }
 }

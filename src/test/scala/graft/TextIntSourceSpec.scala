@@ -126,6 +126,40 @@ class TextIntSourceSpec extends SparkSpec {
     assert(back == expected)
   }
 
+  /** Seeded ints → `textint` source → [[graft.sources.TextIntIO.sort]] →
+    * `textint` sink; returns the part files' values in name order and the
+    * number of part files.
+    */
+  private def sortRoundTrip(xs: Seq[Int]): (Seq[Int], Int) = {
+    val in = writeTemp(xs.mkString(" "))
+    val out = Paths.get(Spill.newDir("graft_v2_sort")).resolve("out")
+    graft.sources.TextIntIO.sort(
+      spark.read.format("textint").option("chunkSize", 1L << 20).load(in))
+      .write.format("textint").mode("append").save(out.toString)
+    val parts = out.toFile.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val concat = parts.toSeq.flatMap(f =>
+      new String(Files.readAllBytes(f.toPath), StandardCharsets.US_ASCII)
+        .split(" ").filter(_.nonEmpty).map(_.toInt))
+    (concat, parts.length)
+  }
+
+  test("a sort big enough to fill every core writes four partitions per core") {
+    val rng = new scala.util.Random(23)
+    val xs = Seq.fill(2000000)(rng.nextInt())
+    val (concat, files) = sortRoundTrip(xs)
+    // minPartitionNum = 4 × the spec session's 8 shuffle partitions
+    assert(files >= 4 * 8, s"$files part files")
+    assert(concat == xs.sorted)
+  }
+
+  test("a small sort still coalesces to at most one partition per core") {
+    val rng = new scala.util.Random(29)
+    val xs = Seq.fill(10000)(rng.nextInt())
+    val (concat, files) = sortRoundTrip(xs)
+    assert(files <= 8, s"$files part files")
+    assert(concat == xs.sorted)
+  }
+
   // The reader parses BYTES: Integer.parseInt of the token's bytes read as
   // ISO-8859-1 chars is its exact oracle. (parseInt of the decoded string
   // would accept non-ASCII digits such as U+0663 '٣'; the reader must not.)
