@@ -234,20 +234,8 @@ object Bench {
     // driver sets no filter and measures everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // Suite-lifetime experiment knobs (the q_label_prop/q_kcore autopsy —
-    // r11 saw a post-closing run hold the graph family 5-8x slow across
-    // ALL passes of one suite JVM while closing/solo runs were fine):
-    //  - ORDER=reverse runs the suite in reverse name order, so the graph
-    //    family executes EARLY; if slowness follows suite position, it is
-    //    accumulated session state, if it follows the family, it is the
-    //    queries themselves.
-    //  - RESTART=N stops and rebuilds the SparkSession every N queries
-    //    (outside timed sections) — the "per-family session" mitigation.
-    val order = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "asc")
-    val restartEvery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RESTART", "0").toInt
-    val sortedNames = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val names = if (order == "reverse") sortedNames.reverse else sortedNames
     // Flush accumulated session debris OUTSIDE timed sections: the
     // warm-up pass leaves thousands of weak-referenced broadcasts/shuffles
     // whose ContextCleaner reclamation otherwise fires mid-measurement —
@@ -281,13 +269,6 @@ object Bench {
     val flushedFinal = new java.util.concurrent.atomic.AtomicBoolean(false)
 
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(2)
-    var sinceRestart = 0
-    def maybeRestart(): Unit = if (restartEvery > 0) {
-      sinceRestart += 1
-      if (sinceRestart >= restartEvery) {
-        spark.stop(); spark = newSession(); sinceRestart = 0
-      }
-    }
     // host-contention discriminator: 1-minute system load average sampled
     // at each pass's start and end, recorded in the artifact — the r10/
     // r12/r13 whole-run contention signature (uniform suite inflation with
@@ -487,7 +468,7 @@ object Bench {
               names.flatMap(n => inflightMap.get(n).map(n -> _)))}"""
         val full =
           s"""{"metric":"total","value":$total,"unit":"sec","protocol":"$protocol","queries":${fmt(results)}$soloJson$errJson,"sf":"$sfDir"""" +
-            s""","mode":"$mode","order":"$order","restart_every":$restartEvery,""" +
+            s""","mode":"$mode",""" +
             s""""loadavg":$loadJson,"pass_external_load":$extJson,""" +
             s""""pass_gc_sec":$gcJson,"pass_peak_heap_mb":$peakJson,""" +
             s""""pass_wall_sec":$wallJson,""" +
@@ -585,7 +566,6 @@ object Bench {
           System.err.println(s"[bench] deadline hit mid-pass at $n — abandoning pass")
         } else {
           inflight.put(n, execute(spark, n, sfDir))
-          maybeRestart()
           // mid-pass checkpoint: pass 1 of a full suite is minutes long —
           // a kill landing inside it would otherwise leave no parseable
           // line at all; a partial compact line every 40 queries bounds

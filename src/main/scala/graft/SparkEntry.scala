@@ -122,16 +122,20 @@ object SparkEntry {
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"), col("lang"))
         .orderBy(col("doc_id"))
     }),
+    // The paper's own pipeline: the unsorted ints as ONE space-joined file
+    // (the reference's input), read back in 4 KiB chunks so most split
+    // boundaries cut a token, then the reference's total-order sort.
     "q_textint_roundtrip" -> ((s, dir) => {
       val tmp = graft.Spill.newDir("graft_textint")
       val ints = t(s, dir, "lineitem").select(col("l_orderkey").cast("int").as("value"))
-      graft.sources.TextIntIO.writePartitioned(ints, s"$tmp/ints")
-      graft.sources.TextIntIO.sort(graft.sources.TextIntIO.read(s, s"$tmp/ints"))
+      ints.coalesce(1).write.format("textint").mode("overwrite").save(s"$tmp/ints")
+      graft.sources.TextIntIO.sort(
+        s.read.format("textint").option("chunkSize", 4 * 1024).load(s"$tmp/ints"))
     }),
-    // Same round trip through the DataSourceV2 connector: byte-range
-    // InputPartitions + boundary-snap protocol owned by our code
-    // (TextIntSource) instead of LineRecordReader. chunkSize forces many
-    // splits so the snap protocol is exercised, not just planned.
+    // The scale-path round trip through the same connector: range-sorted
+    // part files (many inputs, not one) read back in 16 KiB chunks.
+    // chunkSize forces many splits so the snap protocol is exercised, not
+    // just planned.
     "q_textint_v2" -> ((s, dir) => {
       val tmp = graft.Spill.newDir("graft_textint_v2")
       val ints = t(s, dir, "lineitem").select(col("l_orderkey").cast("int").as("value"))

@@ -1,83 +1,28 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.DataFrame
 
-/** The reference engine's native data format: a flat text file of
-  * space-delimited base-10 32-bit integers (`NodeHandler.java:66,69`;
-  * delimiter documented in `Design Document.pdf` p.2). Output is the same
-  * format, globally ascending, single-space-joined, no trailing delimiter
+/** The reference engine's query over its native data format: a flat text
+  * file of space-delimited base-10 32-bit integers (`NodeHandler.java:66,69`;
+  * delimiter documented in `Design Document.pdf` p.2), sorted ascending.
+  *
+  * The format itself is owned by the `textint` connector
+  * ([[graft.sources.v2.TextIntSource]]): its source reads each file by byte
+  * range with the reference's boundary snap (`preprocessStart/End`,
+  * `NodeHandler.java:119-200`), one task per `chunkSize` bytes, and its sink
+  * writes space-joined `part-NNNNN.txt` files, the reference's output format
   * (`NodeHandler.java:79-85,260-279`).
   *
-  * The reference hand-rolls chunked reads with delimiter-boundary snapping
-  * (`preprocessStart/End`, `NodeHandler.java:119-200`) so no token is split or
-  * double-read across chunks. Spark's text source gives the same guarantee
-  * for line boundaries via Hadoop's `LineRecordReader` — with
-  * `spark.sql.files.maxPartitionBytes` playing the role of `chunkSize`
-  * (`Client.java:21`) — so the only parsing left is a per-line tokenize.
-  *
-  * Unlike the reference, values ≥ 999,999 are handled correctly: the
-  * reference's merge uses 999999/999999999 as sentinel keys
+  * Unlike the reference, values ≥ 999,999 sort correctly: the reference's
+  * merge uses 999999/999999999 as sentinel keys
   * (`NodeHandler.java:223,236-238,258,276`) and silently corrupts output for
   * values in that range; we inherit the format, not the bug (regression
-  * pinned in TextIntIOSpec).
+  * pinned in TextIntSourceSpec).
   */
 object TextIntIO {
-
-  /** Read a space/whitespace-delimited integer text file into a single-column
-    * DataFrame `value: int`. Scales: one scan, no shuffle; split size is
-    * governed by `spark.sql.files.maxPartitionBytes`.
-    *
-    * Malformed tokens: the reference crashes the whole job on the first
-    * non-numeric token (`Integer.parseInt`, `NodeHandler.java:69`). Here the
-    * behavior is explicit: lenient mode (default) DROPS unparseable tokens
-    * (`try_cast`); `lenient = false` keeps Spark 4's ANSI cast, which fails
-    * the query naming the offending value (CAST_INVALID_INPUT) — the
-    * reference's semantics with a better error.
-    */
-  def read(spark: SparkSession, path: String, lenient: Boolean = true): DataFrame = {
-    val toks = spark.read
-      .text(path)
-      .select(explode(split(trim(col("value")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
-    if (lenient)
-      toks.select(expr("try_cast(tok AS int)").as("value"))
-        .filter(col("value").isNotNull)
-    else
-      toks.select(col("tok").cast(IntegerType).as("value"))
-  }
 
   /** The reference's whole query: total-order ascending sort
     * (`ServerHandler.java:23-80`).
     */
   def sort(df: DataFrame): DataFrame = df.orderBy("value")
-
-  /** Scale path: write the sorted values one-per-line as text part files.
-    * Because `orderBy` range-partitions, lexicographic part-file order equals
-    * global order — the standard TeraSort output contract; no single-writer
-    * bottleneck at 100 TB.
-    */
-  def writePartitioned(df: DataFrame, path: String): Unit =
-    df.orderBy("value")
-      .select(col("value").cast("string"))
-      .write.mode(SaveMode.Overwrite).text(path)
-
-  /** Format-parity sink (test scale only): single file, single-space-joined,
-    * no trailing delimiter — byte-identical to the reference's output format
-    * (`NodeHandler.java:79-85`). Collects to the driver; the 100 TB path is
-    * [[writePartitioned]].
-    */
-  def writeSingleFile(df: DataFrame, path: String): Unit = {
-    val joined = df
-      .orderBy("value")
-      .rdd
-      .mapPartitions(it => Iterator(it.map(_.getInt(0)).mkString(" ")))
-      .collect()
-      .filter(_.nonEmpty)
-      .mkString(" ")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path),
-      joined.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
 }

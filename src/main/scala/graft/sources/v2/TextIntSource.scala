@@ -31,13 +31,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    with the reference's crash-on-malformed behavior behind
   *    `lenient=false` and drop-malformed as the default.
   *
-  * [[graft.sources.TextIntIO.read]] gets the same result via `spark.read.text`
-  * + Hadoop's LineRecordReader snapping; this source exists to own the split
-  * contract directly (the "document the V2 path for 100 TB" promise of
-  * SURVEY §7.3): byte-range `InputPartition`s are planned from file metadata
-  * only, each reader opens and scans exactly its range plus at most one
-  * spilled token, so a 100 TB directory fans out to `size/chunkSize`
-  * independent tasks with no driver-side data movement.
+  * This is the engine's only reader and writer of the format: byte-range
+  * `InputPartition`s are planned from file metadata only, each reader opens
+  * and scans exactly its range plus at most one spilled token, so a 100 TB
+  * directory fans out to `size/chunkSize` independent tasks with no
+  * driver-side data movement, whatever the file's line layout.
   *
   * Ownership rule (equivalent to LineRecordReader's): a token belongs to the
   * split containing the delimiter immediately before it (split 0 owns the
@@ -103,9 +101,8 @@ class TextIntTable(path: String) extends Table with SupportsRead with SupportsWr
   * `mode("overwrite")` (TRUNCATE capability) removes old parts only inside
   * the same commit. Partition order is preserved: writing a
   * range-partitioned, partition-sorted frame yields lexicographic part
-  * files whose concatenation IS the total order — the
-  * [[graft.sources.TextIntIO.writePartitioned]] TeraSort contract, now
-  * owned end-to-end by the connector.
+  * files whose concatenation IS the total order — the TeraSort output
+  * contract, owned end-to-end by the connector.
   */
 class TextIntWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -242,7 +239,7 @@ case class TextIntReaderFactory(conf: Broadcast[SerializableConfiguration])
 }
 
 object TextIntPartitionReader {
-  /** Bytes per bulk read; a token may straddle two consecutive reads. */
+  /** Largest bulk read; a token may straddle two consecutive reads. */
   val BufBytes: Int = 64 * 1024
   private val MaxNegMagnitude = 2147483648L // -Int.MinValue
 
@@ -251,10 +248,11 @@ object TextIntPartitionReader {
 
 /** Streams one byte range, emitting every integer token the range owns.
   *
-  * Bulk-buffer design: the range is read from the Hadoop stream in
-  * `BufBytes` blocks into the reader's own `byte[]`, and the scan walks that
-  * array by index, accumulating each token's digits into a `long` — no
-  * per-byte stream call and no per-token `String`. O(1) memory: one buffer,
+  * Bulk-buffer design: the range is read from the Hadoop stream in blocks
+  * of `BufBytes`, or of the range plus one token when that is shorter, into
+  * the reader's own `byte[]`, and the scan walks that array by index,
+  * accumulating each token's digits into a `long` — no per-byte stream
+  * call and no per-token `String`. O(1) memory: one buffer,
   * one reused mutable row and, only when `lenient = false`, a copy of the
   * current token's bytes so the error can name it.
   *
@@ -272,13 +270,18 @@ class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
 
   // file offset of buf(0); reading starts at start-1 (see the boundary snap)
   private var bufPos: Long = math.max(0L, p.start - 1)
+  // the range, the snap byte before it and one maximal Int token plus its
+  // delimiter fit in one read; the stream's own buffer takes the same size,
+  // or Hadoop fills its default io.file.buffer.size (64 KiB) however short
+  // the range
+  private val bufBytes = math.min(BufBytes.toLong, p.end - p.start + 13).toInt
   private val in: FSDataInputStream = {
     val hp = new Path(p.file)
-    val stream = hp.getFileSystem(conf).open(hp)
+    val stream = hp.getFileSystem(conf).open(hp, bufBytes)
     stream.seek(bufPos)
     stream
   }
-  private val buf = new Array[Byte](BufBytes)
+  private val buf = new Array[Byte](bufBytes)
   private var lim = 0 // bytes of buf filled by the last read
   private var i = 0 // next unscanned byte of buf
   private val row = new SpecificInternalRow(Seq(IntegerType))
@@ -288,7 +291,7 @@ class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
   /** Reads the next block into `buf`; false at end of file. */
   private def refill(): Boolean = {
     bufPos += lim
-    lim = math.max(0, in.read(buf, 0, BufBytes))
+    lim = math.max(0, in.read(buf, 0, bufBytes))
     i = 0
     lim > 0
   }
@@ -303,7 +306,8 @@ class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
   // through the first delimiter; reading from start-1 means a clean
   // boundary (delimiter at start-1) discards nothing but that delimiter,
   // while a token spanning the boundary is discarded here and owned by the
-  // split to the left (which reads past its own end to finish it). It runs
+  // split to the left (which reads past its own end to finish it); a snap
+  // that reaches `end` without a delimiter leaves the split nothing. It runs
   // in the first next(), not the constructor: the task's input metrics
   // count only the bytes read after the reader is created.
   private var snapped = p.start == 0
@@ -311,13 +315,16 @@ class TextIntPartitionReader(p: TextIntInputPartition, conf: Configuration)
   override def next(): Boolean = {
     if (!snapped) {
       var b: Byte = 0
-      while ((i < lim || refill()) && { b = buf(i); i += 1; !isWs(b) }) ()
+      while ((i < lim || (bufPos + lim < p.end && refill())) &&
+          { b = buf(i); i += 1; !isWs(b) }) ()
       snapped = true
     }
     while (true) {
       var b = ' '.toByte
       while (isWs(b)) {
-        if (i == lim && !refill()) return false
+        // at or past `end` no token can start inside the range: stop
+        // without reading another block
+        if (i == lim && (bufPos + lim >= p.end || !refill())) return false
         b = buf(i)
         i += 1
       }

@@ -1,8 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-import graft.{GraftSession, JobStats}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.{GraftSession, JobStats, Spill}
 import graft.sources.TextIntIO
 
 /** CLI mirroring the reference's client (`Client.java:20-34`): submit a
@@ -16,9 +19,11 @@ import graft.sources.TextIntIO
   * (`Client.java:21`), one scan task per `chunkBytes` of input, whatever
   * the file's line layout. The reference's `mergeJobs` fan-in knob has no
   * analog: Spark's sort needs exactly one shuffle round, so the merge-tree
-  * arity it controls (`Server.java:300`) does not exist here. Default
-  * output is TeraSort-style part files (scale path); `--single-file`
-  * writes the reference's exact single-file format.
+  * arity it controls (`Server.java:300`) does not exist here. The sorted
+  * values go out through the `textint` sink: by default `<output>` is a
+  * directory of space-joined `part-NNNNN.txt` files whose name order is the
+  * total order (scale path); `--single-file` makes `<output>` one file in
+  * the reference's exact format (`NodeHandler.java:79-85`).
   */
 object SortFileApp {
 
@@ -31,11 +36,36 @@ object SortFileApp {
     try {
       val t0 = System.nanoTime()
       val reader = spark.read.format("textint")
-      val df = chunkBytes.fold(reader)(reader.option("chunkSize", _)).load(in)
-      if (single) TextIntIO.writeSingleFile(df, out)
-      else TextIntIO.writePartitioned(df, out)
+      val sorted = TextIntIO.sort(chunkBytes.fold(reader)(reader.option("chunkSize", _)).load(in))
+      if (single) writeSingleFile(spark, sorted, out)
+      else sorted.write.format("textint").mode("overwrite").save(out)
       Result((System.nanoTime() - t0) / 1000000, stats.snapshot)
     } finally stats.close()
+  }
+
+  /** The reference's single output file without a driver collect: the sink
+    * writes the sorted parts to a scratch directory, and their name order is
+    * the total order, so streaming them into `out` with one `' '` between
+    * non-empty parts yields exactly `sorted.mkString(" ")`. The scratch
+    * directory is deleted afterwards.
+    */
+  private def writeSingleFile(spark: SparkSession, sorted: DataFrame, out: String): Unit = {
+    val parts = new Path(Spill.newDir("graft_sortfile_parts"))
+    val fs = parts.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      sorted.write.format("textint").mode("overwrite").save(parts.toString)
+      val sink = new java.io.BufferedOutputStream(Files.newOutputStream(Paths.get(out)), 64 * 1024)
+      try {
+        fs.listStatus(parts)
+          .filter(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
+          .sortBy(_.getPath.getName)
+          .zipWithIndex.foreach { case (part, k) =>
+            if (k > 0) sink.write(' ')
+            val src = fs.open(part.getPath)
+            try src.transferTo(sink) finally src.close()
+          }
+      } finally sink.close()
+    } finally fs.delete(parts, true): Unit
   }
 
   def main(args: Array[String]): Unit = {

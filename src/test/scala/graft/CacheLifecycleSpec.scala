@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 /** Every iterative/multi-consumer operator that persists intermediate state
@@ -76,13 +77,21 @@ class CacheLifecycleSpec extends SparkSpec {
     val byDesign = 5 // q_dedup_clusters/q_dedup_keep_best/q_dedup_incremental
                      // final cluster checkpoints + the q_label_prop label
                      // state and q_kcore core checkpoints
+    // the same pass audits each built frame's plan: a cartesian product
+    // is a scale-killer whatever the sf0.001 timing says
+    val cartesian = scala.collection.mutable.ArrayBuffer.empty[String]
     val leaked = leakedAfter {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => fail(s"$name failed at sf0.001: ${e.getMessage}") }
+        try {
+          val df = fn(spark, dir)
+          if (df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+              .contains("CartesianProduct")) cartesian += name
+          df.write.format("noop").mode("overwrite").save()
+        } catch { case e: Throwable => fail(s"$name failed at sf0.001: ${e.getMessage}") }
       }
     }
     assert(leaked <= byDesign, s"net persistent RDDs grew by $leaked (> $byDesign)")
+    assert(cartesian.isEmpty, s"cartesian product in ${cartesian.mkString(", ")}")
   }
 
   test("Spill scratch-dir knob: graft.spill.dir relocates the barrier and round-trips") {

@@ -59,8 +59,8 @@ class PropertySpec extends SparkSpec {
   test("property: text-int round trip preserves the multiset, sorted") {
     check("textint", 10, Prop.forAll(genInts) { xs =>
       val tmp = Spill.newDir("graft_prop")
-      TextIntIO.writePartitioned(xs.toDF("value"), s"$tmp/t")
-      val back = TextIntIO.sort(TextIntIO.read(spark, s"$tmp/t")).as[Int].collect()
+      xs.toDF("value").write.format("textint").mode("overwrite").save(s"$tmp/t")
+      val back = TextIntIO.sort(spark.read.format("textint").load(s"$tmp/t")).as[Int].collect()
       back.toList == xs.sorted
     })
   }

@@ -40,14 +40,6 @@ class TextIntSourceSpec extends SparkSpec {
     assert(df.as[Int].collect().sorted.toSeq == (1 to 10))
   }
 
-  test("agrees with TextIntIO.read on the same file") {
-    val ints = Seq(5, 3, 999999, 1000001, -7, 0, 42)
-    val path = writeTemp(ints.mkString(" "))
-    val viaV2 = readV2(path, 4)
-    val viaText = graft.sources.TextIntIO.read(spark, path).as[Int].collect().toSeq
-    assert(viaV2.sorted == viaText.sorted)
-  }
-
   test("lenient default drops malformed tokens; strict mode names them") {
     val path = writeTemp("1 x2x 3")
     assert(readV2(path, 100).sorted == Seq(1, 3))
@@ -68,6 +60,32 @@ class TextIntSourceSpec extends SparkSpec {
     (1L to 12L).foreach { cs =>
       assert(readV2(path, cs).sorted == ints.sorted, s"chunkSize=$cs")
     }
+  }
+
+  test("property: engine sort == JVM sort, full Int range incl. sentinel values") {
+    val rng = new scala.util.Random(42)
+    val sentinels = Seq(999999, 999998, 1000000, 999999999, 0, -1,
+      Int.MaxValue, Int.MinValue)
+    for (trial <- 1 to 8) {
+      val n = 1 + rng.nextInt(2000)
+      val xs = Seq.fill(n)(rng.nextInt()) ++ rng.shuffle(sentinels).take(trial)
+      val got = graft.sources.TextIntIO.sort(spark.read.format("textint")
+        .option("chunkSize", 4096).load(writeTemp(xs.mkString(" ")))).as[Int].collect()
+      assert(got.toSeq == xs.sorted, s"trial $trial")
+    }
+  }
+
+  test("a scan in chunks shorter than the reader's buffer reads each byte about once") {
+    val rng = new scala.util.Random(3)
+    val path = writeTemp(Seq.fill(20000)(rng.nextInt()).mkString(" "))
+    val size = Files.size(Paths.get(path, "part-00000.txt"))
+    val stats = JobStats.attach(spark)
+    val read = try {
+      spark.read.format("textint").option("chunkSize", 4096).load(path)
+        .write.format("noop").mode("overwrite").save()
+      stats.snapshot.bytesRead
+    } finally stats.close()
+    assert(read >= size && read <= 1.05 * size, s"read $read bytes of a $size-byte file")
   }
 
   test("directory input: all part files read, underscore/dot files skipped") {
@@ -119,7 +137,7 @@ class TextIntSourceSpec extends SparkSpec {
   test("end-to-end: V2 scan of a TeraSort-partitioned write, totally sorted") {
     val ints = sf("lineitem").select(col("l_orderkey").cast("int").as("value"))
     val tmp = Spill.newDir("graft_textint_rt")
-    graft.sources.TextIntIO.writePartitioned(ints, s"$tmp/ints")
+    graft.sources.TextIntIO.sort(ints).write.format("textint").mode("overwrite").save(s"$tmp/ints")
     val back = spark.read.format("textint").option("chunkSize", 4096)
       .load(s"$tmp/ints").orderBy("value").as[Int].collect().toSeq
     val expected = ints.as[Int].collect().toSeq.sorted
