@@ -39,22 +39,4 @@ class SortFileAppSpec extends SparkSpec {
     assert(files.length > 1 &&
       Files.readString(single, StandardCharsets.US_ASCII) == xs.sorted.mkString(" "))
   }
-
-  test("single file: byte for byte mkString(\" \"), no scratch parts left") {
-    val scratch = Paths.get(Spill.newDir("graft_sortfile_scratch"))
-    val dir = Paths.get(Spill.newDir("graft_sortfile_fmt"))
-    sys.props("graft.spill.dir") = scratch.toString
-    try {
-      for ((xs, k) <- Seq(Seq(42, 7, 999, 7, -3, 100000), Seq(7), Seq.empty[Int]).zipWithIndex) {
-        val in = dir.resolve(s"in$k.txt")
-        Files.write(in, xs.mkString(" ").getBytes(StandardCharsets.US_ASCII))
-        val out = dir.resolve(s"out$k.txt")
-        // 8-byte chunks: several scan tasks even for six ints
-        SortFileApp.run(spark, in.toString, out.toString, Some(8L), single = true)
-        assert(Files.readString(out, StandardCharsets.US_ASCII) == xs.sorted.mkString(" "))
-        assert(scratch.toFile.list().isEmpty, scratch.toFile.list().mkString(","))
-      }
-    } finally sys.props.remove("graft.spill.dir")
-    assert(Files.readString(dir.resolve("out0.txt")) == "-3 7 7 42 999 100000")
-  }
 }
