@@ -8,17 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * knobs: `chunkSize` (bytes per map task, `Client.java:21`) and `mergeJobs`
   * (merge fan-in, `Server.java:300`). Their Spark equivalents are
   * `spark.sql.files.maxPartitionBytes` (scan split size) and
-  * `spark.sql.shuffle.partitions` (reduce fan-in); both are set here and
-  * overridable per-session. Fault tolerance (the bulk of the reference's code:
-  * heartbeats `Server.java:588-650`, retry `Server.java:183-188`, speculation
-  * `Server.java:194-259`) maps to Spark conf, not code: `spark.task.maxFailures`,
-  * `spark.speculation`, `spark.network.timeout`.
+  * `spark.sql.shuffle.partitions` (reduce fan-in); both are set here, and
+  * per-run conf goes through `spark.conf.set` after the session is built.
+  * Fault tolerance (the bulk of the reference's code: heartbeats
+  * `Server.java:588-650`, retry `Server.java:183-188`, speculation
+  * `Server.java:194-259`) maps to Spark conf, not code:
+  * `spark.task.maxFailures`, `spark.speculation`, `spark.network.timeout`.
   *
   * Scale notes (100 TB / 1000 executors): AQE is on so skewed shuffles re-plan
-  * at runtime (`skewJoin`, partition coalescing); shuffle partition count here
-  * is a local[32] default — a real cluster wants ~2-3x total cores or AQE's
-  * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` sized to
-  * data/128MB.
+  * at runtime (`skewJoin`, partition coalescing); every caller passes the
+  * shuffle partition count — a real cluster wants ~2-3x total cores, with
+  * AQE's `initialPartitionNum` (8× that count here) sized to data/128MB.
   *
   * Minimum-partition rule: AQE coalesces a shuffle to no fewer than
   * `4 × shufflePartitions` partitions (`coalescePartitions.minPartitionNum`,
@@ -35,8 +35,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraftSession {
 
   def builder(
-      master: String = "local[32]",
-      shufflePartitions: Int = 32,
+      master: String,
+      shufflePartitions: Int,
       appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -56,11 +56,10 @@ object GraftSession {
       // outgrows base-count × executor-memory spills (measured: the 100x
       // q_dedup_jaccard postings shuffle went super-linear at 32
       // partitions). At small SF the coalesce collapses the extra
-      // partitions, so local runs keep their plans; override via
-      // SPARK_GRAFT_INIT_PARTITIONS (a real cluster wants ~data/128MB).
+      // partitions, so local runs keep their plans (a real cluster wants
+      // ~data/128MB, set through `spark.conf.set`).
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          (shufflePartitions * 8).toString))
+        (shufflePartitions * 8).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // r20 (guide §2.5/§2.6 idle capacity): AQE's coalescing floor.
       // With parallelismFirst=true (default) AQE targets
@@ -76,9 +75,7 @@ object GraftSession {
       // 1m (default) 54.9 s → 128k 44.1 → 64k 40.4 → 16k 48.2 —
       // 64k is the optimum and the tail is flat across all four
       // (q_agg 0.39/0.38, q_window 0.31/0.32, q_tpch_q6 0.17/0.18).
-      // Overridable for cluster profiles (SPARK_GRAFT_MIN_PARTITION_SIZE).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Minimum-partition rule (scaladoc above): AQE's coalescing target is
       // max(min(advisory, bytes / (4 × shufflePartitions)), minPartitionSize)
       // instead of Spark's default bytes / defaultParallelism.
@@ -97,8 +94,7 @@ object GraftSession {
       // scale-adaptive rule every uncached shuffle already follows (at
       // 100 TB the advisory size yields MORE partitions, not fewer; this
       // is not a local-only constant).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COALESCE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // events.parquet carries ns-precision timestamps, which Spark's parquet
@@ -116,8 +112,6 @@ object GraftSession {
       .config("spark.speculation", "true")
       .config("spark.speculation.multiplier", "3")
       .config("spark.speculation.quantile", "0.9")
-
-  def get(): SparkSession = builder().getOrCreate()
 
   /** The one session the harness mains (Bench, Verify and the tools) run
     * in: `local[n]` with `n` shuffle partitions, where `n` is

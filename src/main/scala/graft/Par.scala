@@ -35,13 +35,16 @@ object Par {
             def call(): T = t()
           })
         }
-        futures.map { f =>
-          try f.get()
+        // wait for EVERY section before rethrowing: a failed leg must not
+        // leave its siblings submitting jobs after the query has failed
+        val settled = futures.map { f =>
+          try Right(f.get())
           catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
+            case e: java.util.concurrent.ExecutionException => Left(e.getCause)
           }
         }
+        settled.collectFirst { case Left(e) => throw e }
+        settled.collect { case Right(r) => r }
       } finally pool.shutdown()
     }
 
