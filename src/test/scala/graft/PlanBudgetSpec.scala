@@ -131,7 +131,25 @@ class PlanBudgetSpec extends SparkSpec {
     // r19: the text mining member — the anchor-postings score chain
     // (planted-union corpus read by the anchor and postings branches) +
     // one per-anchor window; band filter is a pre-rank predicate
-    "q_hard_negatives_text" -> Pin(6, 4, 0, 2))
+    "q_hard_negatives_text" -> Pin(6, 4, 0, 2),
+    // the embedding near-dup and ANN-audit family, measured before its
+    // shared pairing/rollup helpers replaced the per-operator copies:
+    // every count held over three runs at sf0.001. q_sim_recall
+    // (shuffles 9/10), q_recall_audit_cells_hier (bcast 10/11) and
+    // q_recall_audit_semdedup (bcast 5/6) fluttered and are left out.
+    "q_sq_recall" -> Pin(5, 5, 1, 4),
+    "q_mrl_recall" -> Pin(10, 12, 0, 7),
+    "q_recall_audit_ivf_hier" -> Pin(11, 12, 5, 8),
+    "q_recall_audit_ivf_trained" -> Pin(17, 15, 5, 16),
+    "q_recall_audit_neardup" -> Pin(2, 2, 2, 3),
+    "q_recall_audit_simhash" -> Pin(15, 8, 6, 6),
+    "q_embed_neardup_cells_hier" -> Pin(6, 6, 4, 5),
+    // the hier assignment is localCheckpointed: the final plan reads the
+    // checkpoint, never parquet
+    "q_semdedup_hier" -> Pin(0, 2, 0, 0),
+    "q_knn_graph_hier" -> Pin(5, 5, 2, 4),
+    "q_knn_graph_hier_p2" -> Pin(5, 6, 3, 4),
+    "q_sim_ivf_hier" -> Pin(8, 5, 1, 6))
 
   for ((name, pin) <- pins) {
     test(s"plan budget: $name") {
