@@ -269,18 +269,23 @@ object Bench {
     * toward the core count, so raw loadavg cannot gate a pass; sampled
     * every 2 s and less the cores this JVM consumed (process CPU time over
     * wall), it sits near 0 on an idle box and shows a competing run as the
-    * gap. Fewer than 2 samples are unmeasurable: -1, warned on stderr,
-    * treated as clean.
+    * gap. [[stop]] takes one more sample after the thread ends, so a pass
+    * shorter than the interval still has two. Fewer than 2 samples (no
+    * loadavg on this OS) are unmeasurable: -1, warned on stderr, treated
+    * as clean.
     */
   private final class LoadSampler {
     private val samples = new ConcurrentLinkedQueue[java.lang.Double]()
     private val cpu0 = processCpuNs()
     private val w0 = System.nanoTime()
+    private def sample(): Unit = {
+      val l = osBean.getSystemLoadAverage
+      if (l >= 0) samples.add(l)
+    }
     private val th = new Thread(() =>
       try {
         while (true) {
-          val l = osBean.getSystemLoadAverage
-          if (l >= 0) samples.add(l)
+          sample()
           Thread.sleep(2000)
         }
       } catch { case _: InterruptedException => () },
@@ -291,6 +296,7 @@ object Bench {
     def stop(tag: String): Double = {
       th.interrupt()
       th.join()
+      sample()
       val wall = (System.nanoTime() - w0) / 1e9
       val ownCores = if (cpu0 >= 0) (processCpuNs() - cpu0) / 1e9 / wall else -1.0
       val k = samples.size

@@ -2800,8 +2800,7 @@ object SparkEntry {
       "ON a.c_id = b.c_id AND a.vec_id < b.vec_id " +
       s"WHERE ${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} >= 9900), " +
       "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM n " +
-      s"WHERE ${StableHash.hash60Sql("CAST(vec_id AS VARCHAR)")} % " +
-      "greatest(1, CAST(ceil((SELECT count(*) FROM n) / 64.0) AS BIGINT)) = 0), " +
+      s"WHERE ${DedupOps.anchorPredSql("vec_id", "n")}), " +
       "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
       "greatest(n.vec_id, a.a_id) AS pb FROM n CROSS JOIN anch a " +
       "WHERE n.vec_id <> a.a_id AND " +
@@ -2946,8 +2945,7 @@ object SparkEntry {
       hier: Boolean, probes: Int, superProbes: Int = 1): String =
     s"${duckCellsCtes(hier, probes, superProbes)}, " +
       "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM n " +
-      s"WHERE ${StableHash.hash60Sql("CAST(vec_id AS VARCHAR)")} % " +
-      "greatest(1, CAST(ceil((SELECT count(*) FROM n) / 64.0) AS BIGINT)) = 0), " +
+      s"WHERE ${DedupOps.anchorPredSql("vec_id", "n")}), " +
       "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
       "greatest(n.vec_id, a.a_id) AS pb FROM n CROSS JOIN anch a " +
       "WHERE n.vec_id <> a.a_id AND " +
@@ -4072,8 +4070,7 @@ object SparkEntry {
     "q_recall_audit_minhash" ->
       (s"WITH $duckMinhashCtes, $duckVerifiedPairsCte, " +
         "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${StableHash.hash60Sql("CAST(doc_id AS VARCHAR)")} % " +
-        "greatest(1, CAST(ceil((SELECT count(*) FROM corpus) / 64.0) AS BIGINT)) = 0), " +
+        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
         "ashx AS (SELECT a_id, unnest(a_shs) AS s FROM anchd), " +
         "cidx AS (SELECT DISTINCT ashx.a_id, sh.doc_id FROM ashx " +
         "JOIN sh ON ashx.s = sh.s AND sh.doc_id <> ashx.a_id), " +
@@ -4222,8 +4219,7 @@ object SparkEntry {
         s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
         s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
         "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${StableHash.hash60Sql("CAST(doc_id AS VARCHAR)")} % " +
-        "greatest(1, CAST(ceil((SELECT count(*) FROM corpus) / 64.0) AS BIGINT)) = 0), " +
+        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
         "ashx AS (SELECT a_id, unnest(a_shs) AS sx FROM anchd), " +
         "shx AS (SELECT doc_id, unnest(shs) AS sx FROM sl), " +
         "cidx AS (SELECT DISTINCT ashx.a_id, shx.doc_id FROM ashx " +
@@ -4636,7 +4632,9 @@ object SparkEntry {
     // probes (crn <= 4 over all cells) unchanged
     "q_sim_ivf_hier" -> duckSimIvfSql(hier = true),
     // mirrors SimOps.ivfRecallSweep: the q_sim_ivf probe chain evaluated
-    // at nProbe 1/2/4 against the exact brute-force top-10
+    // at nProbe 1/2/4 against the exact brute-force top-10; hit counts
+    // LEFT-join the swept nProbe list, so a zero-hit nProbe still emits
+    // its row (the shared recall-sweep rollup)
     "q_sim_recall" ->
       ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
         "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
@@ -4664,12 +4662,14 @@ object SparkEntry {
         "WHERE rnk <= 10), " +
         "h AS (SELECT it.n_probe, CAST(count(*) AS BIGINT) AS n_hits FROM it " +
         "JOIN bt ON it.q_id = bt.q_id AND it.vec_id = bt.vec_id GROUP BY it.n_probe) " +
-        "SELECT n_probe, n_hits, CAST((n_hits * 10000) // 50 AS BIGINT) AS recall_bp " +
-        "FROM h ORDER BY n_probe"),
+        "SELECT pv.n_probe, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits, " +
+        "CAST((coalesce(h.n_hits, 0) * 10000) // 50 AS BIGINT) AS recall_bp " +
+        "FROM pv LEFT JOIN h USING (n_probe) ORDER BY n_probe"),
     // mirrors SimOps.ivfRecallSweepHier: the q_sim_ivf_hier chain with the
     // superProbes knob as a cross-joined sweep dimension (sp rides every
     // CTE after the supercenter ranking, so each sp value gets its own
-    // block-union assignment), scored against the same brute-force top-10
+    // block-union assignment), scored against the same brute-force top-10;
+    // hit counts LEFT-join the swept list (a zero-hit value keeps its row)
     "q_recall_audit_ivf_hier" ->
       ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
         "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
@@ -4718,9 +4718,9 @@ object SparkEntry {
         "WHERE rnk <= 10), " +
         "h AS (SELECT it.sp, CAST(count(*) AS BIGINT) AS n_hits FROM it " +
         "JOIN bt ON it.q_id = bt.q_id AND it.vec_id = bt.vec_id GROUP BY it.sp) " +
-        "SELECT sp AS super_probes, n_hits, " +
-        "CAST((n_hits * 10000) // 50 AS BIGINT) AS recall_bp " +
-        "FROM h ORDER BY super_probes"),
+        "SELECT spv.sp AS super_probes, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits, " +
+        "CAST((coalesce(h.n_hits, 0) * 10000) // 50 AS BIGINT) AS recall_bp " +
+        "FROM spv LEFT JOIN h USING (sp) ORDER BY super_probes"),
     // mirrors SimOps.ivfKmeansTopK (iters=1): one Lloyd round with
     // bp-quantized integer sums (exact in both engines), then the same
     // probe chain as q_sim_ivf over the refined centroid table
@@ -5000,8 +5000,7 @@ object SparkEntry {
         s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
         s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
         "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${StableHash.hash60Sql("CAST(doc_id AS VARCHAR)")} % " +
-        "greatest(1, CAST(ceil((SELECT count(*) FROM corpus) / 64.0) AS BIGINT)) = 0), " +
+        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
         "ashx AS (SELECT a_id, unnest(a_shs) AS sx FROM anchd), " +
         "shx AS (SELECT doc_id, unnest(shs) AS sx FROM sl), " +
         "cidx AS (SELECT DISTINCT ashx.a_id, shx.doc_id FROM ashx " +
@@ -5613,8 +5612,7 @@ object SparkEntry {
     "q_recall_audit_neardup" ->
       (s"WITH $duckNearDupCtes, " +
         "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM nrep " +
-        s"WHERE ${StableHash.hash60Sql("CAST(vec_id AS VARCHAR)")} % " +
-        "greatest(1, CAST(ceil((SELECT count(*) FROM nrep) / 64.0) AS BIGINT)) = 0), " +
+        s"WHERE ${DedupOps.anchorPredSql("vec_id", "nrep")}), " +
         "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
         "greatest(n.vec_id, a.a_id) AS pb FROM nrep n CROSS JOIN anch a " +
         "WHERE n.vec_id <> a.a_id AND " +

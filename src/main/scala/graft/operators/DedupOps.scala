@@ -241,6 +241,45 @@ object DedupOps {
         col("entries_dropped"), col("pairs_kept"), col("pairs_forgone"), col("hottest"),
         lit("wholesale_drop").as("cap_semantics"))
 
+  /** The recall audits' anchor-sample rule, the one place it is written:
+    * one count() of `universe`, then a row is an anchor iff
+    * `hash60(id) % ⌈n / 64⌉ == 0` — ~64 hash-chosen anchors at any scale,
+    * a stateless per-row predicate the DuckDB oracles reproduce.
+    */
+  private[graft] def anchorPred(universe: DataFrame, idCol: String): Column = {
+    val every = math.max(1L, math.ceil(universe.count() / 64.0).toLong)
+    StableHash.hash60(col(idCol).cast("string")) % every === 0
+  }
+
+  /** DuckDB predicate matching [[anchorPred]]: `countFrom` must be a
+    * relation holding the SAME universe the Spark side counted. */
+  private[graft] def anchorPredSql(idCol: String, countFrom: String): String =
+    s"${StableHash.hash60Sql(s"CAST($idCol AS VARCHAR)")} % " +
+      s"greatest(1, CAST(ceil((SELECT count(*) FROM $countFrom) / 64.0) AS BIGINT)) = 0"
+
+  /** The distinct anchor-touching pairs (pa, pb) of `found` (id_a, id_b)
+    * against anchors (a_id, …). */
+  private[graft] def anchorFound(anch: DataFrame, found: DataFrame): DataFrame =
+    found
+      .join(broadcast(anch.select(col("a_id"))),
+        col("id_a") === col("a_id") || col("id_b") === col("a_id"))
+      .select(col("id_a").as("pa"), col("id_b").as("pb")).distinct()
+
+  /** The anchor-shape recall report every anchor-sample audit shares, text
+    * and embedding: anchor-restrict `found` ([[anchorFound]]) and fold the
+    * three counts into one row (n_anchors, n_truth, n_found, recall_bp),
+    * recall_bp = found·10⁴ div truth (10000 on an empty truth).
+    */
+  private[graft] def recallRollup(
+      anch: DataFrame, truth: DataFrame, found: DataFrame): DataFrame =
+    truth.agg(count(lit(1)).as("n_truth"))
+      .crossJoin(anchorFound(anch, found).agg(count(lit(1)).as("n_found")))
+      .crossJoin(anch.agg(count(lit(1)).as("n_anchors")))
+      .select(col("n_anchors"), col("n_truth"), col("n_found"),
+        expr(s"CASE WHEN n_truth > 0 THEN " +
+          TextOps.floorDivSql("n_found * 10000", "n_truth") +
+          " ELSE 10000 END").as("recall_bp"))
+
   /** DuckDB rollup matching [[capAudit]]: select from a CTE/subquery named
     * `bs` exposing one BIGINT column `sz` per bucket.
     */
@@ -1134,13 +1173,11 @@ object DedupOps {
   private def anchorJaccardScores(
       corpus: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
-    val nDocs = corpus.count()
-    val every = math.max(1L, math.ceil(nDocs / 64.0).toLong)
+    val isAnchor = anchorPred(corpus, idCol)
     val s = corpus.select(
       col(idCol),
       array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3)).as("shs"))
-    val anch = s.filter(
-      StableHash.hash60(col(idCol).cast("string")) % every === 0)
+    val anch = s.filter(isAnchor)
       .select(col(idCol).as("a_id"), col("shs").as("a_shs"))
     val ainv = anch.select(col("a_id"), size(col("a_shs")).as("n_a"),
       explode(col("a_shs")).as("sh"))
@@ -1194,24 +1231,6 @@ object DedupOps {
       .orderBy(col("a_id"), col("rank"))
   }
 
-  /** Anchor-restrict the found pairs (id_a, id_b) and fold the three
-    * counts into the family's one-row recall report. */
-  private def recallRollup(
-      anch: DataFrame, truth: DataFrame, found: DataFrame): DataFrame = {
-    val anchorIds = anch.select(col("a_id"))
-    val fa = found
-      .join(broadcast(anchorIds),
-        col("id_a") === col("a_id") || col("id_b") === col("a_id"))
-      .select(col("id_a"), col("id_b")).distinct()
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(fa.agg(count(lit(1)).as("n_found")))
-      .crossJoin(anch.agg(count(lit(1)).as("n_anchors")))
-      .select(col("n_anchors"), col("n_truth"), col("n_found"),
-        expr(s"CASE WHEN n_truth > 0 THEN " +
-          TextOps.floorDivSql("n_found * 10000", "n_truth") +
-          " ELSE 10000 END").as("recall_bp"))
-  }
-
   /** RECALL audit for [[simhashBallPairs]] — the SimHash leg of the text
     * recall-audit family, scored against the SAME anchor-sample exact
     * Jaccard truth as [[minhashRecallAudit]] (identical anchor rule,
@@ -1244,12 +1263,8 @@ object DedupOps {
       thresholdBp: Int = 8000,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val (anch, truth) = jaccardAnchorTruth(corpus, idCol, textCol, thresholdBp)
-    val anchorIds = anch.select(col("a_id"))
-    val fa = simhashBallPairs(corpus, idCol, textCol, bits, bands,
-      maxDist, maxBucket)
-      .join(broadcast(anchorIds),
-        col("id_a") === col("a_id") || col("id_b") === col("a_id"))
-      .select(col("id_a").as("pa"), col("id_b").as("pb")).distinct()
+    val fa = anchorFound(anch,
+      simhashBallPairs(corpus, idCol, textCol, bits, bands, maxDist, maxBucket))
     val hit = fa.join(truth, Seq("pa", "pb"))
     truth.agg(count(lit(1)).as("n_truth"))
       .crossJoin(fa.agg(count(lit(1)).as("n_candidates")))

@@ -620,10 +620,7 @@ object MultimodalOps {
       maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
     require(maxDist < grid, "recall guarantee needs maxDist < number of bands")
     // exact-dedup-first: one representative per distinct hash vector
-    val groups = sk.groupBy(col("bands")).agg(min(col("media_id")).as("rep_id"))
-    val mem = sk.join(groups, Seq("bands"))
-      .select(col("media_id"), col("rep_id"))
-    val reps = groups.select(col("rep_id").as("media_id"), col("bands"))
+    val (reps, mem) = SimOps.repCollapse(sk, "media_id", "bands")
     val buckets = reps
       .select(col("media_id"), col("bands"), posexplode(col("bands")))
       .select(col("media_id"), col("bands"),
@@ -646,21 +643,9 @@ object MultimodalOps {
       .groupBy(col("p.id_a").as("ra"), col("p.id_b").as("rb"))
       .agg(min(col("p.d")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxDist)
-    // re-attach members: cross-group pairs inherit the rep distance …
-    val cross = repPairs
-      .join(mem.as("ma"), col("ra") === col("ma.rep_id"))
-      .join(mem.as("mb"), col("rb") === col("mb.rep_id"))
-      .select(
-        least(col("ma.media_id"), col("mb.media_id")).as("id_a"),
-        greatest(col("ma.media_id"), col("mb.media_id")).as("id_b"),
-        col("hamming"))
-    // … and each exact group contributes its own pairs at hamming 0
-    val intra = mem.as("x")
-      .join(mem.as("y"),
-        col("x.rep_id") === col("y.rep_id") && col("x.media_id") < col("y.media_id"))
-      .select(col("x.media_id").as("id_a"), col("y.media_id").as("id_b"),
-        lit(0L).as("hamming"))
-    cross.unionByName(intra)
+    // re-attach members: cross-group pairs inherit the rep distance, each
+    // exact group contributes its own pairs at hamming 0
+    SimOps.reattach(repPairs, mem, "media_id", score = "hamming", exact = 0L)
       .withColumn("same_src",
         expr(s"CAST(id_a div $groupSize = id_b div $groupSize AS BIGINT)"))
       .orderBy(col("id_a"), col("id_b"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoints
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,6 +39,10 @@ object SimOps {
     * clump failure mode at scale.
     */
   val DefaultMaxCell = 256
+
+  /** Encoders of the swept key lists ([[recallSweep]]). */
+  private implicit val intKeys: Encoder[Int] = Encoders.scalaInt
+  private implicit val stringKeys: Encoder[String] = Encoders.STRING
 
   /** Sequential double dot product — the codegen'd [[graft.functions.VecDot]]
     * kernel (registered by `GraftExtensions`). Bit-identical to [[dotHof]];
@@ -82,6 +86,12 @@ object SimOps {
       col(embCol).as("e"),
       l2Norm(col(embCol)).as("nrm"))
 
+  /** IVF coarse-quantizer centroids (c_id, ce, cn): the `centroidPred`
+    * rows of a [[normalized]] frame. */
+  private def centroids(n: DataFrame, centroidPred: Column, idCol: String): DataFrame =
+    n.filter(centroidPred)
+      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+
   /** Brute-force cosine top-k: every candidate scored against every query
     * vector (queries broadcast), `row_number` per query over
     * (cosine desc, vec_id). Output: (q_id, rank, vec_id, cos_bp).
@@ -102,20 +112,64 @@ object SimOps {
     rankTopK(pairs, k, idCol)
   }
 
-  /** Recall@k of the IVF index against exact brute force, swept over
-    * `probes` values of nProbe — the quality/cost knob a 100 TB ANN
-    * deployment tunes ("how many cells must I probe for recall 0.9?").
-    * Recall is provably monotone in nProbe: a broader probe's candidate
-    * set is a superset, and any true top-k member present in a candidate
-    * set survives its exact re-ranking (SimOpsSpec pins monotonicity).
+  /** The recall rollup every ANN sweep shares: one count of the query set
+    * (which must be non-empty — recall_bp divides by it), one
+    * [[bruteTopK]] truth, and per swept key the `variant` top-k
+    * (q_id, idCol) joined against it. Every swept key emits its row, a
+    * key with no hits at n_hits = 0: the key list is unioned into the hit
+    * rows before the count, which costs no join — a left join onto the
+    * key list would add a shuffle and a broadcast per sweep.
+    * recall_bp is exact integer: (hits · 10⁴) div (|queries| · k).
     *
-    * Scale shape: one brute-force pass (queries broadcast — the ground
-    * truth is per-QUERY work, not per-corpus-pair) plus one [[ivfTopK]]
-    * per swept value; the per-probe result sets are k·|queries| rows, so
-    * the join + recall aggregation is metadata-sized. recall_bp is exact
-    * integer: (hits * 10000) div (|queries| * k).
+    * Scale shape: the truth is per-QUERY work (queries broadcast), and
+    * each variant's result is k·|queries| rows, so the join and the
+    * rollup are metadata-sized.
     *
-    * Output: (n_probe, n_hits, recall_bp) ordered by n_probe.
+    * Output: (keyCol, n_hits, recall_bp) ordered by keyCol; with
+    * `keyCol = None` one (n_hits, recall_bp) row over the single variant.
+    */
+  private def recallSweep[T: Encoder](
+      op: String,
+      emb: DataFrame,
+      queryPred: Column,
+      k: Int,
+      idCol: String,
+      embCol: String,
+      keyCol: Option[String],
+      keys: Seq[T])(variant: T => DataFrame): DataFrame = {
+    require(keys.nonEmpty, s"$op: empty sweep")
+    val nq = emb.filter(queryPred).count()
+    require(nq > 0, s"$op: queryPred selects no rows — " +
+      "recall_bp would divide by zero in the generated SQL")
+    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
+      .select(col("q_id"), col(idCol))
+    val recallBp = expr(s"(n_hits * 10000) div ${nq * k}")
+    keyCol match {
+      case None =>
+        variant(keys.head).select(col("q_id"), col(idCol))
+          .join(truth, Seq("q_id", idCol))
+          .agg(count(lit(1)).as("n_hits"))
+          .withColumn("recall_bp", recallBp)
+      case Some(key) =>
+        keys.map { v =>
+          variant(v).select(lit(v).as(key), col("q_id"), col(idCol))
+        }.reduce(_ unionByName _)
+          .join(truth, Seq("q_id", idCol))
+          .select(col(key), lit(1).as("hit"))
+          .unionByName(emb.sparkSession.createDataset(keys).toDF(key)
+            .select(col(key), lit(null).cast("int").as("hit")))
+          .groupBy(col(key))
+          .agg(count(col("hit")).as("n_hits"))
+          .withColumn("recall_bp", recallBp)
+          .orderBy(col(key))
+    }
+  }
+
+  /** Recall@k of the IVF index ([[ivfTopK]]) against exact brute force,
+    * swept over nProbe — the knob an ANN deployment tunes. Monotone in
+    * nProbe: a broader probe's candidates are a superset, and a true top-k
+    * member among them survives the exact re-rank (spec-pinned).
+    * Rollup: [[recallSweep]]. Output: (n_probe, n_hits, recall_bp).
     */
   def ivfRecallSweep(
       emb: DataFrame,
@@ -125,33 +179,17 @@ object SimOps {
       k: Int = 10,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"ivfRecallSweep: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val approx = probes.map { np =>
+    recallSweep("ivfRecallSweep", emb, queryPred, k, idCol, embCol,
+        Some("n_probe"), probes) { np =>
       ivfTopK(emb, queryPred, centroidPred, k, np, idCol, embCol)
-        .select(lit(np).as("n_probe"), col("q_id"), col(idCol))
-    }.reduce(_ union _)
-    approx
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("n_probe"))
-      .agg(count(lit(1)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("n_probe"))
+    }
   }
 
-  /** Recall@k of hier IVF SEARCH against exact brute force, swept over
-    * `superProbes` — the [[ivfRecallSweep]] analog for the two-level
-    * quantizer's own knob: nProbe prices the cell-boundary miss (the
-    * query side, exact either way), superProbes prices the SUPERCELL
-    * boundary miss on the corpus-assignment side, and this curve is the
-    * number a user tuning the hier index for SERVING (not dedup) reads.
-    * Ground truth is one [[bruteTopK]] pass; each swept value runs
-    * [[ivfTopK]] with `hier = true` at that superProbes.
-    *
-    * Output: (super_probes, n_hits, recall_bp) ordered by super_probes.
+  /** Recall@k of hier IVF SEARCH ([[ivfTopK]] with `hier = true`) against
+    * exact brute force, swept over superProbes at a fixed nProbe — the
+    * supercell-boundary price of the two-level quantizer's corpus
+    * assignment, the curve a user tuning the hier index for serving reads.
+    * Rollup: [[recallSweep]]. Output: (super_probes, n_hits, recall_bp).
     */
   def ivfRecallSweepHier(
       emb: DataFrame,
@@ -161,24 +199,12 @@ object SimOps {
       nProbe: Int = 4,
       k: Int = 10,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"ivfRecallSweepHier: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val approx = superProbesSeq.map { sp =>
+      embCol: String = "embedding"): DataFrame =
+    recallSweep("ivfRecallSweepHier", emb, queryPred, k, idCol, embCol,
+        Some("super_probes"), superProbesSeq) { sp =>
       ivfTopK(emb, queryPred, centroidPred, k, nProbe, idCol, embCol,
         hier = true, superProbes = sp)
-        .select(lit(sp).as("super_probes"), col("q_id"), col(idCol))
-    }.reduce(_ union _)
-    approx
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("super_probes"))
-      .agg(count(lit(1)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("super_probes"))
-  }
+    }
 
   /** MATRYOSHKA (truncated-dimension) retrieval recall sweep — the
     * serving-cost lever every MRL-style embedding pipeline tunes: score
@@ -190,10 +216,8 @@ object SimOps {
     * is the declared quality/cost curve for choosing `p` — the
     * [[ivfRecallSweepHier]] shape with the knob being dimensions instead
     * of probes. Both sides rank (cos desc, id asc), so the number is the
-    * pure truncation price. Output: (prefix_dims, n_hits, recall_bp) —
-    * EVERY swept prefix emits a row (hit counts left-joined onto the
-    * dims list, so a prefix with zero surviving top-k hits reports
-    * n_hits = 0 / recall_bp = 0 instead of vanishing), ascending.
+    * pure truncation price. Rollup: [[recallSweep]] (a zero-hit prefix
+    * still emits its row). Output: (prefix_dims, n_hits, recall_bp).
     */
   def mrlRecallSweep(
       emb: DataFrame,
@@ -201,30 +225,13 @@ object SimOps {
       dims: Seq[Int] = Seq(4, 8, 16, 32),
       k: Int = 10,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"mrlRecallSweep: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val approx = dims.map { p =>
+      embCol: String = "embedding"): DataFrame =
+    recallSweep("mrlRecallSweep", emb, queryPred, k, idCol, embCol,
+        Some("prefix_dims"), dims) { p =>
       bruteTopK(
         emb.select(col(idCol), slice(col(embCol), 1, p).as(embCol)),
         queryPred, k, idCol, embCol)
-        .select(lit(p).as("prefix_dims"), col("q_id"), col(idCol))
-    }.reduce(_ union _)
-    val hits = approx
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("prefix_dims"))
-      .agg(count(lit(1)).as("h"))
-    val session = emb.sparkSession
-    import session.implicits._
-    dims.toDF("prefix_dims")
-      .join(hits, Seq("prefix_dims"), "left")
-      .select(col("prefix_dims"), coalesce(col("h"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("prefix_dims"))
-  }
+    }
 
   /** Matryoshka-STRUCTURED embedding transform — a deterministic stand-in
     * for an MRL-trained encoder (Kusupati et al. 2022: training packs
@@ -262,8 +269,8 @@ object SimOps {
     * reconstruction) against the full-precision brute-force truth.
     * Bounds are corpus min/max (exact), codes integer-exact, decode one
     * affine map — both engines produce bit-identical doubles, so the
-    * ranking (cos desc, id) hash-matches. Output (one row):
-    * (n_hits, recall_bp).
+    * ranking (cos desc, id) hash-matches. Rollup: [[recallSweep]], keyless.
+    * Output (one row): (n_hits, recall_bp).
     */
   def sqRecall(
       emb: DataFrame,
@@ -271,23 +278,15 @@ object SimOps {
       k: Int = 10,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"sqRecall: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
     // the SAME bounds/code/decode chain the quantizer runs ([[sqCodes]] —
     // shared so the audit cannot drift from what it claims to measure)
     val decoded = sqCodes(emb, idCol, embCol)
       .groupBy(col(idCol))
       .agg(array_sort(collect_list(struct(col("pos"), col("dx")))).as("pv"))
       .select(col(idCol), transform(col("pv"), p => p.getField("dx")).as(embCol))
-    val approx = bruteTopK(decoded, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    approx
-      .join(truth, Seq("q_id", idCol))
-      .agg(count(lit(1)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
+    recallSweep("sqRecall", emb, queryPred, k, idCol, embCol, None, Seq("sq8")) { _ =>
+      bruteTopK(decoded, queryPred, k, idCol, embCol)
+    }
   }
 
   /** TRAINED-index recall audit — the quality receipt for training
@@ -300,10 +299,8 @@ object SimOps {
     * approximation alone (the search-side price is
     * [[ivfRecallSweepHier]]'s curve; SKEW_scale.txt, round 18, "megacell
     * TRAINING quality + convergence" has this audit at the √N-seed scale
-    * plus the c2s-hier variant).
-    * Hit counts left-join the variant list ([[mrlRecallSweep]]'s
-    * zero-row discipline). Output: (variant, n_hits, recall_bp), one
-    * row per variant ('exact', 'hier'), ordered.
+    * plus the c2s-hier variant). Rollup: [[recallSweep]].
+    * Output: (variant, n_hits, recall_bp), variants 'exact' and 'hier'.
     */
   def ivfTrainedRecallAudit(
       emb: DataFrame,
@@ -314,30 +311,13 @@ object SimOps {
       iters: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"ivfTrainedRecallAudit: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
     val n = normalized(emb, idCol, embCol)
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val cents0 = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    def leg(label: String, hier: Boolean): DataFrame =
-      ivfProbe(n, refineCentroids(n, cents0, iters, idCol, hier = hier),
+    val cents0 = centroids(n, centroidPred, idCol)
+    recallSweep("ivfTrainedRecallAudit", emb, queryPred, k, idCol, embCol,
+        Some("variant"), Seq("exact", "hier")) { label =>
+      ivfProbe(n, refineCentroids(n, cents0, iters, idCol, hier = label == "hier"),
         queryPred, k, nProbe, idCol)
-        .select(lit(label).as("variant"), col("q_id"), col(idCol))
-    val hits = leg("exact", hier = false)
-      .unionByName(leg("hier", hier = true))
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("variant"))
-      .agg(count(lit(1)).as("h"))
-    val session = emb.sparkSession
-    import session.implicits._
-    Seq("exact", "hier").toDF("variant")
-      .join(hits, Seq("variant"), "left")
-      .select(col("variant"), coalesce(col("h"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("variant"))
+    }
   }
 
   /** Binary (1-bit sign) quantization codes — the coarse pre-filter a
@@ -378,8 +358,7 @@ object SimOps {
     * integers over a large corpus, so ties are the NORM, not an edge
     * case — deterministic order is what makes the ranking
     * oracle-comparable); sign decode uses the strict `x > 0` bit rule of
-    * [[bqCodes]] so code and decode agree. Hit counts left-join the
-    * variant list ([[mrlRecallSweep]]'s zero-row discipline).
+    * [[bqCodes]] so code and decode agree. Rollup: [[recallSweep]].
     *
     * Scale shape: the hamming leg scans the 32×-compressed code table
     * (integer XOR/popcount, no floats); the asym leg is one ±1-decode
@@ -397,11 +376,6 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     require(rerank >= k, s"bqRecall: rerank pool $rerank < k $k")
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"bqRecall: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
     val codes = bqCodes(emb, idCol, embCol)
     val qCodes = codes.filter(queryPred)
       .select(col(idCol).as("q_id"), col("word"), col("code").as("qcode"))
@@ -444,20 +418,9 @@ object SimOps {
     val aw = Window.partitionBy(col("q_id")).orderBy(col("s").desc, col(idCol))
     val asymTop = adc.withColumn("rnk", row_number().over(aw))
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col(idCol))
-    val hits = hamTop.select(lit("hamming").as("variant"), col("q_id"), col(idCol))
-      .unionByName(rerTop.select(lit("rerank").as("variant"), col("q_id"), col(idCol)))
-      .unionByName(asymTop.select(lit("asym").as("variant"), col("q_id"), col(idCol)))
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("variant"))
-      .agg(count(lit(1)).as("h"))
-    val session = emb.sparkSession
-    import session.implicits._
-    Seq("asym", "hamming", "rerank").toDF("variant")
-      .join(hits, Seq("variant"), "left")
-      .select(col("variant"), coalesce(col("h"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("variant"))
+    val variants = Map("hamming" -> hamTop, "rerank" -> rerTop, "asym" -> asymTop)
+    recallSweep("bqRecall", emb, queryPred, k, idCol, embCol,
+      Some("variant"), Seq("hamming", "rerank", "asym"))(variants)
   }
 
   /** Recall@k of multi-table sign-LSH search ([[lshTopK]]) vs brute
@@ -468,14 +431,8 @@ object SimOps {
     * is a superset, and a true top-k member present in any candidate set
     * survives its exact re-ranking (fewer than k vectors beat it in the
     * (cos desc, id) total order — [[ivfRecallSweep]]'s argument,
-    * spec-pinned). Hit counts left-join the swept list
-    * ([[mrlRecallSweep]]'s zero-row discipline). Output:
+    * spec-pinned). Rollup: [[recallSweep]]. Output:
     * (n_tables, n_hits, recall_bp), ordered by n_tables.
-    *
-    * Scale shape: one brute-force truth pass plus one [[lshTopK]] per
-    * swept value — each is the equi-join-on-bucket-key shape (queries
-    * broadcast, candidate fan-out per query = bucket population); the
-    * join + recall aggregation is k·|queries| rows, metadata-sized.
     */
   def lshRecallSweep(
       emb: DataFrame,
@@ -484,28 +441,11 @@ object SimOps {
       k: Int = 10,
       bits: Int = 4,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    require(tableSweep.nonEmpty, "lshRecallSweep: empty table sweep")
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"lshRecallSweep: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val hits = tableSweep.map { t =>
+      embCol: String = "embedding"): DataFrame =
+    recallSweep("lshRecallSweep", emb, queryPred, k, idCol, embCol,
+        Some("n_tables"), tableSweep) { t =>
       lshTopK(emb, queryPred, k, bits, t, idCol, embCol)
-        .select(lit(t).as("n_tables"), col("q_id"), col(idCol))
-    }.reduce(_ unionByName _)
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("n_tables"))
-      .agg(count(lit(1)).as("h"))
-    val session = emb.sparkSession
-    import session.implicits._
-    tableSweep.toDF("n_tables")
-      .join(hits, Seq("n_tables"), "left")
-      .select(col("n_tables"), coalesce(col("h"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("n_tables"))
-  }
+    }
 
   /** Recall@k of the full IVF-PQ composition ([[ivfPqTopK]]) vs brute
     * force, swept over the SHORTLIST depth at fixed nProbe — the
@@ -527,14 +467,7 @@ object SimOps {
     * [[ivfRecallSweep]] at the same nProbe — the PQ approximation price
     * goes to zero and only the cell-boundary miss remains.
     *
-    * Hit counts left-join the swept list ([[mrlRecallSweep]]'s zero-row
-    * discipline). Output: (shortlist, n_hits, recall_bp) ascending.
-    *
-    * Scale shape: one brute-force truth pass (queries broadcast) plus
-    * one [[ivfPqTopK]] per swept value — each is the probed-cells
-    * equi-join shape with broadcast ADC tables; the recall join +
-    * aggregation is k·|queries| rows, metadata-sized. Fixture-scale by
-    * construction (fixed query set).
+    * Rollup: [[recallSweep]]. Output: (shortlist, n_hits, recall_bp).
     */
   def ivfPqRecallSweep(
       emb: DataFrame,
@@ -547,30 +480,13 @@ object SimOps {
       m: Int = 4,
       pqIters: Int = 1,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    require(shortlists.nonEmpty, "ivfPqRecallSweep: empty shortlist sweep")
-    val nq = emb.filter(queryPred).count()
-    require(nq > 0, s"ivfPqRecallSweep: queryPred selects no rows — " +
-      "recall_bp would divide by zero in the generated SQL")
-    val truth = bruteTopK(emb, queryPred, k, idCol, embCol)
-      .select(col("q_id"), col(idCol))
-    val hits = shortlists.map { sl =>
+      embCol: String = "embedding"): DataFrame =
+    recallSweep("ivfPqRecallSweep", emb, queryPred, k, idCol, embCol,
+        Some("shortlist"), shortlists) { sl =>
       ivfPqTopK(emb, queryPred, centroidPred, codebookPred, k, nProbe, m,
         shortlist = sl, pqIters = pqIters, coarseIters = 0,
         idCol = idCol, embCol = embCol)
-        .select(lit(sl).as("shortlist"), col("q_id"), col(idCol))
-    }.reduce(_ unionByName _)
-      .join(truth, Seq("q_id", idCol))
-      .groupBy(col("shortlist"))
-      .agg(count(lit(1)).as("h"))
-    val session = emb.sparkSession
-    import session.implicits._
-    shortlists.toDF("shortlist")
-      .join(hits, Seq("shortlist"), "left")
-      .select(col("shortlist"), coalesce(col("h"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nq * k}"))
-      .orderBy(col("shortlist"))
-  }
+    }
 
   /** Bucket id from the sign bits of `bits` dimensions starting at
     * `offset` — axis-aligned hyperplane LSH for cosine similarity.
@@ -725,8 +641,7 @@ object SimOps {
       hier: Boolean = false,
       superProbes: Int = 1): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+    val cents = centroids(n, centroidPred, idCol)
     ivfProbe(n, cents, queryPred, k, nProbe, idCol, hier, superProbes)
   }
 
@@ -789,37 +704,6 @@ object SimOps {
       .filter(col("c_id") >= 0)
   }
 
-  /** TWO-LEVEL (hierarchical) coarse-quantizer assignment — the design
-    * [[cellArgmax]]'s scaladoc names as the path past its ~1M-centroid
-    * broadcast-array limit, made real through the same fold machinery:
-    * every `per ≈ ⌈√nlist⌉`-th centroid (by c_id rank — deterministic,
-    * never empty, oracle-mirrorable) becomes a SUPERCELL center; each
-    * centroid folds over the small supercenter array to find its home
-    * supercell ([[cellArgmax]], exact); the centroids regroup into
-    * per-supercell BLOCKS (≈ √nlist-sized sorted arrays); and each
-    * corpus vector folds over the supercenter array, SHUFFLE-joins its
-    * supercell's block on sc_id, and folds over THAT — ~2·√nlist
-    * similarity evaluations per row instead of nlist, the only broadcast
-    * anywhere the √nlist-entry supercenter array, and per-task memory
-    * O(√nlist·d): each task hash-builds only the blocks landing in its
-    * sc_id partition (1M centroids → a ~1k-entry supercenter broadcast +
-    * ~1k 1k-entry blocks SPREAD across tasks, where the flat array would
-    * be ~GBs ON EVERY executor — measured: the nlist=1M row of
-    * SKEW_scale.txt, round 16, "megacells",
-    * where the flat fold's single collected array fails the driver and
-    * hier completes). `superProbes` > 1 scans that many
-    * nearest supercells' blocks and keeps the best cell across them
-    * ((csim desc, c_id) over ≤ superProbes candidates — a window over
-    * superProbes rows per vector, not nlist).
-    *
-    * The price is the standard hierarchical-IVF approximation: with
-    * `superProbes` = 1 a vector whose true nearest centroid lives in a
-    * DIFFERENT supercell than its nearest supercenter gets its best
-    * in-block cell instead (SimOpsSpec pins the fixture agreement rate
-    * and that `superProbes` covering every supercell recovers
-    * [[cellArgmax]] exactly). Degenerate rows follow the uniform
-    * NULL-sim contract: dropped everywhere.
-    */
   /** DISTRIBUTED √nlist supercenter stride — a centroid is a supercenter
     * iff `hash60(c_id) % per == 0` (per = max(2, ⌈√nlist⌉): the
     * [[sqrtCentroidPred]] discipline applied to the centroid id space, a
@@ -844,11 +728,19 @@ object SimOps {
       .select(col("c_id"), col("ce"), col("cn"))
   }
 
-  private[graft] def cellArgmaxHier(
+  /** The supercell-block build both two-level assignments share
+    * ([[cellArgmaxHier]], [[cellArgTopPHier]]; they differ only in the
+    * per-block fold): nlist → per = max(2, ⌈√nlist⌉) → [[superCents]] →
+    * each centroid's home supercell (c2s) → per-supercell c_id-sorted
+    * BLOCKS (sc_id, cs) → each vector's `superProbes` nearest supercells
+    * (vsup), shuffle-joined to their blocks. Output: (sc_id, idCol, e,
+    * nrm, cs), one row per (vector, scanned supercell).
+    */
+  private def superBlocks(
       n: DataFrame,
       cents: DataFrame,
       idCol: String,
-      superProbes: Int = 1,
+      superProbes: Int,
       c2sHier: Boolean = false): DataFrame = {
     val nlist = cents.count()
     val per = math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
@@ -888,7 +780,47 @@ object SimOps {
     // side at 0); blocks is √nlist rows, so the exchange itself is cheap,
     // and the vsup side's exchange is the one corpus shuffle the two-level
     // design pays for unbounded nlist.
-    val scored = vsup.join(blocks.hint("shuffle_hash"), "sc_id")
+    vsup.join(blocks.hint("shuffle_hash"), "sc_id")
+  }
+
+  /** TWO-LEVEL (hierarchical) coarse-quantizer assignment — the design
+    * [[cellArgmax]]'s scaladoc names as the path past its ~1M-centroid
+    * broadcast-array limit, made real through the same fold machinery:
+    * every `per ≈ ⌈√nlist⌉`-th centroid (by c_id rank — deterministic,
+    * never empty, oracle-mirrorable) becomes a SUPERCELL center; each
+    * centroid folds over the small supercenter array to find its home
+    * supercell ([[cellArgmax]], exact); the centroids regroup into
+    * per-supercell BLOCKS (≈ √nlist-sized sorted arrays); and each
+    * corpus vector folds over the supercenter array, SHUFFLE-joins its
+    * supercell's block on sc_id, and folds over THAT — ~2·√nlist
+    * similarity evaluations per row instead of nlist, the only broadcast
+    * anywhere the √nlist-entry supercenter array, and per-task memory
+    * O(√nlist·d): each task hash-builds only the blocks landing in its
+    * sc_id partition (1M centroids → a ~1k-entry supercenter broadcast +
+    * ~1k 1k-entry blocks SPREAD across tasks, where the flat array would
+    * be ~GBs ON EVERY executor — measured: the nlist=1M row of
+    * SKEW_scale.txt, round 16, "megacells",
+    * where the flat fold's single collected array fails the driver and
+    * hier completes). `superProbes` > 1 scans that many
+    * nearest supercells' blocks and keeps the best cell across them
+    * ((csim desc, c_id) over ≤ superProbes candidates — a window over
+    * superProbes rows per vector, not nlist).
+    *
+    * The price is the standard hierarchical-IVF approximation: with
+    * `superProbes` = 1 a vector whose true nearest centroid lives in a
+    * DIFFERENT supercell than its nearest supercenter gets its best
+    * in-block cell instead (SimOpsSpec pins the fixture agreement rate
+    * and that `superProbes` covering every supercell recovers
+    * [[cellArgmax]] exactly). Degenerate rows follow the uniform
+    * NULL-sim contract: dropped everywhere.
+    */
+  private[graft] def cellArgmaxHier(
+      n: DataFrame,
+      cents: DataFrame,
+      idCol: String,
+      superProbes: Int = 1,
+      c2sHier: Boolean = false): DataFrame = {
+    val scored = superBlocks(n, cents, idCol, superProbes, c2sHier)
       .select(col(idCol), col("e"), col("nrm"),
         aggregate(col("cs"),
           struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("c")),
@@ -923,35 +855,9 @@ object SimOps {
       superProbes: Int = 1,
       probes: Int = 1,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val n = normalized(emb, idCol, embCol)
-    val cents = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    // probes > 1 rides cellArgTopPHier (the r15 lever): each SOURCE
-    // vector unions into its `probes` best in-block cells — the knnGraph
-    // probe construction under the two-level quantizer; candidates stay
-    // in their home cell, so pairs cannot duplicate
-    val ranked = (if (probes == 1)
-        cellArgmaxHier(n, cents, idCol, superProbes).withColumn("crn", lit(1))
-      else cellArgTopPHier(n, cents, idCol, superProbes, probes))
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"), col("crn"))
-      .repartition(col("c_id"))
-    val a = ranked.select(col("c_id"), col(idCol).as("id_a"),
-      col("e").as("ea"), col("nrm").as("na"))
-    val b = ranked.filter(col("crn") === 1)
-      .select(col("c_id"), col(idCol).as("id_b"),
-      col("e").as("eb"), col("nrm").as("nb"))
-    val pairs = a.join(b, "c_id")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id_a"), col("rank"), col("id_b"), TextOps.roundBp(col("cos")).as("cos_bp"))
-      .orderBy(col("id_a"), col("rank"))
-  }
+      embCol: String = "embedding"): DataFrame =
+    rankNeighborPairs(
+      knnCellPairs(emb, centroidPred, probes, idCol, embCol, hier = true, superProbes), k)
 
   /** IVF probe phase shared by the sampled and k-means-refined quantizers:
     * assign every vector to its nearest cell, probe each query's `nProbe`
@@ -1059,8 +965,7 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents0 = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+    val cents0 = centroids(n, centroidPred, idCol)
     ivfProbe(n, refineCentroids(n, cents0, iters, idCol), queryPred, k, nProbe, idCol)
   }
 
@@ -1203,10 +1108,9 @@ object SimOps {
     * recall lever carried past the flat fold's ~1M-centroid broadcast
     * limit (the r14 grid showed flat-p2 recovering 2.2× the boundary
     * pairs of hier-superProbes=2 at ×100: the family's cheapest lever
-    * lived only where the flat broadcast still exists). Construction is
-    * [[cellArgmaxHier]]'s — √nlist-strided supercenters, centroid→home
-    * supercell, per-supercell blocks — with the per-block argmax fold
-    * replaced by the block-restricted [[topPFold]]: each vector scans its
+    * lived only where the flat broadcast still exists). The blocks are
+    * [[superBlocks]]' (shared with [[cellArgmaxHier]]), with the per-block
+    * argmax fold replaced by the block-restricted [[topPFold]]: each vector scans its
     * `superProbes` nearest supercells' blocks and keeps the p best cells
     * ACROSS the scanned union ((s desc, c_id asc) — blocks partition the
     * centroid set, so candidates never duplicate). With superProbes = 1
@@ -1225,23 +1129,7 @@ object SimOps {
       idCol: String,
       superProbes: Int,
       probes: Int): DataFrame = {
-    val nlist = cents.count()
-    val per = math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
-    val sup = superCents(cents, per)
-    val c2s = cellArgmax(
-      cents.select(col("c_id").as("cid0"), col("ce").as("e"), col("cn").as("nrm")),
-      sup, "cid0")
-      .select(col("cid0"), col("c_id").as("sc_id"))
-    val blocks = cents.join(c2s, col("c_id") === col("cid0"))
-      .groupBy(col("sc_id"))
-      .agg(sort_array(collect_list(struct(col("c_id"), col("ce"), col("cn")))).as("cs"))
-    val vsup = (if (superProbes == 1) cellArgmax(n, sup, idCol)
-      else cellArgTopP(n, sup, idCol, superProbes))
-      .select(col(idCol), col("e"), col("nrm"), col("c_id").as("sc_id"))
-    // shuffle join on sc_id, never broadcast — see [[cellArgmaxHier]]:
-    // blocks is the whole nlist·d payload; per-task memory stays
-    // O(√nlist·d) only if each task reads just its supercells' blocks
-    val cand = vsup.join(blocks.hint("shuffle_hash"), "sc_id")
+    val cand = superBlocks(n, cents, idCol, superProbes)
       .select(col(idCol), col("e"), col("nrm"),
         explode(topPFold(col("e"), col("nrm"), col("cs"), probes)).as("t"))
       .select(col(idCol), col("e"), col("nrm"),
@@ -1310,24 +1198,23 @@ object SimOps {
     rankNeighborPairs(knnCellPairs(emb, centroidPred, probes, idCol, embCol), k)
 
   /** The kNN graph's candidate-pair stage — the ONE place the cell-bounded
-    * (id_a, id_b, cos) candidate set is built ([[knnGraph]] ranks it
-    * directly; [[hardNegatives]] band-filters it first — shared so the
-    * mining op cannot drift from the graph it subsets). */
+    * (id_a, id_b, cos) candidate set is built ([[knnGraph]] and
+    * [[knnGraphHier]] rank it directly; [[hardNegatives]] band-filters it
+    * first — shared so the mining op cannot drift from the graph it
+    * subsets). `hier` assigns through the two-level quantizer
+    * ([[cellArgmaxHier]], [[cellArgTopPHier]] when `probes` > 1). */
   private def knnCellPairs(
       emb: DataFrame,
       centroidPred: Column,
       probes: Int,
       idCol: String,
-      embCol: String): DataFrame = {
+      embCol: String,
+      hier: Boolean = false,
+      superProbes: Int = 1): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    val ranked = (probes match {
-      case 1 => cellArgmax(n, cents, idCol).withColumn("crn", lit(1))
-      case p => cellArgTopP(n, cents, idCol, p)
-    })
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"), col("crn"))
-      .repartition(col("c_id"))
+    // each SOURCE vector pairs in its `probes` best cells, candidates only
+    // in their home cell (crn = 1), so pairs cannot duplicate
+    val ranked = cellProbes(n, centroids(n, centroidPred, idCol), idCol, probes, hier, superProbes)
     val a = ranked.select(col("c_id"), col(idCol).as("id_a"),
       col("e").as("ea"), col("nrm").as("na"))
     val b = ranked.filter(col("crn") === 1)
@@ -1338,6 +1225,26 @@ object SimOps {
       .select(col("id_a"), col("id_b"),
         (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
   }
+
+  /** Each vector's `probes` nearest cells, crn = 1 its home cell: the flat
+    * fold ([[cellArgmax]], [[cellArgTopP]]) or, when `hier`, the two-level
+    * quantizer ([[cellArgmaxHier]], [[cellArgTopPHier]]). Output:
+    * (idCol, e, nrm, c_id, crn), repartitioned on c_id for the in-cell
+    * self-join of [[knnCellPairs]] and [[cellNearDupPairs]].
+    */
+  private def cellProbes(
+      n: DataFrame,
+      cents: DataFrame,
+      idCol: String,
+      probes: Int,
+      hier: Boolean,
+      superProbes: Int): DataFrame =
+    (if (hier && probes > 1) cellArgTopPHier(n, cents, idCol, superProbes, probes)
+      else if (hier) cellArgmaxHier(n, cents, idCol, superProbes).withColumn("crn", lit(1))
+      else if (probes == 1) cellArgmax(n, cents, idCol).withColumn("crn", lit(1))
+      else cellArgTopP(n, cents, idCol, probes))
+      .select(col(idCol), col("e"), col("nrm"), col("c_id"), col("crn"))
+      .repartition(col("c_id"))
 
   /** Per-source top-k ranking of a (id_a, id_b, cos) pair set — the
     * output tail shared by [[knnGraph]] and [[hardNegatives]]. */
@@ -1404,8 +1311,7 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+    val cents = centroids(n, centroidPred, idCol)
     val counts = cellArgmax(n, cents, idCol)
       .withColumn("is_old", oldPred.cast("long"))
       .groupBy(col("c_id"))
@@ -1521,37 +1427,105 @@ object SimOps {
         .select((col(idCol) + step).as(idCol), col(embCol), col("label")))
   }
 
-  /** Embedding-cosine near-duplicate pairs: EXACT-DEDUP-FIRST (identical
-    * raw embedding arrays collapse to a min-id representative — the same
-    * r12 default as `MultimodalOps.phashPairs`), then a self-join of the
-    * REPRESENTATIVES within sign-LSH buckets (never corpus × corpus), a
-    * `maxBucket` participation cap on each bucket (the
-    * [[semDedup]]/`DedupOps.DefaultMaxBucket` rule: only the cap's
-    * lowest-id reps pair, deterministic, oracle-mirrored), and member
-    * re-attachment — cross-group pairs inherit the representative cosine
-    * (identical vectors, identical dot), intra-group pairs are exact
-    * duplicates at cos_bp = 10000. Keep pairs with cosine ≥ `thresholdBp`.
-    * Exact duplicates are always found (group structure, not LSH luck);
-    * boundary near-dups follow the LSH trade documented on [[lshTopK]].
+  /** Exact-dedup-first, the near-dup family's first stage: identical raw
+    * embedding arrays collapse to their min-id representative (the r12
+    * family default, as in `MultimodalOps.phashPairs`). Returns
+    * (reps (idCol, embCol), mem (idCol, rep_id) — every row and its rep).
+    */
+  private[graft] def repCollapse(
+      emb: DataFrame, idCol: String, embCol: String): (DataFrame, DataFrame) = {
+    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
+    (groups.select(col("rep_id").as(idCol), col(embCol)),
+      emb.join(groups, Seq(embCol)).select(col(idCol), col("rep_id")))
+  }
+
+  /** Member re-attach, the near-dup family's last stage: rep pairs
+    * (ra, rb, `score`) become member pairs — cross-group pairs inherit the
+    * rep score (identical vectors, identical score) — plus every
+    * intra-group pair, an exact duplicate at `exact` (cos_bp 10000; the
+    * perceptual-hash pairing passes hamming 0).
+    * Output: (id_a, id_b, score), id_a < id_b, unordered — callers sort
+    * last, after any column they add, so the projection stays pushed
+    * through the union.
+    */
+  private[graft] def reattach(
+      repPairs: DataFrame,
+      mem: DataFrame,
+      idCol: String,
+      score: String = "cos_bp",
+      exact: Long = 10000L): DataFrame = {
+    val cross = repPairs
+      .join(mem.as("ma"), col("ra") === col("ma.rep_id"))
+      .join(mem.as("mb"), col("rb") === col("mb.rep_id"))
+      .select(
+        least(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_a"),
+        greatest(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_b"),
+        col(score))
+    val intra = mem.as("x")
+      .join(mem.as("y"),
+        col("x.rep_id") === col("y.rep_id") && col(s"x.$idCol") < col(s"y.$idCol"))
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
+        lit(exact).as(score))
+    cross.unionByName(intra)
+  }
+
+  /** Per-key participation cap: only the `cap` lowest-id rows of each key
+    * pair (deterministic, oracle-mirrored); a cap ≤ 0 keeps every row, as
+    * [[DedupOps.DefaultMaxBucket]]'s rule reads. Output: (idCol, e, nrm, key).
+    */
+  private def capPerKey(keyed: DataFrame, key: String, cap: Int, idCol: String): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(idCol))
+    (if (cap <= 0) keyed
+      else keyed.withColumn("rk", row_number().over(w)).filter(col("rk") <= cap))
+      .select(col(idCol), col("e"), col("nrm"), col(key))
+  }
+
+  /** Capped keyed pairing — the one within-key threshold self-join of the
+    * near-dup family (sign buckets, LSH tables, IVF cells). `keyed` holds
+    * (idCol, e, nrm, key) already repartitioned on `key`, so both join
+    * sides end in the same exchange and ReuseExchange runs the keying
+    * pipeline once (plan-asserted in PlanSpec). Rows are capped per key
+    * ([[capPerKey]]), then every same-key pair a.id < b.id is scored and
+    * kept at roundBp(cos) ≥ `thresholdBp` — O(Σ min(size, cap)²) per key,
+    * never corpus². Output: (ra, rb, cos_bp), ra < rb.
+    */
+  private[graft] def keyedPairs(
+      keyed: DataFrame, key: String, cap: Int, thresholdBp: Long, idCol: String): DataFrame = {
+    val capped = capPerKey(keyed, key, cap, idCol)
+    capped.alias("a")
+      .join(capped.alias("b"),
+        col(s"a.$key") === col(s"b.$key") && col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(
+        col(s"a.$idCol").as("ra"), col(s"b.$idCol").as("rb"),
+        TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
+          .as("cos_bp"))
+      .filter(col("cos_bp") >= thresholdBp)
+  }
+
+  /** [[nearDupPairs]]' rep pairing over normalized reps `n`: the
+    * [[signBucket]] key, repartitioned, into [[keyedPairs]]. Shared with
+    * [[nearDupRecallAudit]], so the audit measures the operator's code.
+    */
+  private def signBucketPairs(
+      n: DataFrame, thresholdBp: Int, bits: Int, maxBucket: Int, idCol: String): DataFrame =
+    keyedPairs(n.withColumn("bucket", signBucket(col("e"), bits)).repartition(col("bucket")),
+      "bucket", maxBucket, thresholdBp, idCol)
+
+  /** Embedding-cosine near-duplicate pairs within sign-LSH buckets (never
+    * corpus × corpus): [[repCollapse]] → reps keyed by [[signBucket]] →
+    * [[keyedPairs]] at `thresholdBp` with the `maxBucket` participation
+    * cap → [[reattach]]. Exact duplicates are always found (group
+    * structure, not LSH luck); boundary near-dups follow the LSH trade
+    * documented on [[lshTopK]].
+    *
+    * SCALE LAW: a fixed `bits` keeps the 2^bits key space constant, so rep
+    * occupancy grows with the distinct corpus and uncapped pairing
+    * quadratically. The declared queries derive `bits` with
+    * [[autoSignBits]] (key space ∝ distinct corpus), so the cap idles in
+    * expectation; [[nearDupCapAudit]] shows what it forgoes. The static
+    * default (4) remains for small fixtures and direct spec calls.
+    *
     * Output: (id_a, id_b, cos_bp), id_a < id_b.
-    *
-    * SCALE LAW: a FIXED `bits` leaves the 2^bits key space constant, so
-    * rep occupancy grows with the DISTINCT-vector corpus and uncapped
-    * pairing quadratically — the same fixed-key-space shape the phash
-    * ×100 measurement exposed. Dedup-first strikes the exact-dup mass
-    * first; the cap bounds the residual at 2^bits·cap²/2 comparisons with
-    * the forgone volume VISIBLE via the cap-audit discipline; and `bits`
-    * itself SELF-SIZES via [[autoSignBits]] (2^bits ≥ ⌈reps/cap⌉, key
-    * space ∝ distinct corpus — [[ivfTopK]]'s nlist rule), which is how
-    * the declared queries call it: the cap idles in expectation and the
-    * forgone share stays flat across decades instead of climbing. The
-    * static default (4) remains for oracle-pinned small fixtures and
-    * direct spec calls.
-    *
-    * The pair join's inputs are the SAME derived frame; repartitioning on
-    * the bucket key first makes both sides end in identical exchanges,
-    * which Spark's ReuseExchange collapses — one scan, one normalize pass
-    * (plan-asserted in PlanSpec).
     */
   def nearDupPairs(
       emb: DataFrame,
@@ -1560,63 +1534,25 @@ object SimOps {
       maxBucket: Int = DedupOps.DefaultMaxBucket,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val mem = emb.join(groups, Seq(embCol)).select(col(idCol), col("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
-    val n = normalized(reps, idCol, embCol)
-      .withColumn("bucket", signBucket(col("e"), bits))
-      .repartition(col("bucket"))
-    val wB = Window.partitionBy(col("bucket")).orderBy(col(idCol))
-    val capped = (if (maxBucket <= 0) n
-      else n.withColumn("rk", row_number().over(wB)).filter(col("rk") <= maxBucket))
-      .select(col(idCol), col("e"), col("nrm"), col("bucket"))
-    val repPairs = capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.bucket") === col("b.bucket") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("ra"), col(s"b.$idCol").as("rb"),
-        TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_bp"))
-      .filter(col("cos_bp") >= thresholdBp)
-    val cross = repPairs
-      .join(mem.as("ma"), col("ra") === col("ma.rep_id"))
-      .join(mem.as("mb"), col("rb") === col("mb.rep_id"))
-      .select(
-        least(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_a"),
-        greatest(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_b"),
-        col("cos_bp"))
-    val intra = mem.as("x")
-      .join(mem.as("y"),
-        col("x.rep_id") === col("y.rep_id") && col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        lit(10000L).as("cos_bp"))
-    cross.unionByName(intra).orderBy(col("id_a"), col("id_b"))
+    val (reps, mem) = repCollapse(emb, idCol, embCol)
+    reattach(
+      signBucketPairs(normalized(reps, idCol, embCol), thresholdBp, bits, maxBucket, idCol),
+      mem, idCol).orderBy(col("id_a"), col("id_b"))
   }
 
-  /** OR-AMPLIFIED multi-table [[nearDupPairs]] — the boundary-recall
-    * remedy the recall audit ([[nearDupRecallAudit]]) prices the need
-    * for: a single sign-bucket table finds a cos-θ pair with probability
-    * (1 − θ/π)^bits, which for moderate-similarity pairs collapses as
-    * `bits` grows with the corpus (measured: 31 bp at the ×100 derived
-    * bits). `tables` independent tables (table t hashes dims
-    * [t·bits, (t+1)·bits) — [[lshTopK]]'s construction) recover
-    * 1 − (1 − p)^tables: candidates meet in ANY table, identical pairs
-    * collapse on (ra, rb, cos_bp) before member re-attach. Same
-    * exact-dedup-first + per-table participation cap + member re-attach
-    * contract as [[nearDupPairs]]; cost is `tables`× the single-table
-    * bucket pairing, bounded by tables·2^bits·cap²/2. Requires (and
-    * ENFORCES, via [[embDim]] read from the corpus) tables·bits ≤
-    * embedding dim. SCALE DISCIPLINE (measured, SKEW_scale.txt, round 13,
-    * "near-dup RECALL audit + OR-amplified remedy"): FIXED 8×4 tables
-    * hit the cap wall exactly like fixed single-table bits (found → 0
-    * by ×10); the production configuration derives `bits` = [[autoSignBits]] (caps idle) and
-    * `tables` = ⌊dims / bits⌋ (every dimension hashes once) — the
-    * declared q_embed_neardup_multi shape, measured at 75% of
-    * anchor-sample truth at sf0.1 vs 5.4% single-table, with ~tables×
-    * amplification at every decade. The single-table form stays the
-    * cheap default for exact-plus-tight near-dups; past the recall this
-    * buys, loose-threshold similarity at corpus scale belongs to
-    * [[semDedup]]/[[ivfTopK]] cells, not sign-LSH.
+  /** OR-amplified multi-table [[nearDupPairs]]: `tables` independent sign
+    * tables (table t hashes dims [t·bits, (t+1)·bits) — [[lshTopK]]'s
+    * construction) key the reps; candidates meet in ANY table
+    * ([[keyedPairs]] per table, capped per table), identical rep pairs
+    * collapse before [[reattach]]. A single table finds a cos-θ pair with
+    * probability (1 − θ/π)^bits; `tables` recover 1 − (1 − p)^tables, at
+    * `tables`× the single-table pairing cost. Requires (and enforces, via
+    * [[embDim]]) tables·bits ≤ embedding dim. The declared
+    * q_embed_neardup_multi derives `bits` = [[autoSignBits]] and `tables`
+    * = ⌊dims / bits⌋ (SKEW_scale.txt, round 13, "near-dup RECALL audit +
+    * OR-amplified remedy": 75% of anchor-sample truth at sf0.1 vs 5.4%
+    * single-table); loose-threshold similarity at corpus scale belongs to
+    * [[cellNearDupPairs]]/[[semDedup]] cells, not sign-LSH.
     */
   def nearDupPairsMulti(
       emb: DataFrame,
@@ -1630,52 +1566,24 @@ object SimOps {
     require(tables * bits <= dim,
       s"tables ($tables) x bits ($bits) = ${tables * bits} exceeds embedding dim $dim: " +
         "table t hashes dims [t*bits, (t+1)*bits) and must stay inside the vector")
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val mem = emb.join(groups, Seq(embCol)).select(col(idCol), col("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
+    val (reps, mem) = repCollapse(emb, idCol, embCol)
     val tableKeys = array((0 until tables).map { t =>
       concat_ws(":", lit(t), signBucket(col("e"), bits, offset = t * bits))
     }: _*)
     val n = normalized(reps, idCol, embCol)
       .select(col(idCol), col("e"), col("nrm"), explode(tableKeys).as("tb"))
       .repartition(col("tb"))
-    val wB = Window.partitionBy(col("tb")).orderBy(col(idCol))
-    val capped = (if (maxBucket <= 0) n
-      else n.withColumn("rk", row_number().over(wB)).filter(col("rk") <= maxBucket))
-      .select(col(idCol), col("e"), col("nrm"), col("tb"))
-    val repPairs = capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.tb") === col("b.tb") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("ra"), col(s"b.$idCol").as("rb"),
-        TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_bp"))
-      .filter(col("cos_bp") >= thresholdBp)
-      .distinct()
-    val cross = repPairs
-      .join(mem.as("ma"), col("ra") === col("ma.rep_id"))
-      .join(mem.as("mb"), col("rb") === col("mb.rep_id"))
-      .select(
-        least(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_a"),
-        greatest(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_b"),
-        col("cos_bp"))
-    val intra = mem.as("x")
-      .join(mem.as("y"),
-        col("x.rep_id") === col("y.rep_id") && col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        lit(10000L).as("cos_bp"))
-    cross.unionByName(intra).orderBy(col("id_a"), col("id_b"))
+    reattach(keyedPairs(n, "tb", maxBucket, thresholdBp, idCol).distinct(), mem, idCol)
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Cap telemetry for [[nearDupPairs]]' representative sign-buckets — the
     * embedding member of the `DedupOps.capAudit` family, with
     * PARTICIPATION-cap arithmetic (only a bucket's `maxBucket` lowest-id
     * reps pair; nothing is dropped wholesale): `pairs_kept` =
-    * Σ C(min(sz, cap), 2) and `pairs_forgone` the quadratic remainder —
-    * the recall the 2^bits key space actually costs on THIS corpus,
-    * visible instead of silent. Output schema matches the other audits;
+    * Σ C(min(sz, cap), 2) and `pairs_forgone` the quadratic remainder.
     * `cap_semantics` = `participation` marks the different arithmetic in
-    * the row itself (`entries_dropped` here counts entries that only LOSE
+    * the row itself (`entries_dropped` counts entries that only LOSE
     * PAIRING PARTNERS beyond the cap, not wholesale-dropped entries as in
     * the `wholesale_drop` rows of `DedupOps.capAudit`).
     */
@@ -1685,8 +1593,7 @@ object SimOps {
       maxBucket: Int = DedupOps.DefaultMaxBucket,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
+    val (reps, _) = repCollapse(emb, idCol, embCol)
     val sizes = normalized(reps, idCol, embCol)
       .withColumn("bucket", signBucket(col("e"), bits))
       .groupBy(col("bucket")).agg(count(lit(1)).as("sz"))
@@ -1706,22 +1613,12 @@ object SimOps {
         lit("participation").as("cap_semantics"))
   }
 
-  /** RECALL audit for [[nearDupPairs]] — the number the cap audit cannot
-    * see: `pairs_forgone` counts only in-bucket pairs the cap dropped,
-    * while sign-LSH also loses near-dup pairs whose endpoints hash to
-    * DIFFERENT buckets (the boundary trade documented on [[lshTopK]]).
-    * This audit measures both at once, against exact ground truth on an
-    * ANCHOR sample: ~64 hash-chosen representatives (one count() + the
-    * deterministic id-hash rule, the [[sqrtCentroidPred]] discipline, so
-    * the oracle reproduces the sample) are scored against EVERY rep —
-    * O(anchors·reps) with the anchor side broadcast, never reps² — and
-    * the declared bucket pairing's anchor-touching pairs divide into
-    * them: `recall_bp` = found·10⁴ div truth. Run it at the declared
-    * `bits` and the number is the recall the production key-space setting
-    * actually buys on THIS corpus — the companion to
-    * [[nearDupCapAudit]]'s cost-side report.
-    *
-    * Output (one row): (n_anchors, n_truth, n_found, recall_bp).
+  /** RECALL audit for [[nearDupPairs]]: the operator's own rep pairing
+    * ([[signBucketPairs]]) scored against [[anchorTruth]]'s exact
+    * anchor-sample truth — bucket-boundary misses and cap loss in one
+    * number, the companion to [[nearDupCapAudit]]'s cost side. Rollup:
+    * `DedupOps.recallRollup`. Output (one row): (n_anchors, n_truth,
+    * n_found, recall_bp).
     */
   def nearDupRecallAudit(
       emb: DataFrame,
@@ -1731,42 +1628,24 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val (n, anchors, truthPairs) = anchorTruth(emb, thresholdBp, idCol, embCol)
-    val bucketed = n.withColumn("bucket", signBucket(col("e"), bits))
-      .repartition(col("bucket"))
-    val wB = Window.partitionBy(col("bucket")).orderBy(col(idCol))
-    val capped = (if (maxBucket <= 0) bucketed
-      else bucketed.withColumn("rk", row_number().over(wB))
-        .filter(col("rk") <= maxBucket))
-      .select(col(idCol), col("e"), col("nrm"), col("bucket"))
-    val foundPairs = capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.bucket") === col("b.bucket") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("pa"), col(s"b.$idCol").as("pb"),
-        TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_bp"))
-      .filter(col("cos_bp") >= thresholdBp)
-      .select(col("pa"), col("pb"))
-    recallStats(anchors, truthPairs, foundPairs)
+    val found = signBucketPairs(n, thresholdBp, bits, maxBucket, idCol)
+      .select(col("ra").as("id_a"), col("rb").as("id_b"))
+    DedupOps.recallRollup(anchors, truthPairs, found)
   }
 
-  /** The anchor-sample exact-truth construction every recall audit
-    * shares: dedup-first reps, ~64 hash-chosen anchors (one count() +
-    * the deterministic id-hash rule, the [[sqrtCentroidPred]]
-    * discipline, so the oracle reproduces the sample), and the exact
-    * truth pairs from scoring every rep against the broadcast anchors —
-    * O(anchors·reps), never reps². Returns (normalized reps, anchors
-    * (a_id, ae, an), truth pairs (pa, pb)). */
+  /** The anchor-sample exact truth every embedding recall audit shares:
+    * [[repCollapse]] reps, anchors by `DedupOps.anchorPred` (~64,
+    * hash-chosen), and the exact truth pairs from scoring every rep
+    * against the broadcast anchors — O(anchors·reps), never reps².
+    * Returns (normalized reps, anchors (a_id, ae, an), truth pairs (pa, pb)).
+    */
   private def anchorTruth(
       emb: DataFrame, thresholdBp: Int, idCol: String, embCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
-    val nReps = reps.count()
-    val every = math.max(1L, math.ceil(nReps / 64.0).toLong)
-    val anchorPred = graft.functions.StableHash.hash60(col(idCol).cast("string")) %
-      every === 0
+    val (reps, _) = repCollapse(emb, idCol, embCol)
+    val isAnchor = DedupOps.anchorPred(reps, idCol)
     val n = normalized(reps, idCol, embCol)
-    val anchors = n.filter(anchorPred)
+    val anchors = n.filter(isAnchor)
       .select(col(idCol).as("a_id"), col("e").as("ae"), col("nrm").as("an"))
     val truthPairs = n.crossJoin(broadcast(anchors))
       .filter(col(idCol) =!= col("a_id"))
@@ -1780,38 +1659,12 @@ object SimOps {
     (n, anchors, truthPairs)
   }
 
-  /** Anchor-restrict `foundPairs` (pa, pb) and fold the three counts into
-    * the one-row recall report shared by every recall audit. */
-  private def recallStats(
-      anchors: DataFrame, truthPairs: DataFrame, foundPairs: DataFrame)
-      : DataFrame = {
-    val anchorIds = anchors.select(col("a_id"))
-    val foundAnchor = foundPairs
-      .join(broadcast(anchorIds),
-        col("pa") === col("a_id") || col("pb") === col("a_id"))
-      .select(col("pa"), col("pb")).distinct()
-    val stats = truthPairs.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(foundAnchor.agg(count(lit(1)).as("n_found")))
-      .crossJoin(anchors.agg(count(lit(1)).as("n_anchors")))
-    stats.select(col("n_anchors"), col("n_truth"), col("n_found"),
-      expr(s"CASE WHEN n_truth > 0 THEN " +
-        TextOps.floorDivSql("n_found * 10000", "n_truth") +
-        " ELSE 10000 END").as("recall_bp"))
-  }
-
-  /** RECALL audit for [[cellNearDupPairs]] — the cell-geometry leg of the
-    * recall-audit family, scoring the DECLARED loose-threshold cell
-    * pairing against the same anchor-sample exact truth
-    * [[nearDupRecallAudit]] uses for sign-LSH (identical anchor rule and
-    * truth construction, so the two audits' numbers are directly
-    * comparable on the same corpus). `found` is the declared pairing's
-    * output itself — [[cellNearDupPairs]] at the given probes — restricted
-    * to rep-rep pairs (truth lives on the rep universe; a member pair
-    * exists iff its rep pair does, exact-dup groups sharing one
-    * embedding, so the restriction is lossless) and to anchor-touching
-    * pairs. The boundary loss this measures is the IVF trade the probes
-    * knob buys back ([[cellArgTopP]]).
-    *
+  /** RECALL audit for [[cellNearDupPairs]]: the declared pairing itself, at
+    * the given knobs, restricted to rep-rep pairs (truth lives on the rep
+    * universe; a member pair exists iff its rep pair does, so the
+    * restriction is lossless) and scored against the same [[anchorTruth]]
+    * as [[nearDupRecallAudit]], so the sign-LSH and cell numbers compare
+    * directly on one corpus. Rollup: `DedupOps.recallRollup`.
     * Output (one row): (n_anchors, n_truth, n_found, recall_bp).
     */
   def cellRecallAudit(
@@ -1831,45 +1684,26 @@ object SimOps {
         idCol = idCol, embCol = embCol)
       .join(repIds.as("rx"), col("id_a") === col("rx.rid"))
       .join(repIds.as("ry"), col("id_b") === col("ry.rid"))
-      .select(col("id_a").as("pa"), col("id_b").as("pb"))
-    recallStats(anchors, truthPairs, cellPairs)
+      .select(col("id_a"), col("id_b"))
+    DedupOps.recallRollup(anchors, truthPairs, cellPairs)
   }
 
   /** Loose-threshold near-duplicate pairs through IVF CELL GEOMETRY — the
-    * measured handoff past sign-LSH's moderate-cosine recall limit: the
-    * r13 recall audits showed even OR-amplified corpus-derived sign-LSH
-    * finds ~1.8% of the cos ≥ 0.40 anchor truth at ×100, because a random
-    * hyperplane family collides at (1 − θ/π)^bits and collapses as `bits`
-    * grows with the corpus. Cells pair by NEAREST-CENTROID geometry
-    * instead: cosine-close vectors co-locate with probability governed by
-    * cell granularity (occupancy-preserving nlist = N/perCell keeps that
-    * granularity constant as the corpus grows), not by random-projection
-    * collision math — the same reason [[semDedup]] and [[ivfTopK]] own
-    * the loose-threshold regime.
+    * handoff past sign-LSH's moderate-cosine recall limit (the r13 audits:
+    * OR-amplified sign-LSH finds ~1.8% of the cos ≥ 0.40 anchor truth at
+    * ×100): cosine-close vectors co-locate by nearest centroid, whose
+    * granularity occupancy-preserving nlist keeps constant as the corpus
+    * grows.
     *
-    * Shape, all existing parts: exact-dedup-first reps (the
-    * [[nearDupPairs]] contract) → cell assignment over centroids drawn
-    * from the FULL corpus ([[cellArgmax]]'s broadcast fold, or
-    * [[cellArgmaxHier]] when `hier` — the ~2·√nlist path past the flat
-    * fold's broadcast limit, mandatory at production nlist) → per-cell
-    * id-rank participation cap (`maxCell`, [[semDedup]]'s discipline —
-    * idle in expectation at occupancy perCell ≤ maxCell) → within-cell
-    * threshold pairing ([[knnGraph]]'s cell-partitioned self-join at a
-    * threshold instead of top-k, O(Σ cell²) never corpus²) → member
-    * re-attach (cross pairs at the rep cosine, intra-group pairs at
-    * cos_bp = 10000). Cross-CELL pairs at the threshold boundary are
-    * missed at `probes` = 1 by design (the IVF trade); `probes` > 1
-    * unions each SOURCE rep into its `probes` nearest cells via
-    * [[cellArgTopP]] (the [[knnGraph]] probe construction at a threshold
-    * instead of top-k — candidates stay in their home cell, fan-out
-    * linear in `probes`, duplicates collapsed on the unordered pair),
-    * recovering boundary pairs whose second-nearest cell is the
-    * partner's home. [[nearDupRecallAudit]]'s anchor-sample construction
-    * scores the price the same way it scores sign-LSH's. Under `hier`,
-    * probes > 1 rides [[cellArgTopPHier]]'s block-restricted fold — the
-    * same lever at the same linear fan-out, available past the flat
-    * fold's ~1M-centroid broadcast limit (the r14 gap: hier's only knob
-    * was `superProbes`, which recovered a sixth of what p2 buys).
+    * Keys and scoring: [[repCollapse]] → reps assigned to cells over
+    * centroids drawn from the FULL corpus ([[cellArgmax]], or
+    * [[cellArgmaxHier]] when `hier`) → [[keyedPairs]] on c_id with the
+    * `maxCell` cap → [[reattach]]. `probes` > 1 unions each SOURCE rep
+    * into its `probes` nearest cells ([[cellArgTopP]] /
+    * [[cellArgTopPHier]]) while candidates stay in their capped home cell
+    * — fan-out linear in `probes`, unordered pairs collapsed — recovering
+    * threshold pairs that straddle a cell border. [[cellRecallAudit]]
+    * prices what is still missed.
     *
     * Output: (id_a, id_b, cos_bp), id_a < id_b, ordered.
     */
@@ -1883,20 +1717,10 @@ object SimOps {
       probes: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val mem = emb.join(groups, Seq(embCol)).select(col(idCol), col("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
-    val cents = normalized(emb, idCol, embCol).filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    val nR = normalized(reps, idCol, embCol)
-    val rankedLazy = (if (hier && probes > 1)
-        cellArgTopPHier(nR, cents, idCol, superProbes, probes)
-      else if (hier)
-        cellArgmaxHier(nR, cents, idCol, superProbes).withColumn("crn", lit(1))
-      else if (probes == 1) cellArgmax(nR, cents, idCol).withColumn("crn", lit(1))
-      else cellArgTopP(nR, cents, idCol, probes))
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"), col("crn"))
-      .repartition(col("c_id"))
+    val (reps, mem) = repCollapse(emb, idCol, embCol)
+    val cents = centroids(normalized(emb, idCol, embCol), centroidPred, idCol)
+    val rankedLazy = cellProbes(normalized(reps, idCol, embCol), cents, idCol,
+      probes, hier, superProbes)
     // probes > 1 gives the assignment THREE consumers (the home-cap
     // window, the ok-id restriction, and the probe-side join), and the
     // filter/prune pushdown each applies below the repartition
@@ -1919,88 +1743,73 @@ object SimOps {
     // between passes), so checkpoints never accumulate past live results.
     val ranked =
       if (probes > 1 || hier) Checkpoints.cut(rankedLazy) else rankedLazy
+    // the participation cap is on HOME-cell membership by id rank; a rep
+    // beyond its home cap drops from BOTH sides (probe rows included), so
+    // the pair universe stays the capped reps' regardless of the probes
     val home = ranked.filter(col("crn") === 1)
       .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-    val wCell = Window.partitionBy(col("c_id")).orderBy(col(idCol))
-    // participation cap on HOME-cell membership by id rank; a rep beyond
-    // its home cap drops from BOTH sides (probe rows included), so the
-    // pair universe stays the capped reps' regardless of the probe count
-    val pairable = (if (maxCell <= 0) home
-      else home.withColumn("rk", row_number().over(wCell))
-        .filter(col("rk") <= maxCell))
+    val repPairs =
+      if (probes == 1) keyedPairs(home, "c_id", maxCell, thresholdBp, idCol)
+      else {
+        val pairable = capPerKey(home, "c_id", maxCell, idCol)
+        val okIds = pairable.select(col(idCol).as("__ok"))
+        val aSide = ranked.join(okIds, col(idCol) === col("__ok"))
+          .select(col(idCol), col("e"), col("nrm"), col("c_id"))
+        aSide.alias("a")
+          .join(pairable.alias("b"),
+            col("a.c_id") === col("b.c_id") && col(s"a.$idCol") =!= col(s"b.$idCol"))
+          .select(
+            least(col(s"a.$idCol"), col(s"b.$idCol")).as("ra"),
+            greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("rb"),
+            TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
+              .as("cos_bp"))
+          .distinct()
+          .filter(col("cos_bp") >= thresholdBp)
+      }
+    reattach(repPairs, mem, idCol).orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** [[semDedup]]'s cell stage, shared with [[semDedupRecallAudit]] so the
+    * audit measures the operator's own code: normalized reps `nR` assigned
+    * to their nearest cell ([[cellArgmax]], or [[cellArgmaxHier]] when
+    * `hier`) and repartitioned on it, then [[keyedPairs]] on c_id with the
+    * `maxCell` cap. Returns (assigned (idCol, e, nrm, c_id), pairs
+    * (ra, rb, cos_bp)).
+    */
+  private def semDedupCells(
+      nR: DataFrame,
+      cents: DataFrame,
+      thresholdBp: Long,
+      maxCell: Int,
+      hier: Boolean,
+      superProbes: Int,
+      idCol: String): (DataFrame, DataFrame) = {
+    val assignedLazy = (if (hier) cellArgmaxHier(nR, cents, idCol, superProbes)
+      else cellArgmax(nR, cents, idCol))
       .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-    val repPairs = (if (probes == 1)
-      pairable.alias("a")
-        .join(pairable.alias("b"),
-          col("a.c_id") === col("b.c_id") && col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("ra"), col(s"b.$idCol").as("rb"),
-          TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
-            .as("cos_bp"))
-    else {
-      val okIds = pairable.select(col(idCol).as("__ok"))
-      val aSide = ranked.join(okIds, col(idCol) === col("__ok"))
-        .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-      aSide.alias("a")
-        .join(pairable.alias("b"),
-          col("a.c_id") === col("b.c_id") && col(s"a.$idCol") =!= col(s"b.$idCol"))
-        .select(
-          least(col(s"a.$idCol"), col(s"b.$idCol")).as("ra"),
-          greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("rb"),
-          TextOps.roundBp(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")))
-            .as("cos_bp"))
-        .distinct()
-    })
-      .filter(col("cos_bp") >= thresholdBp)
-    val cross = repPairs
-      .join(mem.as("ma"), col("ra") === col("ma.rep_id"))
-      .join(mem.as("mb"), col("rb") === col("mb.rep_id"))
-      .select(
-        least(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_a"),
-        greatest(col(s"ma.$idCol"), col(s"mb.$idCol")).as("id_b"),
-        col("cos_bp"))
-    val intra = mem.as("x")
-      .join(mem.as("y"),
-        col("x.rep_id") === col("y.rep_id") && col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        lit(10000L).as("cos_bp"))
-    cross.unionByName(intra).orderBy(col("id_a"), col("id_b"))
+      .repartition(col("c_id"))
+    // `assigned` has THREE consumers (the cap window, both pair sides,
+    // the survivor anti-join); the flat fold's identical repartitions
+    // collapse under ReuseExchange, but the hier pipeline's multi-leg
+    // subplans de-canonicalize under pushdown (the r14 cells-p2 trap —
+    // PlanProbe showed the hier assignment re-executing: 10 corpus scans
+    // vs flat's 4). Eager localCheckpoint runs it ONCE; blocks stay
+    // alive for the caller's lazy result (the dedupClustersDetailed
+    // discipline).
+    val assigned = if (hier) Checkpoints.cut(assignedLazy) else assignedLazy
+    (assigned, keyedPairs(assigned, "c_id", maxCell, thresholdBp, idCol))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup in
-    * embedding space — catches meaning-level copies (paraphrases,
-    * re-encodings) no lexical dedup can see. The corpus is clustered by
-    * the IVF coarse quantizer's cells (cosine-nearest centroid, same
-    * assignment as [[ivfTopK]]); within each cell, a vector whose cosine
-    * to a LOWER-id cell-mate reaches `thresholdBp` is a duplicate and is
-    * dropped; survivors are emitted with their cell. Cross-cell near-dups
-    * are missed BY DESIGN — that is the paper's trade: pairing cost is
-    * quadratic only in cell size, never corpus size.
-    *
-    * Scale: cell count grows with the corpus (k ≈ √N keeps cells bounded);
-    * pair generation is an equi-join on the cell key after repartitioning
-    * ON that key, so the assign pipeline is planned once and reused by all
-    * three consumers (ReuseExchange — the [[nearDupPairs]] pattern), and
-    * no all-pairs shape exists anywhere. An exact copy has an identical
-    * cell ranking to its original, so same-cell recall on true copies is 1.
-    *
-    * EXACT-DEDUP-FIRST (the r12 family default): identical raw embedding
-    * arrays collapse to a min-id representative BEFORE assignment — every
-    * non-rep member is by definition a duplicate of its lower-id
-    * representative (which stays in the corpus), so members drop without
-    * ever entering a cell or consuming the cap. Identical result to
-    * pairing raw vectors while the cap is idle; under an exact-dup FLOOD
-    * the raw path let copies beyond `maxCell` wrongly survive (the
-    * measured phash failure shape) — the rep path cannot.
-    *
-    * The quadratic term is additionally HARD-bounded by `maxCell` (the
-    * [[DedupOps.DefaultMaxBucket]] rule applied to cells): only the
-    * `maxCell` lowest-id representatives of a cell participate in
-    * pairing, so one hot cell — a k-means failure mode on clumpy
-    * corpora — costs at most `maxCell²` comparisons instead of going
-    * quadratic in the clump. Beyond-cap DISTINCT vectors pass through as
-    * survivors (never dropped, never dropping others), the same
-    * skip-the-pathological-bucket trade the MinHash path makes; the cap
-    * is deterministic (rank by id) so the oracle mirrors it exactly.
+    * embedding space — catches meaning-level copies no lexical dedup can
+    * see. Keys and scoring ([[semDedupCells]]): [[repCollapse]] reps in
+    * IVF cells, [[keyedPairs]] on c_id at `thresholdBp` under the
+    * `maxCell` cap; a rep with a ≥-threshold LOWER-id cell-mate is
+    * dropped, and non-rep members drop as exact copies of their rep.
+    * Cross-cell near-dups are missed BY DESIGN — the paper's trade:
+    * pairing is quadratic only in cell size. Beyond-cap reps pass through
+    * as survivors. `hier` swaps in the two-level quantizer past the flat
+    * fold's ~1M-centroid broadcast limit.
     *
     * Output: surviving (idCol, c_id), ordered by id. Centroid selection
     * (`centroidPred`) applies to the FULL corpus, not the rep universe,
@@ -2015,58 +1824,21 @@ object SimOps {
       maxCell: Int = DefaultMaxCell,
       hier: Boolean = false,
       superProbes: Int = 1): DataFrame = {
-    val groups = emb.groupBy(col(embCol)).agg(min(col(idCol)).as("rep_id"))
-    val reps = groups.select(col("rep_id").as(idCol), col(embCol))
-    val cents = normalized(emb, idCol, embCol).filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    val nR = normalized(reps, idCol, embCol)
-    // `hier`: the two-level quantizer past the flat fold's ~1M-centroid
-    // broadcast limit — the same swap cellNearDupPairs makes; SemDeDup's
-    // cross-cell-miss trade is unchanged, only which cell a boundary
-    // vector lands in (the supercell approximation, priced by superProbes)
-    val assignedLazy = (if (hier) cellArgmaxHier(nR, cents, idCol, superProbes)
-      else cellArgmax(nR, cents, idCol))
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-      .repartition(col("c_id"))
-    // `assigned` has THREE consumers (the cap window, both pair sides,
-    // the survivor anti-join); the flat fold's identical repartitions
-    // collapse under ReuseExchange, but the hier pipeline's multi-leg
-    // subplans de-canonicalize under pushdown (the r14 cells-p2 trap —
-    // PlanProbe showed the hier assignment re-executing: 10 corpus scans
-    // vs flat's 4). Eager localCheckpoint runs it ONCE; blocks stay
-    // alive for the caller's lazy result (the dedupClustersDetailed
-    // discipline).
-    val assigned = if (hier) Checkpoints.cut(assignedLazy) else assignedLazy
-    val wCell = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_id")).orderBy(col(idCol))
-    val pairable = assigned
-      .withColumn("rk", row_number().over(wCell))
-      .filter(col("rk") <= maxCell)
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-    val dups = pairable.alias("a")
-      .join(pairable.alias("b"),
-        col("a.c_id") === col("b.c_id") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .filter(TextOps.roundBp(
-        dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm"))) >= thresholdBp)
-      .select(col(s"b.$idCol").as(idCol)).distinct()
+    val (reps, _) = repCollapse(emb, idCol, embCol)
+    val cents = centroids(normalized(emb, idCol, embCol), centroidPred, idCol)
+    val (assigned, pairs) = semDedupCells(normalized(reps, idCol, embCol), cents,
+      thresholdBp, maxCell, hier, superProbes, idCol)
+    val dups = pairs.select(col("rb").as(idCol)).distinct()
     assigned.join(dups, Seq(idCol), "left_anti")
       .select(col(idCol), col("c_id"))
       .orderBy(col(idCol))
   }
 
-  /** RECALL audit for [[semDedup]] — the semantic-dedup leg of the
-    * recall-audit family, closing its last unaudited approximation: the
-    * declared operator drops a rep only when a ≥-threshold partner shares
-    * its CELL, so cross-cell near-identical pairs (and pairs lost to the
-    * `maxCell` cap) are silent misses. This scores the operator's own
-    * capped within-cell pair universe against the
-    * [[nearDupRecallAudit]] anchor-sample exact truth at the SAME
-    * threshold (identical anchor rule and truth construction, so the
-    * number is directly comparable to the sign-LSH/cells audits on the
-    * same corpus — just at the tight 0.99 regime instead of 0.40).
-    * `hier` audits the two-level quantizer's assignment, making
-    * flat-vs-hier recall a declared comparison.
-    *
+  /** RECALL audit for [[semDedup]]: the operator's own capped within-cell
+    * pairs ([[semDedupCells]]) scored against [[anchorTruth]] at the same
+    * threshold — cross-cell misses and cap loss, directly comparable to
+    * the sign-LSH and cell audits on the same corpus. `hier` audits the
+    * two-level assignment. Rollup: `DedupOps.recallRollup`.
     * Output (one row): (n_anchors, n_truth, n_found, recall_bp).
     */
   def semDedupRecallAudit(
@@ -2079,27 +1851,10 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val (n, anchors, truthPairs) = anchorTruth(emb, thresholdBp, idCol, embCol)
-    val cents = normalized(emb, idCol, embCol).filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
-    // the operator's own assignment + cap + pairing ([[semDedup]]'s `dups`
-    // construction, kept as PAIRS instead of collapsed to drop ids)
-    val assignedLazy = (if (hier) cellArgmaxHier(n, cents, idCol, superProbes)
-      else cellArgmax(n, cents, idCol))
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-      .repartition(col("c_id"))
-    val assigned = if (hier) Checkpoints.cut(assignedLazy) else assignedLazy
-    val wCell = Window.partitionBy(col("c_id")).orderBy(col(idCol))
-    val pairable = assigned
-      .withColumn("rk", row_number().over(wCell))
-      .filter(col("rk") <= maxCell)
-      .select(col(idCol), col("e"), col("nrm"), col("c_id"))
-    val foundPairs = pairable.alias("a")
-      .join(pairable.alias("b"),
-        col("a.c_id") === col("b.c_id") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .filter(TextOps.roundBp(
-        dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm"))) >= thresholdBp)
-      .select(col(s"a.$idCol").as("pa"), col(s"b.$idCol").as("pb"))
-    recallStats(anchors, truthPairs, foundPairs)
+    val cents = centroids(normalized(emb, idCol, embCol), centroidPred, idCol)
+    val (_, pairs) = semDedupCells(n, cents, thresholdBp, maxCell, hier, superProbes, idCol)
+    DedupOps.recallRollup(anchors, truthPairs,
+      pairs.select(col("ra").as("id_a"), col("rb").as("id_b")))
   }
 
   /** Int8 scalar quantization of the embedding corpus — the 4x storage
@@ -2277,8 +2032,7 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+    val cents = centroids(n, centroidPred, idCol)
     val resid = cellArgmax(n, cents, idCol)
       .select(col(idCol), col("c_id").as("cell_id"), col("e"))
       .join(broadcast(cents.select(col("c_id").as("cell_id"), col("ce"))), "cell_id")
@@ -2456,8 +2210,7 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val cents0 = n.filter(centroidPred)
-      .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
+    val cents0 = centroids(n, centroidPred, idCol)
     // coarseIters > 0 Lloyd-refines the coarse quantizer too — the full
     // production composition (trained cells + trained books)
     val cents =

@@ -27,6 +27,10 @@ class BenchSpec extends SparkSpec {
     assert(artifact.get("queries").get("q_no_such_query").asInt == -1)
     assert(artifact.get("errors").has("q_no_such_query"))
     assert(artifact.get("pass_contended").size == Bench.Passes)
+    // every pass is measured by the load gate, however short it is
+    val loads = artifact.get("pass_external_load").elements.asScala.toSeq
+    assert(loads.size == Bench.Passes &&
+      loads.forall(l => l.isNumber && l.asDouble >= 0), s"pass_external_load: $loads")
     assert(artifact.get("load_bound").asDouble == Bench.LoadBound)
 
     val last = buf.toString("UTF-8").split('\n').filter(_.nonEmpty).last

@@ -291,6 +291,24 @@ class SimOpsSpec extends SparkSpec {
       s"zero-hit prefix row missing or wrong: $out")
   }
 
+  test("ivfRecallSweep: a zero-hit nProbe still emits its row (n_hits = 0)") {
+    // unit vectors at the given angle: the query (0) sits 10° from
+    // centroid A and 20° from centroid B, while its true top-2 (8° and 9°)
+    // are nearer B, so B is their home cell; nProbe 1 probes only A, whose
+    // one candidate (A itself, 10° away) is not in the truth
+    def at(id: Long, deg: Double) = {
+      val r = math.toRadians(deg)
+      (id, Seq(math.cos(r).toFloat, math.sin(r).toFloat), 0)
+    }
+    val df = emb(at(0, 0), at(1, 8), at(2, 9), at(3, -10), at(4, 20))
+    val out = SimOps.ivfRecallSweep(df, col("vec_id") === 0,
+        centroidPred = col("vec_id") >= 3, probes = Seq(1, 2), k = 2)
+      .select("n_probe", "n_hits", "recall_bp")
+      .as[(Int, Long, Long)].collect().toSeq
+    assert(out == Seq((1, 0L, 0L), (2, 2L, 10000L)),
+      s"zero-hit nProbe row missing or wrong: $out")
+  }
+
   test("mrlWeighted: prefix recall on the MRL-structured corpus beats the flat fixture's") {
     // the 2^-(pos div 8) scaling concentrates energy in leading dims, so
     // short-prefix recall must rise strictly above the random-direction
@@ -918,6 +936,24 @@ class SimOpsSpec extends SparkSpec {
     val got = SimOps.semDedup(df, col("vec_id") <= 1, thresholdBp = 9990L)
       .as[(Long, Long)].collect().toSeq
     assert(got.map(_._1) == Seq(0L, 1L, 10L, 12L))
+  }
+
+  test("semDedup: maxCell <= 0 means uncapped, as in the rest of the near-dup family") {
+    // the planted fixture plus a doubled copy of every 100th vector: a
+    // distinct array at cosine 1, so exact-dedup-first keeps it as its
+    // own rep and only the pairing can drop it
+    val base = sf("embeddings")
+    val step = DedupOps.plantStep(base, "vec_id")
+    val doubled = base.filter(col("vec_id") % 100 === 0)
+      .select((col("vec_id") + 2 * step).as("vec_id"),
+        transform(col("embedding"), x => x * 2).as("embedding"), col("label"))
+    val corpus = SimOps.plantedVectors(base).unionByName(doubled)
+    val pred = SimOps.sqrtCentroidPred(corpus)
+    def kept(cap: Int) = SimOps.semDedup(corpus, pred, maxCell = cap)
+      .as[(Long, Long)].collect().toSeq
+    val capped = kept(10000)
+    assert(!capped.exists(_._1 >= 2 * step), "the doubled copies must drop")
+    assert(kept(0) == capped)
   }
 
   test("semDedup: a planted hot cell is bounded by maxCell, beyond-cap rows survive") {
