@@ -132,11 +132,11 @@ class PlanBudgetSpec extends SparkSpec {
     // (planted-union corpus read by the anchor and postings branches) +
     // one per-anchor window; band filter is a pre-rank predicate
     "q_hard_negatives_text" -> Pin(6, 4, 0, 2),
-    // the embedding near-dup and ANN-audit family, measured before its
-    // shared pairing/rollup helpers replaced the per-operator copies:
-    // every count held over three runs at sf0.001. q_sim_recall
-    // (shuffles 9/10), q_recall_audit_cells_hier (bcast 10/11) and
-    // q_recall_audit_semdedup (bcast 5/6) fluttered and are left out.
+    // the embedding near-dup and ANN-audit family (SimOps' shared
+    // pairing and recall-rollup helpers): every count below held over
+    // three runs at sf0.001. q_sim_recall (shuffles 9/10),
+    // q_recall_audit_cells_hier (bcast 10/11) and q_recall_audit_semdedup
+    // (bcast 5/6) flutter and are left out.
     "q_sq_recall" -> Pin(5, 5, 1, 4),
     "q_mrl_recall" -> Pin(10, 12, 0, 7),
     "q_recall_audit_ivf_hier" -> Pin(11, 12, 5, 8),
