@@ -149,7 +149,21 @@ class PlanBudgetSpec extends SparkSpec {
     "q_semdedup_hier" -> Pin(0, 2, 0, 0),
     "q_knn_graph_hier" -> Pin(5, 5, 2, 4),
     "q_knn_graph_hier_p2" -> Pin(5, 6, 3, 4),
-    "q_sim_ivf_hier" -> Pin(8, 5, 1, 6))
+    "q_sim_ivf_hier" -> Pin(8, 5, 1, 6),
+    // the text near-dup family and the other in-array pairing users
+    // (DedupOps' shared bucket-pairing helpers): every count below held
+    // over three runs at sf0.001. q_triangles' census reads its shared
+    // caches, so its final plan counts nothing but stays pinned at zero.
+    "q_dedup_minhash" -> Pin(3, 4, 0, 0),
+    "q_dedup_minhash_err" -> Pin(6, 5, 1, 2),
+    "q_cap_audit_jaccard" -> Pin(3, 1, 0, 0),
+    "q_dedup_simhash_ball" -> Pin(3, 4, 0, 0),
+    "q_dedup_simhash_verified" -> Pin(3, 4, 4, 1),
+    "q_source_overlap" -> Pin(2, 5, 1, 1),
+    "q_decontaminate" -> Pin(2, 3, 0, 1),
+    "q_kmv_intersect" -> Pin(1, 7, 4, 3),
+    "q_triangles" -> Pin(0, 0, 0, 0),
+    "q_graph_degrees" -> Pin(2, 4, 1, 1))
 
   for ((name, pin) <- pins) {
     test(s"plan budget: $name") {
