@@ -2309,22 +2309,16 @@ object SparkEntry {
         .orderBy(col("event_id"))),
   )
 
-  /** DuckDB fragment computing exactly [[TextOps.tokens]] over `text`. */
   /** Fixed probe tokens for the CMS query — frequent corpus tokens across
     * the count range, plus one guaranteed absent (the 0-estimate path).
     */
   private val cmsProbes =
     Seq("batch", "column", "filter", "hash", "join", "row", "scan", "the", "zzz_absent")
 
+  /** DuckDB fragment computing exactly [[TextOps.tokens]] over `text`. */
   private val duckToks =
     "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> length(t) > 0)"
 
-  /** DuckDB mirror of [[graft.operators.TextOps.bpeMerges]]: the driver-loop
-    * iteration unrolled into one CTE chain per merge round (pair recount,
-    * 1-row winner, run-parity greedy application, symbol rebuild).
-    * Positions are 1-based here vs posexplode's 0-based — both appear only
-    * in intra-word window arithmetic, where a constant shift cancels.
-    */
   /** DuckDB mirror of [[graft.operators.TextOps.unigramLm]]: the EM loop
     * unrolled into one CTE block per round (costs from the previous
     * vocab, mask-enumerated Viterbi argmin, piece recount). `c16` is the
@@ -2383,9 +2377,14 @@ object SparkEntry {
     duckBpeCtes(nMerges) + s" SELECT * FROM ($finals) ORDER BY step"
   }
 
-  /** The BPE training loop unrolled into CTEs (mirrors TextOps.bpeTrain):
-    * ends with the trained state `s<nMerges>(word, cnt, syms)` and the
-    * per-round winners `t1..t<nMerges>`.
+  /** The BPE training loop unrolled into CTEs (mirrors TextOps.bpeTrain
+    * and [[graft.operators.TextOps.bpeMerges]]): one CTE chain per merge
+    * round (pair recount, 1-row winner, run-parity greedy application,
+    * symbol rebuild), ending with the trained state
+    * `s<nMerges>(word, cnt, syms)` and the per-round winners
+    * `t1..t<nMerges>`. Positions are 1-based here vs posexplode's 0-based —
+    * both appear only in intra-word window arithmetic, where a constant
+    * shift cancels.
     */
   private def duckBpeCtes(nMerges: Int): String = {
     val init =

@@ -51,8 +51,9 @@ object DedupOps {
     * Docs dropped this way can only lose pairs glued together by
     * corpus-wide boilerplate — the standard LSH recall trade. The declared
     * queries mirror the same cap in their DuckDB oracles, so the contract
-    * is cross-engine exact whether or not the cap engages. Use
-    * [[bandBucketHistogram]] to see what a given corpus would drop.
+    * is cross-engine exact whether or not the cap engages. A cap ≤ 0 means
+    * no cap ([[effectiveCap]]); the `*CapAudit` queries show what a given
+    * corpus would drop.
     */
   val DefaultMaxBucket = 64
 
@@ -149,97 +150,108 @@ object DedupOps {
       .select(col("keep_id"), col("n_copies"), col("fp_md5"))
       .orderBy(col("keep_id"))
 
-  /** MinHash signature rows: one row per (doc, minhash_i) via explode +
-    * min-aggregate — the explode keeps tokenization to once per document
-    * (computing each of the `numHashes` mins over a repeated shingle
-    * expression would re-tokenize per hash). Each shingle is md5-hashed
-    * ONCE; the `numHashes` family members derive affinely from that value
-    * ([[graft.functions.StableHash.familyOf]]) — md5 dominated signature
-    * cost when every hash was an independent [[StableHash.seeded]] call.
+  /** A document's distinct word `k`-shingle set — the set every text
+    * Jaccard here scores. */
+  private[graft] def shingleSet(text: Column, k: Int = 3): Column =
+    array_distinct(TextOps.shingles(TextOps.tokens(text), k))
+
+  /** Exact Jaccard of two shingle sets, in bp. */
+  private def setJaccardBp(a: Column, b: Column): Column =
+    TextOps.roundBp(size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double"))
+
+  /** Postings Jaccard in bp: `inter` shared shingles of `na` and `nb`
+    * distinct ones, union by inclusion–exclusion. */
+  private def postingsJaccardBp(inter: Column, na: Column, nb: Column): Column =
+    TextOps.roundBp(inter.cast("double") / (na + nb - inter).cast("double"))
+
+  /** MinHash doc relation (idCol, s0..s{numHashes-1}, shs): one explode of
+    * [[shingleSet]] + one min-aggregate, so tokenization runs once per doc.
+    * Each shingle is md5-hashed ONCE and the family members derive affinely
+    * from it ([[graft.functions.StableHash.familyOf]]) — md5 dominated
+    * signature cost when every hash was an independent seeded call. `shs`
+    * (the shingle list) rides the SAME aggregation for the verifying
+    * callers; callers that never read it get it pruned.
     */
   private def minhashSigs(corpus: DataFrame, idCol: String, textCol: String, numHashes: Int): DataFrame = {
-    val sh = corpus.select(
-      col(idCol),
-      explode(array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3))).as("sh"))
-      .select(col(idCol), StableHash.hash60(col("sh")).as("h"))
-    val aggs = (0 until numHashes).map(i => min(StableHash.familyOf(col("h"), i)).as(s"s$i"))
+    val sh = corpus.select(col(idCol), explode(shingleSet(col(textCol))).as("sh"))
+      .select(col(idCol), col("sh"), StableHash.hash60(col("sh")).as("h"))
+    val aggs = (0 until numHashes).map(i => min(StableHash.familyOf(col("h"), i)).as(s"s$i")) :+
+      collect_list(col("sh")).as("shs")
     sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Bucket keep-predicate: pairable (≥2 docs) and, when `maxBucket` > 0,
-    * no larger than the cap. Applied to the collected `ds` array of every
-    * LSH bucket / postings list before in-array pairing.
-    */
-  private def capBucket(maxBucket: Int): Column =
-    if (maxBucket <= 0) size(col("ds")) > 1
-    else size(col("ds")) > 1 && size(col("ds")) <= maxBucket
-
-  /** Band-bucket size histogram — the observability side of the hot-bucket
-    * cap: (bucket_size, n_buckets, dropped) per distinct size, `dropped`
-    * flagging sizes a given `maxBucket` would skip. Run this (cheap: the
-    * same one aggregation minus the pairing) when tuning the cap for a new
-    * corpus; the dropped row counts ARE the "what did the cap cost" log.
-    */
-  def bandBucketHistogram(
-      corpus: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 8,
-      bands: Int = 4,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+  /** MinHash band rows (idCol, bkey), one per (doc, band): band b of r =
+    * numHashes / bands rows is keyed `b:s_{br}:…:s_{br+r-1}`. */
+  private def bandRows(sigs: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sigs = minhashSigs(corpus, idCol, textCol, numHashes)
     val bandKeys = (0 until bands).map { b =>
       concat_ws(":", lit(b) +: (0 until r).map(j => col(s"s${b * r + j}")): _*)
     }
-    sigs
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
-      .groupBy(col("bkey")).agg(count(lit(1)).as("bucket_size"))
-      .groupBy(col("bucket_size")).agg(count(lit(1)).as("n_buckets"))
-      .withColumn("dropped",
-        lit(maxBucket > 0) && col("bucket_size") > maxBucket)
-      .orderBy(col("bucket_size"))
+    sigs.select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
   }
 
-  /** Uniform cap/recall telemetry rollup — the "no silent caps" audit every
-    * capped pairing family exposes as a first-class declared query: given
-    * one row per bucket/postings list with its size `sz`, report what the
-    * hot-bucket cap actually costs on THIS corpus. `pairs_forgone` is the
-    * number the phash ×100 collapse proved can silently go to 100% of the
-    * candidate volume while wall time looks great (SKEW_scale.txt): a cap
-    * whose forgone-pair share explodes is a recall cliff, not a tuning
-    * detail, and this rollup is where it becomes visible. One tiny
-    * aggregation over the SAME bucket histogram the pairing op builds —
-    * integer-exact, oracle-mirrored ([[capAuditSql]]).
-    *
-    * Output (one row): (bucket_kind, n_buckets, n_dropped, entries_dropped,
-    * pairs_kept, pairs_forgone, hottest, cap_semantics). `cap_semantics` =
-    * `wholesale_drop` here: an over-cap bucket contributes NOTHING
-    * (entries_dropped counts its full size, pairs_forgone its full
-    * C(sz, 2)) — vs the `participation` discipline of
-    * `SimOps.nearDupCapAudit`, where only the entries beyond the cap sit
-    * out and the arithmetic is the quadratic remainder. The column makes
-    * the two disciplines distinguishable IN the audit row itself, so a
-    * consumer comparing rows across bucket_kind values can't misread one
-    * family's numbers under the other family's arithmetic.
+  /** MinHash candidates `p = (a, b)`, a < b, one row per shared band:
+    * [[bandRows]] through [[bucketPairs]]. */
+  private def bandPairs(
+      sigs: DataFrame, idCol: String, numHashes: Int, bands: Int, maxBucket: Int): DataFrame =
+    bucketPairs(bandRows(sigs, idCol, numHashes, bands), "bkey", col(idCol), maxBucket)(
+      (x, y) => struct(x.as("a"), y.as("b")))
+
+  /** The one cap rule of every capped pairing and cap audit: a cap ≤ 0
+    * means no cap. */
+  private[graft] def effectiveCap(maxBucket: Int): Int =
+    if (maxBucket <= 0) Int.MaxValue else maxBucket
+
+  /** The in-array pair expander: `f(x, y)` for every element x of `arr`
+    * and every y after it — on a sorted array, each pair once. */
+  private[graft] def arrayPairs(arr: Column)(f: (Column, Column) => Column): Column =
+    flatten(transform(arr, (x, i) => transform(slice(arr, i + lit(2), size(arr)), y => f(x, y))))
+
+  /** The capped bucket → pair stage: collect each `key` bucket's sorted
+    * `item`s into `ds`, keep the pairable buckets (≥ 2) within
+    * [[effectiveCap]], and explode one row `p = f(x, y)` per in-bucket
+    * pair ([[arrayPairs]]). Pairing in the
+    * collected array, not by self-joining the rows: the self-join plans the
+    * whole upstream pipeline twice (a diamond with no exchange reuse).
     */
-  private[graft] def capAudit(sizes: DataFrame, maxBucket: Int, kind: String): DataFrame =
+  private[graft] def bucketPairs(rows: DataFrame, key: String, item: Column, maxBucket: Int)(
+      f: (Column, Column) => Column): DataFrame =
+    rows.groupBy(col(key)).agg(sort_array(collect_list(item)).as("ds"))
+      .filter(size(col("ds")) > 1 && size(col("ds")) <= effectiveCap(maxBucket))
+      .select(explode(arrayPairs(col("ds"))(f)).as("p"))
+
+  /** The wholesale-drop rollup every text and media cap audit shares ("no
+    * silent caps"): keys by bucket (`sizes` holds one row per bucket with
+    * its size `sz`), scores what [[effectiveCap]] drops — an over-cap
+    * bucket contributes nothing, so entries_dropped counts its full size
+    * and pairs_forgone its full C(sz, 2); `SimOps.nearDupCapAudit`'s
+    * `participation` rows count only the quadratic remainder, and
+    * `cap_semantics` names which arithmetic a row uses. The phash ×100
+    * collapse showed pairs_forgone can reach 100% of the candidates while
+    * wall time looks great (SKEW_scale.txt). Mirrored by [[capAuditSql]].
+    * Output (one row): (bucket_kind, n_buckets, n_dropped, entries_dropped,
+    * pairs_kept, pairs_forgone, hottest, cap_semantics).
+    */
+  private[graft] def capAudit(sizes: DataFrame, maxBucket: Int, kind: String): DataFrame = {
+    val cap = effectiveCap(maxBucket)
     sizes
       .agg(
         count(lit(1)).as("n_buckets"),
-        coalesce(sum(when(col("sz") > maxBucket, 1L).otherwise(0L)), lit(0L))
+        coalesce(sum(when(col("sz") > cap, 1L).otherwise(0L)), lit(0L))
           .as("n_dropped"),
-        coalesce(sum(when(col("sz") > maxBucket, col("sz")).otherwise(0L)), lit(0L))
+        coalesce(sum(when(col("sz") > cap, col("sz")).otherwise(0L)), lit(0L))
           .as("entries_dropped"),
-        coalesce(sum(when(col("sz").between(2, maxBucket),
+        coalesce(sum(when(col("sz").between(2, cap),
           expr("sz * (sz - 1) div 2")).otherwise(0L)), lit(0L)).as("pairs_kept"),
-        coalesce(sum(when(col("sz") > maxBucket,
+        coalesce(sum(when(col("sz") > cap,
           expr("sz * (sz - 1) div 2")).otherwise(0L)), lit(0L)).as("pairs_forgone"),
         coalesce(max(col("sz")), lit(0L)).as("hottest"))
       .select(lit(kind).as("bucket_kind"), col("n_buckets"), col("n_dropped"),
         col("entries_dropped"), col("pairs_kept"), col("pairs_forgone"), col("hottest"),
         lit("wholesale_drop").as("cap_semantics"))
+  }
 
   /** The recall audits' anchor-sample rule, the one place it is written:
     * one count() of `universe`, then a row is an anchor iff
@@ -283,18 +295,19 @@ object DedupOps {
   /** DuckDB rollup matching [[capAudit]]: select from a CTE/subquery named
     * `bs` exposing one BIGINT column `sz` per bucket.
     */
-  private[graft] def capAuditSql(maxBucket: Int, kind: String): String =
+  private[graft] def capAuditSql(maxBucket: Int, kind: String): String = {
+    val cap = effectiveCap(maxBucket)
     s"SELECT '$kind' AS bucket_kind, CAST(count(*) AS BIGINT) AS n_buckets, " +
-      s"CAST(coalesce(sum(CASE WHEN sz > $maxBucket THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dropped, " +
-      s"CAST(coalesce(sum(CASE WHEN sz > $maxBucket THEN sz ELSE 0 END), 0) AS BIGINT) AS entries_dropped, " +
-      s"CAST(coalesce(sum(CASE WHEN sz BETWEEN 2 AND $maxBucket THEN sz * (sz - 1) // 2 ELSE 0 END), 0) AS BIGINT) AS pairs_kept, " +
-      s"CAST(coalesce(sum(CASE WHEN sz > $maxBucket THEN sz * (sz - 1) // 2 ELSE 0 END), 0) AS BIGINT) AS pairs_forgone, " +
+      s"CAST(coalesce(sum(CASE WHEN sz > $cap THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dropped, " +
+      s"CAST(coalesce(sum(CASE WHEN sz > $cap THEN sz ELSE 0 END), 0) AS BIGINT) AS entries_dropped, " +
+      s"CAST(coalesce(sum(CASE WHEN sz BETWEEN 2 AND $cap THEN sz * (sz - 1) // 2 ELSE 0 END), 0) AS BIGINT) AS pairs_kept, " +
+      s"CAST(coalesce(sum(CASE WHEN sz > $cap THEN sz * (sz - 1) // 2 ELSE 0 END), 0) AS BIGINT) AS pairs_forgone, " +
       "CAST(coalesce(max(sz), 0) AS BIGINT) AS hottest, " +
       "'wholesale_drop' AS cap_semantics FROM bs"
+  }
 
-  /** Cap telemetry for [[minhashBandPairs]]' band buckets — the standard
-    * audit query of the MinHash-LSH family (same band construction, same
-    * corpus, one rollup instead of pairing).
+  /** Cap telemetry for [[minhashBandPairs]]: keys by band bucket, counts
+    * the operator's own [[bandRows]], rolls up with [[capAudit]].
     */
   def minhashCapAudit(
       corpus: DataFrame,
@@ -303,36 +316,28 @@ object DedupOps {
       numHashes: Int = 8,
       bands: Int = 4,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = minhashSigs(corpus, idCol, textCol, numHashes)
-    val bandKeys = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(j => col(s"s${b * r + j}")): _*)
-    }
-    val sizes = sigs
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
+    val sizes = bandRows(minhashSigs(corpus, idCol, textCol, numHashes), idCol, numHashes, bands)
       .groupBy(col("bkey")).agg(count(lit(1)).as("sz"))
     capAudit(sizes, maxBucket, "minhash_band")
   }
 
-  /** Cap telemetry for [[jaccardPairs]]/[[containmentPairs]]' shingle
-    * postings (the stop-shingle cutoff's cost on this corpus).
+  /** Cap telemetry for [[jaccardPairs]]/[[containmentPairs]]: keys by
+    * shingle, counts the operators' own [[shinglePostings]], rolls up with
+    * [[capAudit]] (the stop-shingle cutoff's cost on this corpus).
     */
   def jaccardCapAudit(
       corpus: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       maxDocFreq: Int = DefaultMaxBucket): DataFrame = {
-    val sizes = corpus
-      .select(col(idCol),
-        explode(array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3))).as("sh"))
+    val sizes = shinglePostings(corpus, idCol, textCol)
       .groupBy(col("sh")).agg(count(lit(1)).as("sz"))
     capAudit(sizes, maxDocFreq, "jaccard_postings")
   }
 
-  /** Cap telemetry for [[exactSubstringSpans]]/[[substringStrike]]' gram
-    * postings (occurrence-capped — one doc repeating a gram counts each
-    * occurrence, exactly like the operator).
+  /** Cap telemetry for [[exactSubstringSpans]]/[[substringStrike]]: keys
+    * by gram hash, counts the operators' own [[gramPostings]] (occurrences
+    * — one doc repeating a gram counts each), rolls up with [[capAudit]].
     */
   def substringCapAudit(
       corpus: DataFrame,
@@ -340,28 +345,18 @@ object DedupOps {
       maxOcc: Int = DefaultMaxBucket,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val sizes = corpus
-      .select(col(idCol),
-        explode(TextOps.shingles(TextOps.tokens(col(textCol)), gramLen)).as("g"))
-      .select(StableHash.hash60(col("g")).as("gh"))
+    val sizes = gramPostings(corpus, gramLen, idCol, textCol)
       .groupBy(col("gh")).agg(count(lit(1)).as("sz"))
     capAudit(sizes, maxOcc, "substring_postings")
   }
 
-  /** MinHash-LSH candidate pairs: signature of `numHashes` min-hashes over
-    * distinct word 3-shingles, split into `bands` bands of `numHashes/bands`
-    * rows; docs sharing any band signature become a candidate pair. Output:
-    * (id_a, id_b, n_shared_bands), id_a < id_b.
-    *
-    * Pairs are generated by COLLECTING each band bucket and pairing within
-    * the array, not by self-joining the band rows: the self-join plans the
-    * whole corpus→tokenize→shingle→minhash pipeline TWICE (a diamond with
-    * no exchange reuse — measured 6 parquet scans of the corpus in the
-    * plan), while bucket-collect runs it once and shuffles only (band,
-    * doc_id) pairs. Bucket arrays are bounded by `maxBucket`
-    * ([[DefaultMaxBucket]]): buckets larger than the cap are dropped before
-    * pairing, so no single row ever carries more than maxBucket²/2 pairs —
-    * the boilerplate-heavy-corpus OOM guard. Pass 0 to disable (exact).
+  /** MinHash-LSH candidate pairs: keys by band bucket ([[bandRows]] over
+    * `numHashes` min-hashes of the 3-shingle set, `bands` bands), scores
+    * each pair by its shared-band count, pairs through [[bandPairs]]
+    * (bucket-collect, not a self-join: the self-join measured 6 corpus
+    * scans). Buckets over `maxBucket` are dropped before pairing — the
+    * boilerplate OOM guard; ≤ 0 disables it. Output: (id_a, id_b,
+    * n_shared_bands), id_a < id_b.
     */
   def minhashBandPairs(
       corpus: DataFrame,
@@ -369,28 +364,11 @@ object DedupOps {
       textCol: String = "text",
       numHashes: Int = 8,
       bands: Int = 4,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = minhashSigs(corpus, idCol, textCol, numHashes)
-    val bandKeys = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(j => col(s"s${b * r + j}")): _*)
-    }
-    val buckets = sigs
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
-      .groupBy(col("bkey"))
-      .agg(sort_array(collect_list(col(idCol))).as("ds"))
-      .filter(capBucket(maxBucket))
-    // ordered pairs (ds is sorted ascending): element i with every later one
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x.as("a"), y.as("b")))))
-    buckets
-      .select(explode(pairs).as("p"))
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    bandPairs(minhashSigs(corpus, idCol, textCol, numHashes), idCol, numHashes, bands, maxBucket)
       .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Per-document `bits`-bit SimHash sketch (doc_id, simhash): each token
     * votes ±1 on every bit of its 60-bit stable hash; the sketch bit is the
@@ -419,21 +397,13 @@ object DedupOps {
       .withColumn("keep_id", min(col(idCol)).over(Window.partitionBy(col("simhash"))))
       .orderBy(col(idCol))
 
-  /** Hamming-ball SimHash near-dup pairs: docs whose `bits`-bit sketches
-    * differ in at most `maxDist` bits. Identical-sketch grouping
-    * ([[simhash]]) misses a near-copy the moment one flipped bit sneaks
-    * into the sketch; this is the standard fix — banded bit slices as an
-    * LSH over Hamming space:
-    *
-    *  - slice the sketch into `bands` contiguous slices of bits/bands bits;
-    *  - bucket docs on (band, slice value): by pigeonhole, two sketches
-    *    within distance maxDist < bands agree EXACTLY on ≥1 slice, so
-    *    recall within the ball is 1 — no all-pairs scan anywhere;
-    *  - verify candidates with a popcount of the XOR (both sketches ride
-    *    along in the bucket array, so verification needs no join back).
-    *
-    * Same bucket-collect shape and [[DefaultMaxBucket]] hot-bucket cap as
-    * [[minhashBandPairs]]. Output: (id_a, id_b, hamming), id_a < id_b.
+  /** Hamming-ball SimHash near-dup pairs: keys by (band, slice value)
+    * over `bands` contiguous bit slices of the `bits`-bit sketch — by
+    * pigeonhole two sketches within maxDist < bands agree on ≥ 1 slice, so
+    * recall within the ball is 1 — and scores each pair by the popcount of
+    * the sketch XOR (both sketches ride in the bucket), keeping hamming ≤
+    * `maxDist`. Pairs through [[bucketPairs]]. Output: (id_a, id_b,
+    * hamming), id_a < id_b.
     */
   def simhashBallPairs(
       corpus: DataFrame,
@@ -447,38 +417,26 @@ object DedupOps {
     require(maxDist < bands, s"recall guarantee needs maxDist < bands")
     val r = bits / bands
     val mask = (1L << r) - 1
-    val sk = simhashSketch(corpus, idCol, textCol, bits)
-    val bandKeys = (0 until bands).map { b =>
+    val slices = (0 until bands).map { b =>
       concat_ws(":", lit(b), shiftright(col("simhash"), b * r).bitwiseAND(lit(mask)))
     }
-    val buckets = sk
-      .select(col(idCol), col("simhash"), explode(array(bandKeys: _*)).as("bkey"))
-      .groupBy(col("bkey"))
-      .agg(sort_array(collect_list(struct(col(idCol).as("id"), col("simhash").as("sk")))).as("ds"))
-      .filter(capBucket(maxBucket))
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x("id").as("id_a"), y("id").as("id_b"),
-          bit_count(x("sk").bitwiseXOR(y("sk"))).as("d")))))
-    buckets
-      .select(explode(pairs).as("p"))
+    val rows = simhashSketch(corpus, idCol, textCol, bits)
+      .select(col(idCol), col("simhash"), explode(array(slices: _*)).as("bkey"))
+    bucketPairs(rows, "bkey", struct(col(idCol).as("id"), col("simhash").as("sk")), maxBucket) {
+      (x, y) => struct(x("id").as("id_a"), y("id").as("id_b"),
+        bit_count(x("sk").bitwiseXOR(y("sk"))).as("d"))
+    }
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(min(col("p.d")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxDist)
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** The SimHash VERIFY leg — [[simhashBallPairs]] candidates rescored
-    * with exact 3-shingle Jaccard (the [[verifiedNearDups]] construction
-    * applied to the Hamming ball): the ball is a candidate generator
-    * whose precision the r17 recall audit measured at ~7.5× truth
-    * (SimHash is a token-SET sketch, so dissimilar docs can hash close),
-    * and no production dedup acts on it unverified. One corpus pass
-    * builds the distinct-shingle sets; candidates join back their two
-    * sets (pair-volume-sized, cap-bounded by the ball's own bucket cap)
-    * and keep exact jac ≥ `thresholdBp`.
-    *
-    * Output: (id_a, id_b, hamming, jac_bp), id_a < id_b, ordered.
+  /** The SimHash VERIFY leg: keys by [[simhashBallPairs]]' candidates
+    * (the r17 recall audit measured the raw ball at ~7.5× truth), scores
+    * each by the exact Jaccard of the two [[shingleSet]]s joined back
+    * ([[setJaccardBp]]), keeps jac ≥ `thresholdBp`. Output: (id_a, id_b,
+    * hamming, jac_bp), id_a < id_b, ordered.
     */
   def simhashVerifiedNearDups(
       corpus: DataFrame,
@@ -491,23 +449,19 @@ object DedupOps {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val cand = simhashBallPairs(corpus, idCol, textCol, bits, bands,
       maxDist, maxBucket)
-    val sl = corpus.select(col(idCol),
-      array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3)).as("shs"))
+    val sl = corpus.select(col(idCol), shingleSet(col(textCol)).as("shs"))
     cand
       .join(sl.select(col(idCol).as("id_a"), col("shs").as("shs_a")), "id_a")
       .join(sl.select(col(idCol).as("id_b"), col("shs").as("shs_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("hamming"),
-        TextOps.roundBp(
-          size(array_intersect(col("shs_a"), col("shs_b"))).cast("double") /
-            size(array_union(col("shs_a"), col("shs_b"))).cast("double")).as("jac_bp"))
+        setJaccardBp(col("shs_a"), col("shs_b")).as("jac_bp"))
       .filter(col("jac_bp") >= thresholdBp)
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** Exact n-gram (word 3-shingle) Jaccard over an inverted index: explode
-    * distinct shingles, self-join on the shingle, count intersections, and
-    * emit pairs with similarity ≥ `thresholdBp` basis points. Never
-    * all-pairs: only docs sharing ≥1 shingle meet in the join.
+  /** Exact 3-shingle Jaccard pairs: keys by shingle, scores by postings
+    * Jaccard ([[postingsJaccardBp]]) over [[shinglePairCounts]], keeps
+    * jac ≥ `thresholdBp`. Never all-pairs: only docs sharing a shingle meet.
     *
     * MEASURED growth law of the pairing volume (SKEW_scale.txt, round 11,
     * "jaccardPairs pairing-volume growth law"), separating the two ways a
@@ -533,13 +487,10 @@ object DedupOps {
       idCol: String = "doc_id",
       textCol: String = "text",
       thresholdBp: Int = 8000,
-      maxDocFreq: Int = 0,
-      hashPostingsKey: Boolean = false): DataFrame =
-    shinglePairCounts(corpus, idCol, textCol, maxDocFreq, hashPostingsKey)
-      .select(
-        col("id_a"), col("id_b"),
-        TextOps.roundBp(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double")).as("jac_bp"))
+      maxDocFreq: Int = 0): DataFrame =
+    shinglePairCounts(corpus, idCol, textCol, maxDocFreq)
+      .select(col("id_a"), col("id_b"),
+        postingsJaccardBp(col("inter"), col("n_a"), col("n_b")).as("jac_bp"))
       .filter(col("jac_bp") >= thresholdBp)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -552,9 +503,8 @@ object DedupOps {
     * symmetric Jaccard alongside so the caller can see exactly which pairs
     * only this operator finds (`jac_bp < threshold ≤ greatest(cont)`).
     *
-    * Same inverted-index core as [[jaccardPairs]] ([[shinglePairCounts]]):
-    * shuffle keyed on shingles, postings-array pairing, stop-shingle cutoff
-    * — never all-pairs, scales identically.
+    * Keys by shingle and pairs through [[shinglePairCounts]], as
+    * [[jaccardPairs]] does.
     */
   def containmentPairs(
       corpus: DataFrame,
@@ -562,94 +512,53 @@ object DedupOps {
       textCol: String = "text",
       thresholdBp: Int = 8000,
       maxDocFreq: Int = 0): DataFrame =
-    shinglePairCounts(corpus, idCol, textCol, maxDocFreq, hashPostingsKey = false)
+    shinglePairCounts(corpus, idCol, textCol, maxDocFreq)
       .select(
         col("id_a"), col("id_b"),
-        TextOps.roundBp(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double")).as("jac_bp"),
+        postingsJaccardBp(col("inter"), col("n_a"), col("n_b")).as("jac_bp"),
         TextOps.roundBp(col("inter").cast("double") / col("n_a").cast("double")).as("cont_a_bp"),
         TextOps.roundBp(col("inter").cast("double") / col("n_b").cast("double")).as("cont_b_bp"))
       .filter(greatest(col("cont_a_bp"), col("cont_b_bp")) >= thresholdBp)
       .orderBy(col("id_a"), col("id_b"))
 
-  /** Shared inverted-index pair-count core of [[jaccardPairs]] /
-    * [[containmentPairs]]: (id_a < id_b, n_a, n_b, inter) for every pair of
-    * docs sharing ≥ 1 surviving shingle, where n is each doc's distinct
-    * 3-shingle count and inter the distinct shared-shingle count.
+  /** The shingle postings rows (idCol, n, sh) of [[jaccardPairs]],
+    * [[containmentPairs]] and [[jaccardCapAudit]]: one row per (doc,
+    * distinct shingle), n the doc's [[shingleSet]] size so the union needs
+    * no second lookup. Postings are keyed by the raw shingle string:
+    * hashing it measured a loss at sf0.1 (md5 hash60, 4.5 s → 5.8 s) and a
+    * tie one decade up (xxhash64; HASH_trade.txt, "jaccardPairs
+    * postings-key trade"), and DuckDB cannot mirror xxhash64.
+    */
+  private def shinglePostings(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
+    corpus.select(col(idCol), shingleSet(col(textCol)).as("shs"))
+      // no size(shs) > 0 pre-filter: explode already drops empty arrays, and
+      // a pushed-down filter would re-evaluate the whole tokenize+shingle
+      // tree once more per row at the scan
+      .select(col(idCol), size(col("shs")).as("n"), explode(col("shs")).as("sh"))
+
+  /** The pair-count core of [[jaccardPairs]] / [[containmentPairs]]: keys
+    * by shingle ([[shinglePostings]]), counts each pair's shared shingles
+    * as `inter`, pairs through [[bucketPairs]]. Postings over `maxDocFreq`
+    * docs (boilerplate, O(d²) pairs each) are dropped — an undercount only
+    * for pairs glued by boilerplate. Output: (id_a < id_b, n_a, n_b, inter).
     */
   private def shinglePairCounts(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDocFreq: Int,
-      hashPostingsKey: Boolean): DataFrame = {
-    val s = corpus.select(
-      col(idCol),
-      array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3)).as("shs"))
-    // no size(shs) > 0 pre-filter: explode already drops empty arrays, and
-    // a pushed-down filter would re-evaluate the whole tokenize+shingle
-    // tree once more per row at the scan
-    //
-    // postings key: raw shingle STRING by default. Hashing it narrows the
-    // exchange but costs a hash per posting; measured twice:
-    //  - sf0.1 (50 K docs): md5-based hash60 LOST (4.5 s → 5.8 s) — the
-    //    3-word keys are short enough that hashing, not shuffle, is the
-    //    bottleneck;
-    //  - 10× scale (50 K docs, interleaved min-of-two): TIE — 4.81 s
-    //    string vs 4.75 s xxhash64 (HASH_trade.txt, "jaccardPairs
-    //    postings-key trade"). Shuffle does not dominate yet even one decade
-    //    up; the crossover is further out than the verdict guessed.
-    // `hashPostingsKey` switches to the codegen'd xxhash64 (no md5 cost).
-    // Results are identical up to 64-bit hash collisions merging two
-    // shingles' postings (≈ n²/2⁶⁵ — negligible, but the declared
-    // oracle-compared query keeps the exact string key; DuckDB cannot
-    // mirror xxhash64).
-    val inv0 = s.select(col(idCol), size(col("shs")).as("n"), explode(col("shs")).as("sh"))
-    val inv = if (hashPostingsKey) inv0.withColumn("sh", xxhash64(col("sh"))) else inv0
-    // Postings-list collect + in-array pairing, NOT an inverted self-join:
-    // the self-join is a diamond that computes the tokenize+shingle
-    // pipeline twice with no exchange reuse. Each posting carries (id, n)
-    // so the union size needs no second lookup.
-    val postings = inv
-      .groupBy(col("sh"))
-      .agg(sort_array(collect_list(struct(col(idCol).as("id"), col("n")))).as("ds"))
-    // Stop-shingle cutoff: a shingle present in d documents contributes
-    // O(d^2) pairs, so boilerplate shingles dominate cost at scale.
-    // Dropping postings longer than maxDocFreq bounds the per-bucket
-    // fan-out; it UNDERcounts intersections for the affected pairs, which
-    // only lowers recall for pairs glued together by boilerplate — the
-    // standard trade. 0 = disabled (exact); the declared query enables it
-    // at DefaultMaxBucket, mirrored in its DuckDB oracle.
-    val kept = postings.filter(capBucket(maxDocFreq))
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x("id").as("id_a"), y("id").as("id_b"),
-          x("n").as("n_a"), y("n").as("n_b")))))
-    kept
-      .select(explode(pairs).as("p"))
+      corpus: DataFrame, idCol: String, textCol: String, maxDocFreq: Int): DataFrame =
+    bucketPairs(shinglePostings(corpus, idCol, textCol), "sh",
+      struct(col(idCol).as("id"), col("n")), maxDocFreq) { (x, y) =>
+      struct(x("id").as("id_a"), y("id").as("id_b"), x("n").as("n_a"), y("n").as("n_b"))
+    }
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         col("p.n_a").as("n_a"), col("p.n_b").as("n_b"))
       .agg(count(lit(1)).as("inter"))
-  }
 
-  /** Substring-level duplicate-SPAN detection — the "copied paragraph"
-    * complement to whole-document near-dup: two documents sharing
-    * `minShared`+ winnowing fingerprints ([[TextOps.winnow]], MOSS-style
-    * window minima over shingle hashes) contain matching token runs even
-    * when the documents as wholes are dissimilar (Jaccard below any
-    * threshold). This is the contamination shape benchmark-decontamination
-    * and license-compliance scans hunt: a verbatim span inside otherwise
-    * fresh text.
-    *
-    * Same scale discipline as [[jaccardPairs]]: fingerprint postings are
-    * collected per fp and paired IN-ARRAY (no inverted self-join diamond),
-    * and postings longer than `maxDocFreq` are dropped — a fingerprint
-    * shared by half the corpus is boilerplate, and the cutoff bounds
-    * per-row fan-out at maxDocFreq²/2 regardless of corpus size. The
-    * winnowing selection itself keeps ~2/(w+1) of shingle hashes, so the
-    * exchange carries a fraction of the corpus's shingle volume.
-    *
-    * Output: (id_a, id_b, n_shared), id_a < id_b, n_shared >= minShared.
+  /** Substring-level duplicate-SPAN pairs — the "copied paragraph"
+    * complement to whole-document near-dup: keys by winnowing fingerprint
+    * ([[TextOps.winnow]], MOSS-style window minima over shingle hashes,
+    * ~2/(w+1) of them), scores each pair by its shared-fingerprint count
+    * (kept at ≥ `minShared`), pairs through [[bucketPairs]] with postings
+    * over `maxDocFreq` docs dropped as boilerplate. Output: (id_a, id_b,
+    * n_shared), id_a < id_b.
     */
   def dupSpanPairs(
       corpus: DataFrame,
@@ -657,61 +566,42 @@ object DedupOps {
       maxDocFreq: Int = DefaultMaxBucket,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val fps = TextOps.winnow(corpus, idCol = idCol, textCol = textCol)
-    val postings = fps
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col(idCol))).as("ds"))
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x.as("id_a"), y.as("id_b")))))
-    postings
-      .filter(capBucket(maxDocFreq))
-      .select(explode(pairs).as("p"))
+    bucketPairs(TextOps.winnow(corpus, idCol = idCol, textCol = textCol), "fp",
+      col(idCol), maxDocFreq)((x, y) => struct(x.as("id_a"), y.as("id_b")))
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .orderBy(col("id_a"), col("id_b"))
   }
 
+  /** The gram postings rows (idCol, pos, gh) of [[exactSubstringSpans]]
+    * and [[substringCapAudit]]: one row per `gramLen`-token gram
+    * occurrence, 1-based token position, [[StableHash.hash60]] of the gram.
+    */
+  private def gramPostings(
+      corpus: DataFrame, gramLen: Int, idCol: String, textCol: String): DataFrame =
+    corpus
+      .select(col(idCol),
+        posexplode(TextOps.shingles(TextOps.tokens(col(textCol)), gramLen)).as(Seq("p0", "g")))
+      // pos cast long: the oracle's range() positions are BIGINT and the
+      // driver compare wants identical schemas
+      .select(col(idCol), (col("p0") + 1).cast("long").as("pos"), StableHash.hash60(col("g")).as("gh"))
+
   /** EXACT-substring dedup — maximal verbatim repeated token spans of
-    * ≥ `gramLen` tokens across documents, with exact boundaries. The
-    * precision complement to [[dupSpanPairs]]: winnowing SAMPLES shingle
-    * fingerprints, so it reports "these docs share ≥ n fingerprints"
-    * (probabilistic, no boundaries) and misses entirely when every
-    * fingerprint of the shared run is boilerplate-capped — a 3-token
-    * shingle is common corpus-wide far more easily than a `gramLen`-token
-    * exact gram (see DedupSubstringSpec's planted-splice fixture). This
-    * operator reports "tokens a..a+L of A == tokens b..b+L of B, L
-    * maximal" — the span you can actually CUT.
-    *
-    * Plan (the reference's sorted-run merge, `NodeHandler.java:204-290`,
-    * applied to gram runs): every `gramLen`-token gram is hashed once
-    * ([[StableHash.hash60]] over the joined tokens); postings are grouped
-    * per gram hash and paired IN-ARRAY (the [[jaccardPairs]] shape — no
-    * inverted self-join diamond); a shared span of S ≥ gramLen tokens
-    * shows up as S − gramLen + 1 consecutive gram matches along one
-    * (id_a, id_b, pos_a − pos_b) diagonal, coalesced to a single maximal
-    * span by gaps-and-islands (row_number per diagonal, group on
-    * pos_a − rn). The diagonal window partitions by (pair, offset) — the
-    * shuffle is keyed on pairs, never a global sort.
-    *
-    * Scale bounds: the postings exchange carries (gram_hash, id, pos)
-    * rows — one per token, 16-ish bytes, never document text. Per-gram
-    * fan-out is hard-capped at `maxOcc` OCCURRENCES ([[DefaultMaxBucket]]
-    * applied to occurrence lists — tighter than a doc-count cap, since one
-    * doc repeating a gram k times inflates pairing k-fold): a gram
-    * repeated corpus-wide (boilerplate headers, license blocks) is dropped
-    * before pairing, bounding any posting's pair fan-out at maxOcc²/2
-    * regardless of corpus size, and the cap is mirrored in the DuckDB
-    * oracle so the contract stays cross-engine exact whether or not it
-    * engages. Dropping a hot gram can split a span that crosses it into
-    * two reported spans (or drop a span made ENTIRELY of boilerplate
-    * grams) — the same recall trade every capped postings op here makes.
-    * Gram equality is by 60-bit hash: a collision would take ~2^30 distinct
-    * grams per posting to matter and the oracle hashes identically.
-    *
-    * Output: (id_a, id_b, pos_a, pos_b, span_len), id_a < id_b, positions
-    * 1-based token indexes, one row per maximal span, span_len ≥ gramLen.
+    * ≥ `gramLen` tokens across documents, with exact boundaries: the span
+    * you can CUT, where [[dupSpanPairs]] only samples fingerprints (and
+    * misses when every fingerprint of the run is boilerplate-capped; see
+    * DedupSubstringSpec's planted-splice fixture). Keys by gram hash
+    * ([[gramPostings]]; a 60-bit hash collision would take ~2^30 distinct
+    * grams per posting to matter, and the oracle hashes identically),
+    * pairs cross-document occurrences through [[bucketPairs]] with grams
+    * over `maxOcc` OCCURRENCES dropped (one doc repeating a gram k times
+    * inflates pairing k-fold; dropping a hot gram can split a span that
+    * crosses it), and scores each maximal span by gaps-and-islands along
+    * its (id_a, id_b, pos_a − pos_b) diagonal (the reference's sorted-run
+    * merge, `NodeHandler.java:204-290`) — the window partitions by (pair,
+    * offset), never a global sort. Output: (id_a, id_b, pos_a, pos_b,
+    * span_len), id_a < id_b, 1-based positions, span_len ≥ gramLen.
     */
   def exactSubstringSpans(
       corpus: DataFrame,
@@ -719,25 +609,14 @@ object DedupOps {
       maxOcc: Int = DefaultMaxBucket,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val grams = corpus
-      .select(col(idCol),
-        posexplode(TextOps.shingles(TextOps.tokens(col(textCol)), gramLen)).as(Seq("p0", "g")))
-      // pos cast long: the oracle's range() positions are BIGINT and the
-      // driver compare wants identical schemas
-      .select(col(idCol), (col("p0") + 1).cast("long").as("pos"), StableHash.hash60(col("g")).as("gh"))
-    val postings = grams
-      .groupBy(col("gh"))
-      .agg(sort_array(collect_list(struct(col(idCol).as("id"), col("pos").as("pos")))).as("ds"))
-      .filter(capBucket(maxOcc))
-    // in-array pairing, cross-document only (sort_array ordered by id then
-    // pos, so x before y with x.id != y.id implies x.id < y.id)
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      filter(
-        transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-          struct(x("id").as("id_a"), x("pos").as("pos_a"),
-            y("id").as("id_b"), y("pos").as("pos_b"))),
-        p => p("id_a") =!= p("id_b"))))
-    val matches = postings.select(explode(pairs).as("p")).select(col("p.*"))
+    // cross-document pairs only (sort_array orders by id then pos, so x
+    // before y with x.id != y.id implies x.id < y.id)
+    val matches = bucketPairs(gramPostings(corpus, gramLen, idCol, textCol), "gh",
+      struct(col(idCol).as("id"), col("pos").as("pos")), maxOcc) { (x, y) =>
+      struct(x("id").as("id_a"), x("pos").as("pos_a"), y("id").as("id_b"), y("pos").as("pos_b"))
+    }
+      .select(col("p.*"))
+      .filter(col("id_a") =!= col("id_b"))
     // diag materialized BEFORE the window so the islands groupBy reuses the
     // window's (id_a, id_b, diag) hash partitioning instead of re-shuffling
     // on a re-derived pos_a - pos_b expression
@@ -1004,19 +883,6 @@ object DedupOps {
       .orderBy(col(idCol))
   }
 
-  /** The production near-dup pipeline: MinHash-LSH candidate generation
-    * followed by exact-Jaccard verification of ONLY the candidates. At
-    * scale this is the shape that survives: candidate count is governed by
-    * the banding curve (not corpus size squared), and the verify join
-    * touches 2 rows per candidate pair. Output: (id_a, id_b, jac_bp) for
-    * verified pairs ≥ `thresholdBp`.
-    *
-    * ONE aggregation produces both the minhash signature and the shingle
-    * set per document, so the tokenize→shingle→hash pipeline runs in a
-    * single map stage; the band path and both verify joins then consume
-    * the SAME shuffle (Spark's ReuseExchange collapses the identical
-    * exchanges — asserted in PlanSpec).
-    */
   /** Benchmark decontamination — the overlap check every training pipeline
     * runs before shipping a corpus: which training documents share any
     * word k-gram with the held-out eval/benchmark set? A contaminated doc
@@ -1041,7 +907,7 @@ object DedupOps {
       textCol: String = "text"): DataFrame = {
     def grams(df: DataFrame) = df
       .select(col(idCol),
-        explode(array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), k))).as("gram"))
+        explode(shingleSet(col(textCol), k)).as("gram"))
       .select(col(idCol), StableHash.hash60(col("gram")).as("g"))
     val benchGrams = grams(bench).select(col("g")).distinct()
     grams(train)
@@ -1051,6 +917,36 @@ object DedupOps {
       .orderBy(col(idCol))
   }
 
+  /** The verified pipeline's doc relation ([[minhashSigs]], shingle list
+    * included) and its distinct band candidates (id_a, id_b) from
+    * [[bandPairs]] — shared by [[verifiedNearDups]] and
+    * [[minhashErrorAudit]], so the audit measures the operator's own
+    * candidates.
+    */
+  private def minhashCandidates(
+      corpus: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, maxBucket: Int): (DataFrame, DataFrame) = {
+    // r20 NOTE (measured, then deliberately left lazy): materializing this
+    // relation (Checkpoints.cut) cut the corpus scans 6 → 2 but was a NET
+    // LOSS — ReuseExchange already shares the verify-join sides' exchange,
+    // the buckets branch reads a column-PRUNED aggregate (no collect_list),
+    // and the checkpoint write of the shingle arrays costs more than the
+    // one pruned recompute it saves (true A/B at sf0.1: q_dedup_verified
+    // +5%, q_recall_audit_minhash +43%). Details: OPTIMIZATION_r20.md.
+    val docRel = minhashSigs(corpus, idCol, textCol, numHashes)
+    val cands = bandPairs(docRel, idCol, numHashes, bands, maxBucket)
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+      .distinct()
+    (docRel, cands)
+  }
+
+  /** The production near-dup pipeline: keys by MinHash band
+    * ([[minhashCandidates]]), scores each candidate by the exact Jaccard of
+    * the two shingle lists joined back ([[setJaccardBp]]), keeps jac ≥
+    * `thresholdBp`. One aggregation yields signature and shingle list, so
+    * the band path and both verify joins read the SAME shuffle
+    * (ReuseExchange — asserted in PlanSpec). Output: (id_a, id_b, jac_bp).
+    */
   def verifiedNearDups(
       corpus: DataFrame,
       idCol: String = "doc_id",
@@ -1059,46 +955,11 @@ object DedupOps {
       bands: Int = 4,
       thresholdBp: Int = 8000,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val exploded = corpus.select(
-      col(idCol),
-      explode(array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3))).as("sh"))
-      // one md5 per shingle; the signature hashes derive affinely from it
-      .select(col(idCol), col("sh"), StableHash.hash60(col("sh")).as("h"))
-    val aggs = (0 until numHashes).map(i => min(StableHash.familyOf(col("h"), i)).as(s"s$i")) :+
-      collect_list(col("sh")).as("shs")
-    // r20 NOTE (measured, then deliberately left lazy): materializing this
-    // relation (Checkpoints.cut) cut the corpus scans 6 → 2 but was a NET
-    // LOSS — ReuseExchange already shares the verify-join sides' exchange,
-    // the buckets branch reads a column-PRUNED aggregate (no collect_list),
-    // and the checkpoint write of the shingle arrays costs more than the
-    // one pruned recompute it saves (true A/B at sf0.1: q_dedup_verified
-    // +5%, q_recall_audit_minhash +43%). Details: OPTIMIZATION_r20.md.
-    val docRel = exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    val bandKeys = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(j => col(s"s${b * r + j}")): _*)
-    }
-    val buckets = docRel
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
-      .groupBy(col("bkey"))
-      .agg(sort_array(collect_list(col(idCol))).as("ds"))
-      .filter(capBucket(maxBucket))
-    val pairExprs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x.as("a"), y.as("b")))))
-    val cands = buckets
-      .select(explode(pairExprs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-      .distinct()
+    val (docRel, cands) = minhashCandidates(corpus, idCol, textCol, numHashes, bands, maxBucket)
     cands
       .join(docRel.select(col(idCol).as("id_a"), col("shs").as("shs_a")), "id_a")
       .join(docRel.select(col(idCol).as("id_b"), col("shs").as("shs_b")), "id_b")
-      .select(
-        col("id_a"), col("id_b"),
-        TextOps.roundBp(
-          size(array_intersect(col("shs_a"), col("shs_b"))).cast("double") /
-            size(array_union(col("shs_a"), col("shs_b"))).cast("double")).as("jac_bp"))
+      .select(col("id_a"), col("id_b"), setJaccardBp(col("shs_a"), col("shs_b")).as("jac_bp"))
       .filter(col("jac_bp") >= thresholdBp)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -1174,9 +1035,7 @@ object DedupOps {
       corpus: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
     val isAnchor = anchorPred(corpus, idCol)
-    val s = corpus.select(
-      col(idCol),
-      array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3)).as("shs"))
+    val s = corpus.select(col(idCol), shingleSet(col(textCol)).as("shs"))
     val anch = s.filter(isAnchor)
       .select(col(idCol).as("a_id"), col("shs").as("a_shs"))
     val ainv = anch.select(col("a_id"), size(col("a_shs")).as("n_a"),
@@ -1188,8 +1047,7 @@ object DedupOps {
       .groupBy(col("a_id"), col("n_a"), col(idCol), col("n_d"))
       .agg(count(lit(1)).as("inter"))
       .select(col("a_id"), col(idCol),
-        TextOps.roundBp(col("inter").cast("double") /
-          (col("n_a") + col("n_d") - col("inter")).cast("double")).as("jac_bp"))
+        postingsJaccardBp(col("inter"), col("n_a"), col("n_d")).as("jac_bp"))
     (anch, scores)
   }
 
@@ -1280,22 +1138,12 @@ object DedupOps {
           " ELSE 10000 END").as("precision_bp"))
   }
 
-  /** Sketch-error audit of the MinHash estimator — for every LSH candidate
-    * pair, the signature-agreement estimate (matching positions / signature
-    * length, the unbiased MinHash Jaccard estimator) next to the exact
-    * shingle Jaccard, with the absolute error: the measurement that decides
-    * whether `numHashes` is big enough for a corpus BEFORE a full dedup run
-    * trusts the sketch (the dedup-side analog of q_sim_recall's ANN recall
-    * sweep). With 8 hashes the estimator is quantized to eighths, so honest
-    * errors here are large — that visibility is the point.
-    *
-    * One corpus pass builds signatures and shingle sets together (the
-    * [[verifiedNearDups]] doc relation); candidates come from the same
-    * capped band buckets; both the estimate and the exact value are
-    * per-pair array ops after two hash joins on the pair ids. Integer
-    * arithmetic end to end: est_bp = matches*10000 div numHashes.
-    *
-    * Output: (id_a, id_b, est_bp, exact_bp, abs_err_bp), id_a < id_b.
+  /** Sketch-error audit of the MinHash estimator: keys by
+    * [[verifiedNearDups]]' own candidates and doc relation
+    * ([[minhashCandidates]]), scores each pair by signature agreement
+    * (est_bp = matches·10⁴ div numHashes, quantized to eighths at 8 hashes)
+    * beside the exact Jaccard ([[setJaccardBp]]). Output: (id_a, id_b,
+    * est_bp, exact_bp, abs_err_bp), id_a < id_b.
     */
   def minhashErrorAudit(
       corpus: DataFrame,
@@ -1304,43 +1152,16 @@ object DedupOps {
       numHashes: Int = 8,
       bands: Int = 4,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val exploded = corpus.select(
-      col(idCol),
-      explode(array_distinct(TextOps.shingles(TextOps.tokens(col(textCol)), 3))).as("sh"))
-      .select(col(idCol), col("sh"), StableHash.hash60(col("sh")).as("h"))
-    val aggs = (0 until numHashes).map(i => min(StableHash.familyOf(col("h"), i)).as(s"s$i")) :+
-      collect_list(col("sh")).as("shs")
-    val docRel = exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .withColumn("sig", array((0 until numHashes).map(i => col(s"s$i")): _*))
-    val bandKeys = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(j => col(s"s${b * r + j}")): _*)
-    }
-    val buckets = docRel
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bkey"))
-      .groupBy(col("bkey"))
-      .agg(sort_array(collect_list(col(idCol))).as("ds"))
-      .filter(capBucket(maxBucket))
-    val pairExprs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x.as("a"), y.as("b")))))
-    val cands = buckets
-      .select(explode(pairExprs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-      .distinct()
+    val (docRel, cands) = minhashCandidates(corpus, idCol, textCol, numHashes, bands, maxBucket)
+    val sig = array((0 until numHashes).map(i => col(s"s$i")): _*)
     cands
-      .join(docRel.select(col(idCol).as("id_a"),
-        col("sig").as("sig_a"), col("shs").as("shs_a")), "id_a")
-      .join(docRel.select(col(idCol).as("id_b"),
-        col("sig").as("sig_b"), col("shs").as("shs_b")), "id_b")
+      .join(docRel.select(col(idCol).as("id_a"), sig.as("sig_a"), col("shs").as("shs_a")), "id_a")
+      .join(docRel.select(col(idCol).as("id_b"), sig.as("sig_b"), col("shs").as("shs_b")), "id_b")
       .select(
         col("id_a"), col("id_b"),
         expr(s"CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), " +
           s"z -> z)) * 10000 DIV $numHashes AS BIGINT)").as("est_bp"),
-        TextOps.roundBp(
-          size(array_intersect(col("shs_a"), col("shs_b"))).cast("double") /
-            size(array_union(col("shs_a"), col("shs_b"))).cast("double")).as("exact_bp"))
+        setJaccardBp(col("shs_a"), col("shs_b")).as("exact_bp"))
       .withColumn("abs_err_bp", abs(col("est_bp") - col("exact_bp")))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -1447,22 +1268,6 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Cross-SOURCE shingle contamination matrix — the corpus-curation view
-    * that decides "these two crawls/dumps substantially overlap; drop or
-    * down-weight one": exact k-shingle Jaccard between every source pair,
-    * in basis points. The doc-level analog is [[jaccardPairs]]; this is the
-    * rollup a mixture designer reads before setting [[SampleOps]] weights.
-    *
-    * Scale shape: the distinct (source, shingle) projection is one
-    * hash-shuffle; postings collect the DISTINCT SOURCES per shingle — an
-    * array bounded by the source count (tens to hundreds), never by corpus
-    * size — and pair in-array (the [[GraphOps.coOrderEdges]] shape, no
-    * self-join diamond). Intersections come from counting pair hits;
-    * union sizes by inclusion-exclusion from the broadcast per-source
-    * totals. Nothing in the plan is quadratic in docs or shingles.
-    *
-    * Output: (src_a, src_b, n_a, n_b, n_common, jaccard_bp), src_a < src_b.
-    */
   /** Blocked edit-distance entity resolution — the record-linkage / fuzzy-
     * join workload (Köpcke & Rahm's blocking+matching decomposition): find,
     * for every record, its best approximate match in a LATER source,
@@ -1520,6 +1325,15 @@ object DedupOps {
       .orderBy(col("a_doc_id"))
   }
 
+  /** Cross-SOURCE shingle contamination matrix — "these two crawls
+    * substantially overlap; drop or down-weight one": keys by shingle (the
+    * distinct (source, shingle) rows; postings hold distinct sources, so
+    * they are bounded by the source count, never corpus size), scores each
+    * source pair by exact k-shingle Jaccard in bp (pair-hit intersections,
+    * union by inclusion–exclusion over the broadcast per-source totals),
+    * pairs with [[arrayPairs]]. Output: (src_a, src_b, n_a, n_b, n_common,
+    * jaccard_bp), src_a < src_b.
+    */
   def sourceOverlap(docs: DataFrame, k: Int = 3, textCol: String = "text",
       srcCol: String = "source"): DataFrame = {
     val sh = docs
@@ -1528,9 +1342,7 @@ object DedupOps {
       .distinct()
     val perSrc = sh.groupBy(col("src")).agg(count(lit(1)).as("n_sh"))
     val postings = sh.groupBy(col("sh")).agg(sort_array(collect_set(col("src"))).as("srcs"))
-    val pairs = flatten(transform(col("srcs"), (x, i) =>
-      transform(slice(col("srcs"), i + lit(2), size(col("srcs"))), y =>
-        struct(x.as("a"), y.as("b")))))
+    val pairs = arrayPairs(col("srcs"))((x, y) => struct(x.as("a"), y.as("b")))
     postings
       .select(explode(pairs).as("p"))
       .groupBy(col("p.a").as("src_a"), col("p.b").as("src_b"))

@@ -132,9 +132,7 @@ object GraphOps {
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("p"))
       .distinct()
       .groupBy(col("okey")).agg(sort_array(collect_set(col("p"))).as("ps"))
-    val pairs = flatten(transform(col("ps"), (x, i) =>
-      transform(slice(col("ps"), i + lit(2), size(col("ps"))), y =>
-        struct(x.as("a"), y.as("b")))))
+    val pairs = DedupOps.arrayPairs(col("ps"))((x, y) => struct(x.as("a"), y.as("b")))
     grouped.select(explode(pairs).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct()

@@ -621,25 +621,18 @@ object MultimodalOps {
     require(maxDist < grid, "recall guarantee needs maxDist < number of bands")
     // exact-dedup-first: one representative per distinct hash vector
     val (reps, mem) = SimOps.repCollapse(sk, "media_id", "bands")
-    val buckets = reps
+    val rows = reps
       .select(col("media_id"), col("bands"), posexplode(col("bands")))
       .select(col("media_id"), col("bands"),
         concat_ws(":", col("pos"), col("col")).as("bkey"))
-      .groupBy(col("bkey"))
-      .agg(sort_array(collect_list(
-        struct(col("media_id").as("id"), col("bands").as("bs")))).as("ds"))
-      .filter(if (maxBucket <= 0) size(col("ds")) > 1
-        else size(col("ds")) > 1 && size(col("ds")) <= maxBucket)
     val ham = (xb: Column, yb: Column) =>
       aggregate(
         zip_with(xb, yb, (p, q) => bit_count(p.bitwiseXOR(q)).cast("long")),
         lit(0L), (acc, v) => acc + v)
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))), y =>
-        struct(x("id").as("id_a"), y("id").as("id_b"),
-          ham(x("bs"), y("bs")).as("d")))))
-    val repPairs = buckets
-      .select(explode(pairs).as("p"))
+    val repPairs = DedupOps.bucketPairs(rows, "bkey",
+      struct(col("media_id").as("id"), col("bands").as("bs")), maxBucket) { (x, y) =>
+      struct(x("id").as("id_a"), y("id").as("id_b"), ham(x("bs"), y("bs")).as("d"))
+    }
       .groupBy(col("p.id_a").as("ra"), col("p.id_b").as("rb"))
       .agg(min(col("p.d")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxDist)

@@ -1585,7 +1585,8 @@ object SimOps {
     * `cap_semantics` = `participation` marks the different arithmetic in
     * the row itself (`entries_dropped` counts entries that only LOSE
     * PAIRING PARTNERS beyond the cap, not wholesale-dropped entries as in
-    * the `wholesale_drop` rows of `DedupOps.capAudit`).
+    * the `wholesale_drop` rows of `DedupOps.capAudit`). A cap ≤ 0 means no
+    * cap (`DedupOps.effectiveCap`).
     */
   def nearDupCapAudit(
       emb: DataFrame,
@@ -1597,12 +1598,13 @@ object SimOps {
     val sizes = normalized(reps, idCol, embCol)
       .withColumn("bucket", signBucket(col("e"), bits))
       .groupBy(col("bucket")).agg(count(lit(1)).as("sz"))
-    val kept = s"least(sz, $maxBucket) * (least(sz, $maxBucket) - 1) div 2"
+    val cap = DedupOps.effectiveCap(maxBucket)
+    val kept = s"least(sz, $cap) * (least(sz, $cap) - 1) div 2"
     sizes.agg(
       count(lit(1)).as("n_buckets"),
-      coalesce(sum(when(col("sz") > maxBucket, 1L).otherwise(0L)), lit(0L))
+      coalesce(sum(when(col("sz") > cap, 1L).otherwise(0L)), lit(0L))
         .as("n_dropped"),
-      coalesce(sum(when(col("sz") > maxBucket, col("sz") - maxBucket).otherwise(0L)),
+      coalesce(sum(when(col("sz") > cap, col("sz") - cap).otherwise(0L)),
         lit(0L)).as("entries_dropped"),
       coalesce(sum(expr(kept)), lit(0L)).as("pairs_kept"),
       coalesce(sum(expr(s"sz * (sz - 1) div 2 - ($kept)")), lit(0L)).as("pairs_forgone"),

@@ -326,9 +326,7 @@ object SketchOps {
     // the in-array pairing avoids a non-equi self-join)
     val srcArr = sk.select(col("src")).distinct()
       .agg(sort_array(collect_list(col("src"))).as("srcs"))
-    val pairExpr = flatten(transform(col("srcs"), (x, i) =>
-      transform(slice(col("srcs"), i + lit(2), size(col("srcs"))), y =>
-        struct(x.as("a"), y.as("b")))))
+    val pairExpr = DedupOps.arrayPairs(col("srcs"))((x, y) => struct(x.as("a"), y.as("b")))
     val pairs = srcArr.select(explode(pairExpr).as("p"))
       .select(col("p.a").as("src_a"), col("p.b").as("src_b"))
     // merged per-pair hash sets, flagged by membership side
@@ -355,9 +353,7 @@ object SketchOps {
     // shape); LEFT join keeps pairs whose sources share no token at all
     val postings = tok2.groupBy(col("tok"))
       .agg(sort_array(collect_set(col("src"))).as("srcs"))
-    val pExpr = flatten(transform(col("srcs"), (x, i) =>
-      transform(slice(col("srcs"), i + lit(2), size(col("srcs"))), y =>
-        struct(x.as("a"), y.as("b")))))
+    val pExpr = DedupOps.arrayPairs(col("srcs"))((x, y) => struct(x.as("a"), y.as("b")))
     val cm = postings.select(explode(pExpr).as("p"))
       .groupBy(col("p.a").as("src_a"), col("p.b").as("src_b"))
       .agg(count(lit(1)).as("exact_inter"))

@@ -325,9 +325,7 @@ object StatsOps {
     val nOrders = b.select(col("okey")).distinct()
       .agg(count(lit(1)).as("n_orders"))
     val itemN = b.groupBy(col("p")).agg(count(lit(1)).as("n_p"))
-    val pairExprs = flatten(transform(col("ps"), (x, i) =>
-      transform(slice(col("ps"), i + lit(2), size(col("ps"))), y =>
-        struct(x.as("a"), y.as("b")))))
+    val pairExprs = DedupOps.arrayPairs(col("ps"))((x, y) => struct(x.as("a"), y.as("b")))
     val pc = baskets
       .select(explode(pairExprs).as("e"))
       .groupBy(col("e.a").as("a"), col("e.b").as("b"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.StableHash
-import graft.operators.TextOps
+import graft.operators.{DedupOps, TextOps}
 
 /** One event on the stream (mirrors the `events` table's queryable core). */
 case class StreamEvent(ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
@@ -1090,9 +1090,7 @@ object StreamingOps {
     require(numHashes % bands == 0, "bands must divide numHashes")
     import events.sparkSession.implicits._
     val r = numHashes / bands
-    val hs = transform(
-      array_distinct(TextOps.shingles(TextOps.tokens(col("text")), 3)),
-      sh => StableHash.hash60(sh))
+    val hs = transform(DedupOps.shingleSet(col("text")), sh => StableHash.hash60(sh))
     val sigCol = array((0 until numHashes).map(i =>
       array_min(transform(col("hs"), h => StableHash.familyOf(h, i)))): _*)
     events.toDF()

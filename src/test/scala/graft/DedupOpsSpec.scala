@@ -201,9 +201,10 @@ class DedupOpsSpec extends SparkSpec {
     assert(unbounded.count() == 28L) // C(8,2) pairs, all 4 bands shared
     val capped = DedupOps.minhashBandPairs(corpus, maxBucket = 5)
     assert(capped.count() == 0L) // the hot bucket is skipped, not exploded
-    val hist = DedupOps.bandBucketHistogram(corpus, maxBucket = 5)
-      .as[(Long, Long, Boolean)].collect()
-    assert(hist.exists(h => h._1 == 8L && h._3), hist.mkString(","))
+    // the cap audit flags the four size-8 band buckets (one per band)
+    val audit = DedupOps.minhashCapAudit(corpus, maxBucket = 5).head()
+    assert((audit.getAs[Long]("hottest"), audit.getAs[Long]("n_dropped")) == ((8L, 4L)),
+      audit.toString)
     // the verified pipeline honors the same cap
     assert(DedupOps.verifiedNearDups(corpus, maxBucket = 5).count() == 0L)
     assert(DedupOps.verifiedNearDups(corpus, maxBucket = 0).count() == 28L)
@@ -214,6 +215,32 @@ class DedupOpsSpec extends SparkSpec {
     val got = DedupOps.minhashBandPairs(mixed, maxBucket = 5)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((200L, 201L, 4L)))
+  }
+
+  test("cap audits: a cap <= 0 means no cap, as in the capped operators") {
+    // the same 8-doc boilerplate corpus: 4 size-8 band buckets and 5
+    // size-8 shingle postings, none dropped when uncapped
+    val boiler = (1L to 8L).map(i => (i, "alpha beta gamma delta epsilon zeta eta"))
+    val corpus = docs(boiler :+ ((100L, "totally different words appear here instead")): _*)
+    def rollup(r: org.apache.spark.sql.Row) = Seq("n_dropped", "pairs_forgone", "pairs_kept")
+      .map(r.getAs[Long])
+    assert(rollup(DedupOps.minhashCapAudit(corpus, maxBucket = 0).head()) == Seq(0L, 0L, 112L))
+    assert(rollup(DedupOps.jaccardCapAudit(corpus, maxDocFreq = 0).head()) == Seq(0L, 0L, 140L))
+    val emb = graft.operators.SimOps.plantedVectors(sf("embeddings"))
+    val uncapped = graft.operators.SimOps.nearDupCapAudit(emb, maxBucket = 0).head()
+    assert(uncapped == graft.operators.SimOps.nearDupCapAudit(emb, maxBucket = Int.MaxValue).head())
+    assert(rollup(uncapped).take(2) == Seq(0L, 0L) && rollup(uncapped)(2) > 0L, uncapped.toString)
+  }
+
+  test("minhashErrorAudit audits exactly minhashBandPairs' candidates, capped or not") {
+    val corpus = DedupOps.plantedCorpus(sf("documents"))
+    for (cap <- Seq(0, 5)) {
+      val audited = DedupOps.minhashErrorAudit(corpus, maxBucket = cap)
+        .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
+      val paired = DedupOps.minhashBandPairs(corpus, maxBucket = cap)
+        .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
+      assert(audited.nonEmpty && audited == paired, s"cap $cap: ${audited.size} vs ${paired.size}")
+    }
   }
 
   test("dedupClusters: transitive chains collapse to the min id") {
