@@ -163,7 +163,29 @@ class PlanBudgetSpec extends SparkSpec {
     "q_decontaminate" -> Pin(2, 3, 0, 1),
     "q_kmv_intersect" -> Pin(1, 7, 4, 3),
     "q_triangles" -> Pin(0, 0, 0, 0),
-    "q_graph_degrees" -> Pin(2, 4, 1, 1))
+    "q_graph_degrees" -> Pin(2, 4, 1, 1),
+    // the text LM, quality and packing family and the other ranked top-k
+    // and prefix-sum users (TextOps' and SortOps' shared statistics
+    // helpers): every count below held over three runs at sf0.001, none
+    // fluttered.
+    "q_bigram_freqs" -> Pin(1, 3, 0, 0),
+    "q_bigram_surprisal" -> Pin(2, 4, 0, 1),
+    "q_kn_score" -> Pin(2, 6, 1, 2),
+    "q_quality_fusion" -> Pin(1, 1, 0, 4),
+    "q_lm_surprisal" -> Pin(2, 3, 1, 2),
+    "q_ccnet_buckets" -> Pin(2, 3, 1, 3),
+    "q_quality_gopher" -> Pin(2, 8, 2, 3),
+    "q_source_stats" -> Pin(3, 7, 1, 3),
+    "q_text_bm25" -> Pin(3, 4, 1, 3),
+    "q_bpe_pairs" -> Pin(1, 1, 0, 0),
+    "q_pack_sequences" -> Pin(2, 4, 0, 1),
+    "q_pack_curriculum" -> Pin(3, 6, 0, 2),
+    "q_sample_priority" -> Pin(1, 0, 0, 0),
+    "q_stats_mannwhitney" -> Pin(1, 1, 0, 0),
+    "q_tpch_q3" -> Pin(3, 1, 0, 2),
+    "q_tpch_q10" -> Pin(4, 1, 0, 3),
+    "q_tpch_q21" -> Pin(3, 2, 0, 2),
+    "q_tpch_q2" -> Pin(5, 2, 0, 4))
 
   for ((name, pin) <- pins) {
     test(s"plan budget: $name") {
