@@ -18,15 +18,12 @@ import org.apache.spark.sql.DataFrame
   * The opt-in RELIABLE mode switches every iterative cut in the engine to
   * `Dataset.checkpoint` — files under the Spark checkpoint dir, readable
   * by any executor, recomputable... not needed: re-READABLE after executor
-  * loss, which is the point. Enable by setting either
-  *
-  *  - the runtime conf `spark.graft.checkpoint.dir` on the session, or
-  *  - the `SPARK_GRAFT_CHECKPOINT_DIR` environment variable
-  *
-  * to a DFS path every executor can reach (`hdfs://…/scratch`, a shared
-  * mount). The first cut sets `sc.setCheckpointDir` to it if unset;
-  * an already-set checkpoint dir is respected (first writer wins — the
-  * knob never relocates files mid-job). Cost: one DFS write + read per
+  * loss, which is the point. Enable by setting the runtime conf
+  * `spark.graft.checkpoint.dir` on the session to a DFS path every
+  * executor can reach (`hdfs://…/scratch`, a shared mount). The first
+  * cut sets `sc.setCheckpointDir` to it if unset; an already-set
+  * checkpoint dir is respected (first writer wins — the knob never
+  * relocates files mid-job). Cost: one DFS write + read per
   * round instead of a local block write — the standard durability trade,
   * priced per round, which is why it is a switch and not the default.
   *
@@ -43,9 +40,7 @@ object Checkpoints {
 
   /** The configured reliable-checkpoint dir, if any. */
   private[graft] def reliableDir(df: DataFrame): Option[String] =
-    df.sparkSession.conf.getOption(ConfKey)
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-      .map(_.trim).filter(_.nonEmpty)
+    df.sparkSession.conf.getOption(ConfKey).map(_.trim).filter(_.nonEmpty)
 
   /** Cut lineage: `localCheckpoint` by default, reliable `checkpoint`
     * when the knob is set. Always eager — every call site materializes

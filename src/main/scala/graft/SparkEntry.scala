@@ -248,18 +248,13 @@ object SparkEntry {
         .select(col("l_orderkey"),
           floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * lit(100.0)
             + lit(0.5)).cast("long").as("rev_c"))
-      val top = li
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_date"), col("o_orderpriority"))
-        .agg(sum(col("rev_c")).as("revenue_c"))
-        .orderBy(col("revenue_c").desc, col("l_orderkey"))
-        .limit(10)
-      val w = Window.orderBy(col("revenue_c").desc, col("l_orderkey"))
-      top.withColumn("rank", row_number().over(w))
-        .select(col("rank"), col("l_orderkey"), col("o_date"),
-          col("o_orderpriority"), col("revenue_c"))
-        .orderBy(col("rank"))
+      SortOps.rankedTopK(
+        li.join(ord, col("l_orderkey") === col("o_orderkey"))
+          .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+          .groupBy(col("l_orderkey"), col("o_date"), col("o_orderpriority"))
+          .agg(sum(col("rev_c")).as("revenue_c")),
+        10, Seq(col("revenue_c").desc, col("l_orderkey")),
+        Seq(col("l_orderkey"), col("o_date"), col("o_orderpriority"), col("revenue_c")))
     }),
     // TPC-H Q1 shape — the scan-heavy pricing summary: ONE pass over the
     // fact table, map-side partial aggregation, shipdate filter pushed to
@@ -392,20 +387,16 @@ object SparkEntry {
       val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
         floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("acctbal_c"),
         col("c_nationkey"))
-      val top = li
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("acctbal_c"), col("n_name"))
-        .agg(sum(col("rev_c")).as("revenue_c"))
-        .orderBy(col("revenue_c").desc, col("c_custkey"))
-        .limit(20)
-      val w = Window.orderBy(col("revenue_c").desc, col("c_custkey"))
-      top.withColumn("rank", row_number().over(w))
-        .select(col("rank"), col("c_custkey"), col("c_name"), col("acctbal_c"),
-          col("n_name"), col("revenue_c"))
-        .orderBy(col("rank"))
+      SortOps.rankedTopK(
+        li.join(ord, col("l_orderkey") === col("o_orderkey"))
+          .join(cust, col("o_custkey") === col("c_custkey"))
+          .join(broadcast(t(s, dir, "nation")),
+            col("c_nationkey") === col("n_nationkey"))
+          .groupBy(col("c_custkey"), col("c_name"), col("acctbal_c"), col("n_name"))
+          .agg(sum(col("rev_c")).as("revenue_c")),
+        20, Seq(col("revenue_c").desc, col("c_custkey")),
+        Seq(col("c_custkey"), col("c_name"), col("acctbal_c"), col("n_name"),
+          col("revenue_c")))
     }),
     // TPC-H Q12 shape — conditional (CASE) aggregation after a fact-fact
     // join: per linestatus, how many of the year's lineitems belong to
@@ -575,17 +566,14 @@ object SparkEntry {
         .withColumn("n_late_supps",
           size(collect_set(when(col("late") === 1L, col("l_suppkey"))).over(w)))
         .filter(col("late") === 1L && col("n_supps") > 1 && col("n_late_supps") === 1)
-      val top = waiting
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("numwait"))
-        .join(broadcast(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-      val wr = Window.orderBy(col("numwait").desc, col("s_name"))
-      top.withColumn("rank", row_number().over(wr))
-        .select(col("rank"), col("s_name"), col("s_suppkey"), col("numwait"))
-        .orderBy(col("rank"))
+      SortOps.rankedTopK(
+        waiting
+          .groupBy(col("l_suppkey"))
+          .agg(count(lit(1)).as("numwait"))
+          .join(broadcast(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))),
+            col("l_suppkey") === col("s_suppkey")),
+        20, Seq(col("numwait").desc, col("s_name")),
+        Seq(col("s_name"), col("s_suppkey"), col("numwait")))
     }),
     // TPC-H Q7 shape — two-nation shipping volume: revenue between a
     // nation pair in both directions, by supplier nation x customer nation
@@ -691,13 +679,10 @@ object SparkEntry {
         .withColumn("min_cost_c",
           min(col("cost_c")).over(Window.partitionBy(col("p_partkey"))))
         .filter(col("cost_c") === col("min_cost_c"))
-        .orderBy(col("acctbal_c").desc, col("s_name"), col("p_partkey"))
-        .limit(100)
-      val w = Window.orderBy(col("acctbal_c").desc, col("s_name"), col("p_partkey"))
-      j.withColumn("rank", row_number().over(w))
-        .select(col("rank"), col("s_name"), col("n_name"), col("p_partkey"),
-          col("p_brand"), col("acctbal_c"), col("cost_c"))
-        .orderBy(col("rank"))
+      SortOps.rankedTopK(j, 100,
+        Seq(col("acctbal_c").desc, col("s_name"), col("p_partkey")),
+        Seq(col("s_name"), col("n_name"), col("p_partkey"), col("p_brand"),
+          col("acctbal_c"), col("cost_c")))
     }),
     // TPC-H Q9 shape — product-type profit by nation and year: the 5-way
     // join with an arithmetic measure spanning two tables. No partsupp, so
@@ -1982,11 +1967,6 @@ object SparkEntry {
     // broadcast crossJoins (never a CartesianProduct).
     "q_forget_audit" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      def spill(df: org.apache.spark.sql.DataFrame, prefix: String) = {
-        val p = graft.Spill.newDir(prefix)
-        df.write.mode("overwrite").parquet(p)
-        s.read.schema(df.schema).parquet(p)
-      }
       val corpus = DedupOps.plantedCorpus(docs)
       val textTomb = corpus.filter(col("doc_id") % 13 === 3)
         .select(col("doc_id")).distinct()
@@ -2005,9 +1985,9 @@ object SparkEntry {
       // subsumed by dedupForget's internal Checkpoints.cut).
       val built = graft.Par.sections[org.apache.spark.sql.DataFrame](Seq(
         // the packed-sequence table in BPE units (budget 512), built once
-        () => spill(
+        () => Spill.materialize(
           TextOps.packAssignments(
-            spill(TextOps.bpeEncode(docs)
+            Spill.materialize(TextOps.bpeEncode(docs)
               .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")),
               "graft-audit-counts"),
             budget = 512),

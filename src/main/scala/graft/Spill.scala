@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.sql.DataFrame
+
 /** Session-temp MATERIALIZATION BARRIER storage.
   *
   * The third point of the cache-lifecycle triangle ([[Local]] collects tiny
@@ -22,9 +24,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
   *
   * SCRATCH ROOT (r19 verdict #5a — previously `java.io.tmpdir` was
   * hard-coded and "on a cluster point at DFS scratch" was doc-only): the
-  * root resolves, in order, from the `graft.spill.dir` system property,
-  * the `SPARK_GRAFT_SPILL_DIR` environment variable, then
-  * `java.io.tmpdir`. Two path classes:
+  * root is the `graft.spill.dir` system property, else `java.io.tmpdir`.
+  * Two path classes:
   *
   *  - a LOCAL path (no scheme, or `file:`): created via java.nio, deleted
   *    recursively on JVM exit. In local mode, and on a cluster whose
@@ -60,10 +61,9 @@ object Spill {
     f.delete(): Unit
   }
 
-  /** Resolved scratch root (see scaladoc for precedence). */
+  /** Resolved scratch root (see scaladoc). */
   private[graft] def root: String =
     sys.props.get("graft.spill.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_SPILL_DIR"))
       .map(_.trim).filter(_.nonEmpty)
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
@@ -92,5 +92,16 @@ object Spill {
       dirs.add(d)
       d.getAbsolutePath
     }
+  }
+
+  /** The barrier itself: writes `df` ONCE to a fresh [[newDir]] and
+    * returns a frame that scans those files.
+    */
+  private[graft] def materialize(df: DataFrame, prefix: String): DataFrame = {
+    val p = newDir(prefix)
+    df.write.mode("overwrite").parquet(p)
+    // explicit schema: skips footer inference AND keeps the zero-row
+    // degenerate case readable (a rowless write leaves no part files)
+    df.sparkSession.read.schema(df.schema).parquet(p)
   }
 }

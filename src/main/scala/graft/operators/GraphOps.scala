@@ -90,12 +90,8 @@ object GraphOps {
         .select(col("v").as("node"),
           (lit(teleport) + expr("(85 * sc) div 100")).as("r"))
     }
-    val w = Window.orderBy(col("r").desc, col("node"))
-    val out = graft.Local.localized(ranks
-      .orderBy(col("r").desc, col("node")).limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("node"), col("r").as("score"))
-      .orderBy(col("rank")))
+    val out = graft.Local.localized(SortOps.rankedTopK(ranks, k,
+      Seq(col("r").desc, col("node")), Seq(col("node"), col("r").as("score"))))
     deg.unpersist(blocking = false)
     e.unpersist(blocking = false)
     out

@@ -138,16 +138,13 @@ object SampleOps {
     */
   def prioritySample(
       df: DataFrame, weightCol: String, idCol: String, k: Int): DataFrame = {
-    val w = Window.orderBy(col("__pri").desc, col(idCol))
-    df.select(col(idCol), col(weightCol),
-        (TextOps.roundBp(col(weightCol)).cast("decimal(38,0)") *
-          lit(1L << 60).cast("decimal(38,0)")).as("__num"),
-        (StableHash.hash60(col(idCol).cast("string")) + lit(1L)).as("__den"))
-      .withColumn("__pri", coalesce(expr("__num div __den"), lit(Long.MaxValue)))
-      .orderBy(col("__pri").desc, col(idCol)).limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col(idCol), col(weightCol))
-      .orderBy(col("rank"))
+    SortOps.rankedTopK(
+      df.select(col(idCol), col(weightCol),
+          (TextOps.roundBp(col(weightCol)).cast("decimal(38,0)") *
+            lit(1L << 60).cast("decimal(38,0)")).as("__num"),
+          (StableHash.hash60(col(idCol).cast("string")) + lit(1L)).as("__den"))
+        .withColumn("__pri", coalesce(expr("__num div __den"), lit(Long.MaxValue))),
+      k, Seq(col("__pri").desc, col(idCol)), Seq(col(idCol), col(weightCol)))
   }
 
   /** Per-group exactly-k weighted sample — [[prioritySample]] stratified:

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sort operators — the reference engine's entire query surface, Spark-first.
@@ -100,6 +101,18 @@ object SortOps {
     */
   def topK(df: DataFrame, k: Int, keys: Seq[Column]): DataFrame =
     df.orderBy(keys: _*).limit(k)
+
+  /** [[topK]] numbered: the first `k` rows by `keys` as (rank, `cols`…),
+    * rank 1..min(k, n) in key order, ordered by rank. The keys are given
+    * once, so the sort and the rank cannot disagree; the rank window runs
+    * over the k survivors only, never a global single-partition window.
+    */
+  private[graft] def rankedTopK(df: DataFrame, k: Int, keys: Seq[Column],
+      cols: Seq[Column]): DataFrame =
+    topK(df, k, keys)
+      .withColumn("rank", row_number().over(Window.orderBy(keys: _*)))
+      .select(col("rank") +: cols: _*)
+      .orderBy(col("rank"))
 
   /** Per-chunk statistics — the reference's job-statistics surface
     * (`Server.java:29-48`, `ServerHandler.java:66-75`) recast over data: row

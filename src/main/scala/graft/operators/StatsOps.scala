@@ -360,13 +360,8 @@ object StatsOps {
         expr("CAST(n_ab AS DECIMAL(38,0)) * 10000 DIV n_ante").as("conf_bp"),
         expr("CAST(n_ab AS DECIMAL(38,0)) * n_orders * 10000 " +
           "DIV (CAST(n_ante AS DECIMAL(38,0)) * n_cons)").as("lift_bp"))
-    val top = rules.orderBy(col("lift_bp").desc, col("ante"), col("cons")).limit(k)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("lift_bp").desc, col("ante"), col("cons"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("ante"), col("cons"), col("n_ab"),
-        col("conf_bp"), col("lift_bp"))
-      .orderBy(col("rank"))
+    SortOps.rankedTopK(rules, k, Seq(col("lift_bp").desc, col("ante"), col("cons")),
+      Seq(col("ante"), col("cons"), col("n_ab"), col("conf_bp"), col("lift_bp")))
   }
 
   /** Mergeable correlation sufficient statistics per group: (n, Σx, Σy,
@@ -547,9 +542,6 @@ object StatsOps {
   def mannWhitney(
       events: DataFrame, typeA: String = "view", typeB: String = "purchase",
       typeCol: String = "event_type", valueCol: String = "value"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     // NULL values must not enter the histogram: Spark's Window.orderBy
     // sorts NULLs first while DuckDB's ORDER BY defaults NULLS LAST, which
     // would shift every midrank on one engine only (and count NULL rows
@@ -560,7 +552,8 @@ object StatsOps {
         when(col(typeCol) === typeA, 1L).otherwise(0L).as("a"))
       .groupBy(col("v"))
       .agg(sum(col("a")).as("ca"), sum(lit(1L) - col("a")).as("cb"))
-      .withColumn("before", coalesce(sum(col("ca") + col("cb")).over(w), lit(0L)))
+      .withColumn("before", TextOps.sumBefore(col("ca") + col("cb"),
+        org.apache.spark.sql.expressions.Window.orderBy(col("v"))))
       .withColumn("mid2", lit(2L) * col("before") + col("ca") + col("cb") + 1L)
     hist.agg(
       sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.functions.StableHash
@@ -101,9 +102,9 @@ object TextOps {
     // evaluation per document, one hash-shuffle on the doc id.
     val hs = transform(shingles(tokens(col(textCol)), k), s => StableHash.hash60(s))
     val exploded = docs.select(col(idCol), posexplode(hs).as(Seq("pos", "h")))
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
+    val byDoc = Window.partitionBy(col(idCol))
     val sliding = byDoc.orderBy(col("pos"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow, w - 1)
+      .rowsBetween(Window.currentRow, w - 1)
     exploded
       .withColumn("n", count(lit(1)).over(byDoc))
       .withColumn("wmin", min(col("h")).over(sliding))
@@ -160,8 +161,7 @@ object TextOps {
     val scored = tf.join(df, "token")
       .crossJoin(broadcast(n))
       .withColumn("score", col("tf") * expr("(n_docs * 10000) div df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("score").desc, col("token"))
+    val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("token"))
     scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -210,7 +210,6 @@ object TextOps {
     */
   def langConfusion(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = tokens(col(textCol))
     val withScores = docs.select(
       (col(langCol).as("lang_actual") +: langMarkers.map { case (lang, ws) =>
@@ -272,11 +271,6 @@ object TextOps {
     s"CAST(floor(CAST(($a) - (((($a) % ($b)) + ($b)) % ($b)) AS DOUBLE) / " +
       s"CAST(($b) AS DOUBLE) + 0.5) AS BIGINT)"
 
-  /** Quality scoring: fraction of distinct tokens, stopword ratio, a length
-    * saturation term, combined into one score. All ratios are emitted as
-    * integer basis points ([[roundBp]]) so the result hashes identically
-    * across engines.
-    */
   /** PII patterns shared by [[piiRedact]] and its DuckDB mirror. Kept to the
     * RE2 ∩ java.util.regex dialect (char classes, `\b`, `\d`, bounded
     * repeats — no lookarounds) so both engines match identically.
@@ -321,28 +315,23 @@ object TextOps {
       .orderBy(col(idCol))
   }
 
-  /** Gopher-style repetition/quality rules (Rae et al. 2021, App. A —
-    * public filter suite; C4 uses close cousins): per-doc mean word length,
-    * alphabetic-word and symbol-word ratios, repeated 2-/3-gram ratios,
-    * fraction of characters in the single most frequent word 2-gram, and
-    * stopword count, plus the combined pass/fail gate. All ratios are bp
-    * longs ([[roundBp]]) and the gate compares bp integers only, so the
-    * verdict is engine-exact.
+  /** Gopher-style repetition/quality rules (Rae et al. 2021, App. A):
+    * keyed by doc id; scores mean word length, alphabetic- and symbol-word
+    * ratios, repeated 2-/3-gram ratios, the character share of the most
+    * frequent 2-gram and the stopword count, all bp longs ([[roundBp]]),
+    * and a pass/fail gate on bp integers only. The gram tables come from
+    * `gramCounts`; the 2-gram table feeds both the repetition ratio and the
+    * top-gram pick, so its shuffle is planned once (ReusedExchange).
     *
-    * Shape: three narrow scans (tokens, 2-grams, 3-grams), each exploding
-    * ONE tokenize into scalar rows that aggregate per doc — deliberately
+    * Narrow scans that explode ONE tokenize into scalar rows, deliberately
     * NOT a single wide array projection: higher-order array functions are
     * interpreted (no whole-stage codegen, no common-subexpression
-    * elimination), so a projection computing eight token-array ratios
-    * re-tokenizes the document once per occurrence — measured 12 s at
-    * sf0.1 vs ~2.5 s for this form. The gram-count table feeds both the
-    * repetition ratio and the top-gram pick, so its shuffle is planned
-    * once (ReusedExchange). All per-doc joins are co-partitioned on
-    * doc_id.
+    * elimination), so eight token-array ratios re-tokenize the document
+    * once per occurrence — measured 12 s at sf0.1 vs ~2.5 s for this form.
     */
   def gopherQuality(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val allStops = langMarkers.flatMap(_._2).distinct.sorted
-    // scan 1: token scalars (docs with zero tokens drop out, matching the
+    // token scalars (docs with zero tokens drop out, matching the
     // len(t) > 0 oracle filter)
     val scalars = docs
       .select(col(idCol), length(col(textCol)).cast("long").as("n_chars"),
@@ -355,27 +344,22 @@ object TextOps {
         count_if(col("tok").rlike("[a-z]")).as("n_alpha"),
         count_if(col("tok").rlike("[^a-z0-9]")).as("n_sym"),
         count_if(col("tok").isInCollection(allStops)).as("n_stop"))
-    // scan 2: (doc, 2-gram) counts — one table serves the repetition
-    // ratio, the distinct count, and the most-frequent-gram pick
-    val gc2 = docs
-      .select(col(idCol), explode(shingles(tokens(col(textCol)), 2)).as("g"))
+    // (doc, n-gram g) occurrence counts `cnt`, and their per-doc total and
+    // distinct count
+    def gramCounts(n: Int): DataFrame = docs
+      .select(col(idCol), explode(shingles(tokens(col(textCol)), n)).as("g"))
       .groupBy(col(idCol), col("g"))
       .agg(count(lit(1)).as("cnt"))
-    val rep2 = gc2.groupBy(col(idCol))
-      .agg(sum(col("cnt")).as("n2"), count(lit(1)).as("nd2"))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("cnt").desc, col("g"))
+    def repeats(gc: DataFrame, n: Int): DataFrame = gc.groupBy(col(idCol))
+      .agg(sum(col("cnt")).as(s"n$n"), count(lit(1)).as(s"nd$n"))
+    val gc2 = gramCounts(2)
+    val byDoc = Window.partitionBy(col(idCol)).orderBy(col("cnt").desc, col("g"))
     val top2 = gc2
       .withColumn("rn", row_number().over(byDoc))
       .filter(col("rn") === 1)
       .select(col(idCol), (col("cnt") * length(col("g"))).as("top2_chars"))
-    // scan 3: 3-gram repetition ratio
-    val rep3 = docs
-      .select(col(idCol), explode(shingles(tokens(col(textCol)), 3)).as("g"))
-      .groupBy(col(idCol), col("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col(idCol))
-      .agg(sum(col("cnt")).as("n3"), count(lit(1)).as("nd3"))
+    val rep2 = repeats(gc2, 2)
+    val rep3 = repeats(gramCounts(3), 3)
     val dbl = (c: Column) => c.cast("double")
     scalars
       .join(rep2, Seq(idCol), "left")
@@ -402,22 +386,14 @@ object TextOps {
       .orderBy(col(idCol))
   }
 
-  /** BM25 ranking of documents against a fixed query-term set — the
-    * production lexical scorer ([[tfidfTopTerms]] is the per-doc keyword
-    * variant; this is the retrieval one). Standard Robertson BM25 with
-    * k1 = 1.2, b = 0.75, except the idf: `ln((N-df+.5)/(df+.5))` is libm-
-    * dependent, so the integer surrogate `(N * 10000) div df` stands in —
-    * same monotonicity (the [[tfidfTopTerms]] rationale). Per-(doc, term)
-    * scores are bp-rounded FIRST and the per-doc total is a sum of longs:
-    * integer addition is associative under any partial-aggregation order,
-    * where a float sum across terms could differ in the last ulp between
-    * engines.
-    *
-    * Shape: one explode filtered to the query terms (predicate applies
-    * before the shuffle — only matching tokens travel), a (doc, term)
-    * count, a broadcast of the term df table and the 1-row corpus stats,
-    * and a final per-doc sum. At 100 TB the shuffled volume is bounded by
-    * occurrences of the query terms, not corpus size.
+  /** BM25 ranking of documents against a fixed query-term set: keyed by
+    * doc id, scored by Robertson BM25 (k1 = 1.2, b = 0.75) with the
+    * integer idf surrogate `(N * 10000) div df` in place of the libm `ln`
+    * ([[tfidfTopTerms]]' rationale). Per-(doc, term) scores are bp-rounded
+    * FIRST, so the per-doc total is a sum of longs, exact under any
+    * partial-aggregation order. The term filter runs before the shuffle,
+    * so only query-term occurrences travel; the top `k` come from
+    * [[SortOps.rankedTopK]].
     */
   def bm25(docs: DataFrame, terms: Seq[String], k: Int = 20,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -442,20 +418,9 @@ object TextOps {
       .join(dl, idCol)
       .crossJoin(broadcast(corpus))
       .select(col(idCol), roundBp(idfS * frac).as("term_bp"))
-    // top-k via orderBy+limit (TakeOrderedAndProject: per-partition heaps,
-    // k-row driver merge), then rank the k survivors — never a global
-    // single-partition window over every scored doc
-    val topDocs = perTerm
-      .groupBy(col(idCol))
-      .agg(sum(col("term_bp")).as("score_bp"))
-      .orderBy(col("score_bp").desc, col(idCol))
-      .limit(k)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score_bp").desc, col(idCol))
-    topDocs
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col(idCol), col("score_bp"))
-      .orderBy(col("rank"))
+    SortOps.rankedTopK(
+      perTerm.groupBy(col(idCol)).agg(sum(col("term_bp")).as("score_bp")),
+      k, Seq(col("score_bp").desc, col(idCol)), Seq(col(idCol), col("score_bp")))
   }
 
   /** Positional-postings phrase search — the inverted-index workload the
@@ -501,21 +466,13 @@ object TextOps {
       .orderBy(col(idCol))
   }
 
-  /** The first step of BPE tokenizer training — corpus-wide adjacent
-    * character-pair frequencies within tokens: the most frequent pair IS
-    * the first merge rule, and iterating (merge, recount) yields the
-    * vocabulary. One step is the right operator surface for the engine —
-    * the iteration is a driver loop over a tiny (pair → count) table,
-    * while the expensive recount over the corpus is exactly this query.
-    *
-    * Shape: explode to pairs (map-local fan-out via `sequence` +
-    * `substring` — both engines index strings identically), one hash
-    * aggregation with map-side partials, then `orderBy+limit` — a
-    * TakeOrderedAndProject (per-partition heaps, k-row driver merge),
-    * never a global sort. The shuffle carries (pair, count) partials:
-    * bounded by the pair vocabulary, not the corpus.
-    *
-    * Output: (rank, pair, n), rank over (count desc, pair).
+  /** The first step of BPE tokenizer training: keyed by adjacent
+    * character pair within tokens, scored by corpus count — the most
+    * frequent pair IS the first merge rule ([[bpeMerges]] iterates it).
+    * Pairs come from `sequence` + `substring` (both engines index strings
+    * identically); one hash aggregation bounded by the pair vocabulary,
+    * then [[SortOps.rankedTopK]]. Output: (rank, pair, n), rank over
+    * (n desc, pair).
     */
   def bpePairCounts(docs: DataFrame, k: Int = 20, textCol: String = "text"): DataFrame = {
     val pairs = docs
@@ -523,147 +480,114 @@ object TextOps {
       .filter(length(col("tok")) >= 2)
       .select(explode(
         expr("transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))")).as("pair"))
-    val top = pairs
-      .groupBy(col("pair"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("pair"))
-      .limit(k)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("n").desc, col("pair"))
-    top
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("pair"), col("n"))
-      .orderBy(col("rank"))
+    SortOps.rankedTopK(pairs.groupBy(col("pair")).agg(count(lit(1)).as("n")),
+      k, Seq(col("n").desc, col("pair")), Seq(col("pair"), col("n")))
   }
 
-  /** Good-Turing count-of-counts over word bigrams: for each observed
-    * frequency r, the number of bigram TYPES seen exactly r times (N_r)
-    * and the token mass r*N_r. The (N_1, N) pair is the Good-Turing/Katz
-    * smoothing input — the probability mass an n-gram LM reserves for
-    * unseen events — and the shape of the tail diagnoses corpus
-    * repetitiveness (boilerplate inflates high-r types).
-    *
-    * Scale shape: two hash aggregations — bigram counts (vocab-bounded
-    * key space, map-side partials) then a histogram over the counts whose
-    * key space is the distinct-frequency set, O(√corpus) keys. Nothing
-    * retains the corpus.
+  /** The word-bigram stream: `keep` plus one row per bigram `bg`
+    * ("w1 w2") of each document's tokens.
+    */
+  private[graft] def bigramStream(docs: DataFrame, keep: Seq[Column],
+      textCol: String): DataFrame =
+    docs.select(keep :+ explode(shingles(tokens(col(textCol)), 2)).as("bg"): _*)
+
+  /** The corpus bigram table (bg, n12) over a [[bigramStream]]: one hash
+    * aggregation with map-side combine, bounded by vocab², not the corpus.
+    */
+  private[graft] def bigramTable(stream: DataFrame): DataFrame =
+    stream.groupBy(col("bg")).agg(count(lit(1)).as("n12"))
+
+  /** Word `i` (0 = prefix, 1 = suffix) of a bigram `bg`. */
+  private def bigramWord(i: Int): Column = expr(s"split(bg, ' ')[$i]")
+
+  /** The per-key integer mean of `score`: rows grouped by `keys`, counted
+    * as `nName`, and `sum div count` as `meanName` — the doc-score rollup of
+    * the surprisal family, all integer so DuckDB agrees exactly.
+    */
+  private[graft] def keyedMean(scored: DataFrame, keys: Seq[String], score: String,
+      nName: String, meanName: String): DataFrame =
+    scored.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(nName), sum(col(score)).as("sum_s"))
+      .select(keys.map(col) ++ Seq(col(nName), expr(s"sum_s div $nName").as(meanName)): _*)
+
+  /** Good-Turing count-of-counts over word bigrams: keyed by bigram
+    * frequency r, it counts the bigram TYPES seen exactly r times (N_r)
+    * and their token mass r·N_r — the Good-Turing/Katz smoothing input.
+    * A histogram over [[bigramTable]], whose key space is the
+    * distinct-frequency set.
     */
   def bigramFreqOfFreqs(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .select(explode(shingles(tokens(col(textCol)), 2)).as("bigram"))
-      .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
-      .groupBy(col("n").as("freq")).agg(count(lit(1)).as("n_types"))
+    bigramTable(bigramStream(docs, Nil, textCol))
+      .groupBy(col("n12").as("freq")).agg(count(lit(1)).as("n_types"))
       .withColumn("mass", col("freq") * col("n_types"))
       .orderBy(col("freq"))
 
-  /** MLE bigram language-model table — P(w2 | w1) for the corpus's most
-    * frequent bigrams, the estimation step that turns [[bigramFreqOfFreqs]]'
-    * smoothing statistics into an actual n-gram LM. The prefix mass n1 is
-    * the SUM OF BIGRAM COUNTS sharing the prefix (the conditional's true
-    * denominator — and computable from the already-aggregated bigram
-    * table, no second corpus pass), and the probability is the integer
-    * division `(n12 * 10000) div n1` so both engines agree exactly.
-    *
-    * Shape: one corpus pass explodes bigrams into a vocab-bounded hash
-    * aggregation; everything after (prefix sums, join, top-k) runs on the
-    * bigram table. Top-k is orderBy+limit — TakeOrderedAndProject.
-    *
-    * Output: (rank, w1, w2, n12, n1, cond_bp), top `k` by (n12 desc, w1, w2).
+  /** MLE bigram language-model table: keyed by bigram (w1, w2), scored by
+    * P(w2 | w1) = `(n12 * 10000) div n1`, where the prefix mass n1 is the
+    * sum of [[bigramTable]] counts sharing w1 (a groupBy + join on that
+    * table — no second corpus pass). Top `k` by (n12 desc, w1, w2) through
+    * [[SortOps.rankedTopK]]. Output: (rank, w1, w2, n12, n1, cond_bp).
     */
   def bigramCondProb(docs: DataFrame, k: Int = 20, textCol: String = "text"): DataFrame = {
-    val counts = docs
-      .select(explode(shingles(tokens(col(textCol)), 2)).as("bg"))
-      .groupBy(col("bg")).agg(count(lit(1)).as("n12"))
-      .select(expr("split(bg, ' ')[0]").as("w1"),
-        expr("split(bg, ' ')[1]").as("w2"), col("n12"))
+    val counts = bigramTable(bigramStream(docs, Nil, textCol))
+      .select(bigramWord(0).as("w1"), bigramWord(1).as("w2"), col("n12"))
     val prefix = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
-    val top = counts.join(prefix, "w1")
-      .withColumn("cond_bp", expr("(n12 * 10000) div n1"))
-      .orderBy(col("n12").desc, col("w1"), col("w2"))
-      .limit(k)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("n12").desc, col("w1"), col("w2"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("w1"), col("w2"), col("n12"), col("n1"), col("cond_bp"))
-      .orderBy(col("rank"))
+    SortOps.rankedTopK(
+      counts.join(prefix, "w1").withColumn("cond_bp", expr("(n12 * 10000) div n1")),
+      k, Seq(col("n12").desc, col("w1"), col("w2")),
+      Seq(col("w1"), col("w2"), col("n12"), col("n1"), col("cond_bp")))
   }
 
-  /** Per-document bigram surprisal — the doc-level consumer of the
-    * [[bigramCondProb]] LM: the KenLM-style quality filter that flags docs
-    * whose word-to-word transitions are improbable under the corpus model
-    * (gibberish, OCR noise, shuffled text), which unigram [[lmSurprisal]]
-    * cannot see (it scores "the the the the" as maximally probable).
-    * Surprisal of a bigram is the inverse conditional in bp —
-    * `(n1 * 10000) div n12`, the exact reciprocal of [[bigramCondProb]]'s
-    * `cond_bp` — and the doc score is the integer mean over its bigrams.
-    * All arithmetic integer, identical in DuckDB.
-    *
-    * Shape: one corpus pass builds the vocab²-bounded bigram table with
-    * map-side combine; prefix mass comes from that table (no second corpus
-    * pass); both broadcast back onto the exploded bigram stream; one
-    * per-doc aggregation. Docs with fewer than 2 tokens have no bigrams
-    * and produce no row (nothing to score — route them to a length gate).
-    *
-    * Output: (idCol, n_bigrams, avg_surprisal_bp) ordered by doc id.
+  /** Per-document bigram surprisal: keyed by doc id, scored by the
+    * integer mean ([[keyedMean]]) over the doc's bigrams of
+    * `(n1 * 10000) div n12` — the exact reciprocal of [[bigramCondProb]]'s
+    * `cond_bp`. It flags improbable word-to-word transitions, which
+    * unigram [[lmSurprisal]] cannot see (it scores "the the the the" as
+    * maximally probable). The scored [[bigramTable]] is broadcast back
+    * onto the [[bigramStream]]. Docs with fewer than 2 tokens have no bigrams
+    * and no row. Output: (idCol, n_bigrams, avg_surprisal_bp).
     */
   def bigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val bg = docs.select(col(idCol),
-      explode(shingles(tokens(col(textCol)), 2)).as("bg"))
+    val bg = bigramStream(docs, Seq(col(idCol)), textCol)
     // prefix mass as a window over the vocab²-bounded bigram table, NOT a
     // groupBy+self-join (a diamond that would scan the corpus twice for
     // the broadcast subtree — plan-audited to at most two total scans)
-    val wPrefix = org.apache.spark.sql.expressions.Window
-      .partitionBy(expr("split(bg, ' ')[0]"))
-    val scored = bg.groupBy(col("bg")).agg(count(lit(1)).as("n12"))
+    val wPrefix = Window.partitionBy(bigramWord(0))
+    val scored = bigramTable(bg)
       .withColumn("n1", sum(col("n12")).over(wPrefix))
       .select(col("bg"), expr("(n1 * 10000) div n12").as("s"))
-    bg.join(broadcast(scored), "bg")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("s")).as("sum_s"))
-      .select(col(idCol), col("n_bigrams"),
-        expr("sum_s div n_bigrams").as("avg_surprisal_bp"))
-      .orderBy(col(idCol))
+    keyedMean(bg.join(broadcast(scored), "bg"), Seq(idCol), "s", "n_bigrams",
+      "avg_surprisal_bp").orderBy(col(idCol))
   }
 
-  /** Per-document interpolated Kneser–Ney bigram score — the smoothed
-    * upgrade of [[bigramSurprisal]]'s MLE model and the form production
-    * KenLM-style quality filters actually run (Kneser & Ney 1995; Chen &
-    * Goodman 1998). With absolute discount D = 3/4:
+  /** Per-document interpolated Kneser–Ney bigram score (Kneser & Ney 1995;
+    * Chen & Goodman 1998): keyed by doc id, scored by the integer mean
+    * ([[keyedMean]]) of, with absolute discount D = 3/4,
     *
     *   P_KN(w2|w1) = (n12 − D)/n1 + (D·N1+(w1,·)/n1) · N1+(·,w2)/T
     *
-    * where n12 = bigram count, n1 = prefix token mass, N1+(w1,·) = distinct
-    * followers of w1, N1+(·,w2) = distinct PREDECESSORS of w2 (the
-    * continuation count — "how many contexts has w2 completed", the term
-    * that stops "francisco" looking probable everywhere), T = distinct
-    * bigram types. Every scored bigram is observed (the model is trained on
-    * the corpus being scored), so n12 ≥ 1 and the discount never floors at
-    * zero. Multiplying through by 4T makes the probability the exact
-    * rational ((4·n12−3)·T + 3·N1r·N1l) / (4·n1·T), carried in
-    * decimal(38,0) (the oracle in HUGEINT — BIGINT would RAISE on overflow
-    * where Spark longs wrap silently, the r10 OPQ lesson) and floored to bp.
-    *
-    * Shape: one corpus pass builds the vocab²-bounded bigram table; prefix
-    * mass and both continuation counts are windows OVER THAT TABLE (no
-    * second corpus pass); T is a 1-row broadcast; the scored table
-    * broadcasts back onto the exploded bigram stream; one per-doc
-    * aggregation. Same two-scan plan discipline as [[bigramSurprisal]].
-    *
-    * Output: (idCol, n_bigrams, avg_kn_bp) ordered by doc id — higher =
-    * more probable text under the corpus model.
+    * where n1 = prefix token mass, N1+(w1,·) = distinct followers of w1,
+    * N1+(·,w2) = distinct predecessors of w2 (the continuation count),
+    * T = distinct bigram types. Every scored bigram is observed, so
+    * n12 ≥ 1 and the discount never floors at zero. Multiplying through by
+    * 4T gives the exact rational ((4·n12−3)·T + 3·N1r·N1l) / (4·n1·T),
+    * carried in decimal(38,0) (the oracle in HUGEINT — BIGINT would RAISE
+    * on overflow where Spark longs wrap silently, the r10 OPQ lesson) and
+    * floored to bp. The statistics are windows over [[bigramTable]]; the
+    * scored table is broadcast back onto the [[bigramStream]] — the same
+    * two-scan plan as [[bigramSurprisal]]. Output: (idCol, n_bigrams, avg_kn_bp).
     */
   def kneserNeyScore(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bg = docs.select(col(idCol),
-      explode(shingles(tokens(col(textCol)), 2)).as("bg"))
-    val wPrefix = Window.partitionBy(expr("split(bg, ' ')[0]"))
-    val wSuffix = Window.partitionBy(expr("split(bg, ' ')[1]"))
+    val bg = bigramStream(docs, Seq(col(idCol)), textCol)
+    val wPrefix = Window.partitionBy(bigramWord(0))
+    val wSuffix = Window.partitionBy(bigramWord(1))
     // both prefix statistics in ONE select so they share a single Window
     // node (chained withColumn interposes Projects that block
     // CollapseWindow — plan-audited: two exchanges over the bigram table,
     // not three)
-    val table = bg.groupBy(col("bg")).agg(count(lit(1)).as("n12"))
+    val table = bigramTable(bg)
       .select(col("bg"), col("n12"),
         sum(col("n12")).over(wPrefix).as("n1"),
         count(lit(1)).over(wPrefix).as("n1r"))
@@ -674,42 +598,50 @@ object TextOps {
         "CAST((CAST(4*n12 - 3 AS DECIMAL(38,0)) * t_types + " +
           "CAST(3 AS DECIMAL(38,0)) * n1r * n1l) * 10000 div " +
           "(CAST(4 AS DECIMAL(38,0)) * n1 * t_types) AS BIGINT)").as("kn_bp"))
-    bg.join(broadcast(scored), "bg")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("kn_bp")).as("sum_bp"))
-      .select(col(idCol), col("n_bigrams"),
-        expr("sum_bp div n_bigrams").as("avg_kn_bp"))
-      .orderBy(col(idCol))
+    keyedMean(bg.join(broadcast(scored), "bg"), Seq(idCol), "kn_bp", "n_bigrams",
+      "avg_kn_bp").orderBy(col(idCol))
   }
 
-  /** Multi-signal quality rank fusion, per source — the "combine judges"
-    * step a curation pipeline runs when no single quality signal is
-    * trusted: rank every document within its source by each signal
-    * (token count, distinct-token count, char length — all integer, all
-    * from one scan with array functions, no explode), fuse by Borda count
-    * (sum of ranks, smaller = better), and calibrate the fused rank to a
-    * per-source percentile in bp so scores are comparable ACROSS sources
-    * with different size distributions.
-    *
-    * Scale shape — deliberately NOT `row_number() OVER (PARTITION BY
-    * source)`: a per-source window puts an entire source (≫ one executor at
-    * 100 TB; the web crawl IS one source) in a single task. Competition
-    * rank only needs "how many docs beat this value", so each rank is
-    * computed from the (source, value) HISTOGRAM — a hash aggregation
-    * bounded by distinct values, cumulated with a window over the tiny
-    * histogram, broadcast back. Ties share a rank (exactly SQL `rank()`,
-    * which the oracle uses directly), so no per-doc total order is ever
-    * materialized.
+  /** Exclusive running sum of `c` over `w`: the rows strictly before the
+    * current one, 0 on the first row — the prefix of every histogram rank
+    * and packing offset here.
+    */
+  private[graft] def sumBefore(c: Column, w: WindowSpec): Column =
+    coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
+  /** Competition rank `rankName` of `value` within `group` (ties share a
+    * rank — SQL `rank()`; `desc` ranks larger values first), plus the
+    * group's row count as `totalName` when given. Built from the (group,
+    * value) HISTOGRAM — a hash aggregation bounded by distinct values,
+    * cumulated by [[sumBefore]] over that tiny table and collected as a
+    * local literal table ([[graft.Local]]) — never a per-group row window,
+    * which would put a whole group (≫ one executor at 100 TB) in one task.
+    */
+  private[graft] def histRank(df: DataFrame, group: String, value: String, desc: Boolean,
+      rankName: String, totalName: Option[String] = None): DataFrame = {
+    val byGroup = Window.partitionBy(col(group))
+    val ranked = df.groupBy(col(group), col(value)).agg(count(lit(1)).as("n"))
+      .withColumn(rankName, sumBefore(col("n"),
+        byGroup.orderBy(if (desc) col(value).desc else col(value))) + 1)
+    graft.Local.localized(totalName.fold(ranked)(t =>
+      ranked.withColumn(t, sum(col("n")).over(byGroup))).drop("n"))
+  }
+
+  /** Multi-signal quality rank fusion, per source: keyed by (source, doc
+    * id); each document's token count, distinct-token count and char
+    * length (one scan, array functions, no explode) are ranked within its
+    * source, fused by Borda count (sum of ranks, smaller = better), and
+    * the fused rank calibrated to a per-source percentile in bp. Every rank
+    * is a [[histRank]], so ties share a rank and no per-source row window
+    * exists.
     *
     * Plan discipline: the signal table is built in ONE corpus pass and
-    * persisted; the three rank histograms and the Borda histogram are
-    * derived from the cache, collected driver-side (they are
-    * distinct-value-sized — the same boundedness that makes them
-    * broadcastable), and the cache is released before the lazy result is
-    * returned ([[graft.Local]]'s no-leak rule). The returned plan is one
-    * fresh corpus scan broadcast-joined to four local literal tables —
-    * two corpus scans end to end, where the naive lazy composition
-    * re-derives the tokenize-and-aggregate subtree seven times.
+    * persisted; the four histograms are derived from the cache, and the
+    * cache is released before the lazy result is returned ([[graft.Local]]'s
+    * no-leak rule). The returned plan is one fresh corpus scan
+    * broadcast-joined to four local literal tables — two corpus scans end
+    * to end, where the naive lazy composition re-derives the
+    * tokenize-and-aggregate subtree seven times.
     *
     * Boundedness caveat: the collected histograms are DISTINCT-VALUE
     * sized, not corpus sized — integer token/char counts concentrate on
@@ -726,46 +658,28 @@ object TextOps {
     */
   def qualityFusion(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = tokens(col(textCol))
     def signals(df: DataFrame): DataFrame = df.select(col("source"), col(idCol),
       size(toks).cast("long").as("n_tok"),
       size(array_distinct(toks)).cast("long").as("n_div"),
       length(col(textCol)).cast("long").as("n_chars"))
     val sig = signals(docs).persist()
-    // competition rank of signal c (desc) from its (source, value)
-    // histogram — value-bounded, collected as a local literal table
-    def rankOf(c: String, rankName: String): DataFrame = {
-      val w = Window.partitionBy(col("source")).orderBy(col(c).desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      graft.Local.localized(
-        sig.groupBy(col("source"), col(c)).agg(count(lit(1)).as("n"))
-          .withColumn(rankName, (coalesce(sum(col("n")).over(w), lit(0L)) + 1))
-          .drop("n"))
-    }
     val (rTok, rDiv, rChars) =
-      (rankOf("n_tok", "r_tokens"), rankOf("n_div", "r_distinct"),
-        rankOf("n_chars", "r_chars"))
+      (histRank(sig, "source", "n_tok", desc = true, "r_tokens"),
+        histRank(sig, "source", "n_div", desc = true, "r_distinct"),
+        histRank(sig, "source", "n_chars", desc = true, "r_chars"))
     def fuse(s: DataFrame): DataFrame = s
       .join(broadcast(rTok), Seq("source", "n_tok"))
       .join(broadcast(rDiv), Seq("source", "n_div"))
       .join(broadcast(rChars), Seq("source", "n_chars"))
       .withColumn("borda", col("r_tokens") + col("r_distinct") + col("r_chars"))
-    // calibrate: percentile of the fused rank, again via histogram (asc)
-    val wB = Window.partitionBy(col("source")).orderBy(col("borda"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bordaHist = graft.Local.localized(
-      fuse(sig).groupBy(col("source"), col("borda"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("better_cnt", coalesce(sum(col("n")).over(wB), lit(0L)))
-        .withColumn("n_src",
-          sum(col("n")).over(Window.partitionBy(col("source"))))
-        .drop("n"))
+    val bordaHist = histRank(fuse(sig), "source", "borda", desc = false, "r_borda",
+      Some("n_src"))
     sig.unpersist(blocking = false)
     fuse(signals(docs)).join(broadcast(bordaHist), Seq("source", "borda"))
       .select(col("source"), col(idCol),
         col("r_tokens"), col("r_distinct"), col("r_chars"), col("borda"),
-        expr("(n_src - better_cnt) * 10000 div n_src").as("pct_bp"))
+        expr("(n_src - r_borda + 1) * 10000 div n_src").as("pct_bp"))
       .orderBy(col("source"), col(idCol))
   }
 
@@ -871,7 +785,6 @@ object TextOps {
     */
   private def bpeTrain(docs: DataFrame, nMerges: Int, textCol: String)
       : (DataFrame, Seq[DataFrame], Seq[DataFrame]) = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
     // vocab-bounded state: (word, corpus count, current symbol segmentation)
@@ -1055,7 +968,6 @@ object TextOps {
     */
   def unigramLm(docs: DataFrame, rounds: Int = 2, maxPieceLen: Int = 4,
       seedVocab: Int = 60, maxWordLen: Int = 12, textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
     val words = docs
@@ -1193,15 +1105,23 @@ object TextOps {
         max(col(idCol)).as("last_doc"))
       .orderBy(col("seq_id"))
 
-  /** The packer's per-document assignment stage — the ONE place the
-    * doc → sequence rule lives ([[packCounts]] aggregates it per
-    * sequence; [[forgetBlastRadius]] audits it per takedown — shared so
-    * the audit cannot drift from the packing it audits). Output:
-    * (idCol, n_tokens, seq_id), where seq_id = (running token offset in
-    * id order) div budget via the two-level shard decomposition (the
-    * global order realized without a global sort: shard offsets are a
-    * broadcast-sized prefix sum, within-shard offsets a per-shard
-    * window).
+  /** The packer's doc → sequence rule, the one both packers share: a doc
+    * whose running token offset is `offset` plus the [[sumBefore]] of
+    * `n_tokens` over `w` goes to sequence `before div budget`. Adds
+    * `before` and `seq_id`.
+    */
+  private def packInto(perDoc: DataFrame, offset: Column, w: WindowSpec,
+      budget: Long): DataFrame =
+    perDoc.withColumn("before", offset + sumBefore(col("n_tokens"), w))
+      .withColumn("seq_id", expr(s"before div $budget"))
+
+  /** The packer's per-document assignment stage: keyed by doc id in id
+    * order, [[packInto]] over the two-level shard decomposition (shard =
+    * id div `shardSize`; shard offsets a broadcast-sized [[sumBefore]]
+    * over the shard totals, within-shard offsets a per-shard window).
+    * [[packCounts]] aggregates it per sequence and [[forgetBlastRadius]]
+    * audits it per takedown, so the audit cannot drift from the packing.
+    * Output: (idCol, n_tokens, seq_id).
     *
     * Two scans of `perDocCounts` (shard-totals branch + final join), NOT
     * persisted here — [[packCounts]]' documented contract; expensive
@@ -1211,21 +1131,13 @@ object TextOps {
       shardSize: Long = 1000L, idCol: String = "doc_id"): DataFrame = {
     val perDoc = perDocCounts.select(
       col(idCol), expr(s"$idCol div $shardSize").as("shard"), col("n_tokens"))
-    val shardTotals = perDoc.groupBy(col("shard"))
+    val offsets = perDoc.groupBy(col("shard"))
       .agg(sum(col("n_tokens")).as("shard_tokens"))
-    val wShards = org.apache.spark.sql.expressions.Window.orderBy(col("shard"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = shardTotals
-      .withColumn("offset", coalesce(sum(col("shard_tokens")).over(wShards), lit(0L)))
+      .withColumn("offset", sumBefore(col("shard_tokens"), Window.orderBy(col("shard"))))
       .select(col("shard"), col("offset"))
-    val wInShard = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("shard")).orderBy(col(idCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    perDoc
-      .join(broadcast(offsets), "shard")
-      .withColumn("before",
-        col("offset") + coalesce(sum(col("n_tokens")).over(wInShard), lit(0L)))
-      .select(col(idCol), col("n_tokens"), expr(s"before div $budget").as("seq_id"))
+    packInto(perDoc.join(broadcast(offsets), "shard"), col("offset"),
+      Window.partitionBy(col("shard")).orderBy(col(idCol)), budget)
+      .select(col(idCol), col("n_tokens"), col("seq_id"))
   }
 
   /** Takedown blast radius over packed training sequences — the
@@ -1265,13 +1177,10 @@ object TextOps {
   def forgetBlastRadiusCounts(perDocCounts: DataFrame, tombstones: DataFrame,
       budget: Long, shardSize: Long = 1000L,
       idCol: String = "doc_id"): DataFrame = {
-    val spark = perDocCounts.sparkSession
-    val path = graft.Spill.newDir("graft-blastcounts")
-    perDocCounts.write.mode("overwrite").parquet(path)
+    val counts = graft.Spill.materialize(perDocCounts, "graft-blastcounts")
     val tomb = tombstones.select(col(idCol)).distinct()
       .withColumn("tombed", lit(1L))
-    packAssignments(spark.read.schema(perDocCounts.schema).parquet(path),
-        budget, shardSize, idCol)
+    packAssignments(counts, budget, shardSize, idCol)
       .join(tomb, Seq(idCol), "left")
       .groupBy(col("seq_id"))
       .agg(
@@ -1296,90 +1205,54 @@ object TextOps {
     * training-data pipeline runs anyway.
     */
   def packCountsMaterialized(perDocCounts: DataFrame, budget: Long,
-      shardSize: Long = 1000L, idCol: String = "doc_id"): DataFrame = {
-    val spark = perDocCounts.sparkSession
-    val path = graft.Spill.newDir("graft-packcounts")
-    perDocCounts.write.mode("overwrite").parquet(path)
-    // explicit schema: skips footer inference AND keeps the zero-row
-    // degenerate case readable (a rowless write leaves no part files)
-    packCounts(spark.read.schema(perDocCounts.schema).parquet(path),
+      shardSize: Long = 1000L, idCol: String = "doc_id"): DataFrame =
+    packCounts(graft.Spill.materialize(perDocCounts, "graft-packcounts"),
       budget, shardSize, idCol)
-  }
 
-  /** Unigram-surprisal quality score — the integer-exact stand-in for the
-    * KenLM-perplexity filter big pipelines run (docs whose average token
-    * surprisal is an outlier on EITHER tail are suspect: too low =
-    * boilerplate/repetitive, too high = gibberish/OCR noise). True
-    * perplexity needs `ln(p)` (libm-dependent); the surrogate keeps the
-    * ordering with pure integer arithmetic: surprisal(tok) =
-    * `(N * 10000) div count(tok)` (the [[tfidfTopTerms]] idf trick), doc
-    * score = integer mean over its tokens.
-    *
-    * Shape: one corpus-wide token count (hash shuffle with map-side
-    * combine), broadcast back onto the exploded tokens — the vocabulary
-    * is orders of magnitude smaller than the corpus; at 100 TB it would
-    * be top-K truncated with a default surprisal for the tail — then one
-    * per-doc aggregation.
+  /** Per-key unigram surprisal: rows keyed by `keys` (a doc id first),
+    * scored by the integer mean ([[keyedMean]]) over the key's tokens of
+    * `(N * 10000) div count(tok)` (the [[tfidfTopTerms]] idf trick).
+    * Output: `keys`, n_tokens, `meanName`. One corpus-wide token count,
+    * broadcast back onto the exploded tokens — the vocabulary is orders
+    * of magnitude smaller than the corpus (at 100 TB it would be top-K
+    * truncated with a default surprisal for the tail).
     */
-  def lmSurprisal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+  private[graft] def unigramSurprisal(docs: DataFrame, keys: Seq[String], textCol: String,
+      meanName: String): DataFrame = {
+    val tok = docs.select(keys.map(col) :+ explode(tokens(col(textCol))).as("tok"): _*)
     val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val n = vocab.agg(sum(col("cnt")).as("n_total"))
-    tok
-      .join(broadcast(vocab), "tok")
-      .crossJoin(broadcast(n))
-      .select(col(idCol), expr("(n_total * 10000) div cnt").as("s"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("s")).as("sum_s"))
-      .select(col(idCol), col("n_tokens"),
-        expr("sum_s div n_tokens").as("avg_surprisal_bp"))
-      .orderBy(col(idCol))
+    keyedMean(tok.join(broadcast(vocab), "tok").crossJoin(broadcast(n))
+      .select(keys.map(col) :+ expr("(n_total * 10000) div cnt").as("s"): _*),
+      keys, "s", "n_tokens", meanName)
   }
 
-  /** CCNet-style perplexity bucketing (Wenzek et al. 2020): split each
-    * language's documents into head / middle / tail TERCILES by LM score —
-    * the partitioning CommonCrawl curation uses to keep the head, sample
-    * the middle, and drop the tail. The score is [[lmSurprisal]]'s
-    * integer-exact unigram surprisal (lower = more fluent, standing in
-    * for CCNet's KenLM perplexity with identical ordering semantics), and
-    * the tercile cut is by COMPETITION RANK: bucket = head iff
-    * `3·rank ≤ n_lang`, middle iff `3·rank ≤ 2·n_lang` — ties share a
-    * rank, so the rule is deterministic and engine-exact, never a float
-    * quantile.
-    *
-    * Same scale discipline as [[qualityFusion]]: the per-lang rank comes
-    * from the (lang, score) HISTOGRAM (value-bounded, collected local,
-    * broadcast back), never a per-lang row window — a one-language corpus
-    * cannot serialize into a single task. The scored table is persisted
-    * for the histogram build and released before the lazy result returns.
-    *
-    * Output: (lang, doc_id, n_tokens, surprisal_bp, bucket) ordered by
-    * (lang, doc_id); docs with no tokens have no score and no row.
+  /** Unigram-surprisal quality score, the integer-exact stand-in for the
+    * KenLM-perplexity filter (docs that are outliers on EITHER tail are
+    * suspect: too low = boilerplate, too high = gibberish/OCR noise):
+    * keyed by doc id, scored by [[unigramSurprisal]], whose linear
+    * surrogate keeps perplexity's ordering without the libm `ln`.
+    * Output: (idCol, n_tokens, avg_surprisal_bp).
+    */
+  def lmSurprisal(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    unigramSurprisal(docs, Seq(idCol), textCol, "avg_surprisal_bp").orderBy(col(idCol))
+
+  /** CCNet-style perplexity bucketing (Wenzek et al. 2020): keyed by
+    * (lang, doc id), each language's documents split into head / middle /
+    * tail TERCILES by [[lmSurprisal]]'s score ([[unigramSurprisal]] with
+    * `lang` carried as an extra key). The cut is by competition rank
+    * ([[histRank]]): head iff `3·rank ≤ n_lang`, middle iff
+    * `3·rank ≤ 2·n_lang` — deterministic and engine-exact, never a float
+    * quantile. The scored table is persisted for the histogram build and
+    * released before the lazy result returns. Output: (lang, doc_id,
+    * n_tokens, surprisal_bp, bucket); docs with no tokens have no row.
     */
   def perplexityBuckets(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def scored(df: DataFrame): DataFrame = {
-      val tok = df.select(col(idCol), col(langCol), explode(tokens(col(textCol))).as("tok"))
-      val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      val n = vocab.agg(sum(col("cnt")).as("n_total"))
-      tok
-        .join(broadcast(vocab), "tok")
-        .crossJoin(broadcast(n))
-        .select(col(idCol), col(langCol), expr("(n_total * 10000) div cnt").as("s"))
-        .groupBy(col(idCol), col(langCol))
-        .agg(count(lit(1)).as("n_tokens"), sum(col("s")).as("sum_s"))
-        .select(col(idCol), col(langCol), col("n_tokens"),
-          expr("sum_s div n_tokens").as("surprisal_bp"))
-    }
+    def scored(df: DataFrame): DataFrame =
+      unigramSurprisal(df, Seq(idCol, langCol), textCol, "surprisal_bp")
     val sp = scored(docs).persist()
-    val w = Window.partitionBy(col(langCol)).orderBy(col("surprisal_bp"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val hist = graft.Local.localized(
-      sp.groupBy(col(langCol), col("surprisal_bp")).agg(count(lit(1)).as("n"))
-        .withColumn("rnk", coalesce(sum(col("n")).over(w), lit(0L)) + 1)
-        .withColumn("n_lang", sum(col("n")).over(Window.partitionBy(col(langCol))))
-        .drop("n"))
+    val hist = histRank(sp, langCol, "surprisal_bp", desc = false, "rnk", Some("n_lang"))
     sp.unpersist(blocking = false)
     scored(docs).join(broadcast(hist), Seq(langCol, "surprisal_bp"))
       .withColumn("bucket",
@@ -1508,7 +1381,6 @@ object TextOps {
     */
   def vocabCoverage(docs: DataFrame, ks: Seq[Int] = Seq(1, 2, 5, 10, 20, 30),
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vocab = docs
       .select(explode(tokens(col(textCol))).as("tok"))
       .groupBy(col("tok"))
@@ -1526,6 +1398,11 @@ object TextOps {
       .orderBy(col("k"))
   }
 
+  /** Quality scoring: fraction of distinct tokens, stopword ratio, a length
+    * saturation term, combined into one score. All ratios are emitted as
+    * integer basis points ([[roundBp]]) so the result hashes identically
+    * across engines.
+    */
   def qualityScore(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val allStops = langMarkers.flatMap(_._2).distinct.sorted
     val toks = tokens(col(textCol))
@@ -1544,21 +1421,14 @@ object TextOps {
       .orderBy(col(idCol))
   }
 
-  /** Curriculum packing — [[packCounts]]' two-level prefix-sum packer
-    * applied in QUALITY order instead of id order: documents fill context
-    * windows best-first ((quality_bp desc, doc_id) — the easy→hard
-    * ordering curriculum training reads), so early sequences carry the
-    * corpus's highest-quality text and the tail sequences its worst.
-    *
-    * The global order is realized WITHOUT a global sort: the running
-    * token offset decomposes as (tokens of strictly better quality
-    * values) + (tokens of same quality in earlier id-shards) + (tokens of
-    * same quality, same shard, smaller id). Level 1 cumulates the
-    * (quality → tokens) histogram — value-bounded, one broadcast; level 2
-    * cumulates per-(quality, shard) totals within each quality — windowed
-    * over the shard histogram, never rows; level 3 is a window over at
-    * most `shardSize` same-(quality, shard) rows. Same discipline as
-    * [[packCounts]], one extra broadcast.
+  /** Curriculum packing: [[packCounts]]' packer in QUALITY order — keyed
+    * by ([[qualityScore]]'s quality_bp desc, doc id), so early sequences
+    * carry the corpus's best text. The running offset decomposes into
+    * three [[sumBefore]] levels, none a global sort: tokens of strictly
+    * better quality values (over the quality histogram, broadcast), of the
+    * same quality in earlier id-shards (over the shard histogram), and of
+    * the same (quality, shard) with smaller ids (a window over at most
+    * `shardSize` rows); [[packInto]] assigns the sequence.
     *
     * Output per packed sequence: (seq_id, n_docs, n_tokens,
     * max_quality_bp, min_quality_bp) — the quality envelope is the
@@ -1567,30 +1437,24 @@ object TextOps {
     */
   def packCurriculum(docs: DataFrame, budget: Long, shardSize: Long = 1000L,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perDoc = qualityScore(docs, idCol, textCol)
       .select(col(idCol), col("quality_bp"), col("n_tokens"),
         expr(s"$idCol div $shardSize").as("shard"))
-    val wQ = Window.orderBy(col("quality_bp").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
     val qOff = perDoc.groupBy(col("quality_bp"))
       .agg(sum(col("n_tokens")).as("q_tokens"))
-      .withColumn("q_off", coalesce(sum(col("q_tokens")).over(wQ), lit(0L)))
+      .withColumn("q_off",
+        sumBefore(col("q_tokens"), Window.orderBy(col("quality_bp").desc)))
       .select(col("quality_bp"), col("q_off"))
-    val wQS = Window.partitionBy(col("quality_bp")).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val qsOff = perDoc.groupBy(col("quality_bp"), col("shard"))
       .agg(sum(col("n_tokens")).as("qs_tokens"))
-      .withColumn("qs_off", coalesce(sum(col("qs_tokens")).over(wQS), lit(0L)))
+      .withColumn("qs_off", sumBefore(col("qs_tokens"),
+        Window.partitionBy(col("quality_bp")).orderBy(col("shard"))))
       .select(col("quality_bp"), col("shard"), col("qs_off"))
-    val wIn = Window.partitionBy(col("quality_bp"), col("shard")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    perDoc
-      .join(broadcast(qOff), "quality_bp")
-      .join(broadcast(qsOff), Seq("quality_bp", "shard"))
-      .withColumn("before", col("q_off") + col("qs_off") +
-        coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
-      .withColumn("seq_id", expr(s"before div $budget"))
+    packInto(
+      perDoc.join(broadcast(qOff), "quality_bp")
+        .join(broadcast(qsOff), Seq("quality_bp", "shard")),
+      col("q_off") + col("qs_off"),
+      Window.partitionBy(col("quality_bp"), col("shard")).orderBy(col(idCol)), budget)
       .groupBy(col("seq_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         max(col("quality_bp")).as("max_quality_bp"),

@@ -73,6 +73,17 @@ class SortOpsSpec extends SparkSpec {
     assert(topk.sameElements(full))
   }
 
+  test("rankedTopK: ranks 1..min(k, n) in key order, later keys break ties") {
+    val df = Seq((3L, "b"), (5L, "a"), (3L, "a"), (1L, "c"), (5L, "b")).toDF("v", "s")
+    val keys = Seq(col("v").desc, col("s"))
+    def ranked(k: Int) = SortOps.rankedTopK(df, k, keys, Seq(col("s"), col("v")))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    assert(ranked(3) == Seq((1, "a", 5L), (2, "b", 5L), (3, "a", 3L)))
+    // k past the row count returns every row, still numbered in key order
+    assert(ranked(10) == Seq((1, "a", 5L), (2, "b", 5L), (3, "a", 3L), (4, "b", 3L), (5, "c", 1L)))
+    assert(SortOps.rankedTopK(df, 2, keys, Seq(col("v"))).columns.toSeq == Seq("rank", "v"))
+  }
+
   test("sort survives injected first-attempt task failure (checkFail parity)") {
     val xs = (1 to 1000).map(i => (i * 37) % 991)
     val flaky = xs.toDF("value").repartition(4).rdd.mapPartitions { it =>

@@ -586,6 +586,21 @@ class TextOpsSpec extends SparkSpec {
     assert(xx.length == 3 && xx.forall(_._4 == "head"))
   }
 
+  test("perplexityBuckets scores every doc exactly as lmSurprisal does, across languages") {
+    val d = Seq(
+      (1L, "the cat sat on the mat", "en"), (2L, "the the the", "en"),
+      (3L, "a rare zebra", "en"), (4L, "", "en"),
+      (10L, "le chat est sur le tapis", "fr"), (11L, "le le chat", "fr"),
+      (12L, "the cat est rare", "fr"))
+      .toDF("doc_id", "text", "lang")
+    val lm = TextOps.lmSurprisal(d).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val buckets = TextOps.perplexityBuckets(d).collect()
+      .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
+    assert(lm.size == 6, s"the empty doc has no score: $lm")
+    assert(buckets == lm)
+  }
+
   test("kneserNeyScore: hand-computed interpolated KN with D=3/4") {
     // corpus bigrams: "a b":2, "b a":1, "a c":1 -> T=3
     // n1(a)=3, n1(b)=1; N1r(a)=2, N1r(b)=1; N1l(a)=1, N1l(b)=1, N1l(c)=1
