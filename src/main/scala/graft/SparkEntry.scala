@@ -42,6 +42,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_sort_total")(spark, "/root/testdata/sf0.001")
 
+  /** The query names of a comma-separated list, trimmed, blanks dropped —
+    * the list every tool main takes; fails naming each undeclared one.
+    */
+  def queryNames(list: String): Seq[String] =
+    requireDeclared(list.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** `names`, when every one is declared; fails naming those that are not. */
+  def requireDeclared(names: Seq[String]): Seq[String] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O1/O6/O7 — total-order sort, the reference's entire query surface

@@ -6,10 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dump (and list in
     // oracle_sql.json) only those, for quick local iteration on new
-    // queries. The driver always calls with 2 args → full dump.
+    // queries; an undeclared name fails before the session starts. The
+    // driver always calls with 2 args → full dump.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.queryNames(args(2)).toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
     // GraftSession, not a bare builder: queries need the engine's session
     // conf (nanosAsLong, UTC) AND the GraftExtensions function registry

@@ -14,8 +14,9 @@ import graft.{GraftSession, SparkEntry}
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <q1>[,<q2>...]")
+    val names = SparkEntry.queryNames(args(1))
     val spark = GraftSession.harness("graft-explain")
-    args(1).split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
+    names.foreach { name =>
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, args(0)).explain("formatted")
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * "is there a duplicate scan / missed exchange reuse here?" question,
   * answered mechanically instead of by eyeballing `.explain` dumps.
   *
-  * Usage: `PlanProbe <sfDir> <q1,q2,...> [full]`
+  * Usage: `PlanProbe <sfDir> <q1,q2,...|all> [full]`
   *
   * Runs each named query to completion (adaptive plans finalize only on
   * execution — the PlanSpec lesson), then prints one summary line per
@@ -117,11 +117,12 @@ object PlanProbe {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: PlanProbe <sfDir> <q1,q2,...|all> [full]")
     val dir = args(0)
     // "all" sweeps every declared query — the per-round snapshot artifact
     val names =
-      if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted.toArray
-      else args(1).split(',').map(_.trim).filter(_.nonEmpty)
+      if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
+      else graft.SparkEntry.queryNames(args(1))
     val full = args.length > 2 && args(2) == "full"
     val spark = graft.GraftSession.harness("graft-planprobe")
     names.foreach { n =>

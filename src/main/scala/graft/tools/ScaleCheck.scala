@@ -38,13 +38,8 @@ object ScaleCheck {
   /** The smallest fixture scale factor (TESTDATA.md), used for warm-up. */
   private val WarmupDir = "/root/testdata/sf0.001"
 
-  private def requireDeclared(names: Seq[String]): Unit = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
-  }
-
   def run(spark: SparkSession, names: Seq[String], dirs: Seq[String]): Seq[Result] = {
-    requireDeclared(names)
+    SparkEntry.requireDeclared(names)
     val queries = SparkEntry.queries
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
@@ -70,8 +65,8 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ScaleCheck <q1,q2,...> <dir1>[,<dir2>...]")
-    val Array(names, dirs) = args.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    requireDeclared(names)
+    val names = SparkEntry.queryNames(args(0))
+    val dirs = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val spark = GraftSession.harness("graft-scalecheck")
     try run(spark, names, dirs) finally spark.stop()
   }

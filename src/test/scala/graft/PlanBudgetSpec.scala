@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.ExplainMode
+
 import graft.tools.PlanProbe
 
 /** Executed-plan BUDGETS for the expensive declared queries — the r14
@@ -29,8 +34,15 @@ import graft.tools.PlanProbe
   * are NOT pinnable here — their final QueryExecution reads the
   * checkpointed RDD, not the parquet pipeline; PlanSpec pins their
   * per-round shapes instead.
+  *
+  * This is the one place tier-1 runs the whole declared surface. The
+  * [[surface]] fixture executes every declared query once, in name order,
+  * on a cache cleared once, and every surface check reads that record:
+  * the pins, the leak bound, the CartesianProduct audit, the condition-
+  * less join audit, and that no query throws or leaves a cached frame.
   */
 class PlanBudgetSpec extends SparkSpec {
+  import PlanBudgetSpec.{Run, Surface}
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -187,12 +199,100 @@ class PlanBudgetSpec extends SparkSpec {
     "q_tpch_q21" -> Pin(3, 2, 0, 2),
     "q_tpch_q2" -> Pin(5, 2, 0, 4))
 
+  private lazy val surface: Surface = {
+    // another suite's cached frame would swap InMemoryRelation in for
+    // parquet scans and silently shrink the counts; "no declared query
+    // leaves a cached frame" keeps the cache empty from here on
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val t0 = System.nanoTime()
+    val leftCached = scala.collection.mutable.ArrayBuffer.empty[String]
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // Throwable, not NonFatal: a StackOverflowError in one deep plan is
+      // that query's failure, and the run goes on
+      val run = try {
+        val df = fn(spark, dir)
+        // read before execution: the initial plan is the one a larger
+        // input would run
+        val cartesian = df.queryExecution
+          .explainString(ExplainMode.fromString("formatted")).contains("CartesianProduct")
+        Right(Run(cartesian, unboundedCrossJoins(df), PlanProbe.budget(df)))
+      } catch { case e: Throwable => Left(e) }
+      if (!cache.isEmpty) leftCached += name
+      name -> run
+    }
+    Surface(runs.toMap, leftCached.toSeq,
+      spark.sparkContext.getPersistentRDDs.size - rddsBefore, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def ran: Seq[(String, Run)] =
+    surface.runs.toSeq.sortBy(_._1).collect { case (name, Right(r)) => name -> r }
+
+  /** Inner or cross joins with no condition in `df`'s optimized plan and
+    * its subqueries, except those with a side of at most one row (a global
+    * aggregate): each is a cartesian product of its inputs. The
+    * CartesianProduct string check alone cannot see one at sf0.001, where
+    * both sides fit under the broadcast threshold and it plans as a
+    * BroadcastNestedLoopJoin.
+    */
+  private def unboundedCrossJoins(df: DataFrame): Seq[Join] =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case j @ Join(l, r, Inner | Cross, None, _)
+          if !Seq(l, r).exists(_.maxRows.exists(_ <= 1)) => j
+    }
+
+  test("declared surface: every declared query runs") {
+    info(f"${surface.runs.size} declared queries ran once in ${surface.seconds}%.1f s")
+    val failed = surface.runs.toSeq.sortBy(_._1).collect { case (name, Left(e)) => s"$name: $e" }
+    assert(failed.isEmpty, s"failed at sf0.001: ${failed.mkString("; ")}")
+  }
+
+  test("declared surface: no declared query leaves a cached frame") {
+    // the first query named left the frame; the rest ran on a cache it
+    // had already filled, which can shrink their scan pins
+    assert(surface.leftCached.isEmpty,
+      s"the CacheManager held a frame after ${surface.leftCached.mkString(", ")}")
+  }
+
+  test("declared surface: persistent RDDs grow by at most the by-design survivors") {
+    // the regression guard for every FUTURE query: bound net growth by
+    // the known by-design survivors (dedupClusters' final local
+    // checkpoint, one per clustering consumer — unpersisting it would be
+    // unrecoverable)
+    val byDesign = 5 // q_dedup_clusters/q_dedup_keep_best/q_dedup_incremental
+                     // final cluster checkpoints + the q_label_prop label
+                     // state and q_kcore core checkpoints
+    assert(surface.rddGrowth <= byDesign,
+      s"net persistent RDDs grew by ${surface.rddGrowth} (> $byDesign)")
+  }
+
+  test("declared surface: no initial plan holds a CartesianProduct") {
+    // a cartesian product is a scale-killer whatever the sf0.001 timing says
+    val cartesian = ran.collect { case (name, r) if r.cartesian => name }
+    assert(cartesian.isEmpty, s"cartesian product in ${cartesian.mkString(", ")}")
+  }
+
+  test("declared surface: every condition-less join has a one-row side") {
+    val flagged = ran.collect { case (name, r) if r.unboundedCross.nonEmpty =>
+      s"$name: ${r.unboundedCross.map(_.simpleString(200)).mkString(" | ")}" }
+    assert(flagged.isEmpty, s"condition-less join of two tables in ${flagged.mkString("; ")}")
+  }
+
+  test("condition-less join audit: flags two tables, passes a one-row side") {
+    import org.apache.spark.sql.functions.count
+    val li = sf("lineitem")
+    assert(unboundedCrossJoins(li.crossJoin(sf("orders"))).size == 1)
+    assert(unboundedCrossJoins(li.crossJoin(li.agg(count("*").as("n")))).isEmpty)
+  }
+
   for ((name, pin) <- pins) {
     test(s"plan budget: $name") {
-      // another suite's cached frame would swap InMemoryRelation in for
-      // parquet scans and silently shrink the counts
-      spark.catalog.clearCache()
-      val b = PlanProbe.budget(SparkEntry.queries(name)(spark, dir))
+      val b = surface.runs.get(name) match {
+        case None => fail(s"$name is not a declared query")
+        case Some(Left(e)) => fail(s"$name failed at sf0.001: $e")
+        case Some(Right(r)) => r.budget
+      }
       info(b.toString)
       assert(b.scans == pin.scans,
         s"$name parquet-scan count moved: got ${b.scans}, pinned ${pin.scans} — " +
@@ -288,4 +388,24 @@ class PlanBudgetSpec extends SparkSpec {
       assert(b.shuffles <= 6, s"census shuffle count grew: $b")
     } finally caches.foreach(_.unpersist(blocking = false))
   }
+}
+
+private object PlanBudgetSpec {
+
+  /** One declared query's execution in the surface fixture: whether its
+    * initial physical plan holds a CartesianProduct, its condition-less
+    * joins with no one-row side, and its executed-plan budget.
+    */
+  final case class Run(
+      cartesian: Boolean, unboundedCross: Seq[Join], budget: PlanProbe.Budget)
+
+  /** The declared surface's one execution: each query's [[Run]] or the
+    * exception it threw, the queries after which the CacheManager held a
+    * frame, the net growth of persistent RDDs and the wall seconds.
+    */
+  final case class Surface(
+      runs: Map[String, Either[Throwable, Run]],
+      leftCached: Seq[String],
+      rddGrowth: Int,
+      seconds: Double)
 }

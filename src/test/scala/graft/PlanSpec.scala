@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.col
   * asserted against the actual Catalyst plan, so a regression that silently
   * un-pushes a filter, drops a broadcast, or turns an equi-join into a
   * cartesian product fails the suite — not a 100 TB run. The
-  * no-CartesianProduct audit of every declared query rides in
-  * CacheLifecycleSpec's global sweep, which builds each query once.
+  * no-CartesianProduct audit of every declared query reads PlanBudgetSpec's
+  * one execution of the declared surface.
   */
 class PlanSpec extends SparkSpec {
 

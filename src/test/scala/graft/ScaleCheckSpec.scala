@@ -31,4 +31,12 @@ class ScaleCheckSpec extends SparkSpec {
       assert(s.tasksCompleted == 0 && s.tasksFailed == 0, s"jobs ran: $s")
     } finally stats.close()
   }
+
+  test("queryNames: trims, drops blanks, and names every undeclared query") {
+    assert(SparkEntry.queryNames(" q_tpch_q6, ,q_sort_total,") == Seq("q_tpch_q6", "q_sort_total"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queryNames("q_tpch_q6,q_no_such_query,q_nor_this")
+    }
+    assert(e.getMessage.contains("q_no_such_query, q_nor_this"), e.getMessage)
+  }
 }
