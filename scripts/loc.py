@@ -5,8 +5,10 @@ A code line is any line that is not blank, not a `//` comment line, and
 not inside a `/* ... */` or scaladoc `/** ... */` block. A line holding
 code before or after a comment still counts as code.
 
-Usage: python3 scripts/loc.py [root ...]
-Prints "<code lines>  <path>" per file, sorted by path, then the total.
+Usage: python3 scripts/loc.py [path ...]
+Each path is a directory (every .scala file under it) or a .scala file.
+Prints "<code lines>  <path>" per file, sorted by path, then the total;
+exits 1 without counting if a path does not exist.
 """
 import os
 import sys
@@ -40,9 +42,12 @@ def code_lines(path):
 
 
 def main(roots):
+    missing = [r for r in roots if not os.path.exists(r)]
+    if missing:
+        sys.exit(f"loc.py: no such path: {', '.join(missing)}")
     total = 0
     for root in roots:
-        files = []
+        files = [root] if os.path.isfile(root) and root.endswith(".scala") else []
         for d, _, names in os.walk(root):
             files += [os.path.join(d, x) for x in names if x.endswith(".scala")]
         for p in sorted(files):

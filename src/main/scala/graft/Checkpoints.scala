@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cut policy for the iterative closures (connected components,
   * label propagation, k-core, IVF assignment reuse).
@@ -53,4 +54,16 @@ object Checkpoints {
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
       df.checkpoint(true)
   }
+
+  /** Release a [[cut]] frame's blocks, non-blocking: unpersist the
+    * checkpointed RDDs its own plan reads (a cut rewrites the plan to a
+    * `LogicalRDD` whose `rdd` holds the blocks, and frames derived from it
+    * with narrow projections read the same one). Never a global
+    * `getPersistentRDDs` delta, which under concurrent queries on a shared
+    * session could unpersist another query's local checkpoint, a loss no
+    * recompute repairs.
+    */
+  def release(cut: DataFrame): Unit =
+    cut.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

@@ -724,25 +724,11 @@ object DedupOps {
   def dedupClustersDetailed(pairs: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
     // Eager localCheckpoint per round truncates the CC loop's otherwise
     // exponentially-nesting lineage. The checkpoint blocks of SUPERSEDED
-    // rounds are released as soon as their successor is materialized. The
-    // checkpointed RDD is taken DIRECTLY off the returned Dataset's plan
-    // (localCheckpoint rewrites it to a LogicalRDD whose `rdd` is the
-    // persisted checkpoint) — never via a global getPersistentRDDs set
-    // delta, which under concurrent queries on a shared session could
-    // capture ANOTHER query's RDDs and unpersist its local checkpoint
-    // (unrecoverable data loss). Only the FINAL round's blocks stay alive
-    // — the caller's lazy result reads them.
-    def checkpointed(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val cp = Checkpoints.cut(df)
-      val rdds = cp.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
-      (cp, rdds)
-    }
-    def release(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdds.foreach(_.unpersist(blocking = false))
+    // rounds are released ([[Checkpoints.release]], off the round's own
+    // plan) as soon as their successor is materialized. Only the FINAL
+    // round's blocks stay alive — the caller's lazy result reads them.
     // canonical big→small orientation; `u` is always the larger endpoint
-    var (edges, edgeIds) = checkpointed(pairs
+    var edges = Checkpoints.cut(pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -764,13 +750,12 @@ object DedupOps {
     var converged = false
     while (!converged && rounds < maxRounds) {
       val obs = org.apache.spark.sql.Observation()
-      val (ss, ssIds) = checkpointed(
+      val ss = Checkpoints.cut(
         ccRound(edges).observe(obs,
           coalesce(max(col("lsc")), lit(false)).as("lsc"),
           coalesce(max(col("ssc")), lit(false)).as("ssc")))
-      release(edgeIds)
+      Checkpoints.release(edges)
       edges = ss.drop("lsc", "ssc")
-      edgeIds = ssIds
       rounds += 1
       converged = !obs.get("lsc").asInstanceOf[Boolean] &&
         !obs.get("ssc").asInstanceOf[Boolean]

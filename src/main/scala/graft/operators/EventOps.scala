@@ -98,32 +98,41 @@ object EventOps {
     * operator makes the distinction explicit).
     *
     * Scale shape: the aggregation is the same single hash-shuffle as
-    * [[tumblingAgg]]; the spine is generated, never scanned — a 1-row
-    * (min, max) span broadcast onto the distinct-type frame, exploded to
-    * O(types x hours) rows, which is microscopic next to the event volume
-    * it indexes (a year of hours is 8,760 rows per type). The fill join
-    * therefore joins two aggregate-sized frames; the raw table is read
-    * exactly twice (span + counts share the type scan's columns) and
-    * nothing unbounded reaches the driver.
+    * [[tumblingAgg]]; the grid is [[denseHours]]' generated spine over
+    * that aggregate, O(types x hours) rows, which is microscopic next to
+    * the event volume it indexes (a year of hours is 8,760 rows per
+    * type). The fill join therefore joins two aggregate-sized frames, the
+    * raw events feed only the aggregation, and nothing unbounded reaches
+    * the driver.
     */
-  def gapFillHourly(events: DataFrame): DataFrame = {
-    val e = normalizeTs(events)
-    val hourly = e
+  def gapFillHourly(events: DataFrame): DataFrame =
+    denseHours(normalizeTs(events)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
       .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-    val span = e.agg(
-      date_trunc("hour", min(col("ts"))).as("h0"),
-      date_trunc("hour", max(col("ts"))).as("h1"))
-    val spine = e.select(col("event_type")).distinct()
+        round(sum(col("value")), 2).as("sum_value")),
+      "n_events" -> lit(0L), "sum_value" -> lit(0.0))
+      .select(col("bucket"), col("event_type"), col("n_events"), col("sum_value"))
+      .orderBy(col("bucket"), col("event_type"))
+
+  /** The dense hourly grid under [[gapFillHourly]] and [[ewmaFromHourly]]:
+    * every (event_type, bucket) of an hourly table's types × the hours
+    * from its first to its last bucket, left-joined to the table with the
+    * `fill` columns coalesced to their zeros. The span and type set come
+    * from the hourly table itself (`date_trunc` is monotonic, so min/max
+    * bucket equal the truncated min/max event ts; a type with any event
+    * has a row here). The spine is generated, never scanned: a 1-row
+    * (h0, h1) span broadcast onto the distinct types, exploded to
+    * O(types × hours) rows.
+    */
+  private def denseHours(hourly: DataFrame, fill: (String, Column)*): DataFrame = {
+    val span = hourly.agg(min(col("bucket")).as("h0"), max(col("bucket")).as("h1"))
+    hourly.select(col("event_type")).distinct()
       .crossJoin(broadcast(span))
       .select(col("event_type"),
         explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("bucket"))
-    spine.join(hourly, Seq("event_type", "bucket"), "left")
-      .select(col("bucket"), col("event_type"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        coalesce(col("sum_value"), lit(0.0)).as("sum_value"))
-      .orderBy(col("bucket"), col("event_type"))
+      .join(hourly, Seq("event_type", "bucket"), "left")
+      .select(col("event_type") +: col("bucket") +:
+        fill.map { case (c, zero) => coalesce(col(c), zero).as(c) }: _*)
   }
 
   /** Exponentially-weighted trailing mean over the gap-filled hourly grid —
@@ -259,23 +268,13 @@ object EventOps {
   }
 
   /** [[ewmaHourly]]'s grid + decay half, computed from a maintained
-    * [[hourlySums]] table instead of raw events. The spine span and type
-    * set derive from the hourly table itself (`date_trunc` is monotonic,
-    * so min/max bucket equal the truncated min/max event ts; a type with
-    * any event has a row here) — identical output to the fused form, over
-    * grid-sized input.
+    * [[hourlySums]] table instead of raw events: the [[denseHours]] grid
+    * of the table (zero `v_bp` in empty hours), then the decay window —
+    * identical output to the fused form, over grid-sized input.
     */
   def ewmaFromHourly(hourly: DataFrame, span: Int = 8): DataFrame = {
     require(span >= 1 && span <= 16, s"span must be in [1,16], got $span")
-    val hspan = hourly.agg(
-      min(col("bucket")).as("h0"), max(col("bucket")).as("h1"))
-    val spine = hourly.select(col("event_type")).distinct()
-      .crossJoin(broadcast(hspan))
-      .select(col("event_type"),
-        explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("bucket"))
-    val grid = spine.join(hourly, Seq("event_type", "bucket"), "left")
-      .select(col("event_type"), col("bucket"),
-        coalesce(col("v_bp"), lit(0L)).as("v_bp"))
+    val grid = denseHours(hourly, "v_bp" -> lit(0L))
     val w = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
     val terms = (0 until span).map { i =>
       val wgt = lit(1L << (span - 1 - i))
@@ -541,13 +540,9 @@ object EventOps {
       trailing: Int = 24,
       madMult: Int = 3,
       minHist: Int = 12): DataFrame = {
-    val hourly = normalizeTs(events)
-      .groupBy(expr("(unix_micros(ts) div 3600000000) * 3600").as("bucket_s"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("bucket_s"))
       .rowsBetween(-trailing, -1)
-    hourly
+    hourlyCounts(events)
       .withColumn("hist", array_sort(collect_list(col("n")).over(w)))
       .filter(size(col("hist")) >= minHist)
       .withColumn("med", expr("element_at(hist, CAST((size(hist) + 1) div 2 AS INT))"))
@@ -558,6 +553,16 @@ object EventOps {
       .select(col("bucket_s"), col("event_type"), col("n"), col("med"), col("mad"))
       .orderBy(col("bucket_s"), col("event_type"))
   }
+
+  /** Events per (hour, event_type), the grid [[hourlyAnomalies]] and
+    * [[cusumShifts]] score: `bucket_s` is the hour's start in epoch
+    * seconds, `n` its event count. One hash aggregation over the events.
+    */
+  private def hourlyCounts(events: DataFrame): DataFrame =
+    normalizeTs(events)
+      .groupBy(expr("(unix_micros(ts) div 3600000000) * 3600").as("bucket_s"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n"))
 
   /** CUSUM level-shift detection over hourly counts — the sustained-DRIFT
     * complement of [[hourlyAnomalies]] (which flags point outliers against
@@ -600,10 +605,7 @@ object EventOps {
     * both CUSUM states and its alarm flag.
     */
   def cusumShifts(events: DataFrame): DataFrame = {
-    val hourly = normalizeTs(events)
-      .groupBy(expr("(unix_micros(ts) div 3600000000) * 3600").as("bucket_s"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(events)
     val totals = hourly.groupBy(col("event_type"))
       .agg(sum(col("n")).as("s"), count(lit(1)).as("c"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("bucket_s"))

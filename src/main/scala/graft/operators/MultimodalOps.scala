@@ -16,11 +16,6 @@ case class MediaFeatures(
     n_px: Long, n_runs: Long, comp_bytes: Long, ratio_bp: Long,
     r_mean: Long, g_mean: Long, b_mean: Long)
 
-/** REAL decode output of the uncompressed-bitmap format planted by
-  * [[MultimodalOps.plantPixels]]: per-channel mean (integer floor) and
-  * extremes over the raw interleaved-RGB pixel block — every value parsed
-  * back out of the payload bytes (see [[MultimodalOps.decodePixels]]).
-  */
 /** One content-defined chunk of a binary payload ([[MultimodalOps.cdcChunks]]):
   * byte range [start, start+len) and its content hash.
   */
@@ -33,6 +28,11 @@ case class MediaChunk(media_id: Long, chunk_idx: Long, start: Long, len: Long, c
   */
 case class MediaPhash(media_id: Long, kind: String, bands: Seq[Long])
 
+/** REAL decode output of the uncompressed-bitmap format planted by
+  * [[MultimodalOps.plantPixels]]: per-channel mean (integer floor) and
+  * extremes over the raw interleaved-RGB pixel block — every value parsed
+  * back out of the payload bytes (see [[MultimodalOps.decodePixels]]).
+  */
 case class MediaPixels(
     media_id: Long, kind: String, width: Long, height: Long, n_px: Long,
     r_mean: Long, g_mean: Long, b_mean: Long,
@@ -50,17 +50,84 @@ case class MediaPixels(
   *
   * Decoding: no image/audio codecs exist in this container, so the decode
   * surface covers both halves of a real codec with formats whose bytes are
-  * genuinely parsed. [[decodePixels]] decodes an UNCOMPRESSED bitmap —
-  * magic, big-endian dims, raw RGB block, planted by [[plantPixels]] —
-  * with per-channel statistics computed only from the parsed bytes.
-  * [[decodeFeatures]] decodes a COMPRESSED variant of the same family
-  * ([[plantRle]]: run-length-encoded pixel stream), running an actual
-  * decompression loop in the typed `Dataset[MediaRow]` per-partition batch
-  * path (the Scala analog of `mapInPandas` batching, decoder state once
-  * per partition). Nothing is stubbed in either path: corrupt one payload
-  * byte and the output moves (spec-pinned for both).
+  * genuinely parsed. Both share one container layout:
+  *
+  * {{{
+  * bytes 0-3    magic: "GRFT" (raw bitmap) or "GRFZ" (run-length bitmap)
+  * bytes 4-7    width w >= 1, big-endian unsigned int32
+  * bytes 8-11   height h >= 1, big-endian unsigned int32
+  * bytes 12-    GRFT: the w*h*3 interleaved RGB bytes, row-major
+  *              GRFZ: (count, value) byte pairs, at least one, whose runs
+  *              expand to those w*h*3 bytes
+  * }}}
+  *
+  * [[header]] is the one reader of that layout and [[grfPayload]] (with
+  * [[planted]]'s dims rule) the one writer. A payload the reader rejects
+  * takes the dead-letter path: it is dropped from the decoder's output,
+  * never a task failure. [[decodePixels]], [[resizePixels]] and
+  * [[phashBands]] decode GRFT ([[plantPixels]], [[plantPhashCorpus]]);
+  * [[decodeFeatures]] decompresses GRFZ ([[plantRle]]). Each decoder is a
+  * typed `Dataset[MediaRow]` flatMap, one MapPartitions batch stage (the
+  * Scala analog of `mapInPandas`), executor-parallel with no driver
+  * involvement. Nothing is stubbed: corrupt one payload byte and the
+  * output moves (spec-pinned for every decoder).
   */
 object MultimodalOps {
+
+  private val Grft = Array[Byte](0x47, 0x52, 0x46, 0x54) // "GRFT"
+  private val Grfz = Array[Byte](0x47, 0x52, 0x46, 0x5a) // "GRFZ"
+
+  private def be32(b: Array[Byte], off: Int): Long =
+    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
+      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
+
+  /** The container reader (layout in the [[MultimodalOps]] scaladoc):
+    * `(w, h)` iff `b` starts with `magic`, both dims are ≥ 1 and the body
+    * has the format's length — exactly w·h·3 bytes for GRFT, at least one
+    * pair for GRFZ; None is the dead-letter path.
+    */
+  private def header(b: Array[Byte], magic: Array[Byte]): Option[(Long, Long)] =
+    if (b.length < 12 || !b.startsWith(magic)) None
+    else {
+      val (w, h) = (be32(b, 4), be32(b, 8))
+      val body = b.length - 12L
+      val sized = if (magic eq Grfz) body >= 2 else body == w * h * 3
+      Option.when(w >= 1 && h >= 1 && sized)((w, h))
+    }
+
+  /** Nearest-neighbour sample of a w × h GRFT image at `outW` × `outH`:
+    * the body offset of each output pixel's source, row-major. Output
+    * (x, y) reads source `(x·w div outW, y·h div outH)` — integer index
+    * arithmetic the oracles replay exactly.
+    */
+  private def nearest(w: Long, h: Long, outW: Int, outH: Int): Array[Int] =
+    Array.tabulate(outW * outH) { j =>
+      val (sx, sy) = (j % outW * w / outW, j / outW * h / outH)
+      12 + ((sy * w + sx) * 3).toInt
+    }
+
+  /** Two-digit lowercase hex of a byte-valued column. */
+  private def hexByte(v: Column): Column = lpad(lower(hex(v)), 2, "0")
+
+  /** Header hex: a 4-byte magic, then `w` and `h` as big-endian int32s. */
+  private def headerHex(magicHex: String, w: Column, h: Column): Seq[Column] =
+    Seq(lit(magicHex), lpad(lower(hex(w)), 8, "0"), lpad(lower(hex(h)), 8, "0"))
+
+  /** A planted GRFT/GRFZ payload: header + `bodyHex`, as binary. */
+  private def grfPayload(magic: Array[Byte], w: Column, h: Column, bodyHex: Column): Column =
+    to_binary(concat(headerHex(magic.map("%02x".format(_)).mkString, w, h) :+ bodyHex: _*),
+      lit("hex")).as("payload")
+
+  /** The planted dims rule of every GRFT/GRFZ plant, from the key `k`
+    * (media id, or group for the phash corpus): w ∈ [2,10], h ∈ [2,8] —
+    * the format, not the byte volume, is what is under test.
+    */
+  private def planted(k: Column): (Column, Column) =
+    (pmod(k * 3 + 2, lit(9)) + 2, pmod(k * 5 + 1, lit(7)) + 2)
+
+  /** The hex of a raw w·h·3-byte GRFT body whose byte i is `px(i) mod 256`. */
+  private def rawBodyHex(w: Column, h: Column)(px: Column => Column): Column =
+    array_join(transform(sequence(lit(0L), w * h * 3 - 1), i => hexByte(pmod(px(i), lit(256)))), "")
 
   /** Derive the media table: payload = UTF-8 bytes of `text`, kind assigned
     * round-robin (image/audio/video) by id. Deterministic on both engines.
@@ -115,11 +182,7 @@ object MultimodalOps {
     val h = pmod(col("media_id") * 53 + 48, lit(2160)) + 1
     media.select(
       col("media_id"), col("kind"),
-      concat(
-        to_binary(concat(
-          lit("89504e47"),
-          lpad(lower(hex(w)), 8, "0"),
-          lpad(lower(hex(h)), 8, "0")), lit("hex")),
+      concat(to_binary(concat(headerHex("89504e47", w, h): _*), lit("hex")),
         col("payload")).as("payload"))
   }
 
@@ -139,74 +202,46 @@ object MultimodalOps {
       (length(col("payload")) - 12).cast("long").as("body_bytes"))
       .orderBy(col("media_id"))
 
-  /** Plant a complete uncompressed bitmap — "GRFT" magic + big-endian int32
-    * width/height + interleaved raw RGB pixel bytes (the PPM/BMP shape) —
-    * replacing each payload. Pixel byte i is `(media_id*31 + i*7) % 256`,
-    * channel `i % 3`, so the DuckDB oracle can compute ground-truth channel
-    * statistics from the same generative formula while the Spark side
-    * genuinely parses them back out of the binary. Dims are kept small
-    * (w ∈ [2,10], h ∈ [2,8]) — the format, not the byte volume, is what is
-    * under test.
+  /** Plant a complete uncompressed GRFT bitmap (the PPM/BMP shape) in place
+    * of each payload, dims by [[planted]] from the id. Pixel byte i is
+    * `(media_id*31 + i*7) % 256`, channel `i % 3`, so the DuckDB oracle can
+    * compute ground-truth channel statistics from the same generative
+    * formula while the Spark side genuinely parses them back out of the
+    * binary.
     */
   def plantPixels(media: DataFrame): DataFrame = {
-    val w = pmod(col("media_id") * 3 + 2, lit(9)) + 2
-    val h = pmod(col("media_id") * 5 + 1, lit(7)) + 2
-    val nBytes = w * h * 3
-    val pixHex = array_join(
-      transform(sequence(lit(0L), nBytes - 1),
-        i => lpad(lower(hex(pmod(col("media_id") * 31 + i * 7, lit(256)))), 2, "0")),
-      "")
+    val (w, h) = planted(col("media_id"))
     media.select(
       col("media_id"), col("kind"),
-      to_binary(concat(
-        lit("47524654"), // "GRFT"
-        lpad(lower(hex(w)), 8, "0"),
-        lpad(lower(hex(h)), 8, "0"),
-        pixHex), lit("hex")).as("payload"))
+      grfPayload(Grft, w, h, rawBodyHex(w, h)(i => col("media_id") * 31 + i * 7)))
   }
 
-  /** The REAL decode: parse the [[plantPixels]] bitmap format back out of
-    * the payload bytes — magic check, big-endian dimension fields, then one
-    * pass over the interleaved RGB pixel block accumulating per-channel
-    * sum/min/max. Nothing here is faked: every output value exists only in
-    * the binary. Same executor-parallel typed `mapPartitions` batch shape
-    * as [[decodeFeatures]] (decoder state once per partition, rows stream
-    * through); payloads failing the magic/length check are routed out of
-    * the batch (a production pipeline's dead-letter path).
+  /** The REAL decode of a GRFT bitmap (layout in the [[MultimodalOps]]
+    * scaladoc; planted by [[plantPixels]]): the [[header]] check, then one
+    * pass over the interleaved RGB block accumulating per-channel
+    * sum/min/max. Every output value exists only in the binary.
     */
   def decodePixels(media: Dataset[MediaRow]): Dataset[MediaPixels] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val magic = Array[Byte](0x47, 0x52, 0x46, 0x54) // "GRFT"
-      def be32(b: Array[Byte], off: Int): Long =
-        ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-          ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-      rows.flatMap { r =>
-        val b = r.payload
-        if (b.length < 12 || !b.take(4).sameElements(magic)) None
-        else {
-          val w = be32(b, 4)
-          val h = be32(b, 8)
-          val nPx = w * h
-          if (b.length.toLong != 12L + nPx * 3) None
-          else {
-            val sums = new Array[Long](3)
-            val mins = Array(256L, 256L, 256L)
-            val maxs = Array(-1L, -1L, -1L)
-            var i = 0
-            while (i < nPx * 3) {
-              val v = (b(12 + i) & 0xff).toLong
-              val ch = i % 3
-              sums(ch) += v
-              if (v < mins(ch)) mins(ch) = v
-              if (v > maxs(ch)) maxs(ch) = v
-              i += 1
-            }
-            Some(MediaPixels(r.media_id, r.kind, w, h, nPx,
-              sums(0) / nPx, sums(1) / nPx, sums(2) / nPx,
-              mins(0), maxs(0), mins(1), maxs(1), mins(2), maxs(2)))
-          }
+    media.flatMap { r =>
+      val b = r.payload
+      header(b, Grft).map { case (w, h) =>
+        val nPx = w * h
+        val sums = new Array[Long](3)
+        val mins = Array(256L, 256L, 256L)
+        val maxs = Array(-1L, -1L, -1L)
+        var i = 0
+        while (i < nPx * 3) {
+          val v = (b(12 + i) & 0xff).toLong
+          val ch = i % 3
+          sums(ch) += v
+          if (v < mins(ch)) mins(ch) = v
+          if (v > maxs(ch)) maxs(ch) = v
+          i += 1
         }
+        MediaPixels(r.media_id, r.kind, w, h, nPx,
+          sums(0) / nPx, sums(1) / nPx, sums(2) / nPx,
+          mins(0), maxs(0), mins(1), maxs(1), mins(2), maxs(2))
       }
     }
   }
@@ -217,161 +252,103 @@ object MultimodalOps {
     decodePixels(media.as[MediaRow]).toDF().orderBy(col("media_id"))
   }
 
-  /** REAL resize of the [[plantPixels]] bitmap — nearest-neighbor
-    * downsample to `outW` x `outH` on the decoded pixel block, the
-    * thumbnail/normalize step a multimodal pipeline runs between decode
-    * and feature extraction. Source pixel for output (x, y) is
-    * `(x * w_in div outW, y * h_in div outH)` — pure integer index
-    * arithmetic on genuinely parsed bytes, so the oracle can mirror it
-    * from the generative formula while the Spark side only ever reads the
-    * binary. Emits the resized image's per-channel means plus a checksum
-    * (sum of all sampled bytes) — an exact fingerprint of the resized
-    * pixel matrix. Same typed per-partition batch path as [[decodePixels]];
-    * malformed payloads take the dead-letter path.
+  /** REAL resize of a GRFT bitmap (layout in the [[MultimodalOps]]
+    * scaladoc): the [[header]] check, then the [[nearest]] sample at
+    * `outW` x `outH` of the pixel block — the thumbnail/normalize step a
+    * multimodal pipeline runs between decode and feature extraction. The
+    * oracle mirrors the index arithmetic from the generative formula while
+    * the Spark side only ever reads the binary. Emits the resized image's
+    * per-channel means plus a checksum (sum of all sampled bytes) — an
+    * exact fingerprint of the resized pixel matrix.
     *
     * Output: (media_id, kind, width, height, r_mean, g_mean, b_mean,
     * checksum), width/height = the OUTPUT dims.
     */
   def resizePixels(media: Dataset[MediaRow], outW: Int, outH: Int): DataFrame = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val magic = Array[Byte](0x47, 0x52, 0x46, 0x54) // "GRFT"
-      def be32(b: Array[Byte], off: Int): Long =
-        ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-          ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-      rows.flatMap { r =>
-        val b = r.payload
-        if (b.length < 12 || !b.take(4).sameElements(magic)) None
-        else {
-          val w = be32(b, 4)
-          val h = be32(b, 8)
-          if (w < 1 || h < 1 || b.length.toLong != 12L + w * h * 3) None
-          else {
-            val sums = new Array[Long](3)
-            var checksum = 0L
-            var y = 0
-            while (y < outH) {
-              val sy = y * h / outH
-              var x = 0
-              while (x < outW) {
-                val sx = x * w / outW
-                val base = 12 + ((sy * w + sx) * 3).toInt
-                var ch = 0
-                while (ch < 3) {
-                  val v = (b(base + ch) & 0xff).toLong
-                  sums(ch) += v
-                  checksum += v
-                  ch += 1
-                }
-                x += 1
-              }
-              y += 1
-            }
-            val nPx = outW.toLong * outH
-            Some((r.media_id, r.kind, outW.toLong, outH.toLong,
-              sums(0) / nPx, sums(1) / nPx, sums(2) / nPx, checksum))
-          }
-        }
+    val nPx = outW.toLong * outH
+    media.flatMap { r =>
+      val b = r.payload
+      header(b, Grft).map { case (w, h) =>
+        val sums = new Array[Long](3)
+        for (o <- nearest(w, h, outW, outH); ch <- 0 until 3) sums(ch) += b(o + ch) & 0xff
+        (r.media_id, r.kind, outW.toLong, outH.toLong,
+          sums(0) / nPx, sums(1) / nPx, sums(2) / nPx, sums.sum)
       }
     }.toDF("media_id", "kind", "width", "height",
       "r_mean", "g_mean", "b_mean", "checksum")
       .orderBy(col("media_id"))
   }
 
-  /** Plant an RLE-COMPRESSED bitmap — "GRFZ" magic + big-endian int32
-    * width/height + a run-length-encoded pixel stream of (count, value)
-    * byte pairs expanding to the w·h·3 interleaved RGB block — replacing
-    * each payload. The pixel matrix is generated in runs so the
-    * compression is real: run length `R = media_id % 5 + 3` (constant per
-    * item), run j's value is `(media_id*31 + j*7) % 256`, so decompressed
-    * pixel byte i equals `(media_id*31 + (i div R)*7) % 256` — a formula
-    * the DuckDB oracle replays for ground truth while the Spark side only
-    * ever reads the compressed binary. Same dims family as [[plantPixels]].
+  /** Plant an RLE-COMPRESSED GRFZ bitmap in place of each payload, dims by
+    * [[planted]] from the id (the [[plantPixels]] family). The pixel
+    * matrix is generated in runs so the compression is real: run length
+    * `R = media_id % 5 + 3` (constant per item), run j's value is
+    * `(media_id*31 + j*7) % 256`, so decompressed pixel byte i equals
+    * `(media_id*31 + (i div R)*7) % 256` — a formula the DuckDB oracle
+    * replays for ground truth while the Spark side only ever reads the
+    * compressed binary.
     */
   def plantRle(media: DataFrame): DataFrame = {
+    val (w, h) = planted(col("media_id"))
     val pairsHex = array_join(
       transform(sequence(lit(0L), col("k") - 1), j => concat(
-        lpad(lower(hex(least(col("r"), col("n") - j * col("r")))), 2, "0"),
-        lpad(lower(hex(pmod(col("media_id") * 31 + j * 7, lit(256)))), 2, "0"))),
+        hexByte(least(col("r"), col("n") - j * col("r"))),
+        hexByte(pmod(col("media_id") * 31 + j * 7, lit(256))))),
       "")
     media
-      .withColumn("w", pmod(col("media_id") * 3 + 2, lit(9)) + 2)
-      .withColumn("h", pmod(col("media_id") * 5 + 1, lit(7)) + 2)
+      .withColumn("w", w)
+      .withColumn("h", h)
       .withColumn("r", pmod(col("media_id"), lit(5)) + 3)
       .withColumn("n", col("w") * col("h") * 3)
       .withColumn("k", expr("(n + r - 1) div r"))
-      .select(
-        col("media_id"), col("kind"),
-        to_binary(concat(
-          lit("4752465a"), // "GRFZ"
-          lpad(lower(hex(col("w"))), 8, "0"),
-          lpad(lower(hex(col("h"))), 8, "0"),
-          pairsHex), lit("hex")).as("payload"))
+      .select(col("media_id"), col("kind"), grfPayload(Grfz, col("w"), col("h"), pairsHex))
   }
 
-  /** The compressed-decode step — a REAL decompression loop, not a stub:
-    * parse the [[plantRle]] container (magic, big-endian dims), then walk
-    * the run-length stream expanding each (count, value) pair into the
-    * interleaved RGB index space while accumulating per-channel sums. The
-    * channel means exist ONLY in the decompressed stream — corrupting one
-    * compressed value byte moves them, corrupting a count byte breaks the
-    * expansion invariant and dead-letters the row (both spec-pinned).
-    *
-    * Plumbing shape shared with [[decodePixels]]: typed input/output
-    * schemas, `mapPartitions` so decoder state is initialized once per
-    * PARTITION (not per row) and rows stream through as a batch iterator,
-    * executor-parallel, no driver involvement. Payloads failing magic,
-    * length-parity, run-bounds, or total-size checks take the dead-letter
-    * path. Also emits the compression metadata a pipeline records at this
-    * step: run count, compressed size, and compressed/raw ratio in bp.
+  /** The compressed-decode step — a REAL decompression loop, not a stub,
+    * of a GRFZ bitmap (layout in the [[MultimodalOps]] scaladoc): the
+    * [[header]] check plus GRFZ's own length-parity rule (whole pairs),
+    * then a walk over the run-length stream expanding each (count, value)
+    * pair into the interleaved RGB index space while accumulating
+    * per-channel sums. The channel means exist ONLY in the
+    * decompressed stream — corrupting one compressed value byte moves
+    * them, corrupting a count byte breaks the expansion invariant and
+    * dead-letters the row (both spec-pinned), as does a zero-count run or
+    * runs that do not expand to exactly w·h·3 bytes. Also emits the
+    * compression metadata a pipeline records at this step: run count,
+    * compressed size, and compressed/raw ratio in bp.
     */
   def decodeFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val magic = Array[Byte](0x47, 0x52, 0x46, 0x5a) // "GRFZ"
-      def be32(b: Array[Byte], off: Int): Long =
-        ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-          ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-      rows.flatMap { r =>
-        val b = r.payload
-        if (b.length < 14 || (b.length - 12) % 2 != 0 ||
-          !b.take(4).sameElements(magic)) None
-        else {
-          val w = be32(b, 4)
-          val h = be32(b, 8)
-          val nPx = w * h
-          val n = nPx * 3
-          if (w < 1 || h < 1) None
+    media.flatMap { r =>
+      val b = r.payload
+      header(b, Grfz).filter(_ => (b.length - 12) % 2 == 0).flatMap { case (w, h) =>
+        val nPx = w * h
+        val n = nPx * 3
+        // the decompression loop: expand each (count, value) pair into
+        // the interleaved channel space; i is the decompressed index
+        val sums = new Array[Long](3)
+        var i = 0L
+        var p = 12
+        var ok = true
+        while (ok && p < b.length) {
+          val c = b(p) & 0xff
+          val v = (b(p + 1) & 0xff).toLong
+          if (c == 0 || i + c > n) ok = false
           else {
-            // the decompression loop: expand each (count, value) pair into
-            // the interleaved channel space; i is the decompressed index
-            val sums = new Array[Long](3)
-            var i = 0L
-            var p = 12
-            var ok = true
-            while (ok && p < b.length) {
-              val c = b(p) & 0xff
-              val v = (b(p + 1) & 0xff).toLong
-              if (c == 0 || i + c > n) ok = false
-              else {
-                var t = 0L
-                while (t < c) {
-                  sums(((i + t) % 3).toInt) += v
-                  t += 1
-                }
-                i += c
-              }
-              p += 2
+            var t = 0L
+            while (t < c) {
+              sums(((i + t) % 3).toInt) += v
+              t += 1
             }
-            if (!ok || i != n) None
-            else {
-              val comp = b.length.toLong
-              Some(MediaFeatures(r.media_id, r.kind, w, h, nPx,
-                (b.length - 12L) / 2, comp, comp * 10000L / (n + 12),
-                sums(0) / nPx, sums(1) / nPx, sums(2) / nPx))
-            }
+            i += c
           }
+          p += 2
         }
+        val comp = b.length.toLong
+        Option.when(ok && i == n)(MediaFeatures(r.media_id, r.kind, w, h, nPx,
+          (b.length - 12L) / 2, comp, comp * 10000L / (n + 12),
+          sums(0) / nPx, sums(1) / nPx, sums(2) / nPx))
       }
     }
   }
@@ -383,8 +360,8 @@ object MultimodalOps {
   }
 
   /** Plant a perceptual-dedup corpus: groups of `groupSize` consecutive ids
-    * share ONE base image ([[plantPixels]] format, dims and pixels derived
-    * from `grp = media_id div groupSize`), with each in-group variant
+    * share ONE base GRFT image (dims by [[planted]] and pixels derived from
+    * `grp = media_id div groupSize`), with each in-group variant
     * brightness-shifted by `(media_id mod groupSize) * shiftStep` (mod 256,
     * so a few high pixels wrap — realistic clipping noise). Exact-hash
     * dedup ([[mediaMeta]]'s md5) sees every variant as unique; the
@@ -414,9 +391,7 @@ object MultimodalOps {
       strideMod: Int = 0): DataFrame = {
     val grp = expr(s"media_id div $groupSize")
     val shift = pmod(col("media_id"), lit(groupSize)) * shiftStep
-    val w = pmod(grp * 3 + 2, lit(9)) + 2
-    val h = pmod(grp * 5 + 1, lit(7)) + 2
-    val nBytes = w * h * 3
+    val (w, h) = planted(grp)
     // strideMod > 0 varies the pixel-ramp stride per group (7 + grp mod
     // strideMod) — the LINEAR-term entropy knob (kept for the decade
     // tools' corpus-scaled sweeps); the quadratic s2 term below is what
@@ -424,17 +399,9 @@ object MultimodalOps {
     val stride = if (strideMod > 0) pmod(grp, lit(strideMod)) + 7 else lit(7)
     // i ≤ 240 ⇒ i²·s2 ≤ 240²·255 < 2^24 — exact in longs on both engines
     val s2 = pmod(graft.functions.StableHash.hash60(grp.cast("string")), lit(256))
-    val pixHex = array_join(
-      transform(sequence(lit(0L), nBytes - 1),
-        i => lpad(lower(hex(pmod(grp * 31 + i * stride + i * i * s2 + shift, lit(256)))), 2, "0")),
-      "")
     media.select(
       col("media_id"), col("kind"),
-      to_binary(concat(
-        lit("47524654"), // "GRFT"
-        lpad(lower(hex(w)), 8, "0"),
-        lpad(lower(hex(h)), 8, "0"),
-        pixHex), lit("hex")).as("payload"))
+      grfPayload(Grft, w, h, rawBodyHex(w, h)(i => grp * 31 + i * stride + i * i * s2 + shift)))
   }
 
   /** [[plantPhashCorpus]] at a density that crosses [[phashGridFor]]'s
@@ -482,57 +449,29 @@ object MultimodalOps {
     plantPhashCorpus(expanded, groupSize, shiftStep, strideMod)
   }
 
-  /** REAL perceptual average-hash (aHash) decode: parse the [[plantPixels]]
-    * bitmap, nearest-neighbor-sample a `grid` x `grid` luminance matrix
-    * (gray = r+g+b per sampled pixel — a sum, no division, so both engines
-    * agree exactly), and set bit `j` iff `grid² * gray_j > Σ gray` (strict
-    * compare against the mean without ever forming a fraction). The 64 bits
-    * (grid=8, the standard aHash shape) are emitted as `grid` per-row band
-    * bytes rather than one int64 so downstream banding never touches the
-    * sign bit. Same typed `mapPartitions` batch path and dead-letter rules
-    * as [[decodePixels]]; every hash bit exists only in the payload bytes
-    * (corrupt one pixel byte and the hash moves — spec-pinned).
+  /** REAL perceptual average-hash (aHash) decode of a GRFT bitmap (layout
+    * in the [[MultimodalOps]] scaladoc): the [[header]] check, the [[nearest]] `grid` x `grid` sample as a
+    * luminance matrix (gray = r+g+b per sampled pixel — a sum, no division,
+    * so both engines agree exactly), and bit `j` set iff
+    * `grid² * gray_j > Σ gray` (strict compare against the mean without
+    * ever forming a fraction). The 64 bits (grid=8, the standard aHash
+    * shape) are emitted as `grid` per-row band bytes rather than one int64
+    * so downstream banding never touches the sign bit. Every hash bit
+    * exists only in the payload bytes (corrupt one pixel byte and the hash
+    * moves — spec-pinned).
     */
   def phashBands(media: Dataset[MediaRow], grid: Int = 8): Dataset[MediaPhash] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val magic = Array[Byte](0x47, 0x52, 0x46, 0x54) // "GRFT"
-      def be32(b: Array[Byte], off: Int): Long =
-        ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-          ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-      rows.flatMap { r =>
-        val b = r.payload
-        if (b.length < 12 || !b.take(4).sameElements(magic)) None
-        else {
-          val w = be32(b, 4)
-          val h = be32(b, 8)
-          if (w < 1 || h < 1 || b.length.toLong != 12L + w * h * 3) None
-          else {
-            val gray = new Array[Long](grid * grid)
-            var total = 0L
-            var gy = 0
-            while (gy < grid) {
-              val sy = gy * h / grid
-              var gx = 0
-              while (gx < grid) {
-                val sx = gx * w / grid
-                val base = 12 + ((sy * w + sx) * 3).toInt
-                val g = (b(base) & 0xffL) + (b(base + 1) & 0xffL) + (b(base + 2) & 0xffL)
-                gray(gy * grid + gx) = g
-                total += g
-                gx += 1
-              }
-              gy += 1
-            }
-            val bands = new Array[Long](grid)
-            var j = 0
-            while (j < grid * grid) {
-              if (gray(j) * grid * grid > total) bands(j / grid) |= 1L << (j % grid)
-              j += 1
-            }
-            Some(MediaPhash(r.media_id, r.kind, bands.toSeq))
-          }
-        }
+    media.flatMap { r =>
+      val b = r.payload
+      header(b, Grft).map { case (w, h) =>
+        val gray = nearest(w, h, grid, grid)
+          .map(o => (b(o) & 0xffL) + (b(o + 1) & 0xffL) + (b(o + 2) & 0xffL))
+        val total = gray.sum
+        val bands = new Array[Long](grid)
+        for (j <- gray.indices if gray(j) * grid * grid > total)
+          bands(j / grid) |= 1L << (j % grid)
+        MediaPhash(r.media_id, r.kind, bands.toSeq)
       }
     }
   }
@@ -667,58 +606,55 @@ object MultimodalOps {
   def phashGridFor(pairingUniverse: Long): Int =
     if (pairingUniverse <= 8L * (1L << 8)) 8 else 16
 
+  /** The grid probe of the phash family, the one place it is written: the
+    * grid-8 sketch, materialized ([[Checkpoints.cut]]), and the grid
+    * [[phashGridFor]] derives from its distinct-hash universe (one
+    * count() on the materialized frame). The caller owns the sketch's
+    * blocks: it pairs or audits the sketch itself when the grid is 8, and
+    * [[Checkpoints.release]]s it otherwise.
+    */
+  private def probe(media: DataFrame): (DataFrame, Int) = {
+    import media.sparkSession.implicits._
+    val sk8 = graft.Checkpoints.cut(phashBands(media.as[MediaRow], 8).toDF())
+    (sk8, phashGridFor(sk8.select(col("bands")).distinct().count()))
+  }
+
   /** CORPUS-DERIVED `grid` for the phash family — the last fixed key
     * space closed, by the [[graft.operators.SimOps.autoSignBits]] recipe:
-    * one probe pass hashes at the BASE grid (8, the standard 64-bit
-    * aHash), one count() measures the distinct-hash universe (the
-    * exact-dedup-first pairing universe), and [[phashGridFor]] picks the
-    * smallest grid whose band-key space `grid · 2^grid` holds it at ≤ 1
-    * expected occupancy. The probe costs one extra decode + distinct
-    * scan — the id-domain probe a production run amortizes by caching the
-    * sketch table; counting at the base grid breaks the circularity that
-    * the universe at grid g needs grid g (the grid-8 universe
-    * lower-bounds every finer grid's, so a space sized for it only ever
-    * errs toward re-hashing finer). [[autoPhashGridSql]] mirrors the rule
-    * for DuckDB over a grid-8 hash relation.
+    * the [[probe]] hashes at the BASE grid (8, the standard 64-bit aHash),
+    * counts the distinct-hash universe (the exact-dedup-first pairing
+    * universe), and [[phashGridFor]] picks the smallest grid whose
+    * band-key space `grid · 2^grid` holds it at ≤ 1 expected occupancy;
+    * the probe's sketch is released before returning. Counting at the
+    * base grid breaks the circularity that the universe at grid g needs
+    * grid g (the grid-8 universe lower-bounds every finer grid's, so a
+    * space sized for it only ever errs toward re-hashing finer).
+    * [[autoPhashGridSql]] mirrors the rule for DuckDB over a grid-8 hash
+    * relation.
     */
   def autoPhashGrid(media: DataFrame): Int = {
-    import media.sparkSession.implicits._
-    val universe = phashBands(media.as[MediaRow], 8).toDF()
-      .select(col("bands")).distinct().count()
-    phashGridFor(universe)
+    val (sk8, grid) = probe(media)
+    graft.Checkpoints.release(sk8)
+    grid
   }
 
   /** Probe + pair with ONE decode (r20, guide §1.2 step 1 — don't compute
-    * things you throw away): the pre-r20 declared shape
-    * `phashPairs(m, grid = autoPhashGrid(m))` decoded the corpus once for
-    * the grid probe and then AGAIN for the pairing even when the derived
-    * grid was the probe's own grid 8 (the common case — every declared
-    * corpus except the dense plant). Here the probe's sketch is
-    * materialized first ([[Checkpoints.cut]]), the universe count runs on
-    * the materialized frame, and the grid-8 path hands that same frame to
+    * things you throw away): at the derived grid 8 (every declared corpus
+    * except the dense plant) the [[probe]]'s own sketch goes to
     * [[phashPairsOfSketch]] — zero extra passes. Only a derived grid 16
-    * re-hashes (a FINER fingerprint is a different hash — unavoidable by
-    * construction, and the probe then cost one decode of a corpus whose
-    * pairing leg pays many). Grid decision and pair output are
-    * bit-identical to the two-pass shape: same universe count, same
-    * [[phashGridFor]] rule, same pairing body.
+    * releases the probe sketch and re-hashes (a FINER fingerprint is a
+    * different hash — unavoidable by construction). Grid decision and pair
+    * output are bit-identical to `phashPairs(m, grid = autoPhashGrid(m))`.
     */
   def phashPairsAuto(
       media: DataFrame,
       maxDist: Int = 6,
       groupSize: Int = 4,
       maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
-    import media.sparkSession.implicits._
-    val sk8 = graft.Checkpoints.cut(phashBands(media.as[MediaRow], 8).toDF())
-    val universe = sk8.select(col("bands")).distinct().count()
-    val grid = phashGridFor(universe)
+    val (sk8, grid) = probe(media)
     if (grid == 8) phashPairsOfSketch(sk8, 8, maxDist, groupSize, maxBucket)
     else {
-      // finer grid: the probe sketch is the wrong hash — release its
-      // blocks (the CC-loop lifecycle rule) and re-hash at 16
-      sk8.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
+      graft.Checkpoints.release(sk8)
       phashPairs(media, grid, maxDist, groupSize, maxBucket)
     }
   }
@@ -757,25 +693,20 @@ object MultimodalOps {
   }
 
   /** Probe + cap-audit with ONE decode — [[phashPairsAuto]]'s rule applied
-    * to the audit query (r20): materialize the grid-8 sketch, derive the
-    * grid from its distinct-hash universe, and audit that same sketch when
-    * the derived grid is 8 (re-hash at 16 otherwise, exactly as before).
+    * to the audit query (r20): audit the [[probe]]'s sketch when the
+    * derived grid is 8; at 16 release it and audit a fresh grid-16 sketch.
     */
   def phashCapAuditAuto(
       media: DataFrame,
       maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
-    import media.sparkSession.implicits._
-    val sk8 = graft.Checkpoints.cut(phashBands(media.as[MediaRow], 8).toDF())
-    val universe = sk8.select(col("bands")).distinct().count()
-    val grid = phashGridFor(universe)
+    val (sk8, grid) = probe(media)
     if (grid == 8) phashCapAuditOfSketch(sk8, maxBucket)
     else {
-      sk8.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
+      graft.Checkpoints.release(sk8)
       phashCapAudit(media, grid, maxBucket)
     }
   }
+
 
   /** Content-defined chunking — the rsync/casync/FastCDC storage-dedup
     * primitive, byte-level and format-agnostic where every other dedup op
@@ -790,8 +721,7 @@ object MultimodalOps {
     *
     * Executor shape: one sequential pass per payload in the typed
     * `mapPartitions` batch path (the digest instance is per-partition
-    * state, reset per chunk — the same decoder-state discipline as
-    * [[decodePixels]]); emits (media_id, chunk_idx, start, len, md5).
+    * state, reset per chunk); emits (media_id, chunk_idx, start, len, md5).
     * No shuffle until the consumer aggregates chunk hashes.
     */
   def cdcChunks(media: Dataset[MediaRow], modulus: Int = 32): Dataset[MediaChunk] = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.StableHash
-import graft.operators.{DedupOps, TextOps}
+import graft.operators.{DedupOps, EventOps, TextOps}
 
 /** One event on the stream (mirrors the `events` table's queryable core). */
 case class StreamEvent(ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
@@ -1757,8 +1757,9 @@ object StreamingOps {
   /** Streaming half of the gap-fill/EWMA maintenance loop — the streaming
     * twin of `EventOps.ewmaHourly`, split exactly where the batch operator
     * is ([[graft.operators.EventOps.hourlySums]] /
-    * [[graft.operators.EventOps.ewmaFromHourly]]): this update-mode
-    * aggregation keeps the per-(type, hour) bp-sums in STREAMING state (one
+    * [[graft.operators.EventOps.ewmaFromHourly]]): `hourlySums` itself,
+    * run over the stream in update mode, keeps the per-(type, hour)
+    * bp-sums in STREAMING state (one
     * long per touched grid cell — grid-sized, not event-sized; a watermark
     * bounds it to the late-data horizon in production) and each micro-batch
     * emits the recomputed totals of exactly the cells the batch touched.
@@ -1773,16 +1774,14 @@ object StreamingOps {
     * slicing, and the recomputed view equals batch `ewmaHourly` exactly —
     * (ewma_num, ewma_den) rationals and all (spec-pinned parity).
     */
-  def hourlySumsStream(events: DataFrame, watermarkDelay: Option[String] = None): DataFrame = {
-    val e = watermarkDelay.fold(events)(events.withWatermark("ts", _))
-    e.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(sum(graft.operators.TextOps.roundBp(col("value"))).as("v_bp"))
-  }
+  def hourlySumsStream(events: DataFrame, watermarkDelay: Option[String] = None): DataFrame =
+    EventOps.hourlySums(watermarkDelay.fold(events)(events.withWatermark("ts", _)))
 
   /** Streaming half of the seasonal-baseline maintenance loop — the twin of
     * `EventOps.seasonalProfile`, split exactly where the batch operator is
-    * (`EventOps.seasonalSums` / `EventOps.seasonalFromSums`): an
-    * update-mode aggregation keeps the per-(type, hour-of-day 0–23)
+    * (`EventOps.seasonalSums` / `EventOps.seasonalFromSums`):
+    * `seasonalSums` itself, run in update mode, keeps the per-(type,
+    * hour-of-day 0–23)
     * (n_events, Σv_bp) cells in streaming state — ≤ 24·|types| cells, a
     * compile-time-bounded grid, never event-volume — and each micro-batch
     * emits the re-aggregated totals of the touched cells. A `foreachBatch`
@@ -1796,10 +1795,7 @@ object StreamingOps {
     * (spec-pinned parity).
     */
   def seasonalSumsStream(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hour"))
-      .agg(sum(lit(1L)).as("n_events"),
-        sum(graft.operators.TextOps.roundBp(col("value"))).as("v_bp"))
+    EventOps.seasonalSums(events)
 
   /** Replace-by-key upsert of updated (event_type, bucket, v_bp) cells into
     * the maintained hourly table — the grid half of the gap-fill/EWMA

@@ -131,8 +131,13 @@ class MultimodalOpsSpec extends SparkSpec {
       MediaRow(1L, "image", Array.emptyByteArray),              // too short
       MediaRow(2L, "image", "XXXX0000000000000000".getBytes),   // wrong magic
       MediaRow(3L, "image", Array[Byte](0x47, 0x52, 0x46, 0x54, // truncated body
-        0, 0, 0, 2, 0, 0, 0, 2, 1, 2, 3)))
-    assert(MultimodalOps.decodePixels(bad.toDS()).collect().isEmpty)
+        0, 0, 0, 2, 0, 0, 0, 2, 1, 2, 3)),
+      MediaRow(4L, "image", Array[Byte](0x47, 0x52, 0x46, 0x54, // zero width, empty body
+        0, 0, 0, 0, 0, 0, 0, 2))).toDS()
+    assert(MultimodalOps.decodePixels(bad).collect().isEmpty)
+    // the other GRFT decoders read the same header: the same dead letters
+    assert(MultimodalOps.resizePixels(bad, outW = 4, outH = 3).collect().isEmpty)
+    assert(MultimodalOps.phashBands(bad).collect().isEmpty)
   }
 
   // --- perceptual hash ------------------------------------------------
@@ -383,5 +388,20 @@ class MultimodalOpsSpec extends SparkSpec {
     val pairs = MultimodalOps.phashPairs(media, grid = g)
       .filter(col("same_src") === 1L)
     assert(pairs.count() > 0, "grid-16 pairing lost every planted in-group variant")
+  }
+
+  test("phashCapAuditAuto: the dense plant audits a grid-16 sketch and releases the probe") {
+    // q_cap_audit_phash runs the base plant, which always derives grid 8;
+    // the dense plant crosses 8*2^8, so the audit takes the re-hash branch
+    val media = MultimodalOps.plantPhashCorpusDense(MultimodalOps.asMedia(sf("documents")))
+    val sc = spark.sparkContext
+    // RDD ids, not a count: the cleaner may drop an earlier test's blocks
+    val before = sc.getPersistentRDDs.keySet
+    val auto = MultimodalOps.phashCapAuditAuto(media).collect().toSeq
+    val kept = sc.getPersistentRDDs.keySet -- before
+    assert(kept.isEmpty, s"the grid-8 probe sketch's blocks were kept: RDDs $kept")
+    assert(auto == MultimodalOps.phashCapAudit(media, grid = 16).collect().toSeq)
+    assert(auto != MultimodalOps.phashCapAudit(media, grid = 8).collect().toSeq,
+      "the grid-8 and grid-16 audits must differ for the comparison to show the grid")
   }
 }
