@@ -212,7 +212,25 @@ class PlanBudgetSpec extends SparkSpec {
     "q_events_gapfill" -> Pin(3, 3, 0, 2),
     "q_events_ewma" -> Pin(3, 3, 0, 2),
     "q_events_anomaly" -> Pin(1, 3, 0, 0),
-    "q_events_cusum" -> Pin(1, 4, 1, 1))
+    "q_events_cusum" -> Pin(1, 4, 1, 1),
+    // the ANN search and quantizer family (SimOps' shared scoring
+    // helpers): every count below held over three runs at sf0.001.
+    // q_sim_recall (shuffles 9/10) and q_recall_audit_cells_hier
+    // (bcast 10/11) flutter and are left out.
+    "q_sim_topk" -> Pin(2, 2, 0, 1),
+    "q_sim_lsh" -> Pin(2, 3, 0, 1),
+    "q_sim_ivf" -> Pin(5, 2, 0, 4),
+    "q_sim_ivf_kmeans" -> Pin(7, 4, 1, 6),
+    "q_sim_ivfpq" -> Pin(12, 10, 2, 12),
+    "q_embed_pq" -> Pin(2, 3, 0, 1),
+    "q_embed_pq_refined" -> Pin(4, 7, 0, 3),
+    "q_embed_pq_residual" -> Pin(6, 4, 3, 5),
+    "q_embed_pq_opq" -> Pin(3, 5, 1, 2),
+    "q_embed_knn" -> Pin(3, 2, 0, 2),
+    "q_embed_drift" -> Pin(2, 2, 1, 2),
+    "q_knn_graph" -> Pin(2, 3, 1, 2),
+    "q_knn_graph_probe2" -> Pin(3, 4, 1, 2),
+    "q_embed_neardup_cells_hier2_p2" -> Pin(6, 8, 3, 6))
 
   private lazy val surface: Surface = {
     // another suite's cached frame would swap InMemoryRelation in for
