@@ -92,6 +92,18 @@ object SimOps {
     n.filter(centroidPred)
       .select(col(idCol).as("c_id"), col("e").as("ce"), col("nrm").as("cn"))
 
+  /** The query side every search shares: the `queryPred` rows of a
+    * [[normalized]] frame as (q_id, qe, qn), then any `extra` columns. */
+  private def querySide(n: DataFrame, queryPred: Column, idCol: String, extra: Column*): DataFrame =
+    n.filter(queryPred)
+      .select(Seq(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn")) ++ extra: _*)
+
+  /** (q_id, idCol, cos): the exact cosine of each query row ([[querySide]]
+    * columns) against its joined candidate (`e`, `nrm`). */
+  private def queryCos(pairs: DataFrame, idCol: String): DataFrame =
+    pairs.select(col("q_id"), col(idCol),
+      (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
+
   /** Brute-force cosine top-k: every candidate scored against every query
     * vector (queries broadcast), `row_number` per query over
     * (cosine desc, vec_id). Output: (q_id, rank, vec_id, cos_bp).
@@ -103,13 +115,9 @@ object SimOps {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val n = normalized(emb, idCol, embCol)
-    val q = n.filter(queryPred)
-      .select(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val pairs = n.crossJoin(broadcast(q))
+    val pairs = n.crossJoin(broadcast(querySide(n, queryPred, idCol)))
       .filter(col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol),
-        (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
-    rankTopK(pairs, k, idCol)
+    rankTopK(queryCos(pairs, idCol), k, "q_id", idCol)
   }
 
   /** The recall rollup every ANN sweep shares: one count of the query set
@@ -387,14 +395,11 @@ object SimOps {
     val ranked = ham.withColumn("rnk", row_number().over(hw))
     val hamTop = ranked.filter(col("rnk") <= k).select(col("q_id"), col(idCol))
     val n = normalized(emb, idCol, embCol)
-    val qv = n.filter(queryPred)
-      .select(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val rescored = ranked.filter(col("rnk") <= rerank)
+    val qv = querySide(n, queryPred, idCol)
+    val rescored = queryCos(ranked.filter(col("rnk") <= rerank)
       .select(col("q_id"), col(idCol))
       .join(n, Seq(idCol))
-      .join(broadcast(qv), Seq("q_id"))
-      .select(col("q_id"), col(idCol),
-        (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
+      .join(broadcast(qv), Seq("q_id")), idCol)
     val rw = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col(idCol))
     val rerTop = rescored.withColumn("rnk", row_number().over(rw))
       .filter(col("rnk") <= k)
@@ -601,17 +606,14 @@ object SimOps {
       concat_ws(":", lit(t), signBucket(col("e"), bits, offset = t * bits))
     }: _*)
     val nk = n.select(col(idCol), col("e"), col("nrm"), explode(tableKeys).as("tb"))
-    val q = nk.filter(queryPred)
-      .select(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn"), col("tb"))
-    val pairs = nk.join(broadcast(q), "tb")
-      .filter(col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol),
-        (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
+    val q = querySide(nk, queryPred, idCol, col("tb"))
+    val pairs = queryCos(nk.join(broadcast(q), "tb")
+      .filter(col(idCol) =!= col("q_id")), idCol)
       // a pair colliding in several tables appears once per collision —
       // collapse before ranking (cos is identical on every copy)
       .groupBy(col("q_id"), col(idCol))
       .agg(min(col("cos")).as("cos"))
-    rankTopK(pairs, k, idCol)
+    rankTopK(pairs, k, "q_id", idCol)
   }
 
   /** IVF-style ANN: a coarse quantizer of sampled centroid vectors; every
@@ -665,11 +667,11 @@ object SimOps {
 
   /** Nearest-cell assignment (the `crn == 1` slice of [[cellRank]]) as a
     * per-ROW argmax fold over the broadcast centroid ARRAY — no row
-    * explosion at all: the centroid table collapses to ONE row holding a
-    * c_id-sorted array of (c_id, ce, cn), broadcast onto every vector row,
-    * and `aggregate` folds it keeping the best (csim, c_id) — strict `>`
-    * so ties keep the earliest (lowest) c_id, exactly the window's
-    * (csim desc, c_id asc) selection. The window path materializes and
+    * explosion at all: the centroid table collapses to ONE row holding its
+    * [[centArray]], broadcast onto every vector row, and [[argmaxFold]]
+    * folds it keeping the best (csim, c_id) — strict `>` so ties keep the
+    * earliest (lowest) c_id, exactly the window's (csim desc, c_id asc)
+    * selection. The window path materializes and
     * SHUFFLES every (vector, centroid) row with its embedding for the
     * per-vector sort — O(N·nlist) rows, i.e. O(N²/perCell) under
     * occupancy-preserving nlist (measured 23.5 s at ×100: SKEW_scale.txt,
@@ -689,23 +691,37 @@ object SimOps {
     * enforce by filtering NULL sims: all assignment paths agree on
     * degenerate rows regardless of the probes setting.
     */
-  private[graft] def cellArgmax(n: DataFrame, cents: DataFrame, idCol: String): DataFrame = {
-    val carr = cents.agg(
-      sort_array(collect_list(struct(col("c_id"), col("ce"), col("cn")))).as("cs"))
-    n.crossJoin(broadcast(carr))
-      .select(col(idCol), col("e"), col("nrm"),
-        aggregate(col("cs"),
-          struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("c")),
-          (acc, c) => {
-            val s = cosSim(col("e"), c("ce"), col("nrm"), c("cn"))
-            when(s > acc("s"), struct(s.as("s"), c("c_id").as("c"))).otherwise(acc)
-          },
-          acc => acc("c")).as("c_id"))
+  private[graft] def cellArgmax(n: DataFrame, cents: DataFrame, idCol: String): DataFrame =
+    n.crossJoin(broadcast(cents.agg(centArray)))
+      .select(col(idCol), col("e"), col("nrm"), argmaxFold(acc => acc("c")).as("c_id"))
       .filter(col("c_id") >= 0)
-  }
+
+  /** The c_id-sorted array `cs` of (c_id, ce, cn) structs every fold scans:
+    * one row per group of the centroid frame it aggregates. */
+  private def centArray: Column =
+    sort_array(collect_list(struct(col("c_id"), col("ce"), col("cn")))).as("cs")
+
+  /** The argmax fold of [[cellArgmax]] and [[cellArgmaxHier]] over the row's
+    * [[centArray]] `cs`: the best (s, c) = (cosine, c_id) under a strict
+    * `>`, so ties keep the earliest (lowest) c_id and a row with no finite
+    * similarity keeps c = −1; `finish` maps the final (s, c) struct. */
+  private def argmaxFold(finish: Column => Column): Column =
+    aggregate(col("cs"),
+      struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("c")),
+      (acc, c) => {
+        val s = cosSim(col("e"), c("ce"), col("nrm"), c("cn"))
+        when(s > acc("s"), struct(s.as("s"), c("c_id").as("c"))).otherwise(acc)
+      },
+      finish)
+
+  /** The supercenter stride per = max(2, ⌈√nlist⌉) — the one rule the
+    * batch two-level quantizer ([[superCents]]) and the streaming
+    * snapshots (`StreamingOps.centSnapshotHier`, `hierStreamIndex`) share. */
+  private[graft] def superStride(nlist: Long): Long =
+    math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
 
   /** DISTRIBUTED √nlist supercenter stride — a centroid is a supercenter
-    * iff `hash60(c_id) % per == 0` (per = max(2, ⌈√nlist⌉): the
+    * iff `hash60(c_id) % per == 0` (per = [[superStride]] of `nlist`: the
     * [[sqrtCentroidPred]] discipline applied to the centroid id space, a
     * stateless per-row predicate), OR it carries the minimum c_id — the
     * deterministic non-empty guard (the hash stride selects ≈nlist/per
@@ -716,21 +732,21 @@ object SimOps {
     * (~64 MB through one task), not at the 1B cells a true 100 TB corpus
     * sizes to. Cost here is one min() over 8-byte keys (1-row broadcast
     * back) and a map-side filter. Mirrored verbatim in the DuckDB
-    * oracles and the streaming snapshot builders
-    * (`StreamingOps.centSnapshotHier` / `hierStreamIndex`).
+    * oracles and `StreamingOps.centSnapshotHier`; `StreamingOps.hierStreamIndex`
+    * calls it. Output: the selected rows of `cents`, its columns unchanged.
     */
-  private[graft] def superCents(cents: DataFrame, per: Long): DataFrame = {
+  private[graft] def superCents(cents: DataFrame, nlist: Long): DataFrame = {
     val minId = cents.groupBy().agg(min(col("c_id")).as("mn"))
     cents.crossJoin(broadcast(minId))
       .filter(
-        graft.functions.StableHash.hash60(col("c_id").cast("string")) % per === 0 ||
+        graft.functions.StableHash.hash60(col("c_id").cast("string")) % superStride(nlist) === 0 ||
           col("c_id") === col("mn"))
-      .select(col("c_id"), col("ce"), col("cn"))
+      .drop("mn")
   }
 
   /** The supercell-block build both two-level assignments share
     * ([[cellArgmaxHier]], [[cellArgTopPHier]]; they differ only in the
-    * per-block fold): nlist → per = max(2, ⌈√nlist⌉) → [[superCents]] →
+    * per-block fold): nlist → [[superCents]] →
     * each centroid's home supercell (c2s) → per-supercell c_id-sorted
     * BLOCKS (sc_id, cs) → each vector's `superProbes` nearest supercells
     * (vsup), shuffle-joined to their blocks. Output: (sc_id, idCol, e,
@@ -742,9 +758,7 @@ object SimOps {
       idCol: String,
       superProbes: Int,
       c2sHier: Boolean = false): DataFrame = {
-    val nlist = cents.count()
-    val per = math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
-    val sup = superCents(cents, per)
+    val sup = superCents(cents, cents.count())
     // each centroid's home supercell — exact argmax over the supercenter
     // set. "Cheap" stops being true past ~1M cells: the stage is
     // nlist·√nlist sims (measured DOMINANT at nlist=8M — 1259.9 s,
@@ -765,7 +779,7 @@ object SimOps {
       .select(col("cid0"), col("c_id").as("sc_id"))
     val blocks = cents.join(c2s, col("c_id") === col("cid0"))
       .groupBy(col("sc_id"))
-      .agg(sort_array(collect_list(struct(col("c_id"), col("ce"), col("cn")))).as("cs"))
+      .agg(centArray)
     val vsup = (if (superProbes == 1) cellArgmax(n, sup, idCol)
       else cellArgTopP(n, sup, idCol, superProbes))
       .select(col(idCol), col("e"), col("nrm"), col("c_id").as("sc_id"))
@@ -785,11 +799,11 @@ object SimOps {
 
   /** TWO-LEVEL (hierarchical) coarse-quantizer assignment — the design
     * [[cellArgmax]]'s scaladoc names as the path past its ~1M-centroid
-    * broadcast-array limit, made real through the same fold machinery:
-    * every `per ≈ ⌈√nlist⌉`-th centroid (by c_id rank — deterministic,
-    * never empty, oracle-mirrorable) becomes a SUPERCELL center; each
-    * centroid folds over the small supercenter array to find its home
-    * supercell ([[cellArgmax]], exact); the centroids regroup into
+    * broadcast-array limit, made real through the same fold machinery
+    * ([[argmaxFold]]): the [[superCents]] stride of centroids (≈ nlist/per
+    * of them at per = [[superStride]] — deterministic, never empty,
+    * oracle-mirrorable) become SUPERCELL centers; each centroid folds over
+    * the small supercenter array to find its home supercell ([[cellArgmax]], exact); the centroids regroup into
     * per-supercell BLOCKS (≈ √nlist-sized sorted arrays); and each
     * corpus vector folds over the supercenter array, SHUFFLE-joins its
     * supercell's block on sc_id, and folds over THAT — ~2·√nlist
@@ -821,13 +835,7 @@ object SimOps {
       superProbes: Int = 1,
       c2sHier: Boolean = false): DataFrame = {
     val scored = superBlocks(n, cents, idCol, superProbes, c2sHier)
-      .select(col(idCol), col("e"), col("nrm"),
-        aggregate(col("cs"),
-          struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("c")),
-          (acc, c) => {
-            val s = cosSim(col("e"), c("ce"), col("nrm"), c("cn"))
-            when(s > acc("s"), struct(s.as("s"), c("c_id").as("c"))).otherwise(acc)
-          }).as("best"))
+      .select(col(idCol), col("e"), col("nrm"), argmaxFold(acc => acc).as("best"))
       .filter(col("best.c") >= 0)
     if (superProbes == 1)
       scored.select(col(idCol), col("e"), col("nrm"), col("best.c").as("c_id"))
@@ -856,18 +864,37 @@ object SimOps {
       probes: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    rankNeighborPairs(
-      knnCellPairs(emb, centroidPred, probes, idCol, embCol, hier = true, superProbes), k)
+    rankTopK(knnCellPairs(emb, centroidPred, probes, idCol, embCol, hier = true, superProbes),
+      k, "id_a", "id_b")
 
   /** IVF probe phase shared by the sampled and k-means-refined quantizers:
     * assign every vector to its nearest cell, probe each query's `nProbe`
-    * nearest cells, brute-force only within the probed cells.
+    * nearest cells ([[probedCandidates]]), brute-force only within the
+    * probed cells.
     */
   private[graft] def ivfProbe(
       n: DataFrame,
       cents: DataFrame,
       queryPred: Column,
       k: Int,
+      nProbe: Int,
+      idCol: String,
+      hier: Boolean = false,
+      superProbes: Int = 1): DataFrame = {
+    val pairs = probedCandidates(n, cents, queryPred, nProbe, idCol, hier, superProbes)
+      .join(broadcast(querySide(n, queryPred, idCol)), "q_id")
+    rankTopK(queryCos(pairs, idCol), k, "q_id", idCol)
+  }
+
+  /** The IVF candidate stage of [[ivfProbe]] and [[ivfPqTopK]]: every
+    * vector assigned to its nearest cell, met by each query's `nProbe`
+    * nearest cells. Output: (c_id, q_id, idCol, e, nrm), one row per
+    * (query, vector in a probed cell), the query itself left out.
+    */
+  private def probedCandidates(
+      n: DataFrame,
+      cents: DataFrame,
+      queryPred: Column,
       nProbe: Int,
       idCol: String,
       hier: Boolean = false,
@@ -883,15 +910,7 @@ object SimOps {
     val probes = cellRank(n.filter(queryPred), cents, idCol)
       .filter(col("crn") <= nProbe)
       .select(col(idCol).as("q_id"), col("c_id"))
-    val queries = n.filter(queryPred)
-      .select(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val pairs = probes
-      .join(assigned, "c_id")
-      .join(broadcast(queries), "q_id")
-      .filter(col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol),
-        (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
-    rankTopK(pairs, k, idCol)
+    probes.join(assigned, "c_id").filter(col(idCol) =!= col("q_id"))
   }
 
   /** Lloyd (k-means) refinement of an IVF coarse quantizer — `iters`
@@ -930,25 +949,40 @@ object SimOps {
       // "megacells TRAINING + two-level c2s")
       val assigned = (if (hier) cellArgmaxHier(n, c, idCol, c2sHier = c2sHier)
         else cellArgmax(n, c, idCol))
-        .select(col("c_id"), col("e"))
-      val dims = assigned.select(col("c_id"),
-        posexplode(transform(col("e"), x => TextOps.roundBp(x))))
-      val rebuilt = dims
-        .groupBy(col("c_id"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"))
-        .groupBy(col("c_id"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          (col("s").cast("double") / (col("cnt") * lit(10000.0))).as("v")))).as("pv"))
-        .select(col("c_id"), transform(col("pv"), p => p.getField("v")).as("ce"))
-        .select(col("c_id"), col("ce"), sqrt(dot(col("ce"), col("ce"))).as("cn"))
-      c = c.select(col("c_id"), col("ce").as("ce_prev"), col("cn").as("cn_prev"))
-        .join(rebuilt, Seq("c_id"), "left")
-        .select(col("c_id"),
-          coalesce(col("ce"), col("ce_prev")).as("ce"),
-          coalesce(col("cn"), col("cn_prev")).as("cn"))
+      val rebuilt = bpMean(assigned, Seq("c_id"), "e")
+        .select(col("c_id"), col("ce"), l2Norm(col("ce")).as("cn"))
+      c = keepPrevious(c, rebuilt, Seq("c_id"), Seq("ce", "cn"))
     }
     c
   }
+
+  /** The integer-exact mean vector of each `keys` group of `rows` — the
+    * one bp mean of [[refineCentroids]], [[refinePqCodebooks]] and
+    * [[clusterKeepBest]]: every element of `vec` quantized to basis points
+    * ([[TextOps.roundBp]]), summed as longs per (keys, pos), then one
+    * double division `sum / (count·10⁴)` per dimension, gathered in pos
+    * order. Output: (keys…, ce).
+    */
+  private def bpMean(rows: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    val k = keys.map(col)
+    rows.select(k :+ posexplode(transform(col(vec), x => TextOps.roundBp(x))): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(sum(col("col")).as("sm"), count(lit(1)).as("cnt"))
+      .groupBy(k: _*)
+      .agg(array_sort(collect_list(struct(col("pos"),
+        (col("sm").cast("double") / (col("cnt") * lit(10000.0))).as("v")))).as("pv"))
+      .select(k :+ transform(col("pv"), p => p.getField("v")).as("ce"): _*)
+  }
+
+  /** Lloyd's empty-cell rule, the one both Lloyd loops ([[refineCentroids]],
+    * [[refinePqCodebooks]]) apply: an entry of `prev` that attracted no
+    * members keeps its previous `vals` (left join onto `rebuilt` by `keys`,
+    * then `coalesce` per value column). */
+  private def keepPrevious(
+      prev: DataFrame, rebuilt: DataFrame, keys: Seq[String], vals: Seq[String]): DataFrame =
+    prev.select(keys.map(col) ++ vals.map(v => col(v).as(s"${v}_prev")): _*)
+      .join(rebuilt, keys, "left")
+      .select(keys.map(col) ++ vals.map(v => coalesce(col(v), col(s"${v}_prev")).as(v)): _*)
 
   /** IVF with a k-means-refined coarse quantizer: the sampled centroids of
     * [[ivfTopK]] are Lloyd-refined ([[refineCentroids]]) before the probe
@@ -1039,19 +1073,16 @@ object SimOps {
     * rows regardless of the probes setting).
     */
   private[graft] def cellArgTopP(
-      n: DataFrame, cents: DataFrame, idCol: String, p: Int): DataFrame = {
-    val carr = cents.agg(
-      sort_array(collect_list(struct(col("c_id"), col("ce"), col("cn")))).as("cs"))
-    n.crossJoin(broadcast(carr))
+      n: DataFrame, cents: DataFrame, idCol: String, p: Int): DataFrame =
+    n.crossJoin(broadcast(cents.agg(centArray)))
       .select(col(idCol), col("e"), col("nrm"),
         explode(topPFold(col("e"), col("nrm"), col("cs"), p)).as("t"))
       .select(col(idCol), col("e"), col("nrm"),
         col("t.c").as("c_id"), col("t.crn").cast("int").as("crn"))
-  }
 
   /** The p-slot top-P fold shared by [[cellArgTopP]] (over the broadcast
     * full-centroid array) and [[cellArgTopPHier]] (over a supercell's
-    * block array): folds a c_id-sorted array of (c_id, ce, cn) structs
+    * block array): folds a [[centArray]] of (c_id, ce, cn) structs
     * into the row's p best (similarity, cell) candidates, returned as an
     * array of (s, c, crn) structs in exactly the window's
     * (s desc, c_id asc) order — `s` retained so a caller ranking ACROSS
@@ -1144,13 +1175,19 @@ object SimOps {
     }
   }
 
-  private def rankTopK(pairs: DataFrame, k: Int, idCol: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col(idCol))
+  /** The ranked tail of every top-k search and of the kNN graph: per
+    * `keyCol`, the `k` best `idCol` rows by (cos desc, idCol) — the
+    * `Filter(rank <= k, Window(row_number))` shape
+    * [[graft.plans.GroupTopKRewrite]] lowers to bounded heaps. Output:
+    * (keyCol, rank, idCol, cos_bp) ordered by (keyCol, rank).
+    */
+  private def rankTopK(pairs: DataFrame, k: Int, keyCol: String, idCol: String): DataFrame = {
+    val w = Window.partitionBy(col(keyCol)).orderBy(col("cos").desc, col(idCol))
     pairs
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col(idCol), TextOps.roundBp(col("cos")).as("cos_bp"))
-      .orderBy(col("q_id"), col("rank"))
+      .select(col(keyCol), col("rank"), col(idCol), TextOps.roundBp(col("cos")).as("cos_bp"))
+      .orderBy(col(keyCol), col("rank"))
   }
 
   /** Corpus-wide kNN graph within IVF cells — every vector's top-k
@@ -1195,7 +1232,7 @@ object SimOps {
       probes: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    rankNeighborPairs(knnCellPairs(emb, centroidPred, probes, idCol, embCol), k)
+    rankTopK(knnCellPairs(emb, centroidPred, probes, idCol, embCol), k, "id_a", "id_b")
 
   /** The kNN graph's candidate-pair stage — the ONE place the cell-bounded
     * (id_a, id_b, cos) candidate set is built ([[knnGraph]] and
@@ -1246,17 +1283,6 @@ object SimOps {
       .select(col(idCol), col("e"), col("nrm"), col("c_id"), col("crn"))
       .repartition(col("c_id"))
 
-  /** Per-source top-k ranking of a (id_a, id_b, cos) pair set — the
-    * output tail shared by [[knnGraph]] and [[hardNegatives]]. */
-  private def rankNeighborPairs(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id_a"), col("rank"), col("id_b"), TextOps.roundBp(col("cos")).as("cos_bp"))
-      .orderBy(col("id_a"), col("rank"))
-  }
-
   /** Hard-negative mining for contrastive / embedding training — per
     * vector, the top-`k` most-similar candidates that are NOT
     * near-duplicates: similar enough to be informative negatives, not so
@@ -1282,10 +1308,10 @@ object SimOps {
       probes: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    rankNeighborPairs(
+    rankTopK(
       knnCellPairs(emb, centroidPred, probes, idCol, embCol)
         .filter(TextOps.roundBp(col("cos")) < dupBp),
-      k)
+      k, "id_a", "id_b")
 
   /** Embedding distribution drift between two corpus snapshots — the
     * monitor a production pipeline runs when a new crawl lands: assign
@@ -1390,16 +1416,8 @@ object SimOps {
       embCol: String = "embedding"): DataFrame = {
     val memb = clusters.select(col(idCol), col("cluster_id"))
       .join(emb.select(col(idCol), col(embCol).as("e")), Seq(idCol))
-    val means = memb
-      .select(col("cluster_id"),
-        posexplode(transform(col("e"), x => TextOps.roundBp(x))))
-      .groupBy(col("cluster_id"), col("pos"))
-      .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"))
-      .groupBy(col("cluster_id"))
-      .agg(array_sort(collect_list(struct(col("pos"),
-        (col("s").cast("double") / (col("cnt") * lit(10000.0))).as("v")))).as("pv"))
-      .select(col("cluster_id"), transform(col("pv"), p => p.getField("v")).as("ce"))
-      .select(col("cluster_id"), col("ce"), sqrt(dot(col("ce"), col("ce"))).as("cn"))
+    val means = bpMean(memb, Seq("cluster_id"), "e")
+      .select(col("cluster_id"), col("ce"), l2Norm(col("ce")).as("cn"))
     val scored = memb.join(means, Seq("cluster_id"))
       .select(col("cluster_id"), col(idCol),
         (dot(col("e"), col("ce")) / (l2Norm(col("e")) * col("cn"))).as("cos"))
@@ -1945,14 +1963,19 @@ object SimOps {
     productQuantizeWith(emb, pqCodebook(emb, centroidPred, m, idCol, embCol),
       m, idCol, embCol)
 
-  /** (idCol, s, sub) — each vector split into its `m` contiguous subvectors.
-    * The explode is map-local fan-out; dims must split evenly (the 64-dim
-    * test corpus gives 64/m per subspace).
+  /** (idCol, s, sub) — each vector split into its `m` contiguous subvectors
+    * of `size(emb) / m` dims, the width read per row as a column expression
+    * (no extra job). The explode is map-local fan-out; a row whose
+    * dimension `m` does not divide fails the query with an error naming
+    * both.
     */
   private def subvectors(df: DataFrame, m: Int, idCol: String, embCol: String): DataFrame = {
-    val subDim = { val d = 64; require(d % m == 0); d / m }
+    val d = size(col(embCol))
+    val subDim = when(col(embCol).isNull || d % m === 0, (d / m).cast("int"))
+      .otherwise(raise_error(concat(
+        lit(s"subvectors: m = $m does not divide the embedding dimension "), d.cast("string"))))
     val subs = array((0 until m).map { s =>
-      struct(lit(s).as("s"), slice(col(embCol), s * subDim + 1, subDim).as("sub"))
+      struct(lit(s).as("s"), slice(col(embCol), subDim * s + 1, subDim).as("sub"))
     }: _*)
     df.select(col(idCol), explode(subs).as("x"))
       .select(col(idCol), col("x.s").as("s"), col("x.sub").as("sub"))
@@ -1998,7 +2021,16 @@ object SimOps {
       m: Int = 4,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    pqAssign(subvectors(emb, m, idCol, embCol), codebook, idCol)
+    pqEncode(subvectors(emb, m, idCol, embCol), codebook, idCol)
+
+  /** The PQ encoder [[productQuantizeWith]] and [[opqQuantize]] share:
+    * [[pqAssign]] of the (idCol, s, sub) rows, rolled up per vector to the
+    * subspace count, the packed code word `Σ c_id · 8^s` and the squared
+    * error bp-rounded per subspace and summed as longs. Output:
+    * (idCol, n_subs, code_word, l2sq_err_bp) ordered by idCol.
+    */
+  private def pqEncode(subs: DataFrame, codebook: DataFrame, idCol: String): DataFrame =
+    pqAssign(subs, codebook, idCol)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_subs"),
@@ -2017,7 +2049,7 @@ object SimOps {
     * that test's comment: on an unclustered corpus subtracting a
     * near-orthogonal centroid ADDS variance and residual PQ loses.
     *
-    * Scale shape: coarse assignment is [[cellRank]] (centroids broadcast,
+    * Scale shape: coarse assignment is [[cellArgmax]] (centroids broadcast,
     * corpus never shuffles); the residual is one map-local `zip_with` in
     * DOUBLE precision (both arrays cast BEFORE subtracting — a float32
     * subtraction would round differently from the oracle's DOUBLE[]
@@ -2125,13 +2157,7 @@ object SimOps {
       .select(col(idCol), col("s"), transform(col("pv"), p => p.getField("x")).as("sub"))
     val cb = subs.filter(codebookPred)
       .select(col("s"), col(idCol).as("c_id"), col("sub").as("ce"))
-    pqAssign(subs, cb, idCol)
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_subs"),
-        sum(expr("c_id * shiftleft(CAST(1 AS BIGINT), 3 * s)")).as("code_word"),
-        sum(TextOps.roundBp(col("d2"))).as("l2sq_err_bp"))
-      .orderBy(col(idCol))
+    pqEncode(subs, cb, idCol)
   }
 
   /** Lloyd refinement of the PQ codebooks, per subspace — [[refineCentroids]]
@@ -2139,9 +2165,9 @@ object SimOps {
     * exactly this way; the sampled book is only the seed). Each round
     * assigns every (vector, subspace) to its nearest entry and rebuilds the
     * entry as the mean of its members, with the same integer-exact
-    * bp-sum/single-division trick as [[refineCentroids]] so refined books
+    * bp mean as [[refineCentroids]] ([[bpMean]]) so refined books
     * hash-match DuckDB. Entries that attract no members keep their previous
-    * value (left join + coalesce).
+    * value ([[keepPrevious]]).
     *
     * Scale shape per round: codebooks are m x 8 rows — always broadcast;
     * the corpus-side work is one nearest-entry window keyed (vector,
@@ -2161,20 +2187,9 @@ object SimOps {
     var cb = pqCodebook(emb, centroidPred, m, idCol, embCol)
       .select(col("s"), col("c_id"),
         transform(col("ce"), x => x.cast("double")).as("ce"))
-    for (_ <- 0 until iters) {
-      val rebuilt = pqAssign(vecSubs, cb, idCol)
-        .select(col("s"), col("c_id"),
-          posexplode(transform(col("sub"), x => TextOps.roundBp(x))))
-        .groupBy(col("s"), col("c_id"), col("pos"))
-        .agg(sum(col("col")).as("sm"), count(lit(1)).as("cnt"))
-        .groupBy(col("s"), col("c_id"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          (col("sm").cast("double") / (col("cnt") * lit(10000.0))).as("v")))).as("pv"))
-        .select(col("s"), col("c_id"), transform(col("pv"), p => p.getField("v")).as("ce"))
-      cb = cb.select(col("s"), col("c_id"), col("ce").as("ce_prev"))
-        .join(rebuilt, Seq("s", "c_id"), "left")
-        .select(col("s"), col("c_id"), coalesce(col("ce"), col("ce_prev")).as("ce"))
-    }
+    val keys = Seq("s", "c_id")
+    for (_ <- 0 until iters)
+      cb = keepPrevious(cb, bpMean(pqAssign(vecSubs, cb, idCol), keys, "sub"), keys, Seq("ce"))
     cb
   }
 
@@ -2217,11 +2232,7 @@ object SimOps {
     // production composition (trained cells + trained books)
     val cents =
       if (coarseIters > 0) refineCentroids(n, cents0, coarseIters, idCol) else cents0
-    val assigned = cellArgmax(n, cents, idCol)
-      .select(col(idCol), col("nrm"), col("c_id"))
-    val probes = cellRank(n.filter(queryPred), cents, idCol)
-      .filter(col("crn") <= nProbe)
-      .select(col(idCol).as("q_id"), col("c_id"))
+    val candidates = probedCandidates(n, cents, queryPred, nProbe, idCol)
     // PQ index: Lloyd-refined books + per-vector codes (pq_id ≠ coarse c_id)
     val cb = refinePqCodebooks(emb, codebookPred, m, pqIters, idCol, embCol)
       .select(col("s"), col("c_id").as("pq_id"), col("ce"))
@@ -2234,9 +2245,7 @@ object SimOps {
       .join(broadcast(cb), "s")
       .select(col("q_id"), col("s"), col("pq_id"), dot(col("qsub"), col("ce")).as("ip"))
     val qn = n.filter(queryPred).select(col(idCol).as("q_id"), col("nrm").as("qn"))
-    val scored = probes
-      .join(assigned, "c_id")
-      .filter(col(idCol) =!= col("q_id"))
+    val scored = candidates
       .join(codes, idCol)
       .join(broadcast(adc), Seq("q_id", "s", "pq_id"))
       .join(broadcast(qn), "q_id")
@@ -2249,14 +2258,10 @@ object SimOps {
       .withColumn("srn", row_number().over(wShort))
       .filter(col("srn") <= shortlist)
       .select(col("q_id"), col(idCol))
-    val qv = n.filter(queryPred)
-      .select(col(idCol).as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
     val pairs = short
       .join(n, idCol)
-      .join(broadcast(qv), "q_id")
-      .select(col("q_id"), col(idCol),
-        (dot(col("qe"), col("e")) / (col("qn") * col("nrm"))).as("cos"))
-    rankTopK(pairs, k, idCol)
+      .join(broadcast(querySide(n, queryPred, idCol)), "q_id")
+    rankTopK(queryCos(pairs, idCol), k, "q_id", idCol)
   }
 
   /** Per-vector metadata: dimension and L2 norm (basis points). The shape

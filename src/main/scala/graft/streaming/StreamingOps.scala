@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.StableHash
-import graft.operators.{DedupOps, EventOps, TextOps}
+import graft.operators.{DedupOps, EventOps, SimOps, TextOps}
 
 /** One event on the stream (mirrors the `events` table's queryable core). */
 case class StreamEvent(ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
@@ -1353,9 +1353,9 @@ object StreamingOps {
       thresholdBp: Int = 4000,
       maxCell: Int = 0,
       initialState: Option[Dataset[(Long, HierCellState)]] = None): Dataset[EmbedPairRow] = {
-    val sups = centSnapshotHier(centroids).sups
-    val init = initialState.getOrElse(hierBlockState(items.sparkSession, centroids))
-    cellNearDupStreamHierImpl(items, sups, init, thresholdBp, maxCell)
+    val index = hierIndexOf(items.sparkSession, centroids)
+    cellNearDupStreamHier(items, initialState.fold(index)(s => index.copy(state = s)),
+      thresholdBp, maxCell)
   }
 
   /** [[cellNearDupStreamHier]] from a pre-built [[HierStreamIndex]] —
@@ -1368,16 +1368,10 @@ object StreamingOps {
       items: Dataset[EmbedItem],
       index: HierStreamIndex,
       thresholdBp: Int,
-      maxCell: Int): Dataset[EmbedPairRow] =
-    cellNearDupStreamHierImpl(items, index.sups, index.state, thresholdBp, maxCell)
-
-  private def cellNearDupStreamHierImpl(
-      items: Dataset[EmbedItem],
-      sups: IndexedSeq[(Long, Seq[Float], Double)],
-      init: Dataset[(Long, HierCellState)],
-      thresholdBp: Int,
       maxCell: Int): Dataset[EmbedPairRow] = {
     import items.sparkSession.implicits._
+    // the closures capture the sup array, never the index's Dataset
+    val sups = index.sups
     val keyed = items
       .map(it => (nearestCell(sups, it.embedding), it))
       .groupByKey(_._1)
@@ -1408,56 +1402,44 @@ object StreamingOps {
         }
     keyed.mapGroupsWithState(
         GroupStateTimeout.NoTimeout,
-        init.groupByKey(_._1).mapValues(_._2))(update)
+        index.state.groupByKey(_._1).mapValues(_._2))(update)
       .flatMap(_.map { case (a, b, c) => EmbedPairRow(a, b, c) })
   }
 
-  /** Block-only [[HierCellState]] rows for a fresh
-    * [[cellNearDupStreamHier]] — one row per supercell, serialized from
-    * the driver ONCE into a distributed dataset (the snapshot Seq already
-    * lives on the driver as the call's argument; what the sc keying buys
-    * is that no EXECUTOR ever materializes more than its partitions'
-    * blocks).
+  /** The [[HierStreamIndex]] of a driver-side centroid Seq: the
+    * [[centSnapshotHier]] supercenters, and its blocks as block-only
+    * [[HierCellState]] rows, one per supercell, serialized from the driver
+    * ONCE into a distributed dataset (the snapshot Seq already lives on
+    * the driver as the call's argument; what the sc keying buys is that
+    * no EXECUTOR ever materializes more than its partitions' blocks).
     */
-  private def hierBlockState(
+  private def hierIndexOf(
       spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[(Long, Seq[Float])]): Dataset[(Long, HierCellState)] = {
+      centroids: Seq[(Long, Seq[Float])]): HierStreamIndex = {
     import spark.implicits._
     val snap = centSnapshotHier(centroids)
-    spark.createDataset(snap.blocks.toSeq.map { case (sc, ms) =>
+    HierStreamIndex(snap.sups, spark.createDataset(snap.blocks.toSeq.map { case (sc, ms) =>
       (sc, HierCellState(ms.toList, Nil))
-    })
+    }))
   }
 
   /** FULLY DISTRIBUTED [[HierStreamIndex]] construction from a centroid
     * DATASET (c_id, embedding) — the entry for snapshots too large for a
     * driver Seq (the batch megacell regime: 1M+ centroids): the driver
-    * materializes ONLY the ≈√nlist stride rows (the `SimOps.superCents`
+    * materializes ONLY the ≈√nlist stride rows (`SimOps.superCents`: an
     * id-hash predicate — stateless per row, no global rank — plus a
     * 1-row min() broadcast as the non-empty guard), and the block-only
     * state is one map (sc via the sup-array closure, O(√nlist·d)) plus
     * one groupByKey shuffle. Spec-pinned identical to the driver-side
-    * [[centSnapshotHier]] construction: same stride, same strict-`>` /
-    * c_id-asc sup assignment, same c_id-asc block order, zero-norm
-    * centroids dropped from blocks.
+    * [[centSnapshotHier]] construction: same `SimOps.superStride` stride,
+    * same strict-`>` / c_id-asc sup assignment, same c_id-asc block order,
+    * zero-norm centroids dropped from blocks.
     */
   def hierStreamIndex(
       centroids: Dataset[(Long, Seq[Float])]): HierStreamIndex = {
     import centroids.sparkSession.implicits._
-    val nlist = centroids.count()
-    val per = math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
-    val cdf = centroids.toDF("c_id", "ce")
-    // the batch stride rule verbatim (SimOps.superCents): a stateless
-    // id-hash predicate plus a 1-row min() broadcast — no global
-    // row_number sort of nlist ids through one task; the driver
-    // materializes only the ≈√nlist selected rows
-    val mn = cdf.groupBy().agg(min(col("c_id")).as("mn"))
     val sups = centSnapshot(
-      cdf.crossJoin(broadcast(mn))
-        .filter(
-          graft.functions.StableHash.hash60(col("c_id").cast("string")) % per === 0 ||
-            col("c_id") === col("mn"))
-        .select(col("c_id"), col("ce"))
+      SimOps.superCents(centroids.toDF("c_id", "ce"), centroids.count())
         .as[(Long, Seq[Float])].collect().toSeq)
     val state = centroids
       .map { case (c, e) => (nearestCell(sups, e), (c, e, normF(e))) }
@@ -1483,9 +1465,7 @@ object StreamingOps {
   def recellRegistryHier(
       items: Dataset[EmbedItem],
       centroids: Seq[(Long, Seq[Float])]): Dataset[(Long, HierCellState)] =
-    recellRegistryHierImpl(items,
-      centSnapshotHier(centroids).sups,
-      hierBlockState(items.sparkSession, centroids))
+    recellRegistryHier(items, hierIndexOf(items.sparkSession, centroids))
 
   /** [[recellRegistryHier]] against a [[hierStreamIndex]]-built snapshot
     * — the megacell resume path: registry rebuild and block attachment
@@ -1493,17 +1473,13 @@ object StreamingOps {
     */
   def recellRegistryHier(
       items: Dataset[EmbedItem],
-      index: HierStreamIndex): Dataset[(Long, HierCellState)] =
-    recellRegistryHierImpl(items, index.sups, index.state)
-
-  private def recellRegistryHierImpl(
-      items: Dataset[EmbedItem],
-      sups: IndexedSeq[(Long, Seq[Float], Double)],
-      blockState: Dataset[(Long, HierCellState)]): Dataset[(Long, HierCellState)] = {
+      index: HierStreamIndex): Dataset[(Long, HierCellState)] = {
     import items.sparkSession.implicits._
+    // the closure captures the sup array, never the index's Dataset
+    val sups = index.sups
     val groupsBySc = exactGroupsOf(items).map(g => (nearestCell(sups, g._2), g))
     groupsBySc.groupByKey(_._1)
-      .cogroup(blockState.groupByKey(_._1)) { (sc, gs, bs) =>
+      .cogroup(index.state.groupByKey(_._1)) { (sc, gs, bs) =>
         val st = bs.toSeq.headOption.map(_._2).getOrElse(HierCellState(Nil, Nil))
         val block = st.block.toIndexedSeq
         val cells = gs.map(_._2).toList
@@ -1585,8 +1561,9 @@ object StreamingOps {
   }
 
   /** TWO-LEVEL centroid snapshot — `SimOps.cellArgmaxHier`'s construction
-    * mirrored executor-side: every `per ≈ ⌈√nlist⌉`-th centroid by c_id
-    * rank is a supercenter, and each centroid joins the block of its
+    * mirrored driver-side: the `SimOps.superCents` rule picks the
+    * supercenters (id-hash on the `SimOps.superStride` stride, plus the
+    * min c_id), and each centroid joins the block of its
     * nearest supercenter (strict `>`, c_id-asc — [[nearestCell]] over the
     * supercenter array, exactly batch c2s). A centroid with no finite
     * supercenter similarity (zero-norm) joins NO block — batch drops it
@@ -1601,10 +1578,10 @@ object StreamingOps {
   private[graft] def centSnapshotHier(
       centroids: Seq[(Long, Seq[Float])]): HierSnapshot = {
     val all = centSnapshot(centroids)
-    val per = math.max(2L, math.ceil(math.sqrt(all.length.toDouble)).toLong)
-    // the batch stride rule verbatim (SimOps.superCents): id-hash lands
-    // on the stride, plus the min c_id as the non-empty guard — all is
-    // c_id-ascending, so head carries the min
+    val per = SimOps.superStride(all.length)
+    // SimOps.superCents' rule on the driver: id-hash lands on the stride
+    // (SimOps.superStride), plus the min c_id as the non-empty guard —
+    // all is c_id-ascending, so head carries the min
     val minId = all.headOption.map(_._1).getOrElse(Long.MinValue)
     val sups = all.filter(c =>
       graft.functions.StableHash.hash60Jvm(c._1.toString) % per == 0 || c._1 == minId)

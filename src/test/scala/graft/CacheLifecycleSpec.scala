@@ -5,18 +5,15 @@ import org.apache.spark.sql.functions._
 /** Every iterative/multi-consumer operator that persists intermediate state
   * must release it before returning (see [[graft.Local]]): at 100 TB a
   * per-query cache leak evicts useful cache or OOMs executors long before
-  * correctness is at stake. Pinned here via `getPersistentRDDs` — the set of
-  * persisted RDDs after running each caching operator end-to-end must be no
-  * larger than before it. The leak bound over the whole declared surface
-  * reads PlanBudgetSpec's one execution of it.
+  * correctness is at stake. Pinned here via `getPersistentRDDs` — running
+  * each caching operator end-to-end must leave no RDD persisted that was
+  * not persisted before it (compared by id, [[SparkSpec.persistedBy]]).
+  * The leak bound over the whole declared surface reads PlanBudgetSpec's
+  * one execution of it.
   */
 class CacheLifecycleSpec extends SparkSpec {
 
-  private def leakedAfter(run: => Unit): Int = {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    run
-    spark.sparkContext.getPersistentRDDs.size - before
-  }
+  private def leakedAfter(run: => Unit): Int = persistedBy(run)._2.size
 
   private val dir = "/root/testdata/sf0.001"
 

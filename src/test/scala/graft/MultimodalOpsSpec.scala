@@ -394,11 +394,7 @@ class MultimodalOpsSpec extends SparkSpec {
     // q_cap_audit_phash runs the base plant, which always derives grid 8;
     // the dense plant crosses 8*2^8, so the audit takes the re-hash branch
     val media = MultimodalOps.plantPhashCorpusDense(MultimodalOps.asMedia(sf("documents")))
-    val sc = spark.sparkContext
-    // RDD ids, not a count: the cleaner may drop an earlier test's blocks
-    val before = sc.getPersistentRDDs.keySet
-    val auto = MultimodalOps.phashCapAuditAuto(media).collect().toSeq
-    val kept = sc.getPersistentRDDs.keySet -- before
+    val (auto, kept) = persistedBy(MultimodalOps.phashCapAuditAuto(media).collect().toSeq)
     assert(kept.isEmpty, s"the grid-8 probe sketch's blocks were kept: RDDs $kept")
     assert(auto == MultimodalOps.phashCapAudit(media, grid = 16).collect().toSeq)
     assert(auto != MultimodalOps.phashCapAudit(media, grid = 8).collect().toSeq,

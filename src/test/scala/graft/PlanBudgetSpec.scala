@@ -238,10 +238,9 @@ class PlanBudgetSpec extends SparkSpec {
     // leaves a cached frame" keeps the cache empty from here on
     spark.catalog.clearCache()
     val cache = spark.sharedState.cacheManager
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
     val t0 = System.nanoTime()
     val leftCached = scala.collection.mutable.ArrayBuffer.empty[String]
-    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val (runs, kept) = persistedBy(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // Throwable, not NonFatal: a StackOverflowError in one deep plan is
       // that query's failure, and the run goes on
       val run = try {
@@ -254,9 +253,8 @@ class PlanBudgetSpec extends SparkSpec {
       } catch { case e: Throwable => Left(e) }
       if (!cache.isEmpty) leftCached += name
       name -> run
-    }
-    Surface(runs.toMap, leftCached.toSeq,
-      spark.sparkContext.getPersistentRDDs.size - rddsBefore, (System.nanoTime() - t0) / 1e9)
+    })
+    Surface(runs.toMap, leftCached.toSeq, kept.size, (System.nanoTime() - t0) / 1e9)
   }
 
   private def ran: Seq[(String, Run)] =
@@ -289,15 +287,15 @@ class PlanBudgetSpec extends SparkSpec {
   }
 
   test("declared surface: persistent RDDs grow by at most the by-design survivors") {
-    // the regression guard for every FUTURE query: bound net growth by
-    // the known by-design survivors (dedupClusters' final local
+    // the regression guard for every FUTURE query: bound the RDDs the
+    // surface leaves persisted (by id) by the known by-design survivors (dedupClusters' final local
     // checkpoint, one per clustering consumer — unpersisting it would be
     // unrecoverable)
     val byDesign = 5 // q_dedup_clusters/q_dedup_keep_best/q_dedup_incremental
                      // final cluster checkpoints + the q_label_prop label
                      // state and q_kcore core checkpoints
-    assert(surface.rddGrowth <= byDesign,
-      s"net persistent RDDs grew by ${surface.rddGrowth} (> $byDesign)")
+    assert(surface.rddsLeft <= byDesign,
+      s"the surface left ${surface.rddsLeft} new persistent RDDs (> $byDesign)")
   }
 
   test("declared surface: no initial plan holds a CartesianProduct") {
@@ -434,11 +432,12 @@ private object PlanBudgetSpec {
 
   /** The declared surface's one execution: each query's [[Run]] or the
     * exception it threw, the queries after which the CacheManager held a
-    * frame, the net growth of persistent RDDs and the wall seconds.
+    * frame, the number of RDDs it left persisted (by id, see
+    * [[SparkSpec.persistedBy]]) and the wall seconds.
     */
   final case class Surface(
       runs: Map[String, Either[Throwable, Run]],
       leftCached: Seq[String],
-      rddGrowth: Int,
+      rddsLeft: Int,
       seconds: Double)
 }

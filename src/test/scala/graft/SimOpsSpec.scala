@@ -122,6 +122,14 @@ class SimOpsSpec extends SparkSpec {
     // both vectors join cell 1; cell 2 is empty and survives unchanged
     assert(got(0) == (1L, Seq(0.95, 0.05)))
     assert(got(1) == (2L, Seq(-1.0, 0.0)))
+    // the PQ Lloyd loop keeps an empty entry the same way: entries 1 and 2
+    // are identical, ties go to the smaller c_id, so entry 2 gets no members
+    val pq = emb((1L, Seq(1f, 0f), 0), (2L, Seq(1f, 0f), 0), (3L, Seq(0.9f, 0.1f), 0))
+    val books = SimOps.refinePqCodebooks(pq, col("vec_id") <= 2, m = 1, iters = 1)
+      .as[(Int, Long, Seq[Double])].collect().sortBy(_._2).toSeq
+    assert(books == Seq(
+      (0, 1L, Seq(29000.0 / 30000.0, 1000.0 / 30000.0)),
+      (0, 2L, Seq(1.0, 0.0))))
   }
 
   test("ivfKmeansTopK: scores are true cosines; refinement holds recall") {
@@ -999,6 +1007,24 @@ class SimOpsSpec extends SparkSpec {
     }
     // non-codebook vectors generally do not reconstruct exactly
     assert(got.count(r => r._1 >= 8 && r._4 > 0L) > (got.length - 8) / 2)
+  }
+
+  test("productQuantize: subvectors follow the corpus dimension") {
+    // 128 dims, m = 4: 32 per subspace. B equals the codebook vector A on
+    // dims 1-64 and differs after, so only subspaces 2 and 3 carry error
+    val a = Seq.fill(64)(0.1f) ++ Seq.fill(64)(0.1f)
+    val b = Seq.fill(64)(0.1f) ++ Seq.fill(64)(0.5f)
+    val got = SimOps.productQuantize(emb((0L, a, 0), (1L, b, 0)), col("vec_id") === 0)
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got.map(_._2) == Seq(4L, 4L))
+    assert(got(0)._4 == 0L)
+    assert(got(1)._4 > 0L, s"dims 65-128 never reached a subvector: $got")
+    // m = 3 does not divide 128: the error names both
+    val e = intercept[Exception] {
+      SimOps.productQuantize(emb((0L, a, 0)), col("vec_id") === 0, m = 3).collect()
+    }
+    assert(e.getMessage.contains("m = 3 does not divide the embedding dimension 128"),
+      e.getMessage)
   }
 
   test("knnLabel: majority label of the nearest cluster wins") {

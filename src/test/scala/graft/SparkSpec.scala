@@ -18,4 +18,15 @@ trait SparkSpec extends AnyFunSuite {
   }
   def sf(name: String, dir: String = "/root/testdata/sf0.001") =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `run`'s result and the ids of the RDDs it left persisted: persisted
+    * after it and not before it. Ids, not a count: the context cleaner may
+    * unpersist an earlier test's garbage-collected RDD during `run`, and a
+    * count difference would net that against a leak.
+    */
+  def persistedBy[T](run: => T): (T, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = run
+    (out, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
+  }
 }
