@@ -230,7 +230,16 @@ class PlanBudgetSpec extends SparkSpec {
     "q_embed_drift" -> Pin(2, 2, 1, 2),
     "q_knn_graph" -> Pin(2, 3, 1, 2),
     "q_knn_graph_probe2" -> Pin(3, 4, 1, 2),
-    "q_embed_neardup_cells_hier2_p2" -> Pin(6, 8, 3, 6))
+    "q_embed_neardup_cells_hier2_p2" -> Pin(6, 8, 3, 6),
+    // the queries that reach TextOps' stopword list and language ladder
+    // (langId, langConfusion, qualityScore): every count below held over
+    // three runs at sf0.001, none fluttered.
+    "q_lang_id" -> Pin(1, 1, 0, 0),
+    "q_lang_confusion" -> Pin(1, 3, 0, 0),
+    "q_quality" -> Pin(1, 1, 0, 0),
+    "q_quality_linreg" -> Pin(1, 0, 0, 0),
+    "q_dedup_keep_best" -> Pin(3, 3, 0, 1),
+    "q_sample_weighted" -> Pin(1, 1, 0, 0))
 
   private lazy val surface: Surface = {
     // another suite's cached frame would swap InMemoryRelation in for
