@@ -13,8 +13,8 @@ fails, a sorted-multiset compare runs too, to distinguish "wrong order" from
 "wrong rows".
 
 Every key of oracle_sql.json is checked: a query that crashed in Verify (no
-output directory) is a FAIL, not a silent absence. Output dirs with no oracle
-entry are reported as rows-only WARNs.
+output directory) is a FAIL, not a silent absence, and so is an output dir
+with no oracle entry: a dumped query nothing checks must not pass.
 """
 import sys, os, json, glob
 import duckdb
@@ -69,8 +69,7 @@ def main(sf_dir, out_dir):
         except Exception as e:
             print(f"FAIL {name}: cannot read spark output: {e}"); n_fail += 1; continue
         if name not in oracle:
-            print(f"WARN {name}: no oracle sql (rows-only): rows={len(got)}")
-            continue
+            print(f"FAIL {name}: no oracle sql: rows={len(got)}"); n_fail += 1; continue
         try:
             exp = con.sql(oracle[name]).df()
         except Exception as e:

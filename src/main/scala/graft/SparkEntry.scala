@@ -8,13 +8,16 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.StableHash
 import graft.operators.{AsofOps, DedupOps, EventOps, GraphOps, MultimodalOps, SimOps, SketchOps, SortOps, StatsOps, TextOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract: the declared queries and their DuckDB oracles.
   *
   * Every key in `queries` has a matching DuckDB oracle in `oracleSql`; column
   * names and aliases are kept identical on both sides (the driver sorts
   * columns by name before hashing). Every query has a deterministic total
   * output order (ties broken by the table's unique key) or is an
-  * order-insensitive aggregate with an explicit ORDER BY.
+  * order-insensitive aggregate with an explicit ORDER BY. A rule several
+  * oracles share (an embedding's norm frame, the query side, a closure,
+  * the packer) is one private `duck*` fragment that each oracle
+  * interpolates, so a fix to it is made once.
   */
 object SparkEntry {
 
@@ -1078,12 +1081,11 @@ object SparkEntry {
     // rational weights — the model-fitting step of a quality-classifier
     // pipeline with zero float drift across engines.
     "q_quality_linreg" -> ((s, dir) => {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
       val feats = t(s, dir, "documents")
         .select(TextOps.tokens(col("text")).as("tk"), col("n_chars"))
         .filter(size(col("tk")) > 0)
         .select(size(col("tk")).cast("long").as("x1"),
-          size(filter(col("tk"), x => x.isInCollection(allStops))).cast("long")
+          size(filter(col("tk"), x => x.isInCollection(TextOps.stopwords))).cast("long")
             .as("x2"),
           col("n_chars").as("y"))
       StatsOps.linregFit(feats, col("x1"), col("x2"), col("y"))
@@ -1347,8 +1349,14 @@ object SparkEntry {
     // at the same threshold, flat and hier quantizers side by side in one
     // oracle-verified result (cross-cell misses + cap loss per quantizer).
     "q_recall_audit_semdedup" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.lit
-      val planted = SimOps.plantedVectors(t(s, dir, "embeddings"))
+      val emb = t(s, dir, "embeddings")
+      // the plant plus a doubled copy of every 10th vector (a distinct array
+      // at cosine 1, ids offset past the plant): exact-dedup-first keeps
+      // each copy as its own rep, so the 0.99 audit has pairs to find
+      val doubled = emb.filter(col("vec_id") % 10 === 0)
+        .select((col("vec_id") + 2 * DedupOps.plantStep(emb, "vec_id")).as("vec_id"),
+          transform(col("embedding"), x => x * 2).as("embedding"), col("label"))
+      val planted = SimOps.plantedVectors(emb).unionByName(doubled)
       val pred = SimOps.sqrtCentroidPred(planted)
       SimOps.semDedupRecallAudit(planted, centroidPred = pred)
         .withColumn("quantizer", lit("flat"))
@@ -2408,6 +2416,61 @@ object SparkEntry {
     (init + iters).stripSuffix(", ")
   }
 
+  /** [[duckBpeCtes]] at 3 merges plus each trained word's length in
+    * BPE symbols `wl(word, wlen)` and every document's word stream
+    * `dk(doc_id, word)`.
+    */
+  private def duckBpeWordCtes: String =
+    duckBpeCtes(3) + ", " +
+      "wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS wlen FROM s3), " +
+      s"dk AS (SELECT doc_id, unnest($duckToks) AS word FROM documents)"
+
+  /** [[duckBpeWordCtes]] plus each document's length in BPE symbols:
+    * `d(doc_id, n_tokens)`, the packer's unit after [[TextOps.bpeEncode]].
+    */
+  private def duckBpeLenCtes(d: String): String =
+    duckBpeWordCtes + s", $d AS (SELECT doc_id, CAST(sum(wlen) AS BIGINT) AS n_tokens " +
+      "FROM dk JOIN wl USING (word) GROUP BY doc_id)"
+
+  /** Each document's length in tokens: `d(doc_id, n_tokens)`. */
+  private val duckTokenLenCte =
+    s"d AS (SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tokens FROM documents)"
+
+  /** [[TextOps.packSequences]]' rule over the lengths `d(doc_id, n_tokens)`:
+    * `r` the exclusive prefix sum in doc_id order, `b(doc_id, n_tokens,
+    * seq_id)` its floor into budget-512 sequences (the oracle's single
+    * global prefix sum equals the engine's two-level shard decomposition).
+    * The window sum MUST be cast back to BIGINT: DuckDB's sum(BIGINT) is
+    * HUGEINT, and HUGEINT // 512 stays HUGEINT — which the driver's hash
+    * renders as a float ("0.0" vs Spark's "0") and flags as a mismatch.
+    */
+  private def duckPackCtes(d: String = "d", r: String = "r", b: String = "b"): String =
+    s"$r AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id " +
+      s"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbefore FROM $d), " +
+      s"$b AS (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM $r)"
+
+  /** The packed sequences `b` rolled up: documents, tokens, id range. */
+  private val duckPackSelect =
+    "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
+      "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
+      "min(doc_id) AS first_doc, max(doc_id) AS last_doc " +
+      "FROM b GROUP BY seq_id ORDER BY seq_id"
+
+  /** [[TextOps.forgetBlastRadius]] over the packed sequences `b` and the
+    * q_dedup_forget tombstones (doc_id % 13 = 3): the affected sequences.
+    */
+  private val duckBlastSql =
+    "tb AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 13 = 3), " +
+      "j AS (SELECT b.seq_id, b.n_tokens, " +
+      "CASE WHEN tb.doc_id IS NOT NULL THEN 1 ELSE 0 END AS tombed " +
+      "FROM b LEFT JOIN tb ON b.doc_id = tb.doc_id) " +
+      "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
+      "CAST(sum(tombed) AS BIGINT) AS n_tombstoned, " +
+      "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
+      "CAST(coalesce(sum(CASE WHEN tombed = 1 THEN n_tokens END), 0) AS BIGINT) " +
+      "AS tokens_lost " +
+      "FROM j GROUP BY seq_id HAVING sum(tombed) > 0 ORDER BY seq_id"
+
   /** DuckDB mirror of [[graft.operators.GraphOps.pageRank]] over
     * [[graft.operators.GraphOps.copurchaseEdges]]: the Pregel rounds
     * unrolled, same integer update rule (`//` floors positive quotients
@@ -2451,12 +2514,50 @@ object SparkEntry {
 
   private def duckInList(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString(", ")
 
+  /** The lambda "token `x` is a stopword" ([[TextOps.stopwords]]). */
+  private val duckIsStop = s"x -> x IN (${duckInList(TextOps.stopwords)})"
+
+  /** The token lists `t` of the documents: `d(doc_id, t)`. */
+  private val duckDocToks = s"d AS (SELECT doc_id, $duckToks AS t FROM documents)"
+
+  /** The language-ID rule ([[TextOps.langId]]) over `d(<key>, t)`: `sc`
+    * holds each language's marker hits, `m` adds their max `mx`, and
+    * [[duckLangPred]] is the prediction over `m`.
+    */
+  private def duckLangScoreCtes(key: String): String = {
+    val scores = TextOps.langMarkers.map { case (lang, ws) =>
+      s"len(list_filter(t, x -> x IN (${duckInList(ws)}))) AS score_$lang"
+    }.mkString(", ")
+    val mx = TextOps.langMarkers.map { case (lang, _) => s"score_$lang" }
+      .mkString("greatest(", ", ", ")")
+    s"sc AS (SELECT $key, $scores FROM d), m AS (SELECT *, $mx AS mx FROM sc)"
+  }
+
+  /** The first language (in `langMarkers` order) whose score is the max, or
+    * 'unknown' when no marker hits.
+    */
+  private val duckLangPred = TextOps.langMarkers
+    .map { case (lang, _) => s"WHEN mx > 0 AND score_$lang = mx THEN '$lang'" }
+    .mkString("CASE ", " ", " ELSE 'unknown' END")
+
+  /** [[TextOps.qualityScore]]'s features over the token lists `t` of
+    * `from`: `f(doc_id, n, nd, ns)` — tokens, distinct tokens and
+    * stopwords, empty documents dropped; [[duckQualityBp]] is its score.
+    */
+  private def duckQualityCte(from: String): String =
+    "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
+      "len(list_distinct(t))::DOUBLE AS nd, " +
+      s"len(list_filter(t, $duckIsStop))::DOUBLE AS ns " +
+      s"FROM $from WHERE len(t) > 0)"
+
+  private val duckQualityBp =
+    TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")
+
   /** DuckDB SQL mirroring [[TextOps.gopherQuality]] — also the CTE body
     * of the q_source_stats rollup oracle.
     */
-  private lazy val duckGopherSql: String = {
-    val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH d AS (SELECT doc_id, text, $duckToks AS t FROM documents), " +
+  private lazy val duckGopherSql: String =
+    s"WITH d AS (SELECT doc_id, text, $duckToks AS t FROM documents), " +
         s"g AS (SELECT doc_id, text, t, $duckShingles2 AS g2, $duckShingles3 AS g3 " +
         "FROM d WHERE len(t) > 0), " +
         "sc AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, " +
@@ -2476,7 +2577,7 @@ object SparkEntry {
         s"${TextOps.roundBpSql(
           "CASE WHEN len(g3) > 0 THEN 1.0 - CAST(len(list_distinct(g3)) AS DOUBLE) / " +
             "CAST(len(g3) AS DOUBLE) ELSE 0.0 END")} AS rep_3gram_bp, " +
-        s"CAST(len(list_filter(t, x -> x IN (${duckInList(allStops)}))) AS BIGINT) AS n_stop " +
+        s"CAST(len(list_filter(t, $duckIsStop)) AS BIGINT) AS n_stop " +
         "FROM g), " +
         "gg AS (SELECT doc_id, unnest(g2) AS gram FROM g), " +
         "gc AS (SELECT doc_id, gram, count(*) AS cnt FROM gg GROUP BY 1, 2), " +
@@ -2494,7 +2595,131 @@ object SparkEntry {
         "AND rep_2gram_bp < 2000 AND top_2gram_char_bp < 2000 " +
         "AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass " +
         "FROM j ORDER BY doc_id"
+
+  /** The token lists `t(doc_id, t)` of the `corpus` CTE and their distinct
+    * 3-shingle sets `sl(doc_id, shs)`.
+    */
+  private val duckShingleSetCtes =
+    s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
+      s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t)"
+
+  /** The exact Jaccard of shingle sets `a` and `b` in bp. */
+  private def duckJaccardBp(a: String, b: String): String =
+    TextOps.roundBpSql(
+      s"CAST(len(list_filter($a, e -> list_contains($b, e))) AS DOUBLE) / " +
+        s"CAST(len(list_distinct(list_concat($a, $b))) AS DOUBLE)")
+
+  /** The text anchor audits' exact side over `sl`: `anchd` the
+    * hash-sampled anchor docs of `corpus`, `cidx` every doc sharing a
+    * shingle with an anchor (through the inverted index `ashx` ⋈ `shx`),
+    * and `scd(a_id, doc_id, jac_bp)` their exact Jaccard.
+    */
+  private val duckAnchorPostingsCtes =
+    "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
+      s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
+      "ashx AS (SELECT a_id, unnest(a_shs) AS sx FROM anchd), " +
+      "shx AS (SELECT doc_id, unnest(shs) AS sx FROM sl), " +
+      "cidx AS (SELECT DISTINCT ashx.a_id, shx.doc_id FROM ashx " +
+      "JOIN shx ON ashx.sx = shx.sx AND shx.doc_id <> ashx.a_id), " +
+      s"scd AS (SELECT cidx.a_id, cidx.doc_id, ${duckJaccardBp("anchd.a_shs", "sl.shs")} AS jac_bp " +
+      "FROM cidx JOIN anchd ON cidx.a_id = anchd.a_id " +
+      "JOIN sl ON sl.doc_id = cidx.doc_id)"
+
+  /** The text anchor truth: every anchor pair at Jaccard ≥ 0.8. */
+  private val duckTextTruthCte =
+    "tp AS (SELECT DISTINCT least(a_id, doc_id) AS pa, " +
+      "greatest(a_id, doc_id) AS pb FROM scd WHERE jac_bp >= 8000)"
+
+  /** The anchor-touching pairs `fa(pa, pb)` of `pairs(id_a, id_b)`. */
+  private def duckTextFoundCte(pairs: String): String =
+    s"fa AS (SELECT DISTINCT id_a AS pa, id_b AS pb FROM $pairs JOIN anchd " +
+      s"ON $pairs.id_a = anchd.a_id OR $pairs.id_b = anchd.a_id)"
+
+  /** [[DedupOps.simhashBallPairs]] (bits=32, bands=4 x 8-bit slices,
+    * maxDist=3, hot-bucket cap 64) over [[duckSimhashCtes]]: `ballp(id_a,
+    * id_b, hamming)`.
+    */
+  private def duckSimhashBallCtes: String = {
+    val bandSelects = (0 until 4).map { b =>
+      s"SELECT doc_id, simhash, '$b:' || ((simhash >> ${b * 8}) & 255) AS bkey FROM s"
+    }.mkString(" UNION ALL ")
+    s"${duckSimhashCtes(32)}, " +
+      s"bd AS ($bandSelects), " +
+      "okb AS (SELECT bkey FROM bd GROUP BY bkey " +
+      s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
+      "ballp AS (SELECT id_a, id_b, hamming FROM (SELECT a.doc_id AS id_a, " +
+      "b.doc_id AS id_b, CAST(min(bit_count(xor(a.simhash, b.simhash))) AS BIGINT) " +
+      "AS hamming FROM bd a JOIN bd b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
+      "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2) WHERE hamming <= 3)"
   }
+
+  /** [[DedupOps.jaccardPairs]]' inverted index over the `corpus` query:
+    * shingle postings `z` cut to shingles in 2..64 docs (`zc`, the
+    * stop-shingle guard) and the pair intersections `p(id_a, id_b, n_a,
+    * n_b, inter)`.
+    */
+  private def duckPostingsPairCtes(corpus: String): String =
+    s"corpus AS ($corpus), $duckShingleSetCtes, " +
+      "z AS (SELECT doc_id, len(shs) AS n, unnest(shs) AS sh FROM sl), " +
+      "zc AS (SELECT sh FROM z GROUP BY sh " +
+      s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
+      "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS n_a, b.n AS n_b, " +
+      "count(*) AS inter FROM z a JOIN z b ON a.sh = b.sh AND a.doc_id < b.doc_id " +
+      "JOIN zc ON zc.sh = a.sh " +
+      "GROUP BY 1, 2, 3, 4)"
+
+  /** The recursive connected-components closure over the pair set
+    * `pairs(id_a, id_b)` (the oracle needs WITH RECURSIVE): `e` holds both
+    * directions of every pair, `nodes` every endpoint, and `reach(id, lab)`
+    * every label reachable from `id`, so min(lab) per id is its
+    * component's min-id label — the [[DedupOps.dedupClusters]] rule. `pfx`
+    * and `sfx` wrap the three CTE names (word-boundary rename) so several
+    * closures share one WITH.
+    */
+  private def duckReachCtes(pairs: String, pfx: String = "", sfx: String = ""): String =
+    (s"e AS (SELECT id_a AS src, id_b AS dst FROM $pairs " +
+      s"UNION SELECT id_b AS src, id_a AS dst FROM $pairs), " +
+      "nodes AS (SELECT DISTINCT src AS id FROM e), " +
+      "reach AS (SELECT id, id AS lab FROM nodes " +
+      "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id)")
+      .replaceAll("\\b(e|nodes|reach)\\b", s"$pfx$$1$sfx")
+
+  /** [[DedupOps.dedupForget]] over the pair set `pairs(id_a, id_b)` and
+    * the tombstones `tomb(doc_id)`: `cl(doc_id, cluster_id)` the closure
+    * over every pair, `sp` the pairs with no tombstoned end and
+    * `cl2(doc_id, nc)` their closure, `aff` the clusters holding a
+    * tombstone, and `out` every surviving member of an affected cluster
+    * with its old and new label, whether its rep changed and whether it is
+    * now a singleton. `pfx` prefixes every CTE name; the labels, the kept
+    * pairs and `out` are MATERIALIZED, each being read several times.
+    */
+  private def duckForgetCtes(pairs: String, tomb: String, pfx: String = ""): String = {
+    val (cl, cl2, sp) = (s"${pfx}cl", s"${pfx}cl2", s"${pfx}sp")
+    s"${duckReachCtes(pairs, pfx)}, " +
+      s"$cl AS MATERIALIZED (SELECT id AS doc_id, min(lab) AS cluster_id " +
+      s"FROM ${pfx}reach GROUP BY id), " +
+      s"$sp AS MATERIALIZED (SELECT id_a, id_b FROM $pairs " +
+      s"WHERE id_a NOT IN (SELECT doc_id FROM $tomb) " +
+      s"AND id_b NOT IN (SELECT doc_id FROM $tomb)), " +
+      s"${duckReachCtes(sp, pfx, "2")}, " +
+      s"$cl2 AS MATERIALIZED (SELECT id AS doc_id, min(lab) AS nc " +
+      s"FROM ${pfx}reach2 GROUP BY id), " +
+      s"${pfx}aff AS (SELECT DISTINCT cluster_id FROM $cl " +
+      s"WHERE doc_id IN (SELECT doc_id FROM $tomb)), " +
+      s"${pfx}out AS MATERIALIZED (SELECT $cl.doc_id, $cl.cluster_id AS old_cluster, " +
+      s"coalesce($cl2.nc, $cl.doc_id) AS new_cluster, " +
+      s"CAST(CASE WHEN coalesce($cl2.nc, $cl.doc_id) <> $cl.cluster_id " +
+      "THEN 1 ELSE 0 END AS BIGINT) AS rep_changed, " +
+      s"CAST(CASE WHEN $cl2.nc IS NULL THEN 1 ELSE 0 END AS BIGINT) AS now_singleton " +
+      s"FROM $cl LEFT JOIN $cl2 USING (doc_id) " +
+      s"WHERE $cl.cluster_id IN (SELECT cluster_id FROM ${pfx}aff) " +
+      s"AND $cl.doc_id NOT IN (SELECT doc_id FROM $tomb))"
+  }
+
+  /** The forget audits' report columns after the id: old and new label,
+    * rep change and singleton flags, from [[duckForgetCtes]]' `out`.
+    */
+  private val duckForgetCols = "old_cluster, new_cluster, rep_changed, now_singleton"
 
   /** Shared CTE chain for the MinHash oracles: planted corpus → token lists
     * → distinct-shingle lists (`sl`) → exploded shingles → 8-hash signature
@@ -2512,9 +2737,7 @@ object SparkEntry {
       val parts = (s"'$b'" +: (0 until r).map(j => s"s${b * r + j}")).mkString(", ")
       s"SELECT doc_id, concat_ws(':', $parts) AS bkey FROM sig"
     }.mkString(" UNION ALL ")
-    s"corpus AS ($duckCorpus), " +
-      s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-      s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
+    s"corpus AS ($duckCorpus), $duckShingleSetCtes, " +
       "sh AS (SELECT doc_id, unnest(shs) AS s FROM sl), " +
       s"shh AS (SELECT doc_id, s, ${StableHash.hash60Sql("s")} AS hh FROM sh), " +
       s"sig AS (SELECT doc_id, $sigCols FROM shh GROUP BY doc_id), " +
@@ -2539,51 +2762,248 @@ object SparkEntry {
       s"s AS (SELECT doc_id, $sketch AS simhash FROM v)"
   }
 
-  /** Shared CTE chain for the brute-force similarity oracles, mirroring
-    * [[SimOps.bruteTopK]] (queries = vec_id < 5, k = 10).
+  /** `cte(<key>, e, nrm)`: the embeddings of `from` as `DOUBLE[]` and
+    * their L2 norm, the frame every cosine below reads. `key` is the
+    * leading column list (`rep AS vec_id` over the exact-dedup groups).
     * `list_dot_product` over `DOUBLE[]` folds left-to-right like Spark's
     * `aggregate(zip_with(...))`, so the doubles are bit-identical.
     */
+  private def duckNormCte(cte: String, from: String, key: String = "vec_id"): String =
+    s"$cte AS (SELECT $key, embedding::DOUBLE[] AS e, " +
+      s"sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM $from)"
+
+  /** Centroid frame `cte(c_id, ce, cn)`: the vectors of norm frame `from`
+    * that `pred` samples.
+    */
+  private def duckSeedCte(cte: String, from: String, pred: String): String =
+    s"$cte AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM $from WHERE $pred)"
+
+  /** The 16 fixed fixture cells: seeds `vec_id` 100..115. */
+  private val duckFixtureCells = "vec_id BETWEEN 100 AND 115"
+
+  /** The fixture cells `c` over `n`. */
+  private val duckFixtureCellCte = duckSeedCte("c", "n", duckFixtureCells)
+
+  /** The query side of every top-k and recall oracle: `q(q_id, qe, qn)`,
+    * the vectors `vec_id < 5` of `n`.
+    */
+  private val duckQueryCte = "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5)"
+
+  /** The exact top-10 truth `bt(q_id, vec_id)` of the queries `q` over `n`
+    * (ties to the lower id) that every recall sweep counts hits against.
+    */
+  private val duckBruteTruthCtes =
+    "bp AS (SELECT q.q_id, n.vec_id, " +
+      "list_dot_product(qe, e) / (qn * nrm) AS cos FROM n JOIN q ON n.vec_id <> q.q_id), " +
+      "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
+      "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10)"
+
+  /** Flat assignment of `n` to the centroids `c`: `rk` ranks each vector's
+    * cells by cosine (ties to the lower c_id), `asg` keeps the best.
+    */
+  private val duckFlatAssignCtes =
+    "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
+      "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
+      "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
+      "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
+      "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1)"
+
+  /** The IVF probe list `pr(q_id, c_id)`: each query's 4 nearest cells,
+    * read off the flat ranking `rk`.
+    */
+  private val duckProbeCte = "pr AS (SELECT vec_id AS q_id, c_id FROM rk WHERE vec_id < 5 AND crn <= 4)"
+
+  /** The same probe list ranked over every cell on its own (`qrk`), for
+    * chains whose corpus assignment is two-level: the query side never
+    * rides the approximation.
+    */
+  private val duckQueryProbeCtes =
+    "qcs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
+      "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim " +
+      "FROM n CROSS JOIN c WHERE n.vec_id < 5), " +
+      "qrk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
+      "ORDER BY csim DESC, c_id) AS crn FROM qcs), " +
+      "pr AS (SELECT vec_id AS q_id, c_id FROM qrk WHERE crn <= 4)"
+
+  /** The two-level quantizer's supercells over centroid frame `cells`
+    * (SimOps.superCents: distributed id-hash stride + min-id guard): `sup`
+    * the supercenters, `c2s` each centroid's best supercell.
+    */
+  private def duckSuperCtes(cells: String): String =
+    "per AS (SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS p, " +
+      s"min(c_id) AS mn FROM $cells), " +
+      s"sup AS (SELECT c_id AS sc_id, ce AS sce, cn AS scn FROM $cells " +
+      s"WHERE ${StableHash.hash60Sql("CAST(c_id AS VARCHAR)")} % " +
+      "(SELECT p FROM per) = 0 OR c_id = (SELECT mn FROM per)), " +
+      s"css AS (SELECT $cells.c_id AS cid0, sup.sc_id, " +
+      s"list_dot_product($cells.ce, sup.sce) / ($cells.cn * sup.scn) AS s FROM $cells CROSS JOIN sup), " +
+      "c2s AS (SELECT cid0, sc_id FROM (SELECT *, row_number() OVER " +
+      "(PARTITION BY cid0 ORDER BY s DESC, sc_id) AS rn FROM css) WHERE rn = 1)"
+
+  /** `cte(vec_id, c_id)`: each vector of `n`'s best cell of `cells` by
+    * cosine, ties to the lower c_id.
+    */
+  private def duckArgmaxCte(cte: String, cells: String): String =
+    s"$cte AS (SELECT vec_id, c_id FROM (SELECT n.vec_id, $cells.c_id, " +
+      "row_number() OVER (PARTITION BY n.vec_id " +
+      s"ORDER BY list_dot_product(n.e, $cells.ce) / (n.nrm * $cells.cn) DESC, $cells.c_id) AS crn " +
+      s"FROM n CROSS JOIN $cells) WHERE crn = 1)"
+
+  /** One bp-integer Lloyd round of the seeds `c0` over assignment
+    * `assign(vec_id, c_id)`: per-cell sums of bp-rounded components, one
+    * division per dimension, an empty cell keeping its seed. Yields
+    * `c<sfx>(c_id, ce, cn)`.
+    */
+  private def duckLloydCtes(assign: String, sfx: String = ""): String =
+    s"z$sfx AS (SELECT $assign.c_id, unnest(n.e) AS v, unnest(range(1, len(n.e) + 1)) AS pos " +
+      s"FROM $assign JOIN n USING (vec_id)), " +
+      s"sm$sfx AS (SELECT c_id, pos, sum(CAST(floor(v * 10000.0 + 0.5) AS BIGINT)) AS s, " +
+      s"count(*) AS cnt FROM z$sfx GROUP BY c_id, pos), " +
+      s"c1$sfx AS (SELECT c_id, list(CAST(s AS DOUBLE) / (cnt * 10000.0) ORDER BY pos) AS ce " +
+      s"FROM sm$sfx GROUP BY c_id), " +
+      s"c$sfx AS (SELECT c0.c_id, coalesce(c1$sfx.ce, c0.ce) AS ce, " +
+      s"coalesce(sqrt(list_dot_product(c1$sfx.ce, c1$sfx.ce)), c0.cn) AS cn " +
+      s"FROM c0 LEFT JOIN c1$sfx USING (c_id))"
+
+  /** The head of the recall sweeps: the norm frame `n` of the corpus, the
+    * queries `q` and their exact truth `bt`.
+    */
+  private val duckRecallHead = s"${duckNormCte("n", "embeddings")}, $duckQueryCte, $duckBruteTruthCtes"
+
+  /** `r`: the candidates `from(q_id, vec_id, cos)` ranked per query. */
+  private def duckRankCte(from: String): String =
+    "r AS (SELECT q_id, vec_id, cos, row_number() OVER " +
+      s"(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM $from)"
+
+  private val duckTopKSelect =
+    s"SELECT q_id, rank, vec_id, ${TextOps.roundBpSql("cos")} AS cos_bp " +
+      "FROM r WHERE rank <= 10 ORDER BY q_id, rank"
+
+  /** The k-NN graph pairs `p(id_a, id_b, cos)`: each vector of `aSide`
+    * against the vectors assigned (`asg`) to the same cell.
+    */
+  private def duckKnnPairsCte(aSide: String): String =
+    "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
+      "list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS cos " +
+      s"FROM $aSide a JOIN asg b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id)"
+
+  /** The k-NN graph's top-3 neighbours per source over pairs `from`. */
+  private def duckKnnTopSql(from: String): String =
+    "r AS (SELECT id_a, id_b, cos, row_number() OVER (PARTITION BY id_a " +
+      s"ORDER BY cos DESC, id_b) AS rank FROM $from) " +
+      s"SELECT id_a, rank, id_b, ${TextOps.roundBpSql("cos")} AS cos_bp " +
+      "FROM r WHERE rank <= 3 ORDER BY id_a, rank"
+
+  /** The bp-rounded cosine of the pair `a`, `b` (both norm frames). */
+  private val duckPairCosBp = TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")
+
+  /** [[SimOps.plantedVectors]]: the embeddings (columns `vec_id, <cols>`)
+    * plus an exact copy of every 100th vector above every real id.
+    */
+  private def duckPlantedVectors(cols: String): String =
+    s"SELECT vec_id, $cols FROM embeddings " +
+      s"UNION ALL SELECT vec_id + ${DedupOps.plantStepSql("embeddings", "vec_id")} " +
+      s"AS vec_id, $cols FROM embeddings WHERE vec_id % 100 = 0"
+
+  /** Over the corpus `base`: `nall` its norm frame, `c` the centroids
+    * `pred` samples from the FULL corpus, and `egrp` the exact-dedup groups
+    * (identical arrays collapse to their min-id `rep`).
+    */
+  private def duckRepGroupCtes(pred: String): String =
+    s"${duckNormCte("nall", "base")}, ${duckSeedCte("c", "nall", pred)}, " +
+      "egrp AS (SELECT embedding, min(vec_id) AS rep FROM base GROUP BY embedding)"
+
+  /** `emem(vec_id, rep)`: every row of `base` and its exact-dedup rep. */
+  private val duckMemberCte =
+    "emem AS (SELECT b.vec_id AS vec_id, egrp.rep AS rep " +
+      "FROM base b JOIN egrp ON b.embedding = egrp.embedding)"
+
+  /** The member re-attach of rep pairs `rp<sfx>(ra, rb, cos_bp)`: cross
+    * pairs at the rep cosine, intra-group pairs at 10000.
+    */
+  private def duckReattachCtes(sfx: String): String =
+    s"crossp$sfx AS (SELECT least(ma.vec_id, mb.vec_id) AS id_a, " +
+      s"greatest(ma.vec_id, mb.vec_id) AS id_b, cos_bp FROM rp$sfx " +
+      s"JOIN emem ma ON rp$sfx.ra = ma.rep JOIN emem mb ON rp$sfx.rb = mb.rep), " +
+      s"intra$sfx AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b, " +
+      "CAST(10000 AS BIGINT) AS cos_bp FROM emem x JOIN emem y " +
+      "ON x.rep = y.rep AND x.vec_id < y.vec_id)"
+
+  /** The maxCell participation cap ([[SimOps.DefaultMaxCell]], by id rank)
+    * on the assignment `asg`: `p(vec_id, e, nrm, c_id)`.
+    */
+  private val duckCellCapCte =
+    "p AS (SELECT vec_id, e, nrm, c_id FROM (SELECT *, row_number() " +
+      "OVER (PARTITION BY c_id ORDER BY vec_id) AS rk FROM asg) " +
+      s"WHERE rk <= ${SimOps.DefaultMaxCell})"
+
+  /** The embedding anchor truth shared by the rep-pair recall audits:
+    * `anch` the hash-sampled anchors of rep frame `reps`, `tp` every rep
+    * within `minBp` of an anchor, `fa` the anchor-touching rep pairs of
+    * `pairs(ra, rb)`. [[duckRecallSql]] divides `fa` into `tp`.
+    */
+  private def duckVecAnchorCtes(reps: String, pairs: String, minBp: Int): String =
+    s"anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM $reps " +
+      s"WHERE ${DedupOps.anchorPredSql("vec_id", reps)}), " +
+      "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
+      s"greatest(n.vec_id, a.a_id) AS pb FROM $reps n CROSS JOIN anch a " +
+      "WHERE n.vec_id <> a.a_id AND " +
+      s"${TextOps.roundBpSql("list_dot_product(n.e, a.ae) / (n.nrm * a.an)")} >= $minBp), " +
+      s"fa AS (SELECT DISTINCT ra AS pa, rb AS pb FROM $pairs JOIN anch " +
+      s"ON $pairs.ra = anch.a_id OR $pairs.rb = anch.a_id)"
+
+  /** `⌊count(num) · 10⁴ / count(den)⌋`, or 10000 when `den` is empty: the
+    * recall (and precision) rule of every audit.
+    */
+  private def duckShareBp(num: String, den: String): String =
+    s"CASE WHEN (SELECT count(*) FROM $den) > 0 THEN " +
+      TextOps.floorDivSql(s"(SELECT count(*) FROM $num) * 10000", s"(SELECT count(*) FROM $den)") +
+      " ELSE 10000 END"
+
+  /** The anchor audits' report up to `n_truth`: anchors and truth pairs `tp`. */
+  private def duckAnchorCounts(anchors: String): String =
+    s"SELECT (SELECT count(*) FROM $anchors) AS n_anchors, (SELECT count(*) FROM tp) AS n_truth, "
+
+  /** The anchor audits' one-row report: anchors, truth pairs `tp`, found
+    * pairs `found`, and the recall of `found` in `tp`.
+    */
+  private def duckRecallSql(anchors: String, found: String): String =
+    duckAnchorCounts(anchors) + s"(SELECT count(*) FROM $found) AS n_found, " +
+      duckShareBp(found, "tp") + " AS recall_bp"
+
+  /** Shared CTE chain for the brute-force similarity oracles, mirroring
+    * [[SimOps.bruteTopK]] (queries = vec_id < 5, k = 10).
+    */
   private def duckSimCtes: String =
-    "n AS (SELECT vec_id, label, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM embeddings), " +
-      "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
+    s"${duckNormCte("n", "embeddings", "vec_id, label")}, $duckQueryCte, " +
       "p AS (SELECT q_id, n.vec_id AS vec_id, " +
       "list_dot_product(qe, e) / (qn * nrm) AS cos " +
-      "FROM n JOIN q ON n.vec_id <> q.q_id), " +
-      "r AS (SELECT q_id, vec_id, cos, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM p)"
+      s"FROM n JOIN q ON n.vec_id <> q.q_id), ${duckRankCte("p")}"
 
-  /** CTE chain mirroring the multi-table [[SimOps.lshTopK]] (8 tables of
-    * 4 sign bits over dims [4t, 4t+4), queries = vec_id < 5): per-table
-    * bucket keys, equi-join on the key, duplicate collisions collapsed
-    * before ranking.
+  /** The bucket keys of the first `nTables` LSH tables (4 sign bits over
+    * dims [4t, 4t+4)) of every vector of `n`: rows (vec_id, e, nrm, tb).
     */
-  private def duckLshCtes: String = {
-    val tableSelects = (0 until 8).map { t =>
+  private def duckLshTables(nTables: Int): String =
+    (0 until nTables).map { t =>
       val bucket = (0 until 4)
         .map(i => s"(CASE WHEN e[${t * 4 + i + 1}] >= 0 THEN ${1 << i} ELSE 0 END)")
         .mkString(" + ")
       s"SELECT vec_id, e, nrm, '$t:' || ($bucket) AS tb FROM n"
     }.mkString(" UNION ALL ")
-    "n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM embeddings), " +
-      s"tb AS ($tableSelects), " +
+
+  /** CTE chain mirroring the multi-table [[SimOps.lshTopK]] (8 tables,
+    * queries = vec_id < 5): per-table bucket keys, equi-join on the key,
+    * duplicate collisions collapsed before ranking.
+    */
+  private def duckLshCtes: String =
+    s"${duckNormCte("n", "embeddings")}, tb AS (${duckLshTables(8)}), " +
       "q AS (SELECT vec_id AS q_id, qe, qn, tb FROM (SELECT vec_id, e AS qe, nrm AS qn, tb " +
       "FROM tb) WHERE vec_id < 5), " +
       "p0 AS (SELECT q_id, c.vec_id AS vec_id, " +
       "list_dot_product(qe, e) / (qn * nrm) AS cos " +
       "FROM tb c JOIN q ON c.tb = q.tb AND c.vec_id <> q.q_id), " +
       "p AS (SELECT q_id, vec_id, min(cos) AS cos FROM p0 GROUP BY q_id, vec_id), " +
-      "r AS (SELECT q_id, vec_id, cos, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM p)"
-  }
-
-  private val duckTopKSelect =
-    s"SELECT q_id, rank, vec_id, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-      "FROM r WHERE rank <= 10 ORDER BY q_id, rank"
+      duckRankCte("p")
 
   /** DuckDB CTE matching [[MultimodalOps.asMedia]] — payload handled as a
     * hex string because DuckDB 1.0 has no BLOB substr/md5; `md5(text)`
@@ -2599,19 +3019,20 @@ object SparkEntry {
     * appended after [[duckMinhashCtes]]; mirrors
     * [[DedupOps.verifiedNearDups]] (threshold 8000 bp).
     */
-  private lazy val duckVerifiedPairsCte: String = {
-    val jac = TextOps.roundBpSql(
-      "CAST(len(list_filter(x.shs, e -> list_contains(y.shs, e))) AS DOUBLE) / " +
-        "CAST(len(list_distinct(list_concat(x.shs, y.shs))) AS DOUBLE)")
-    "cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM bands a " +
-      "JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
-      "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2), " +
-      s"vp AS (SELECT * FROM (SELECT id_a, id_b, $jac AS jac_bp FROM cand " +
+  private lazy val duckVerifiedPairsCte: String =
+    s"$duckMinhashCandCte, " +
+      s"vp AS (SELECT * FROM (SELECT id_a, id_b, ${duckJaccardBp("x.shs", "y.shs")} AS jac_bp FROM cand " +
       "JOIN sl x ON x.doc_id = cand.id_a JOIN sl y ON y.doc_id = cand.id_b) " +
       "WHERE jac_bp >= 8000)"
-  }
 
-  /** DuckDB CTE body matching [[DedupOps.plantedCorpus]]. */
+  /** The band candidates `cand(id_a, id_b)` of [[duckMinhashCtes]]: doc
+    * pairs sharing a band bucket that survives the cap.
+    */
+  private val duckMinhashCandCte =
+    "cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM bands a " +
+      "JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
+      "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2)"
+
   /** One aHash pass of the phash oracle at grid `g`: cells →
     * nearest-neighbor-sampled gray → total → per-row band bytes → hash
     * vector, all suffixed `sfx` so the probe pass (fixed grid 8) and the
@@ -2655,186 +3076,109 @@ object SparkEntry {
       "(SELECT * FROM crossp UNION ALL SELECT * FROM intra) " +
       "ORDER BY id_a, id_b"
 
-  /** The [[duckCellsSql]] CTE chain without the final member-pair SELECT —
+  /** Cell-assignment CTE fragment over rep frame `n` and centroid frame
+    * `c` (both must already be defined in the enclosing WITH): emits
+    * `asg` (each vector's best cell) and, when `probes` > 1, `asg2`
+    * (its `probes` best). Flat = the ranked cross join; hier = the
+    * two-level quantizer with the probes knob riding the block-restricted
+    * ranking `bsr`: each vector's candidate cells across the union of its
+    * `superProbes` best supercells' blocks (blocks partition the
+    * centroids, so no cell duplicates) — crn <= probes is
+    * cellArgTopPHier, crn = 1 is cellArgmaxHier. Shared by the cells
+    * pairing chain, the semdedup oracle and the hier k-NN graph.
+    */
+  private def duckCellAssignCtes(
+      hier: Boolean, probes: Int = 1, superProbes: Int = 1): String = {
+    val (ranked, rank) = if (hier) ("bsr", "rn") else ("rk", "crn")
+    (if (!hier) duckFlatAssignCtes
+    else
+      duckSuperCtes("c") + ", " +
+        "vs0 AS (SELECT n.vec_id, n.e, n.nrm, sup.sc_id, " +
+        "list_dot_product(n.e, sup.sce) / (n.nrm * sup.scn) AS s FROM n CROSS JOIN sup), " +
+        "vs AS (SELECT vec_id, e, nrm, sc_id FROM (SELECT *, row_number() OVER " +
+        s"(PARTITION BY vec_id ORDER BY s DESC, sc_id) AS rn FROM vs0) WHERE rn <= $superProbes), " +
+        "bs AS (SELECT v.vec_id, v.e, v.nrm, c.c_id, " +
+        "list_dot_product(v.e, c.ce) / (v.nrm * c.cn) AS s " +
+        "FROM vs v JOIN c2s ON v.sc_id = c2s.sc_id JOIN c ON c.c_id = c2s.cid0), " +
+        "bsr AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
+        "ORDER BY s DESC, c_id) AS rn FROM bs), " +
+        "asg AS (SELECT vec_id, e, nrm, c_id FROM bsr WHERE rn = 1)") + ", " +
+      (if (probes > 1)
+        s"asg2 AS (SELECT vec_id, e, nrm, c_id FROM $ranked WHERE $rank <= $probes), "
+      else "")
+  }
+
+  /** Mirror of SimOps.ivfTopK over the centroid chain `coarse` (yielding
+    * `c` from `n`): corpus assignment flat or, when `hier`, through the
+    * shared two-level fragment; each of the 5 queries probes its 4 nearest
+    * cells (an exact ranking over all cells — the query side never rides
+    * the approximation), brute force within probed cells, top-10.
+    */
+  private def duckSimIvfSql(coarse: String, hier: Boolean = false): String =
+    s"WITH ${duckNormCte("n", "embeddings")}, $coarse, " +
+      (if (!hier) s"$duckFlatAssignCtes, $duckProbeCte, "
+      else duckCellAssignCtes(hier = true) + duckQueryProbeCtes + ", ") +
+      s"$duckQueryCte, " +
+      "p AS (SELECT pr.q_id, a.vec_id, " +
+      "list_dot_product(q.qe, a.e) / (q.qn * a.nrm) AS cos " +
+      "FROM pr JOIN asg a ON pr.c_id = a.c_id JOIN q ON q.q_id = pr.q_id " +
+      s"WHERE a.vec_id <> pr.q_id), ${duckRankCte("p")} $duckTopKSelect"
+
+  /** Mirror of SimOps.semDedup over the corpus query `base`:
+    * exact-dedup-first (identical embeddings collapse to a min-id rep;
+    * members never survive), √N-sized hash-sampled centroids over the FULL
+    * corpus, rep-only cell assignment (flat, or the shared two-level
+    * fragment when `hier`), id-rank maxCell cap, and `rp(ra, rb)` the
+    * within-cell rep pairs at cosine ≥ 0.99 (the higher rep drops).
+    */
+  private def duckSemDedupCtes(hier: Boolean, base: String): String =
+    s"WITH base AS ($base), ${duckRepGroupCtes(SimOps.sqrtCentroidPredSql("base"))}, " +
+      s"${duckNormCte("n", "egrp", "rep AS vec_id")}, " +
+      duckCellAssignCtes(hier) + duckCellCapCte + ", " +
+      "rp AS (SELECT a.vec_id AS ra, b.vec_id AS rb FROM p a JOIN p b " +
+      s"ON a.c_id = b.c_id AND a.vec_id < b.vec_id WHERE $duckPairCosBp >= 9900)"
+
+  private def duckSemDedupSql(hier: Boolean): String =
+    duckSemDedupCtes(hier, duckPlantedVectors("embedding")) + ", " +
+      "d AS (SELECT DISTINCT rb AS vec_id FROM rp) " +
+      "SELECT vec_id, c_id FROM asg " +
+      "WHERE vec_id NOT IN (SELECT vec_id FROM d) ORDER BY vec_id"
+
+  /** The q_recall_audit_semdedup corpus: the planted vectors plus a doubled
+    * copy (a distinct array at cosine 1) of every 10th vector, ids offset
+    * past the plant — near-duplicates exact-dedup-first keeps as reps, so
+    * the 0.99 audit has pairs to find.
+    */
+  private val duckSemDedupAuditBase =
+    duckPlantedVectors("embedding") +
+      s" UNION ALL SELECT vec_id + 2 * ${DedupOps.plantStepSql("embeddings", "vec_id")} " +
+      "AS vec_id, list_transform(embedding, x -> x * 2) AS embedding " +
+      "FROM embeddings WHERE vec_id % 10 = 0"
+
+  /** Mirror of SimOps.semDedupRecallAudit at the given quantizer over
+    * [[duckSemDedupAuditBase]]: the semdedup chain's capped within-cell
+    * ≥ 0.99 rep pairs (`rp`) divided into the anchor truth built over
+    * its rep frame `n` at the same threshold.
+    */
+  private def duckSemDedupRecallAuditSql(hier: Boolean): String =
+    duckSemDedupCtes(hier, duckSemDedupAuditBase) + ", " +
+      s"${duckVecAnchorCtes("n", "rp", 9900)} ${duckRecallSql("anch", "fa")}"
+
+  /** The [[duckCellsSql]] CTE chain without the final member-pair SELECT
+    * over the corpus query `base` (the planted vectors by default) —
     * shared with the cells recall-audit oracle, which scores the `rp`
     * rep-pair CTE (the rep-rep restriction of the declared output)
     * against the anchor truth instead of emitting the re-attached pairs.
     */
-  /** Cell-assignment CTE fragment over rep frame `n` and centroid frame
-    * `c` (both must already be defined in the enclosing WITH): emits
-    * `asg` (each vector's best cell) and, when `probes` > 1, `asg2`
-    * (its `probes` best). Flat = one ranked cross join; hier = the
-    * two-level quantizer (duckKnnHierSql's construction) with the probes
-    * knob riding the block-restricted ranking `bsr` (blocks partition
-    * the centroids, so no cell duplicates) — crn <= probes is
-    * cellArgTopPHier, crn = 1 is cellArgmaxHier. Shared by the cells
-    * pairing chain and the semdedup oracle.
-    */
-  private def duckCellAssignCtes(
-      hier: Boolean, probes: Int = 1, superProbes: Int = 1): String =
-      if (!hier)
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-          "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n, c), " +
-          "r AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-          "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-          "asg AS (SELECT vec_id, e, nrm, c_id FROM r WHERE crn = 1), " +
-          (if (probes > 1)
-            s"asg2 AS (SELECT vec_id, e, nrm, c_id FROM r WHERE crn <= $probes), "
-          else "")
-      else
-        // the two-level quantizer (duckKnnHierSql's construction), with
-        // the probes knob riding the block-restricted ranking: bsr ranks
-        // each vector's candidate cells across the union of its scanned
-        // supercells' blocks (blocks partition the centroids, so no cell
-        // duplicates) — crn <= probes is cellArgTopPHier, crn = 1 is
-        // cellArgmaxHier
-        "per AS (SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS p, " +
-          "min(c_id) AS mn FROM c), " +
-          // SimOps.superCents: distributed id-hash stride + min-id guard
-          "sup AS (SELECT c_id AS sc_id, ce AS sce, cn AS scn FROM c " +
-          s"WHERE ${StableHash.hash60Sql("CAST(c_id AS VARCHAR)")} % " +
-          "(SELECT p FROM per) = 0 OR c_id = (SELECT mn FROM per)), " +
-          "css AS (SELECT c.c_id AS cid0, sup.sc_id, " +
-          "list_dot_product(c.ce, sup.sce) / (c.cn * sup.scn) AS s FROM c CROSS JOIN sup), " +
-          "c2s AS (SELECT cid0, sc_id FROM (SELECT *, row_number() OVER " +
-          "(PARTITION BY cid0 ORDER BY s DESC, sc_id) AS rn FROM css) WHERE rn = 1), " +
-          "vs0 AS (SELECT n.vec_id, n.e, n.nrm, sup.sc_id, " +
-          "list_dot_product(n.e, sup.sce) / (n.nrm * sup.scn) AS s FROM n CROSS JOIN sup), " +
-          "vs AS (SELECT vec_id, e, nrm, sc_id FROM (SELECT *, row_number() OVER " +
-          s"(PARTITION BY vec_id ORDER BY s DESC, sc_id) AS rn FROM vs0) WHERE rn <= $superProbes), " +
-          "bs AS (SELECT v.vec_id, v.e, v.nrm, c.c_id, " +
-          "list_dot_product(v.e, c.ce) / (v.nrm * c.cn) AS s " +
-          "FROM vs v JOIN c2s ON v.sc_id = c2s.sc_id JOIN c ON c.c_id = c2s.cid0), " +
-          "bsr AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-          "ORDER BY s DESC, c_id) AS rn FROM bs), " +
-          "asg AS (SELECT vec_id, e, nrm, c_id FROM bsr WHERE rn = 1), " +
-          (if (probes > 1)
-            s"asg2 AS (SELECT vec_id, e, nrm, c_id FROM bsr WHERE rn <= $probes), "
-          else "")
-
-  /** Mirror of SimOps.ivfTopK on the 16 fixed fixture cells: corpus
-    * assignment flat (ranked cross join) or through the shared two-level
-    * fragment; each of the 5 queries probes its 4 nearest cells (an
-    * exact ranking over all cells — the query side never rides the
-    * approximation), brute force within probed cells, top-10.
-    */
-  private def duckSimIvfSql(hier: Boolean): String =
-    "WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-      "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-      (if (!hier)
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-          "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-          "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-          "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-          "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-          "pr AS (SELECT vec_id AS q_id, c_id FROM rk WHERE vec_id < 5 AND crn <= 4), "
-      else
-        duckCellAssignCtes(hier = true) +
-          "qcs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-          "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim " +
-          "FROM n CROSS JOIN c WHERE n.vec_id < 5), " +
-          "qrk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-          "ORDER BY csim DESC, c_id) AS crn FROM qcs), " +
-          "pr AS (SELECT vec_id AS q_id, c_id FROM qrk WHERE crn <= 4), ") +
-      "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-      "p AS (SELECT pr.q_id, a.vec_id, " +
-      "list_dot_product(q.qe, a.e) / (q.qn * a.nrm) AS cos " +
-      "FROM pr JOIN asg a ON pr.c_id = a.c_id JOIN q ON q.q_id = pr.q_id " +
-      "WHERE a.vec_id <> pr.q_id), " +
-      "r AS (SELECT q_id, vec_id, cos, row_number() OVER (PARTITION BY q_id " +
-      "ORDER BY cos DESC, vec_id) AS rank FROM p) " +
-      s"SELECT q_id, rank, vec_id, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-      "FROM r WHERE rank <= 10 ORDER BY q_id, rank"
-
-  /** Mirror of SimOps.semDedup: exact-dedup-first (identical embeddings
-    * collapse to a min-id rep; members never survive), √N-sized
-    * hash-sampled centroids over the FULL planted corpus, rep-only cell
-    * assignment (flat, or the shared two-level fragment when `hier`),
-    * id-rank maxCell cap, within-cell cosine ≥ 0.99 drops the higher rep.
-    */
-  private def duckSemDedupCtes(hier: Boolean): String =
-    "WITH base AS (SELECT vec_id, embedding FROM embeddings " +
-      s"UNION ALL SELECT vec_id + ${DedupOps.plantStepSql("embeddings", "vec_id")} " +
-      "AS vec_id, embedding " +
-      "FROM embeddings WHERE vec_id % 100 = 0), " +
-      "nall AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM base), " +
-      "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM nall " +
-      s"WHERE ${SimOps.sqrtCentroidPredSql("base")}), " +
-      "egrp AS (SELECT embedding, min(vec_id) AS rep FROM base GROUP BY embedding), " +
-      "n AS (SELECT rep AS vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM egrp), " +
-      duckCellAssignCtes(hier) +
-      // maxCell participation cap (SimOps.DefaultMaxCell), rank by id
-      "p AS (SELECT vec_id, e, nrm, c_id FROM (SELECT *, row_number() " +
-      "OVER (PARTITION BY c_id ORDER BY vec_id) AS rk FROM asg) WHERE rk <= 256)"
-
-  private def duckSemDedupSql(hier: Boolean): String =
-    duckSemDedupCtes(hier) + ", " +
-      "d AS (SELECT DISTINCT b.vec_id FROM p a JOIN p b " +
-      "ON a.c_id = b.c_id AND a.vec_id < b.vec_id " +
-      s"WHERE ${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} >= 9900) " +
-      "SELECT vec_id, c_id FROM asg " +
-      "WHERE vec_id NOT IN (SELECT vec_id FROM d) ORDER BY vec_id"
-
-  /** Mirror of SimOps.semDedupRecallAudit at the given quantizer: the
-    * semdedup chain's capped within-cell ≥ 0.99 rep pairs (`rp`),
-    * anchor-restricted and divided into the q_recall_audit_neardup
-    * anchor truth built over the semdedup chain's rep frame `n` at the
-    * same 0.99 threshold.
-    */
-  private def duckSemDedupRecallAuditSql(hier: Boolean): String =
-    duckSemDedupCtes(hier) + ", " +
-      "rp AS (SELECT a.vec_id AS ra, b.vec_id AS rb FROM p a JOIN p b " +
-      "ON a.c_id = b.c_id AND a.vec_id < b.vec_id " +
-      s"WHERE ${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} >= 9900), " +
-      "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM n " +
-      s"WHERE ${DedupOps.anchorPredSql("vec_id", "n")}), " +
-      "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
-      "greatest(n.vec_id, a.a_id) AS pb FROM n CROSS JOIN anch a " +
-      "WHERE n.vec_id <> a.a_id AND " +
-      s"${TextOps.roundBpSql("list_dot_product(n.e, a.ae) / (n.nrm * a.an)")} >= 9900), " +
-      "fa AS (SELECT DISTINCT ra AS pa, rb AS pb FROM rp JOIN anch " +
-      "ON rp.ra = anch.a_id OR rp.rb = anch.a_id) " +
-      "SELECT (SELECT count(*) FROM anch) AS n_anchors, " +
-      "(SELECT count(*) FROM tp) AS n_truth, " +
-      "(SELECT count(*) FROM fa) AS n_found, " +
-      "CASE WHEN (SELECT count(*) FROM tp) > 0 THEN " +
-      TextOps.floorDivSql("(SELECT count(*) FROM fa) * 10000",
-        "(SELECT count(*) FROM tp)") +
-      " ELSE 10000 END AS recall_bp"
-
   private def duckCellsCtes(
       hier: Boolean, probes: Int = 1, superProbes: Int = 1,
-      rawBase: Boolean = false): String = {
-    val assign = duckCellAssignCtes(hier, probes, superProbes)
-    "WITH base AS (SELECT vec_id, embedding FROM embeddings" +
-      (if (rawBase) "), "
-      else
-        " UNION ALL SELECT vec_id + " +
-          s"${DedupOps.plantStepSql("embeddings", "vec_id")} AS vec_id, embedding " +
-          "FROM embeddings WHERE vec_id % 100 = 0), ") +
-      "nall AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM base), " +
-      "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM nall " +
-      s"WHERE ${SimOps.hashCentroidPredSql(64)}), " +
-      "egrp AS (SELECT embedding, min(vec_id) AS rep FROM base GROUP BY embedding), " +
-      "emem AS (SELECT b.vec_id AS vec_id, egrp.rep AS rep " +
-      "FROM base b JOIN egrp ON b.embedding = egrp.embedding), " +
-      "n AS (SELECT rep AS vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-      "FROM egrp), " +
-      assign +
-      s"p AS (SELECT vec_id, e, nrm, c_id FROM (SELECT *, row_number() " +
-      "OVER (PARTITION BY c_id ORDER BY vec_id) AS rk FROM asg) " +
-      s"WHERE rk <= ${SimOps.DefaultMaxCell}), " +
+      base: String = duckPlantedVectors("embedding")): String =
+    s"WITH base AS ($base), ${duckRepGroupCtes(SimOps.hashCentroidPredSql(64))}, " +
+      s"$duckMemberCte, ${duckNormCte("n", "egrp", "rep AS vec_id")}, " +
+      duckCellAssignCtes(hier, probes, superProbes) + duckCellCapCte + ", " +
       (if (probes == 1)
         "rp AS (SELECT * FROM (SELECT a.vec_id AS ra, b.vec_id AS rb, " +
-          s"${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} AS cos_bp " +
+          s"$duckPairCosBp AS cos_bp " +
           "FROM p a JOIN p b ON a.c_id = b.c_id AND a.vec_id < b.vec_id) " +
           "WHERE cos_bp >= 4000), "
       else
@@ -2843,16 +3187,10 @@ object SparkEntry {
           "JOIN (SELECT DISTINCT vec_id FROM p) ok ON a2.vec_id = ok.vec_id), " +
           "rp AS (SELECT DISTINCT * FROM (SELECT least(a.vec_id, b.vec_id) AS ra, " +
           "greatest(a.vec_id, b.vec_id) AS rb, " +
-          s"${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} AS cos_bp " +
+          s"$duckPairCosBp AS cos_bp " +
           "FROM pa a JOIN p b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id) " +
           "WHERE cos_bp >= 4000), ") +
-      "crossp AS (SELECT least(ma.vec_id, mb.vec_id) AS id_a, " +
-      "greatest(ma.vec_id, mb.vec_id) AS id_b, cos_bp FROM rp " +
-      "JOIN emem ma ON rp.ra = ma.rep JOIN emem mb ON rp.rb = mb.rep), " +
-      "intra AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b, " +
-      "CAST(10000 AS BIGINT) AS cos_bp FROM emem x JOIN emem y " +
-      "ON x.rep = y.rep AND x.vec_id < y.vec_id)"
-  }
+      duckReattachCtes("")
 
   /** DuckDB mirror of SimOps.knnGraphHier at `superProbes`: √nlist-strided
     * supercenters, centroid→supercell argmax, each vector's top-`superProbes`
@@ -2862,40 +3200,12 @@ object SparkEntry {
     * q_knn_graph_hier; 2 is the recall knob declared as q_knn_graph_hier2.
     */
   private def duckKnnHierSql(superProbes: Int, probes: Int = 1): String =
-    "WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-      "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-      s"WHERE ${SimOps.sqrtCentroidPredSql("embeddings")}), " +
-      "per AS (SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS p, " +
-      "min(c_id) AS mn FROM c), " +
-      // SimOps.superCents: distributed id-hash stride + min-id guard
-      "sup AS (SELECT c_id AS sc_id, ce AS sce, cn AS scn FROM c " +
-      s"WHERE ${StableHash.hash60Sql("CAST(c_id AS VARCHAR)")} % " +
-      "(SELECT p FROM per) = 0 OR c_id = (SELECT mn FROM per)), " +
-      "css AS (SELECT c.c_id AS cid0, sup.sc_id, " +
-      "list_dot_product(c.ce, sup.sce) / (c.cn * sup.scn) AS s FROM c CROSS JOIN sup), " +
-      "c2s AS (SELECT cid0, sc_id FROM (SELECT *, row_number() OVER " +
-      "(PARTITION BY cid0 ORDER BY s DESC, sc_id) AS rn FROM css) WHERE rn = 1), " +
-      "vs0 AS (SELECT n.vec_id, n.e, n.nrm, sup.sc_id, " +
-      "list_dot_product(n.e, sup.sce) / (n.nrm * sup.scn) AS s FROM n CROSS JOIN sup), " +
-      "vs AS (SELECT vec_id, e, nrm, sc_id FROM (SELECT *, row_number() OVER " +
-      s"(PARTITION BY vec_id ORDER BY s DESC, sc_id) AS rn FROM vs0) WHERE rn <= $superProbes), " +
-      "bs AS (SELECT v.vec_id, v.e, v.nrm, c.c_id, " +
-      "list_dot_product(v.e, c.ce) / (v.nrm * c.cn) AS s " +
-      "FROM vs v JOIN c2s ON v.sc_id = c2s.sc_id JOIN c ON c.c_id = c2s.cid0), " +
-      "bsr AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-      "ORDER BY s DESC, c_id) AS rn FROM bs), " +
-      "asg AS (SELECT vec_id, e, nrm, c_id FROM bsr WHERE rn = 1), " +
+    s"WITH ${duckNormCte("n", "embeddings")}, " +
+      s"${duckSeedCte("c", "n", SimOps.sqrtCentroidPredSql("embeddings"))}, " +
+      duckCellAssignCtes(hier = true, probes, superProbes) +
       // probes > 1: the a-side unions each vector's top-`probes` in-block
       // cells (cellArgTopPHier); candidates (b-side) stay home-only
-      s"asg2 AS (SELECT vec_id, e, nrm, c_id FROM bsr WHERE rn <= $probes), " +
-      "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-      "list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS cos " +
-      "FROM asg2 a JOIN asg b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id), " +
-      "r AS (SELECT id_a, id_b, cos, row_number() OVER (PARTITION BY id_a " +
-      "ORDER BY cos DESC, id_b) AS rank FROM p) " +
-      s"SELECT id_a, rank, id_b, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-      "FROM r WHERE rank <= 3 ORDER BY id_a, rank"
+      s"${duckKnnPairsCte(if (probes > 1) "asg2" else "asg")}, ${duckKnnTopSql("p")}"
 
   /** DuckDB CTE chain mirroring MultimodalOps.plantPhashCorpus +
     * phashBands + phashPairs AT THE CORPUS-DERIVED GRID: generative pixel
@@ -2936,21 +3246,7 @@ object SparkEntry {
   private def duckCellRecallAuditSql(
       hier: Boolean, probes: Int, superProbes: Int = 1): String =
     s"${duckCellsCtes(hier, probes, superProbes)}, " +
-      "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM n " +
-      s"WHERE ${DedupOps.anchorPredSql("vec_id", "n")}), " +
-      "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
-      "greatest(n.vec_id, a.a_id) AS pb FROM n CROSS JOIN anch a " +
-      "WHERE n.vec_id <> a.a_id AND " +
-      s"${TextOps.roundBpSql("list_dot_product(n.e, a.ae) / (n.nrm * a.an)")} >= 4000), " +
-      "fa AS (SELECT DISTINCT ra AS pa, rb AS pb FROM rp JOIN anch " +
-      "ON rp.ra = anch.a_id OR rp.rb = anch.a_id) " +
-      "SELECT (SELECT count(*) FROM anch) AS n_anchors, " +
-      "(SELECT count(*) FROM tp) AS n_truth, " +
-      "(SELECT count(*) FROM fa) AS n_found, " +
-      "CASE WHEN (SELECT count(*) FROM tp) > 0 THEN " +
-      TextOps.floorDivSql("(SELECT count(*) FROM fa) * 10000",
-        "(SELECT count(*) FROM tp)") +
-      " ELSE 10000 END AS recall_bp"
+      s"${duckVecAnchorCtes("n", "rp", 4000)} ${duckRecallSql("anch", "fa")}"
 
   /** Suffix the phash chain's tail CTE names (rp/crossp/intra/pp) so the
     * chain composes with the cells chain — whose own rp/crossp/intra —
@@ -3011,30 +3307,18 @@ object SparkEntry {
     */
   private lazy val duckNearDupCtes: String = {
     val bucket = SimOps.signBucketSql("e", "(SELECT b FROM nbits)")
-    "base AS (SELECT vec_id, embedding, label FROM embeddings " +
-      s"UNION ALL SELECT vec_id + ${DedupOps.plantStepSql("embeddings", "vec_id")} " +
-      "AS vec_id, embedding, label " +
-      "FROM embeddings WHERE vec_id % 100 = 0), " +
+    s"base AS (${duckPlantedVectors("embedding, label")}), " +
       s"nbits AS ${SimOps.autoSignBitsSql("base")}, " +
       "egrp AS (SELECT embedding, min(vec_id) AS rep FROM base GROUP BY embedding), " +
-      "emem AS (SELECT b.vec_id AS vec_id, egrp.rep AS rep " +
-      "FROM base b JOIN egrp ON b.embedding = egrp.embedding), " +
-      "nrep AS (SELECT rep AS vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM egrp), " +
+      s"$duckMemberCte, ${duckNormCte("nrep", "egrp", "rep AS vec_id")}, " +
       s"nb AS (SELECT *, $bucket AS bucket FROM nrep), " +
       "ncap AS (SELECT vec_id, e, nrm, bucket FROM (SELECT *, row_number() " +
       "OVER (PARTITION BY bucket ORDER BY vec_id) AS rk FROM nb) " +
       s"WHERE rk <= ${DedupOps.DefaultMaxBucket}), " +
       "rp2 AS (SELECT * FROM (SELECT a.vec_id AS ra, b.vec_id AS rb, " +
-      s"${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} AS cos_bp " +
+      s"$duckPairCosBp AS cos_bp " +
       "FROM ncap a JOIN ncap b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) " +
-      "WHERE cos_bp >= 4000), " +
-      "crossp2 AS (SELECT least(ma.vec_id, mb.vec_id) AS id_a, " +
-      "greatest(ma.vec_id, mb.vec_id) AS id_b, cos_bp FROM rp2 " +
-      "JOIN emem ma ON rp2.ra = ma.rep JOIN emem mb ON rp2.rb = mb.rep), " +
-      "intra2 AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b, " +
-      "CAST(10000 AS BIGINT) AS cos_bp FROM emem x JOIN emem y " +
-      "ON x.rep = y.rep AND x.vec_id < y.vec_id), " +
+      s"WHERE cos_bp >= 4000), ${duckReattachCtes("2")}, " +
       "vp2 AS (SELECT * FROM crossp2 UNION ALL SELECT * FROM intra2)"
   }
 
@@ -3044,6 +3328,7 @@ object SparkEntry {
     */
   private val duckDocStep = DedupOps.plantStepSql("documents", "doc_id")
 
+  /** DuckDB CTE body matching [[DedupOps.plantedCorpus]]. */
   private val duckCorpus =
     "SELECT doc_id, text FROM documents " +
       s"UNION ALL SELECT doc_id + $duckDocStep AS doc_id, text FROM documents WHERE doc_id % 10 = 0 " +
@@ -3100,6 +3385,32 @@ object SparkEntry {
       "array_to_string(list_slice(t, 1, greatest(1, CAST(floor(len(t) * 2.0 / 5) AS INT))), ' ') AS text " +
       s"FROM (SELECT doc_id, $duckToks AS t FROM documents WHERE doc_id % 10 = 3)"
 
+  /** The PQ squared distance of subvector `v.sub` to codeword `c.ce`, in
+    * the engine's `x·x − 2x·c + c·c` expansion.
+    */
+  private val duckPqD2 =
+    "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
+      "+ list_dot_product(c.ce, c.ce)"
+
+  /** [[SimOps.productQuantizeWith]]'s encoding of subvectors
+    * `subs(vec_id, s, sub)` against codebook `cb(s, c_id, ce)`: `r` ranks
+    * each subvector's codewords by squared distance (ties to the lower id).
+    */
+  private def duckPqEncodeCtes(subs: String): String =
+    s"p AS (SELECT v.vec_id, v.s, c.c_id, $duckPqD2 AS d2 " +
+      s"FROM $subs v JOIN cb c ON v.s = c.s), " +
+      "r AS (SELECT vec_id, s, c_id, d2, row_number() OVER (PARTITION BY vec_id, s " +
+      "ORDER BY d2, c_id) AS rn FROM p)"
+
+  /** Per vector: its subvector count, the 3-bit-per-subspace code word and
+    * the bp-summed squared reconstruction error, over [[duckPqEncodeCtes]].
+    */
+  private val duckPqCodeSelect =
+    "SELECT vec_id, CAST(count(*) AS BIGINT) AS n_subs, " +
+      "CAST(sum(c_id * (1::BIGINT << (3 * s))) AS BIGINT) AS code_word, " +
+      s"CAST(sum(${TextOps.roundBpSql("d2")}) AS BIGINT) AS l2sq_err_bp " +
+      "FROM r WHERE rn = 1 GROUP BY vec_id"
+
   /** DuckDB CTE chain matching [[SimOps.refinePqCodebooks]] (m=4, subDim=16,
     * seed `vec_id < 8`, one Lloyd round): yields `sb(vec_id, s, sub)` —
     * every vector's subvectors — and the refined codebook `cb(s, c_id, ce)`.
@@ -3111,9 +3422,8 @@ object SparkEntry {
       "sb AS (SELECT vec_id, s, list_slice(ev, s * 16 + 1, s * 16 + 16) AS sub FROM ee, ss), " +
       "cb0 AS (SELECT s, vec_id AS c_id, list_slice(ev, s * 16 + 1, s * 16 + 16) AS ce " +
       "FROM ee, ss WHERE vec_id < 8), " +
-      "pq0 AS (SELECT v.vec_id, v.s, c.c_id, v.sub, " +
-      "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-      "+ list_dot_product(c.ce, c.ce) AS d2 FROM sb v JOIN cb0 c ON v.s = c.s), " +
+      s"pq0 AS (SELECT v.vec_id, v.s, c.c_id, v.sub, $duckPqD2 AS d2 " +
+      "FROM sb v JOIN cb0 c ON v.s = c.s), " +
       "pqa0 AS (SELECT s, c_id, sub FROM (SELECT *, row_number() OVER " +
       "(PARTITION BY vec_id, s ORDER BY d2, c_id) AS rn FROM pq0) WHERE rn = 1), " +
       "pqz AS (SELECT s, c_id, unnest(sub) AS v, unnest(range(1, len(sub) + 1)) AS pos FROM pqa0), " +
@@ -3134,31 +3444,20 @@ object SparkEntry {
     * recall audit (q_recall_audit_ivfpq, which sweeps the cut).
     */
   private def duckIvfPqScoreCtes(coarseCtes: String): String =
-    "WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-      "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-      s"$coarseCtes, " +
-      "cs AS (SELECT n.vec_id, n.nrm, c.c_id, " +
-      "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-      "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-      "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-      "asg AS (SELECT vec_id, nrm, c_id FROM rk WHERE crn = 1), " +
-      "pr AS (SELECT vec_id AS q_id, c_id FROM rk WHERE vec_id < 5 AND crn <= 4), " +
-      s"$duckPqRefineCtes, " +
+    s"WITH ${duckNormCte("n", "embeddings")}, $coarseCtes, " +
+      s"$duckFlatAssignCtes, $duckProbeCte, $duckPqRefineCtes, " +
       "codes AS (SELECT vec_id, s, c_id AS pq_id FROM (SELECT v.vec_id, v.s, c.c_id, " +
-      "row_number() OVER (PARTITION BY v.vec_id, v.s ORDER BY " +
-      "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-      "+ list_dot_product(c.ce, c.ce), c.c_id) AS rn " +
+      s"row_number() OVER (PARTITION BY v.vec_id, v.s ORDER BY $duckPqD2, c.c_id) AS rn " +
       "FROM sb v JOIN cb c ON v.s = c.s) WHERE rn = 1), " +
       "adc AS (SELECT v.vec_id AS q_id, v.s, c.c_id AS pq_id, " +
       "list_dot_product(v.sub, c.ce) AS ip FROM sb v JOIN cb c ON v.s = c.s " +
-      "WHERE v.vec_id < 5), " +
-      "qn AS (SELECT vec_id AS q_id, nrm AS qn FROM n WHERE vec_id < 5), " +
+      s"WHERE v.vec_id < 5), $duckQueryCte, " +
       "sc AS (SELECT pr.q_id, a.vec_id, " +
-      s"CAST(sum(${TextOps.roundBpSql("adc.ip / (qn.qn * a.nrm)")}) AS BIGINT) AS adc_bp " +
+      s"CAST(sum(${TextOps.roundBpSql("adc.ip / (q.qn * a.nrm)")}) AS BIGINT) AS adc_bp " +
       "FROM pr JOIN asg a ON pr.c_id = a.c_id " +
       "JOIN codes ON codes.vec_id = a.vec_id " +
       "JOIN adc ON adc.q_id = pr.q_id AND adc.s = codes.s AND adc.pq_id = codes.pq_id " +
-      "JOIN qn ON qn.q_id = pr.q_id WHERE a.vec_id <> pr.q_id " +
+      "JOIN q ON q.q_id = pr.q_id WHERE a.vec_id <> pr.q_id " +
       "GROUP BY pr.q_id, a.vec_id)"
 
   /** Full IVF-PQ top-k oracle SQL: [[duckIvfPqScoreCtes]] + the fixed
@@ -3168,58 +3467,71 @@ object SparkEntry {
     duckIvfPqScoreCtes(coarseCtes) + ", " +
       "sl AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER (PARTITION BY q_id " +
       "ORDER BY adc_bp DESC, vec_id) AS srn FROM sc) WHERE srn <= 32), " +
-      "qv AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn2 FROM n WHERE vec_id < 5), " +
       "pp AS (SELECT sl.q_id, sl.vec_id, " +
-      "list_dot_product(qv.qe, n.e) / (qv.qn2 * n.nrm) AS cos " +
-      "FROM sl JOIN n USING (vec_id) JOIN qv ON qv.q_id = sl.q_id), " +
-      "r AS (SELECT q_id, vec_id, cos, row_number() OVER (PARTITION BY q_id " +
-      "ORDER BY cos DESC, vec_id) AS rank FROM pp) " +
-      s"SELECT q_id, rank, vec_id, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-      "FROM r WHERE rank <= 10 ORDER BY q_id, rank"
+      "list_dot_product(q.qe, n.e) / (q.qn * n.nrm) AS cos " +
+      s"FROM sl JOIN n USING (vec_id) JOIN q ON q.q_id = sl.q_id), ${duckRankCte("pp")} " +
+      duckTopKSelect
 
   /** The q_sim_ivf_kmeans coarse-refinement chain, reused by
     * q_sim_ivfpq_kmeans: one bp-integer Lloyd round over the sampled
     * centroids, yielding the refined `c(c_id, ce, cn)`.
     */
   private val duckKmeansCoarseCtes =
-    "c0 AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-      "a0 AS (SELECT vec_id, c_id FROM (SELECT n.vec_id, c0.c_id, " +
-      "row_number() OVER (PARTITION BY n.vec_id " +
-      "ORDER BY list_dot_product(n.e, c0.ce) / (n.nrm * c0.cn) DESC, c0.c_id) AS crn " +
-      "FROM n CROSS JOIN c0) WHERE crn = 1), " +
-      "z AS (SELECT a0.c_id, unnest(n.e) AS v, unnest(range(1, len(n.e) + 1)) AS pos " +
-      "FROM a0 JOIN n USING (vec_id)), " +
-      "sm AS (SELECT c_id, pos, sum(CAST(floor(v * 10000.0 + 0.5) AS BIGINT)) AS s, " +
-      "count(*) AS cnt FROM z GROUP BY c_id, pos), " +
-      "c1 AS (SELECT c_id, list(CAST(s AS DOUBLE) / (cnt * 10000.0) ORDER BY pos) AS ce " +
-      "FROM sm GROUP BY c_id), " +
-      "c AS (SELECT c0.c_id, coalesce(c1.ce, c0.ce) AS ce, " +
-      "coalesce(sqrt(list_dot_product(c1.ce, c1.ce)), c0.cn) AS cn " +
-      "FROM c0 LEFT JOIN c1 USING (c_id))"
+    s"${duckSeedCte("c0", "n", duckFixtureCells)}, " +
+      s"${duckArgmaxCte("a0", "c0")}, ${duckLloydCtes("a0")}"
+
+  /** lineitem in total (price, order, line) order. */
+  private val duckTotalOrderSql =
+    "SELECT * FROM lineitem ORDER BY l_extendedprice, l_orderkey, l_linenumber"
+
+  /** The three highest-priced lines per supplier. */
+  private val duckTop3PerSupplierSql =
+    "SELECT l_suppkey, rn, l_orderkey, l_linenumber, l_extendedprice FROM (" +
+      "SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice, " +
+      "row_number() OVER (PARTITION BY l_suppkey " +
+      "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn " +
+      "FROM lineitem) WHERE rn <= 3 ORDER BY l_suppkey, rn"
+
+  /** Orders joined to their customers, in order-key order. */
+  private val duckOrderCustomerSql =
+    "SELECT o_orderkey, c_custkey, c_name, o_totalprice AS price " +
+      "FROM orders JOIN customer ON o_custkey = c_custkey " +
+      "ORDER BY o_orderkey"
+
+  /** Sessions per user: a new session after a gap over 30 minutes. */
+  private val duckSessionsSql =
+    "WITH e AS (SELECT user_id, epoch_us(ts) AS us, " +
+      "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev " +
+      "FROM events), " +
+      "s AS (SELECT user_id, CASE WHEN prev IS NULL OR us - prev > 1800000000 " +
+      "THEN 1 ELSE 0 END AS is_new FROM e) " +
+      "SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, " +
+      "CAST(count(*) AS BIGINT) AS n_events " +
+      "FROM s GROUP BY user_id ORDER BY user_id"
+
+  /** The order keys as the int file's sorted values. */
+  private val duckTextIntSql = "SELECT CAST(l_orderkey AS INT) AS value FROM lineitem ORDER BY value"
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables. A rule several oracles state is one
+    * fragment above, interpolated by each.
     */
   def oracleSql: Map[String, String] = Map(
-    "q_sort_total" ->
-      "SELECT * FROM lineitem ORDER BY l_extendedprice, l_orderkey, l_linenumber",
+    "q_sort_total" -> duckTotalOrderSql,
     "q_sort_runs" ->
       ("SELECT *, l_orderkey % 16 AS run_id FROM lineitem " +
         "ORDER BY run_id, l_extendedprice, l_orderkey, l_linenumber"),
     // Range-disjoint runs cover every row exactly once, so the merged result
     // is the full table in total order.
-    "q_merge_union" ->
-      "SELECT * FROM lineitem ORDER BY l_extendedprice, l_orderkey, l_linenumber",
+    "q_merge_union" -> duckTotalOrderSql,
     "q_topk" ->
       ("SELECT * FROM lineitem " +
         "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100"),
     "q_chunk_stats" ->
       ("SELECT l_orderkey % 16 AS bucket, CAST(count(*) AS BIGINT) AS n_rows " +
         "FROM lineitem GROUP BY bucket ORDER BY bucket"),
-    "q_textint_roundtrip" ->
-      "SELECT CAST(l_orderkey AS INT) AS value FROM lineitem ORDER BY value",
-    "q_textint_v2" ->
-      "SELECT CAST(l_orderkey AS INT) AS value FROM lineitem ORDER BY value",
+    "q_textint_roundtrip" -> duckTextIntSql,
+    "q_textint_v2" -> duckTextIntSql,
     "q_orc_roundtrip" ->
       ("SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_lines, " +
         "round(sum(l_quantity), 2) AS sum_qty FROM lineitem " +
@@ -3262,26 +3574,13 @@ object SparkEntry {
         "GROUP BY n_name, o_orderpriority ORDER BY n_name, o_orderpriority"),
     // the salt routes rows but never reaches the result, so the oracle is
     // simply the unsalted join
-    "q_join_salted" ->
-      ("SELECT o_orderkey, c_custkey, c_name, o_totalprice AS price " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey " +
-        "ORDER BY o_orderkey"),
-    "q_window" ->
-      ("SELECT l_suppkey, rn, l_orderkey, l_linenumber, l_extendedprice FROM (" +
-        "SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice, " +
-        "row_number() OVER (PARTITION BY l_suppkey " +
-        "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn " +
-        "FROM lineitem) WHERE rn <= 3 ORDER BY l_suppkey, rn"),
+    "q_join_salted" -> duckOrderCustomerSql,
+    "q_window" -> duckTop3PerSupplierSql,
     "q_distinct" ->
       ("SELECT DISTINCT l_partkey, l_suppkey FROM lineitem " +
         "ORDER BY l_partkey, l_suppkey"),
     // identical semantics to q_window — deliberately the same oracle
-    "q_topk_groups" ->
-      ("SELECT l_suppkey, rn, l_orderkey, l_linenumber, l_extendedprice FROM (" +
-        "SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice, " +
-        "row_number() OVER (PARTITION BY l_suppkey " +
-        "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn " +
-        "FROM lineitem) WHERE rn <= 3 ORDER BY l_suppkey, rn"),
+    "q_topk_groups" -> duckTop3PerSupplierSql,
     "q_pivot" ->
       ("SELECT l_returnflag, " +
         "CAST(count(*) FILTER (l_linestatus = 'F') AS BIGINT) AS F_n, " +
@@ -3361,44 +3660,21 @@ object SparkEntry {
         "SELECT doc_id, md5(array_to_string(t, ' ')) AS fp_md5, " +
         s"list_min(list_transform($duckShingles3, s -> ${StableHash.hash60Sql("s")})) " +
         "AS fp_min_shingle FROM d ORDER BY doc_id"),
-    "q_lang_id" -> {
-      val scores = TextOps.langMarkers.map { case (lang, ws) =>
-        s"len(list_filter(t, x -> x IN (${duckInList(ws)}))) AS score_$lang"
-      }.mkString(", ")
-      val mx = TextOps.langMarkers.map { case (lang, _) => s"score_$lang" }
-        .mkString("greatest(", ", ", ")")
-      val ladder = TextOps.langMarkers.map { case (lang, _) =>
-        s"WHEN mx > 0 AND score_$lang = mx THEN '$lang'"
-      }.mkString(" ")
-      s"WITH d AS (SELECT doc_id, $duckToks AS t FROM documents), " +
-        s"sc AS (SELECT doc_id, $scores FROM d), " +
-        s"m AS (SELECT *, $mx AS mx FROM sc) " +
-        s"SELECT doc_id, CASE $ladder ELSE 'unknown' END AS lang_pred " +
-        "FROM m ORDER BY doc_id"
-    },
+    "q_lang_id" ->
+      (s"WITH $duckDocToks, ${duckLangScoreCtes("doc_id")} " +
+        s"SELECT doc_id, $duckLangPred AS lang_pred FROM m ORDER BY doc_id"),
     // mirrors TextOps.langConfusion: the q_lang_id ladder with the actual
     // lang carried through, matrix shares in bp
-    "q_lang_confusion" -> {
-      val scores = TextOps.langMarkers.map { case (lang, ws) =>
-        s"len(list_filter(t, x -> x IN (${duckInList(ws)}))) AS score_$lang"
-      }.mkString(", ")
-      val mx = TextOps.langMarkers.map { case (lang, _) => s"score_$lang" }
-        .mkString("greatest(", ", ", ")")
-      val ladder = TextOps.langMarkers.map { case (lang, _) =>
-        s"WHEN mx > 0 AND score_$lang = mx THEN '$lang'"
-      }.mkString(" ")
-      s"WITH d AS (SELECT lang, $duckToks AS t FROM documents), " +
-        s"sc AS (SELECT lang, $scores FROM d), " +
-        s"m AS (SELECT *, $mx AS mx FROM sc), " +
-        s"p AS (SELECT lang AS lang_actual, CASE $ladder ELSE 'unknown' END AS lang_pred FROM m), " +
+    "q_lang_confusion" -> (
+      s"WITH d AS (SELECT lang, $duckToks AS t FROM documents), ${duckLangScoreCtes("lang")}, " +
+        s"p AS (SELECT lang AS lang_actual, $duckLangPred AS lang_pred FROM m), " +
         "g AS (SELECT lang_actual, lang_pred, CAST(count(*) AS BIGINT) AS n_docs " +
         "FROM p GROUP BY lang_actual, lang_pred), " +
         "w AS (SELECT *, CAST(sum(n_docs) OVER (PARTITION BY lang_actual) AS BIGINT) " +
         "AS total FROM g) " +
         "SELECT lang_actual, lang_pred, n_docs, " +
         "CAST(n_docs * 10000 // total AS BIGINT) AS share_bp " +
-        "FROM w ORDER BY lang_actual, lang_pred"
-    },
+        "FROM w ORDER BY lang_actual, lang_pred"),
     // mirrors SimOps.classPrototypes: range-indexed unnest, bp-quantized
     // component means as integer division
     "q_embed_prototypes" ->
@@ -3410,33 +3686,19 @@ object SparkEntry {
         "SELECT label, dim, CAST(count(*) AS BIGINT) AS n_vecs, " +
         "CAST(floor(sum(x_bp)::DOUBLE / count(*)) AS BIGINT) AS mean_bp " +
         "FROM q GROUP BY label, dim ORDER BY label, dim"),
-    "q_quality" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH d AS (SELECT doc_id, $duckToks AS t FROM documents), " +
-        "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
-        "len(list_distinct(t))::DOUBLE AS nd, " +
-        s"len(list_filter(t, x -> x IN (${duckInList(allStops)})))::DOUBLE AS ns " +
-        "FROM d WHERE len(t) > 0) " +
+    "q_quality" ->
+      (s"WITH $duckDocToks, ${duckQualityCte("d")} " +
         "SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, " +
         s"${TextOps.roundBpSql("nd / n")} AS distinct_bp, " +
         s"${TextOps.roundBpSql("ns / n")} AS stopword_bp, " +
-        s"${TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")} AS quality_bp " +
-        "FROM f ORDER BY doc_id"
-    },
+        s"$duckQualityBp AS quality_bp FROM f ORDER BY doc_id"),
     // mirrors TextOps.packCurriculum: the q_quality scorer feeding a
     // running token offset in (quality desc, doc_id) order, floored into
     // budget-512 sequences (the oracle's single global window IS the
     // order the engine realizes with the two-level decomposition)
-    "q_pack_curriculum" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH d AS (SELECT doc_id, $duckToks AS t FROM documents), " +
-        "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
-        "len(list_distinct(t))::DOUBLE AS nd, " +
-        s"len(list_filter(t, x -> x IN (${duckInList(allStops)})))::DOUBLE AS ns " +
-        "FROM d WHERE len(t) > 0), " +
-        "q AS (SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, " +
-        s"${TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")} AS quality_bp " +
-        "FROM f), " +
+    "q_pack_curriculum" ->
+      (s"WITH $duckDocToks, ${duckQualityCte("d")}, " +
+        s"q AS (SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, $duckQualityBp AS quality_bp FROM f), " +
         "p AS (SELECT *, coalesce(sum(n_tokens) OVER (ORDER BY quality_bp DESC, doc_id " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before FROM q), " +
         "s AS (SELECT *, CAST(before // 512 AS BIGINT) AS seq_id FROM p) " +
@@ -3444,19 +3706,13 @@ object SparkEntry {
         "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
         "CAST(max(quality_bp) AS BIGINT) AS max_quality_bp, " +
         "CAST(min(quality_bp) AS BIGINT) AS min_quality_bp " +
-        "FROM s GROUP BY seq_id ORDER BY seq_id"
-    },
+        "FROM s GROUP BY seq_id ORDER BY seq_id"),
     // mirrors q_quality_linreg: HUGEINT normal-equation moments, the same
     // Cramer cofactor strings as the Spark plan, weights as exact
     // rational strings
-    "q_quality_linreg" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      StatsOps.linregFitSql(
-        s"SELECT len(t) AS x1, " +
-          s"len(list_filter(t, x -> x IN (${duckInList(allStops)}))) AS x2, " +
-          s"n_chars AS y FROM (SELECT $duckToks AS t, n_chars FROM documents) " +
-          "WHERE len(t) > 0")
-    },
+    "q_quality_linreg" -> StatsOps.linregFitSql(
+      s"SELECT len(t) AS x1, len(list_filter(t, $duckIsStop)) AS x2, " +
+        s"n_chars AS y FROM (SELECT $duckToks AS t, n_chars FROM documents) WHERE len(t) > 0"),
     // mirrors q_dsir_score: same hashed-bigram bucket models, HUGEINT
     // cross-products, floored bp division, [1, 10x] clamp
     "q_dsir_score" -> TextOps.dsirScoresSql("lang = 'en'"),
@@ -3530,20 +3786,12 @@ object SparkEntry {
         "SELECT source, rank, doc_id, n_chars FROM r WHERE rank <= 10 " +
         "ORDER BY source, rank"),
     // mirrors SampleOps.weightedSample over the q_quality scorer
-    "q_sample_weighted" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH d AS (SELECT doc_id, $duckToks AS t FROM documents), " +
-        "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
-        "len(list_distinct(t))::DOUBLE AS nd, " +
-        s"len(list_filter(t, x -> x IN (${duckInList(allStops)})))::DOUBLE AS ns " +
-        "FROM d WHERE len(t) > 0), " +
-        "q AS (SELECT doc_id, " +
-        s"${TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")} AS quality_bp " +
-        "FROM f) " +
+    "q_sample_weighted" ->
+      (s"WITH $duckDocToks, ${duckQualityCte("d")}, " +
+        s"q AS (SELECT doc_id, $duckQualityBp AS quality_bp FROM f) " +
         "SELECT doc_id, quality_bp FROM q " +
         s"WHERE ${StableHash.hash60Sql("CAST(doc_id AS VARCHAR)")} % 10000 < quality_bp " +
-        "ORDER BY doc_id"
-    },
+        "ORDER BY doc_id"),
     // mirrors TextOps.piiRedact over TextOps.plantedPii: same regexes
     // (RE2 ∩ Java dialect), same replacement order, 'g' for global
     "q_text_redact" ->
@@ -3761,61 +4009,15 @@ object SparkEntry {
         s"min(p0.pos) AS first_pos FROM tp p0 $joins" +
         s"WHERE p0.term = '${words.head}' GROUP BY 1 ORDER BY doc_id"
     },
-    // mirrors TextOps.packSequences (budget 512): the oracle's single
-    // global prefix sum equals the engine's two-level shard decomposition.
-    // The window sum MUST be cast back to BIGINT: DuckDB's sum(BIGINT) is
-    // HUGEINT, and HUGEINT // 512 stays HUGEINT — which the driver's hash
-    // renders as a float ("0.0" vs Spark's "0") and flags as a mismatch.
-    "q_pack_sequences" ->
-      (s"WITH d AS (SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tokens " +
-        "FROM documents), " +
-        "r AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbefore FROM d), " +
-        "b AS (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM r) " +
-        "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
-        "min(doc_id) AS first_doc, max(doc_id) AS last_doc " +
-        "FROM b GROUP BY seq_id ORDER BY seq_id"),
+    // mirrors TextOps.packSequences (budget 512)
+    "q_pack_sequences" -> s"WITH $duckTokenLenCte, ${duckPackCtes()} $duckPackSelect",
     // mirrors TextOps.forgetBlastRadius: the q_pack_sequences assignment
     // chain joined to the q_dedup_forget tombstone rule, affected
     // sequences only
-    "q_forget_blast" ->
-      (s"WITH d AS (SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tokens " +
-        "FROM documents), " +
-        "r AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbefore FROM d), " +
-        "b AS (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM r), " +
-        "tb AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 13 = 3), " +
-        "j AS (SELECT b.seq_id, b.n_tokens, " +
-        "CASE WHEN tb.doc_id IS NOT NULL THEN 1 ELSE 0 END AS tombed " +
-        "FROM b LEFT JOIN tb ON b.doc_id = tb.doc_id) " +
-        "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(tombed) AS BIGINT) AS n_tombstoned, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
-        "CAST(coalesce(sum(CASE WHEN tombed = 1 THEN n_tokens END), 0) AS BIGINT) " +
-        "AS tokens_lost " +
-        "FROM j GROUP BY seq_id HAVING sum(tombed) > 0 ORDER BY seq_id"),
+    "q_forget_blast" -> s"WITH $duckTokenLenCte, ${duckPackCtes()}, $duckBlastSql",
     // mirrors q_forget_blast_bpe: the q_pack_bpe count CTEs feeding the
     // q_forget_blast tombstone tail — same packer rule, post-BPE units
-    "q_forget_blast_bpe" ->
-      (duckBpeCtes(3) + ", " +
-        "wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS wlen FROM s3), " +
-        s"dk AS (SELECT doc_id, unnest($duckToks) AS word FROM documents), " +
-        "d AS (SELECT doc_id, CAST(sum(wlen) AS BIGINT) AS n_tokens " +
-        "FROM dk JOIN wl USING (word) GROUP BY doc_id), " +
-        "r AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbefore FROM d), " +
-        "b AS (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM r), " +
-        "tb AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 13 = 3), " +
-        "j AS (SELECT b.seq_id, b.n_tokens, " +
-        "CASE WHEN tb.doc_id IS NOT NULL THEN 1 ELSE 0 END AS tombed " +
-        "FROM b LEFT JOIN tb ON b.doc_id = tb.doc_id) " +
-        "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(tombed) AS BIGINT) AS n_tombstoned, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
-        "CAST(coalesce(sum(CASE WHEN tombed = 1 THEN n_tokens END), 0) AS BIGINT) " +
-        "AS tokens_lost " +
-        "FROM j GROUP BY seq_id HAVING sum(tombed) > 0 ORDER BY seq_id"),
+    "q_forget_blast_bpe" -> s"${duckBpeLenCtes("d")}, ${duckPackCtes()}, $duckBlastSql",
     // mirrors q_forget_audit — the compliance capstone: the four proven
     // oracle families combined in ONE WITH RECURSIVE (BPE counts + flat
     // packer from q_forget_blast_bpe, minhash+verified pairs with
@@ -3833,40 +4035,10 @@ object SparkEntry {
         .replaceAll("\\bbands\\b", "mhbands")
         .replaceAll("\\bcand\\b", "mhcand")
         .replace("vp AS (", "vp AS MATERIALIZED (")
-      // the q_dedup_forget tail, prefix-parameterized: before-closure,
-      // tombstone-filtered after-closure, affected-survivor rows, then
-      // the rebuild set (tombstones ∪ rep-changed survivors) joined to
-      // the packed sequences
+      // the q_dedup_forget tail per modality, then the rebuild set
+      // (tombstones ∪ rep-changed survivors) joined to the packed sequences
       def closure(pfx: String, pairSrc: String, tombCte: String): String =
-        s"${pfx}e AS (SELECT id_a AS src, id_b AS dst FROM $pairSrc " +
-          s"UNION SELECT id_b AS src, id_a AS dst FROM $pairSrc), " +
-          s"${pfx}n AS (SELECT DISTINCT src AS id FROM ${pfx}e), " +
-          s"${pfx}reach AS (SELECT id, id AS lab FROM ${pfx}n " +
-          s"UNION SELECT ${pfx}e.src AS id, ${pfx}reach.lab FROM ${pfx}e " +
-          s"JOIN ${pfx}reach ON ${pfx}e.dst = ${pfx}reach.id), " +
-          s"${pfx}cl AS MATERIALIZED (SELECT id AS doc_id, min(lab) AS cluster_id " +
-          s"FROM ${pfx}reach GROUP BY id), " +
-          s"${pfx}sp AS MATERIALIZED (SELECT id_a, id_b FROM $pairSrc " +
-          s"WHERE id_a NOT IN (SELECT doc_id FROM $tombCte) " +
-          s"AND id_b NOT IN (SELECT doc_id FROM $tombCte)), " +
-          s"${pfx}e2 AS (SELECT id_a AS src, id_b AS dst FROM ${pfx}sp " +
-          s"UNION SELECT id_b AS src, id_a AS dst FROM ${pfx}sp), " +
-          s"${pfx}n2 AS (SELECT DISTINCT src AS id FROM ${pfx}e2), " +
-          s"${pfx}reach2 AS (SELECT id, id AS lab FROM ${pfx}n2 " +
-          s"UNION SELECT ${pfx}e2.src AS id, ${pfx}reach2.lab FROM ${pfx}e2 " +
-          s"JOIN ${pfx}reach2 ON ${pfx}e2.dst = ${pfx}reach2.id), " +
-          s"${pfx}cl2 AS MATERIALIZED (SELECT id AS doc_id, min(lab) AS nc " +
-          s"FROM ${pfx}reach2 GROUP BY id), " +
-          s"${pfx}aff AS (SELECT DISTINCT cluster_id FROM ${pfx}cl " +
-          s"WHERE doc_id IN (SELECT doc_id FROM $tombCte)), " +
-          s"${pfx}out AS MATERIALIZED (SELECT ${pfx}cl.doc_id, " +
-          s"CAST(CASE WHEN coalesce(${pfx}cl2.nc, ${pfx}cl.doc_id) <> " +
-          s"${pfx}cl.cluster_id THEN 1 ELSE 0 END AS BIGINT) AS rep_changed, " +
-          s"CAST(CASE WHEN ${pfx}cl2.nc IS NULL THEN 1 ELSE 0 END AS BIGINT) " +
-          "AS now_singleton " +
-          s"FROM ${pfx}cl LEFT JOIN ${pfx}cl2 USING (doc_id) " +
-          s"WHERE ${pfx}cl.cluster_id IN (SELECT cluster_id FROM ${pfx}aff) " +
-          s"AND ${pfx}cl.doc_id NOT IN (SELECT doc_id FROM $tombCte)), " +
+        s"${duckForgetCtes(pairSrc, tombCte, pfx)}, " +
           s"${pfx}reb AS (SELECT doc_id FROM $tombCte " +
           s"UNION SELECT doc_id FROM ${pfx}out WHERE rep_changed = 1), " +
           s"${pfx}seqs AS MATERIALIZED (SELECT DISTINCT seq_id FROM fbb " +
@@ -3885,15 +4057,9 @@ object SparkEntry {
           "AS rebuild_tokens, " +
           "CAST((SELECT coalesce(sum(n_tokens), 0) FROM fbb " +
           s"WHERE doc_id IN (SELECT doc_id FROM $tombCte)) AS BIGINT) AS tokens_lost"
-      duckBpeCtes(3).replaceFirst("WITH ", "WITH RECURSIVE ") + ", " +
-        "wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS wlen FROM s3), " +
-        s"dk AS (SELECT doc_id, unnest($duckToks) AS word FROM documents), " +
-        "fbd AS MATERIALIZED (SELECT doc_id, CAST(sum(wlen) AS BIGINT) AS n_tokens " +
-        "FROM dk JOIN wl USING (word) GROUP BY doc_id), " +
-        "fbr AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER " +
-        "(ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) " +
-        "AS BIGINT) AS nbefore FROM fbd), " +
-        "fbb AS MATERIALIZED (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM fbr), " +
+      duckBpeLenCtes("fbd").replaceFirst("WITH ", "WITH RECURSIVE ")
+        .replace("fbd AS (", "fbd AS MATERIALIZED (") + ", " +
+        duckPackCtes("fbd", "fbr", "fbb").replace("fbb AS (", "fbb AS MATERIALIZED (") + ", " +
         "fbseq AS MATERIALIZED (SELECT seq_id, CAST(sum(n_tokens) AS BIGINT) AS seq_tokens " +
         "FROM fbb GROUP BY seq_id), " +
         mh + ", " +
@@ -3912,20 +4078,8 @@ object SparkEntry {
         " ORDER BY modality"
     },
     // mirrors q_pack_bpe: the q_bpe_encode counts feeding the same flat
-    // prefix-sum packer (budget 512); BIGINT casts per the note above
-    "q_pack_bpe" ->
-      (duckBpeCtes(3) + ", " +
-        "wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS wlen FROM s3), " +
-        s"dk AS (SELECT doc_id, unnest($duckToks) AS word FROM documents), " +
-        "d AS (SELECT doc_id, CAST(sum(wlen) AS BIGINT) AS n_tokens " +
-        "FROM dk JOIN wl USING (word) GROUP BY doc_id), " +
-        "r AS (SELECT doc_id, n_tokens, CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS nbefore FROM d), " +
-        "b AS (SELECT doc_id, n_tokens, nbefore // 512 AS seq_id FROM r) " +
-        "SELECT seq_id, CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS n_tokens, " +
-        "min(doc_id) AS first_doc, max(doc_id) AS last_doc " +
-        "FROM b GROUP BY seq_id ORDER BY seq_id"),
+    // prefix-sum packer (budget 512)
+    "q_pack_bpe" -> s"${duckBpeLenCtes("d")}, ${duckPackCtes()} $duckPackSelect",
     "q_text_tfidf" ->
       (s"WITH tk AS (SELECT doc_id, unnest($duckToks) AS token FROM documents), " +
         "tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tk GROUP BY 1, 2), " +
@@ -3958,8 +4112,6 @@ object SparkEntry {
         "SELECT doc_id, chunk_id, CAST(len(l) AS BIGINT) AS n_tokens, " +
         "md5(array_to_string(l, ' ')) AS chunk_md5 " +
         "FROM s ORDER BY doc_id, chunk_id"),
-    // mirrors the composed pipeline: q_quality's gate -> md5 dedup
-    // representatives -> per-lang rollup
     // mirrors q_curate_multimodal: the three modality CTE families
     // composed in ONE WITH RECURSIVE — the phash chain (CTE names
     // suffixed _m where they collide with the cells chain's rp/crossp/
@@ -3967,23 +4119,16 @@ object SparkEntry {
     // exact-dedup text leg, and two recursive min-label closures
     "q_curate_multimodal" -> {
       val phash = suffixPhash(duckPhashCtes, "_m")
-      val cells = duckCellsCtes(hier = false, rawBase = true).stripPrefix("WITH ")
+      val cells = duckCellsCtes(hier = false, base = "SELECT vec_id, embedding FROM embeddings")
+        .stripPrefix("WITH ")
       s"WITH RECURSIVE $phash, " +
         // media components over pp_m (the q_media_clusters closure)
-        "me AS (SELECT id_a AS src, id_b AS dst FROM pp_m " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM pp_m), " +
-        "mnodes AS (SELECT DISTINCT src AS id FROM me), " +
-        "mreach AS (SELECT id, id AS lab FROM mnodes " +
-        "UNION SELECT me.src AS id, mreach.lab FROM me JOIN mreach ON me.dst = mreach.id), " +
+        s"${duckReachCtes("pp_m", "m")}, " +
         "mclust AS (SELECT id, min(lab) AS cl FROM mreach GROUP BY id), " +
         s"$cells, " +
         // embedding components over the cells pairs (crossp + intra)
         "ep AS (SELECT id_a, id_b FROM crossp UNION ALL SELECT id_a, id_b FROM intra), " +
-        "ee AS (SELECT id_a AS src, id_b AS dst FROM ep " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM ep), " +
-        "enodes AS (SELECT DISTINCT src AS id FROM ee), " +
-        "ereach AS (SELECT id, id AS lab FROM enodes " +
-        "UNION SELECT ee.src AS id, ereach.lab FROM ee JOIN ereach ON ee.dst = ereach.id), " +
+        s"${duckReachCtes("ep", "e")}, " +
         "eclust AS (SELECT id, min(lab) AS cl FROM ereach GROUP BY id), " +
         // text leg: the in-universe quote plant + exact-dedup keep set
         "tq AS (SELECT d0.doc_id, CASE WHEN d0.doc_id % 10 = 7 AND b0.doc_id IS NOT NULL " +
@@ -4004,15 +4149,11 @@ object SparkEntry {
         "LEFT JOIN eclust ON eclust.id = u.doc_id " +
         "ORDER BY u.doc_id"
     },
-    "q_curate_pipeline" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH d AS (SELECT doc_id, $duckToks AS t FROM documents), " +
-        "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
-        "len(list_distinct(t))::DOUBLE AS nd, " +
-        s"len(list_filter(t, x -> x IN (${duckInList(allStops)})))::DOUBLE AS ns " +
-        "FROM d WHERE len(t) > 0), " +
-        "good AS (SELECT doc_id FROM f WHERE " +
-        s"${TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")} >= 4200), " +
+    // mirrors the composed pipeline: q_quality's gate -> md5 dedup
+    // representatives -> per-lang rollup
+    "q_curate_pipeline" ->
+      (s"WITH $duckDocToks, ${duckQualityCte("d")}, " +
+        s"good AS (SELECT doc_id FROM f WHERE $duckQualityBp >= 4200), " +
         "kept AS (SELECT doc_id, text, lang FROM documents " +
         "WHERE doc_id IN (SELECT doc_id FROM good)), " +
         s"fp AS (SELECT doc_id, md5(array_to_string($duckToks, ' ')) AS fp_md5 FROM kept), " +
@@ -4020,8 +4161,7 @@ object SparkEntry {
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, " +
         "CAST(sum(length(text)) AS BIGINT) AS n_chars FROM kept " +
         "WHERE doc_id IN (SELECT doc_id FROM reps) " +
-        "GROUP BY lang ORDER BY lang"
-    },
+        "GROUP BY lang ORDER BY lang"),
     // mirrors DedupOps.contaminated (k=3): distinct gram hashes per doc,
     // eval set = every 97th doc, inner join on the hash
     "q_decontaminate" ->
@@ -4060,45 +4200,19 @@ object SparkEntry {
     // exact anchor-side Jaccard truth through the inverted shingle index,
     // the verified pipeline's anchor-touching pairs divided in
     "q_recall_audit_minhash" ->
-      (s"WITH $duckMinhashCtes, $duckVerifiedPairsCte, " +
-        "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
-        "ashx AS (SELECT a_id, unnest(a_shs) AS s FROM anchd), " +
-        "cidx AS (SELECT DISTINCT ashx.a_id, sh.doc_id FROM ashx " +
-        "JOIN sh ON ashx.s = sh.s AND sh.doc_id <> ashx.a_id), " +
-        "tp AS (SELECT DISTINCT least(a_id, doc_id) AS pa, " +
-        "greatest(a_id, doc_id) AS pb FROM (SELECT cidx.a_id, cidx.doc_id, " +
-        s"${TextOps.roundBpSql(
-          "CAST(len(list_filter(anchd.a_shs, e -> list_contains(sl.shs, e))) AS DOUBLE) / " +
-            "CAST(len(list_distinct(list_concat(anchd.a_shs, sl.shs))) AS DOUBLE)")} AS jac_bp " +
-        "FROM cidx JOIN anchd ON cidx.a_id = anchd.a_id " +
-        "JOIN sl ON sl.doc_id = cidx.doc_id) WHERE jac_bp >= 8000), " +
-        "fa AS (SELECT DISTINCT id_a AS pa, id_b AS pb FROM vp JOIN anchd " +
-        "ON vp.id_a = anchd.a_id OR vp.id_b = anchd.a_id) " +
-        "SELECT (SELECT count(*) FROM anchd) AS n_anchors, " +
-        "(SELECT count(*) FROM tp) AS n_truth, " +
-        "(SELECT count(*) FROM fa) AS n_found, " +
-        "CASE WHEN (SELECT count(*) FROM tp) > 0 THEN " +
-        TextOps.floorDivSql("(SELECT count(*) FROM fa) * 10000",
-          "(SELECT count(*) FROM tp)") +
-        " ELSE 10000 END AS recall_bp"),
+      (s"WITH $duckMinhashCtes, $duckVerifiedPairsCte, $duckAnchorPostingsCtes, " +
+        s"$duckTextTruthCte, ${duckTextFoundCte("vp")} ${duckRecallSql("anchd", "fa")}"),
     // mirrors DedupOps.minhashErrorAudit: same capped candidates, the
     // signature-agreement estimate joined to the exact shingle Jaccard
     "q_dedup_minhash_err" -> {
       val agree = (0 until 8)
         .map(i => s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      val jac = TextOps.roundBpSql(
-        "CAST(len(list_filter(x.shs, e -> list_contains(y.shs, e))) AS DOUBLE) / " +
-          "CAST(len(list_distinct(list_concat(x.shs, y.shs))) AS DOUBLE)")
-      s"WITH $duckMinhashCtes, " +
-        "cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM bands a " +
-        "JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
-        "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2), " +
+      s"WITH $duckMinhashCtes, $duckMinhashCandCte, " +
         s"est AS (SELECT id_a, id_b, CAST(($agree) * 10000 // 8 AS BIGINT) AS est_bp " +
         "FROM cand JOIN sig sa ON sa.doc_id = cand.id_a " +
         "JOIN sig sb ON sb.doc_id = cand.id_b), " +
-        s"ex AS (SELECT id_a, id_b, $jac AS exact_bp FROM cand " +
+        s"ex AS (SELECT id_a, id_b, ${duckJaccardBp("x.shs", "y.shs")} AS exact_bp FROM cand " +
         "JOIN sl x ON x.doc_id = cand.id_a JOIN sl y ON y.doc_id = cand.id_b) " +
         "SELECT est.id_a AS id_a, est.id_b AS id_b, est_bp, exact_bp, " +
         "abs(est_bp - exact_bp) AS abs_err_bp " +
@@ -4106,40 +4220,23 @@ object SparkEntry {
         "ORDER BY id_a, id_b"
     },
     "q_dedup_clusters" ->
-      (s"WITH RECURSIVE $duckMinhashCtes, $duckVerifiedPairsCte, " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM vp " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id, id AS lab FROM nodes " +
-        "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id) " +
+      (s"WITH RECURSIVE $duckMinhashCtes, $duckVerifiedPairsCte, ${duckReachCtes("vp")} " +
         "SELECT id AS doc_id, min(lab) AS cluster_id FROM reach " +
         "GROUP BY id ORDER BY doc_id"),
     // mirrors q_dedup_keep_best: clusters (recursive CC) joined to the
     // q_quality scorer over the same planted corpus, best kept per cluster
-    "q_dedup_keep_best" -> {
-      val allStops = TextOps.langMarkers.flatMap(_._2).distinct.sorted
-      s"WITH RECURSIVE $duckMinhashCtes, $duckVerifiedPairsCte, " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM vp " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id, id AS lab FROM nodes " +
-        "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id), " +
+    "q_dedup_keep_best" ->
+      (s"WITH RECURSIVE $duckMinhashCtes, $duckVerifiedPairsCte, ${duckReachCtes("vp")}, " +
         "cl AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id), " +
-        "f AS (SELECT doc_id, len(t)::DOUBLE AS n, " +
-        "len(list_distinct(t))::DOUBLE AS nd, " +
-        s"len(list_filter(t, x -> x IN (${duckInList(allStops)})))::DOUBLE AS ns " +
-        "FROM t WHERE len(t) > 0), " +
-        "q AS (SELECT doc_id, " +
-        s"${TextOps.roundBpSql("(nd / n) * 0.5 + (ns / n) * 0.2 + least(n / 100.0, 1.0) * 0.3")} " +
-        "AS quality_bp FROM f), " +
+        s"${duckQualityCte("t")}, " +
+        s"q AS (SELECT doc_id, $duckQualityBp AS quality_bp FROM f), " +
         "j AS (SELECT cl.cluster_id, cl.doc_id, q.quality_bp FROM cl " +
         "JOIN q ON q.doc_id = cl.doc_id), " +
         "r AS (SELECT *, CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) " +
         "AS n_docs, row_number() OVER (PARTITION BY cluster_id " +
         "ORDER BY quality_bp DESC, doc_id) AS rn FROM j) " +
         "SELECT cluster_id, n_docs, doc_id AS keep_id, " +
-        "quality_bp AS keep_quality_bp FROM r WHERE rn = 1 ORDER BY cluster_id"
-    },
+        "quality_bp AS keep_quality_bp FROM r WHERE rn = 1 ORDER BY cluster_id"),
     // mirrors DedupOps.dedupForget: the q_dedup_clusters recursive
     // closure run TWICE — over all verified pairs and over the pairs
     // surviving the tombstone filter (doc_id % 13 = 3 on the planted
@@ -4147,136 +4244,37 @@ object SparkEntry {
     "q_dedup_forget" ->
       (s"WITH RECURSIVE $duckMinhashCtes, $duckVerifiedPairsCte, " +
         "tb AS (SELECT DISTINCT doc_id FROM corpus WHERE doc_id % 13 = 3), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM vp " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id, id AS lab FROM nodes " +
-        "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id), " +
-        "cl AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id), " +
-        "vp2 AS (SELECT id_a, id_b FROM vp " +
-        "WHERE id_a NOT IN (SELECT doc_id FROM tb) " +
-        "AND id_b NOT IN (SELECT doc_id FROM tb)), " +
-        "e2 AS (SELECT id_a AS src, id_b AS dst FROM vp2 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp2), " +
-        "nodes2 AS (SELECT DISTINCT src AS id FROM e2), " +
-        "reach2 AS (SELECT id, id AS lab FROM nodes2 " +
-        "UNION SELECT e2.src AS id, reach2.lab FROM e2 JOIN reach2 ON e2.dst = reach2.id), " +
-        "cl2 AS (SELECT id AS doc_id, min(lab) AS nc FROM reach2 GROUP BY id), " +
-        "aff AS (SELECT DISTINCT cluster_id FROM cl " +
-        "WHERE doc_id IN (SELECT doc_id FROM tb)) " +
-        "SELECT cl.doc_id, cl.cluster_id AS old_cluster, " +
-        "coalesce(cl2.nc, cl.doc_id) AS new_cluster, " +
-        "CAST(CASE WHEN coalesce(cl2.nc, cl.doc_id) <> cl.cluster_id " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS rep_changed, " +
-        "CAST(CASE WHEN cl2.nc IS NULL THEN 1 ELSE 0 END AS BIGINT) AS now_singleton " +
-        "FROM cl LEFT JOIN cl2 USING (doc_id) " +
-        "WHERE cl.cluster_id IN (SELECT cluster_id FROM aff) " +
-        "AND cl.doc_id NOT IN (SELECT doc_id FROM tb) " +
-        "ORDER BY cl.doc_id"),
+        s"${duckForgetCtes("vp", "tb")} SELECT doc_id, $duckForgetCols FROM out ORDER BY doc_id"),
     "q_dedup_simhash" ->
       (s"WITH ${duckSimhashCtes(16)} " +
         "SELECT doc_id, simhash, min(doc_id) OVER (PARTITION BY simhash) AS keep_id " +
         "FROM s ORDER BY doc_id"),
-    // mirrors DedupOps.simhashBallPairs (bits=32, bands=4 x 8-bit slices,
-    // maxDist=3, hot-bucket cap 64)
-    "q_dedup_simhash_ball" -> {
-      val bandSelects = (0 until 4).map { b =>
-        s"SELECT doc_id, simhash, '$b:' || ((simhash >> ${b * 8}) & 255) AS bkey FROM s"
-      }.mkString(" UNION ALL ")
-      s"WITH ${duckSimhashCtes(32)}, " +
-        s"bd AS ($bandSelects), " +
-        "okb AS (SELECT bkey FROM bd GROUP BY bkey " +
-        s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}) " +
-        "SELECT * FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-        "CAST(min(bit_count(xor(a.simhash, b.simhash))) AS BIGINT) AS hamming " +
-        "FROM bd a JOIN bd b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
-        "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2) " +
-        "WHERE hamming <= 3 ORDER BY id_a, id_b"
-    },
+    // mirrors DedupOps.simhashBallPairs
+    "q_dedup_simhash_ball" ->
+      s"WITH $duckSimhashBallCtes SELECT id_a, id_b, hamming FROM ballp ORDER BY id_a, id_b",
     // mirrors DedupOps.simhashRecallAudit: the ball chain's pair set
     // anchor-restricted and divided into the q_recall_audit_minhash
     // anchor truth (same anchors, same jac >= 0.8 threshold)
-    "q_recall_audit_simhash" -> {
-      val bandSelects = (0 until 4).map { b =>
-        s"SELECT doc_id, simhash, '$b:' || ((simhash >> ${b * 8}) & 255) AS bkey FROM s"
-      }.mkString(" UNION ALL ")
-      s"WITH ${duckSimhashCtes(32)}, " +
-        s"bd AS ($bandSelects), " +
-        "okb AS (SELECT bkey FROM bd GROUP BY bkey " +
-        s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
-        "ballp AS (SELECT id_a, id_b FROM (SELECT a.doc_id AS id_a, " +
-        "b.doc_id AS id_b, min(bit_count(xor(a.simhash, b.simhash))) AS hamming " +
-        "FROM bd a JOIN bd b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
-        "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2) WHERE hamming <= 3), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
-        "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
-        "ashx AS (SELECT a_id, unnest(a_shs) AS sx FROM anchd), " +
-        "shx AS (SELECT doc_id, unnest(shs) AS sx FROM sl), " +
-        "cidx AS (SELECT DISTINCT ashx.a_id, shx.doc_id FROM ashx " +
-        "JOIN shx ON ashx.sx = shx.sx AND shx.doc_id <> ashx.a_id), " +
-        "tp AS (SELECT DISTINCT least(a_id, doc_id) AS pa, " +
-        "greatest(a_id, doc_id) AS pb FROM (SELECT cidx.a_id, cidx.doc_id, " +
-        s"${TextOps.roundBpSql(
-          "CAST(len(list_filter(anchd.a_shs, e -> list_contains(sl.shs, e))) AS DOUBLE) / " +
-            "CAST(len(list_distinct(list_concat(anchd.a_shs, sl.shs))) AS DOUBLE)")} AS jac_bp " +
-        "FROM cidx JOIN anchd ON cidx.a_id = anchd.a_id " +
-        "JOIN sl ON sl.doc_id = cidx.doc_id) WHERE jac_bp >= 8000), " +
-        "fa AS (SELECT DISTINCT id_a AS pa, id_b AS pb FROM ballp JOIN anchd " +
-        "ON ballp.id_a = anchd.a_id OR ballp.id_b = anchd.a_id), " +
+    "q_recall_audit_simhash" ->
+      (s"WITH $duckSimhashBallCtes, $duckShingleSetCtes, $duckAnchorPostingsCtes, " +
+        s"$duckTextTruthCte, ${duckTextFoundCte("ballp")}, " +
         "hit AS (SELECT fa.pa, fa.pb FROM fa JOIN tp " +
         "ON fa.pa = tp.pa AND fa.pb = tp.pb) " +
-        "SELECT (SELECT count(*) FROM anchd) AS n_anchors, " +
-        "(SELECT count(*) FROM tp) AS n_truth, " +
+        duckAnchorCounts("anchd") +
         "(SELECT count(*) FROM fa) AS n_candidates, " +
         "(SELECT count(*) FROM hit) AS n_found, " +
-        "CASE WHEN (SELECT count(*) FROM tp) > 0 THEN " +
-        TextOps.floorDivSql("(SELECT count(*) FROM hit) * 10000",
-          "(SELECT count(*) FROM tp)") +
-        " ELSE 10000 END AS recall_bp, " +
-        "CASE WHEN (SELECT count(*) FROM fa) > 0 THEN " +
-        TextOps.floorDivSql("(SELECT count(*) FROM hit) * 10000",
-          "(SELECT count(*) FROM fa)") +
-        " ELSE 10000 END AS precision_bp"
-    },
+        s"${duckShareBp("hit", "tp")} AS recall_bp, ${duckShareBp("hit", "fa")} AS precision_bp"),
     // mirrors DedupOps.simhashVerifiedNearDups: the q_dedup_simhash_ball
     // candidate chain rescored with exact 3-shingle Jaccard (the
     // q_dedup_verified construction), keep jac >= 0.8
-    "q_dedup_simhash_verified" -> {
-      val bandSelects = (0 until 4).map { b =>
-        s"SELECT doc_id, simhash, '$b:' || ((simhash >> ${b * 8}) & 255) AS bkey FROM s"
-      }.mkString(" UNION ALL ")
-      val jac = TextOps.roundBpSql(
-        "CAST(len(list_filter(x.shs, e -> list_contains(y.shs, e))) AS DOUBLE) / " +
-          "CAST(len(list_distinct(list_concat(x.shs, y.shs))) AS DOUBLE)")
-      s"WITH ${duckSimhashCtes(32)}, " +
-        s"bd AS ($bandSelects), " +
-        "okb AS (SELECT bkey FROM bd GROUP BY bkey " +
-        s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
-        "ballp AS (SELECT id_a, id_b, hamming FROM (SELECT a.doc_id AS id_a, " +
-        "b.doc_id AS id_b, CAST(min(bit_count(xor(a.simhash, b.simhash))) AS BIGINT) " +
-        "AS hamming FROM bd a JOIN bd b ON a.bkey = b.bkey AND a.doc_id < b.doc_id " +
-        "JOIN okb ON okb.bkey = a.bkey GROUP BY 1, 2) WHERE hamming <= 3), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t) " +
+    "q_dedup_simhash_verified" ->
+      (s"WITH $duckSimhashBallCtes, $duckShingleSetCtes " +
         s"SELECT id_a, id_b, hamming, jac_bp FROM " +
-        s"(SELECT id_a, id_b, hamming, $jac AS jac_bp FROM ballp " +
+        s"(SELECT id_a, id_b, hamming, ${duckJaccardBp("x.shs", "y.shs")} AS jac_bp FROM ballp " +
         "JOIN sl x ON x.doc_id = ballp.id_a JOIN sl y ON y.doc_id = ballp.id_b) " +
-        "WHERE jac_bp >= 8000 ORDER BY id_a, id_b"
-    },
+        "WHERE jac_bp >= 8000 ORDER BY id_a, id_b"),
     "q_dedup_jaccard" ->
-      (s"WITH corpus AS ($duckCorpus), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"s AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
-        "z AS (SELECT doc_id, len(shs) AS n, unnest(shs) AS sh FROM s), " +
-        // stop-shingle cutoff mirror: only shingles in 2..64 docs pair
-        "zc AS (SELECT sh FROM z GROUP BY sh " +
-        s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
-        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS n_a, b.n AS n_b, " +
-        "count(*) AS inter FROM z a JOIN z b ON a.sh = b.sh AND a.doc_id < b.doc_id " +
-        "JOIN zc ON zc.sh = a.sh " +
-        "GROUP BY 1, 2, 3, 4) " +
+      (s"WITH ${duckPostingsPairCtes(duckCorpus)} " +
         "SELECT * FROM (SELECT id_a, id_b, " +
         s"${TextOps.roundBpSql("CAST(inter AS DOUBLE) / CAST(n_a + n_b - inter AS DOUBLE)")} AS jac_bp " +
         "FROM p) WHERE jac_bp >= 8000 ORDER BY id_a, id_b"),
@@ -4287,10 +4285,8 @@ object SparkEntry {
         "bs AS (SELECT CAST(count(*) AS BIGINT) AS sz FROM bands GROUP BY bkey) " +
         DedupOps.capAuditSql(DedupOps.DefaultMaxBucket, "minhash_band")),
     "q_cap_audit_jaccard" ->
-      (s"WITH corpus AS ($duckCorpus), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"s AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
-        "z AS (SELECT doc_id, unnest(shs) AS sh FROM s), " +
+      (s"WITH corpus AS ($duckCorpus), $duckShingleSetCtes, " +
+        "z AS (SELECT doc_id, unnest(shs) AS sh FROM sl), " +
         "bs AS (SELECT CAST(count(*) AS BIGINT) AS sz FROM z GROUP BY sh) " +
         DedupOps.capAuditSql(DedupOps.DefaultMaxBucket, "jaccard_postings")),
     "q_cap_audit_substring" ->
@@ -4320,16 +4316,7 @@ object SparkEntry {
     // mirrors DedupOps.containmentPairs over plantedQuoteCorpus: same
     // inverted-index CTE chain as q_dedup_jaccard, asymmetric final select
     "q_dedup_contain" ->
-      (s"WITH corpus AS ($duckQuoteCorpus), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"s AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
-        "z AS (SELECT doc_id, len(shs) AS n, unnest(shs) AS sh FROM s), " +
-        "zc AS (SELECT sh FROM z GROUP BY sh " +
-        s"HAVING count(*) > 1 AND count(*) <= ${DedupOps.DefaultMaxBucket}), " +
-        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS n_a, b.n AS n_b, " +
-        "count(*) AS inter FROM z a JOIN z b ON a.sh = b.sh AND a.doc_id < b.doc_id " +
-        "JOIN zc ON zc.sh = a.sh " +
-        "GROUP BY 1, 2, 3, 4) " +
+      (s"WITH ${duckPostingsPairCtes(duckQuoteCorpus)} " +
         "SELECT * FROM (SELECT id_a, id_b, " +
         s"${TextOps.roundBpSql("CAST(inter AS DOUBLE) / CAST(n_a + n_b - inter AS DOUBLE)")} AS jac_bp, " +
         s"${TextOps.roundBpSql("CAST(inter AS DOUBLE) / CAST(n_a AS DOUBLE)")} AS cont_a_bp, " +
@@ -4374,12 +4361,7 @@ object SparkEntry {
         "we AS (SELECT vec_id, list(x * (1.0 / CAST(1 << ((pos - 1) // 8) AS DOUBLE)) " +
         "ORDER BY pos) AS e FROM wd GROUP BY vec_id), " +
         "n AS (SELECT vec_id, e, " +
-        "sqrt(list_dot_product(e, e)) AS nrm FROM we), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, n.vec_id, " +
-        "list_dot_product(qe, e) / (qn * nrm) AS cos FROM n JOIN q ON n.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
+        s"sqrt(list_dot_product(e, e)) AS nrm FROM we), $duckQueryCte, $duckBruteTruthCtes, " +
         "pv AS (SELECT unnest([4, 8, 16, 32]) AS prefix_dims), " +
         "np AS (SELECT pv.prefix_dims, n.vec_id, " +
         "array_slice(n.e, 1, pv.prefix_dims) AS pe FROM n CROSS JOIN pv), " +
@@ -4404,14 +4386,7 @@ object SparkEntry {
     // reassembled into decoded vectors (list ordered by pos), cosine
     // top-10 vs the full-precision brute truth
     "q_sq_recall" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, n.vec_id, " +
-        "list_dot_product(qe, e) / (qn * nrm) AS cos FROM n JOIN q ON n.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
+      (s"WITH $duckRecallHead, " +
         "d AS (SELECT vec_id, unnest(e) AS x, unnest(range(1, len(e) + 1)) AS pos FROM n), " +
         "b AS (SELECT pos, min(x) AS lo, max(x) AS hi FROM d GROUP BY pos), " +
         "dc AS (SELECT vec_id, pos, CASE WHEN hi - lo = 0 THEN lo " +
@@ -4433,14 +4408,7 @@ object SparkEntry {
     // Hamming = sum of bit_count(xor) over words, both serving legs
     // against the float brute truth
     "q_bq_recall" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, n.vec_id, " +
-        "list_dot_product(qe, e) / (qn * nrm) AS cos FROM n JOIN q ON n.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
+      (s"WITH $duckRecallHead, " +
         "d AS (SELECT vec_id, unnest(e) AS x, unnest(range(0, len(e))) AS pos FROM n), " +
         "c AS (SELECT vec_id, pos // 32 AS word, " +
         "bit_or(CASE WHEN x > 0.0 THEN (1::BIGINT << (pos % 32)) " +
@@ -4478,14 +4446,8 @@ object SparkEntry {
     // mirrors SimOps.lshRecallSweep: the q_sim_lsh multi-table chain
     // instantiated per swept table count, hits vs the brute truth
     "q_lsh_recall" -> {
-      def leg(s: Int): String = {
-        val tableSelects = (0 until s).map { t =>
-          val bucket = (0 until 4)
-            .map(i => s"(CASE WHEN e[${t * 4 + i + 1}] >= 0 THEN ${1 << i} ELSE 0 END)")
-            .mkString(" + ")
-          s"SELECT vec_id, e, nrm, '$t:' || ($bucket) AS tb FROM n"
-        }.mkString(" UNION ALL ")
-        s"tb$s AS ($tableSelects), " +
+      def leg(s: Int): String =
+        s"tb$s AS (${duckLshTables(s)}), " +
           s"lq$s AS (SELECT vec_id AS q_id, qe, qn, tb FROM " +
           s"(SELECT vec_id, e AS qe, nrm AS qn, tb FROM tb$s) WHERE vec_id < 5), " +
           s"lp$s AS (SELECT q_id, vec_id, min(cos) AS cos FROM " +
@@ -4497,15 +4459,7 @@ object SparkEntry {
           "WHERE rnk <= 10), " +
           s"lh$s AS (SELECT $s AS n_tables, CAST(count(*) AS BIGINT) AS h " +
           s"FROM lt$s JOIN bt USING (q_id, vec_id))"
-      }
-      "WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, n.vec_id, " +
-        "list_dot_product(qe, e) / (qn * nrm) AS cos FROM n JOIN q ON n.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
+      s"WITH $duckRecallHead, " +
         Seq(1, 4, 8).map(leg).mkString(", ") + ", " +
         "v AS (SELECT unnest([1, 4, 8]) AS n_tables), " +
         "hh AS (SELECT * FROM lh1 UNION ALL SELECT * FROM lh4 UNION ALL SELECT * FROM lh8) " +
@@ -4520,23 +4474,8 @@ object SparkEntry {
     // the identical exact flat probe (corpus argmax + query top-4 cells,
     // the q_sim_ivf shape), hits counted against one brute truth
     "q_recall_audit_ivf_trained" -> {
-      def lloyd(sfx: String): String =
-        s"z$sfx AS (SELECT a$sfx.c_id, unnest(n.e) AS v, " +
-          "unnest(range(1, len(n.e) + 1)) AS pos " +
-          s"FROM a$sfx JOIN n USING (vec_id)), " +
-          s"s$sfx AS (SELECT c_id, pos, " +
-          "sum(CAST(floor(v * 10000.0 + 0.5) AS BIGINT)) AS s, " +
-          s"count(*) AS cnt FROM z$sfx GROUP BY c_id, pos), " +
-          s"c1$sfx AS (SELECT c_id, list(CAST(s AS DOUBLE) / (cnt * 10000.0) " +
-          s"ORDER BY pos) AS ce FROM s$sfx GROUP BY c_id), " +
-          s"c$sfx AS (SELECT c0.c_id, coalesce(c1$sfx.ce, c0.ce) AS ce, " +
-          s"coalesce(sqrt(list_dot_product(c1$sfx.ce, c1$sfx.ce)), c0.cn) AS cn " +
-          s"FROM c0 LEFT JOIN c1$sfx USING (c_id))"
       def probe(sfx: String): String =
-        s"asg$sfx AS (SELECT vec_id, c_id FROM (SELECT n.vec_id, c$sfx.c_id, " +
-          "row_number() OVER (PARTITION BY n.vec_id " +
-          s"ORDER BY list_dot_product(n.e, c$sfx.ce) / (n.nrm * c$sfx.cn) DESC, c$sfx.c_id) AS crn " +
-          s"FROM n CROSS JOIN c$sfx) WHERE crn = 1), " +
+        s"${duckArgmaxCte(s"asg$sfx", s"c$sfx")}, " +
           s"pr$sfx AS (SELECT q_id, c_id FROM (SELECT q.q_id, c$sfx.c_id, " +
           "row_number() OVER (PARTITION BY q.q_id " +
           s"ORDER BY list_dot_product(q.qe, c$sfx.ce) / (q.qn * c$sfx.cn) DESC, c$sfx.c_id) AS crn " +
@@ -4551,32 +4490,12 @@ object SparkEntry {
           "WHERE rnk <= 10), " +
           s"h$sfx AS (SELECT CAST(count(*) AS BIGINT) AS h FROM t$sfx " +
           "JOIN bt USING (q_id, vec_id))"
-      "WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp0 AS (SELECT q.q_id, m.vec_id, " +
-        "list_dot_product(q.qe, m.e) / (q.qn * m.nrm) AS cos " +
-        "FROM q JOIN n m ON m.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM bp0) WHERE rnk <= 10), " +
-        "c0 AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
+      s"WITH $duckRecallHead, ${duckSeedCte("c0", "n", duckFixtureCells)}, " +
         // exact-assign Lloyd round (the q_sim_ivf_kmeans chain)
-        "aE AS (SELECT vec_id, c_id FROM (SELECT n.vec_id, c0.c_id, " +
-        "row_number() OVER (PARTITION BY n.vec_id " +
-        "ORDER BY list_dot_product(n.e, c0.ce) / (n.nrm * c0.cn) DESC, c0.c_id) AS crn " +
-        "FROM n CROSS JOIN c0) WHERE crn = 1), " +
-        lloyd("E") + ", " +
-        // hier-assign Lloyd round: the two-level chain over the SEEDS
-        // (SimOps.superCents stride + min-id guard), superProbes = 1
-        "per AS (SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS p, " +
-        "min(c_id) AS mn FROM c0), " +
-        "sup AS (SELECT c_id AS sc_id, ce AS sce, cn AS scn FROM c0 " +
-        s"WHERE ${StableHash.hash60Sql("CAST(c_id AS VARCHAR)")} % " +
-        "(SELECT p FROM per) = 0 OR c_id = (SELECT mn FROM per)), " +
-        "css AS (SELECT c0.c_id AS cid0, sup.sc_id, " +
-        "list_dot_product(c0.ce, sup.sce) / (c0.cn * sup.scn) AS s FROM c0 CROSS JOIN sup), " +
-        "c2s AS (SELECT cid0, sc_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY cid0 ORDER BY s DESC, sc_id) AS rn FROM css) WHERE rn = 1), " +
+        s"${duckArgmaxCte("aE", "c0")}, ${duckLloydCtes("aE", "E")}, " +
+        // hier-assign Lloyd round: the two-level chain over the SEEDS,
+        // superProbes = 1
+        s"${duckSuperCtes("c0")}, " +
         "vsup AS (SELECT vec_id, e, nrm, sc_id FROM (SELECT n.vec_id, n.e, n.nrm, " +
         "sup.sc_id, row_number() OVER (PARTITION BY n.vec_id " +
         "ORDER BY list_dot_product(n.e, sup.sce) / (n.nrm * sup.scn) DESC, sup.sc_id) AS rn " +
@@ -4586,7 +4505,7 @@ object SparkEntry {
         "FROM vsup v JOIN c2s ON v.sc_id = c2s.sc_id JOIN c0 ON c0.c_id = c2s.cid0), " +
         "aH AS (SELECT vec_id, c_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY vec_id ORDER BY s DESC, c_id) AS rn FROM bsH) WHERE rn = 1), " +
-        lloyd("H") + ", " +
+        duckLloydCtes("aH", "H") + ", " +
         probe("E") + ", " + probe("H") + ", " +
         "nqk AS (SELECT count(*) * 10 AS d FROM q) " +
         "SELECT * FROM (" +
@@ -4601,15 +4520,8 @@ object SparkEntry {
     // mirrors SimOps.cellDrift: same nearest-cell assignment as q_sim_ivf,
     // parity split, per-cell shares in bp with a 1-row totals cross join
     "q_embed_drift" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-        "cs AS (SELECT n.vec_id, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "f AS (SELECT c_id, CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END AS is_old " +
-        "FROM rk WHERE crn = 1), " +
+      (s"WITH ${duckNormCte("n", "embeddings")}, $duckFixtureCellCte, $duckFlatAssignCtes, " +
+        "f AS (SELECT c_id, CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END AS is_old FROM asg), " +
         "g AS (SELECT c_id, CAST(sum(is_old) AS BIGINT) AS n_old, " +
         "CAST(sum(1 - is_old) AS BIGINT) AS n_new FROM f GROUP BY c_id), " +
         "t AS (SELECT CAST(sum(n_old) AS BIGINT) AS t_old, " +
@@ -4619,29 +4531,16 @@ object SparkEntry {
         "CAST(n_new * 10000 // t_new AS BIGINT) AS share_new_bp, " +
         "CAST(n_new * 10000 // t_new - n_old * 10000 // t_old AS BIGINT) AS delta_bp " +
         "FROM g CROSS JOIN t ORDER BY cell_id"),
-    "q_sim_ivf" -> duckSimIvfSql(hier = false),
+    "q_sim_ivf" -> duckSimIvfSql(duckFixtureCellCte),
     // the corpus assignment through the shared two-level fragment; query
     // probes (crn <= 4 over all cells) unchanged
-    "q_sim_ivf_hier" -> duckSimIvfSql(hier = true),
+    "q_sim_ivf_hier" -> duckSimIvfSql(duckFixtureCellCte, hier = true),
     // mirrors SimOps.ivfRecallSweep: the q_sim_ivf probe chain evaluated
     // at nProbe 1/2/4 against the exact brute-force top-10; hit counts
     // LEFT-join the swept nProbe list, so a zero-hit nProbe still emits
     // its row (the shared recall-sweep rollup)
     "q_sim_recall" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, m.vec_id, " +
-        "list_dot_product(q.qe, m.e) / (q.qn * m.nrm) AS cos " +
-        "FROM q JOIN n m ON m.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
+      (s"WITH $duckRecallHead, $duckFixtureCellCte, $duckFlatAssignCtes, " +
         "pv AS (SELECT unnest([1, 2, 4]) AS n_probe), " +
         "pr AS (SELECT pv.n_probe, rk.vec_id AS q_id, rk.c_id FROM rk, pv " +
         "WHERE rk.vec_id < 5 AND rk.crn <= pv.n_probe), " +
@@ -4663,25 +4562,7 @@ object SparkEntry {
     // block-union assignment), scored against the same brute-force top-10;
     // hit counts LEFT-join the swept list (a zero-hit value keeps its row)
     "q_recall_audit_ivf_hier" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "bp AS (SELECT q.q_id, m.vec_id, " +
-        "list_dot_product(q.qe, m.e) / (q.qn * m.nrm) AS cos " +
-        "FROM q JOIN n m ON m.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY cos DESC, vec_id) AS rnk FROM bp) WHERE rnk <= 10), " +
-        "per AS (SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS p, " +
-        "min(c_id) AS mn FROM c), " +
-        // SimOps.superCents: distributed id-hash stride + min-id guard
-        "sup AS (SELECT c_id AS sc_id, ce AS sce, cn AS scn FROM c " +
-        s"WHERE ${StableHash.hash60Sql("CAST(c_id AS VARCHAR)")} % " +
-        "(SELECT p FROM per) = 0 OR c_id = (SELECT mn FROM per)), " +
-        "css AS (SELECT c.c_id AS cid0, sup.sc_id, " +
-        "list_dot_product(c.ce, sup.sce) / (c.cn * sup.scn) AS s FROM c CROSS JOIN sup), " +
-        "c2s AS (SELECT cid0, sc_id FROM (SELECT *, row_number() OVER " +
-        "(PARTITION BY cid0 ORDER BY s DESC, sc_id) AS rn FROM css) WHERE rn = 1), " +
+      (s"WITH $duckRecallHead, $duckFixtureCellCte, ${duckSuperCtes("c")}, " +
         "vs0 AS (SELECT n.vec_id, n.e, n.nrm, sup.sc_id, " +
         "list_dot_product(n.e, sup.sce) / (n.nrm * sup.scn) AS s FROM n CROSS JOIN sup), " +
         "vsr AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
@@ -4694,13 +4575,7 @@ object SparkEntry {
         "FROM vs v JOIN c2s ON v.sc_id = c2s.sc_id JOIN c ON c.c_id = c2s.cid0), " +
         "bsr AS (SELECT *, row_number() OVER (PARTITION BY sp, vec_id " +
         "ORDER BY s DESC, c_id) AS rn FROM bs), " +
-        "asg AS (SELECT sp, vec_id, e, nrm, c_id FROM bsr WHERE rn = 1), " +
-        "qcs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim " +
-        "FROM n CROSS JOIN c WHERE n.vec_id < 5), " +
-        "qrk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM qcs), " +
-        "pr AS (SELECT vec_id AS q_id, c_id FROM qrk WHERE crn <= 4), " +
+        s"asg AS (SELECT sp, vec_id, e, nrm, c_id FROM bsr WHERE rn = 1), $duckQueryProbeCtes, " +
         "p AS (SELECT a.sp, pr.q_id, a.vec_id, " +
         "list_dot_product(q.qe, a.e) / (q.qn * a.nrm) AS cos " +
         "FROM pr JOIN asg a ON pr.c_id = a.c_id JOIN q ON q.q_id = pr.q_id " +
@@ -4716,38 +4591,7 @@ object SparkEntry {
     // mirrors SimOps.ivfKmeansTopK (iters=1): one Lloyd round with
     // bp-quantized integer sums (exact in both engines), then the same
     // probe chain as q_sim_ivf over the refined centroid table
-    "q_sim_ivf_kmeans" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c0 AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n WHERE vec_id BETWEEN 100 AND 115), " +
-        "a0 AS (SELECT vec_id, c_id FROM (SELECT n.vec_id, c0.c_id, " +
-        "row_number() OVER (PARTITION BY n.vec_id " +
-        "ORDER BY list_dot_product(n.e, c0.ce) / (n.nrm * c0.cn) DESC, c0.c_id) AS crn " +
-        "FROM n CROSS JOIN c0) WHERE crn = 1), " +
-        "z AS (SELECT a0.c_id, unnest(n.e) AS v, unnest(range(1, len(n.e) + 1)) AS pos " +
-        "FROM a0 JOIN n USING (vec_id)), " +
-        "sm AS (SELECT c_id, pos, sum(CAST(floor(v * 10000.0 + 0.5) AS BIGINT)) AS s, " +
-        "count(*) AS cnt FROM z GROUP BY c_id, pos), " +
-        "c1 AS (SELECT c_id, list(CAST(s AS DOUBLE) / (cnt * 10000.0) ORDER BY pos) AS ce " +
-        "FROM sm GROUP BY c_id), " +
-        "c AS (SELECT c0.c_id, coalesce(c1.ce, c0.ce) AS ce, " +
-        "coalesce(sqrt(list_dot_product(c1.ce, c1.ce)), c0.cn) AS cn " +
-        "FROM c0 LEFT JOIN c1 USING (c_id)), " +
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-        "pr AS (SELECT vec_id AS q_id, c_id FROM rk WHERE vec_id < 5 AND crn <= 4), " +
-        "q AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn FROM n WHERE vec_id < 5), " +
-        "p AS (SELECT pr.q_id, a.vec_id, " +
-        "list_dot_product(q.qe, a.e) / (q.qn * a.nrm) AS cos " +
-        "FROM pr JOIN asg a ON pr.c_id = a.c_id JOIN q ON q.q_id = pr.q_id " +
-        "WHERE a.vec_id <> pr.q_id), " +
-        "r AS (SELECT q_id, vec_id, cos, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY cos DESC, vec_id) AS rank FROM p) " +
-        s"SELECT q_id, rank, vec_id, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-        "FROM r WHERE rank <= 10 ORDER BY q_id, rank"),
+    "q_sim_ivf_kmeans" -> duckSimIvfSql(duckKmeansCoarseCtes),
     // mirrors SimOps.scalarQuantize: per-dim min/max bounds, affine int8
     // encode, bp-quantized L1 reconstruction error
     "q_embed_quant" ->
@@ -4771,30 +4615,11 @@ object SparkEntry {
         "ss AS (SELECT unnest(range(0, 4)) AS s), " +
         "sub AS (SELECT vec_id, s, list_slice(e, s * 16 + 1, s * 16 + 16) AS sub FROM e, ss), " +
         "cb AS (SELECT vec_id AS c_id, s, list_slice(e, s * 16 + 1, s * 16 + 16) AS ce " +
-        "FROM e, ss WHERE vec_id < 8), " +
-        "p AS (SELECT v.vec_id, v.s, c.c_id, " +
-        "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-        "+ list_dot_product(c.ce, c.ce) AS d2 " +
-        "FROM sub v JOIN cb c ON v.s = c.s), " +
-        "r AS (SELECT vec_id, s, c_id, d2, row_number() OVER (PARTITION BY vec_id, s " +
-        "ORDER BY d2, c_id) AS rn FROM p) " +
-        "SELECT vec_id, CAST(count(*) AS BIGINT) AS n_subs, " +
-        "CAST(sum(c_id * (1::BIGINT << (3 * s))) AS BIGINT) AS code_word, " +
-        s"CAST(sum(${TextOps.roundBpSql("d2")}) AS BIGINT) AS l2sq_err_bp " +
-        "FROM r WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"),
+        s"FROM e, ss WHERE vec_id < 8), ${duckPqEncodeCtes("sub")} $duckPqCodeSelect ORDER BY vec_id"),
     // mirrors SimOps.productQuantizeWith over refinePqCodebooks (one Lloyd
     // round per subspace, bp-integer means)
     "q_embed_pq_refined" ->
-      (s"WITH $duckPqRefineCtes, " +
-        "p AS (SELECT v.vec_id, v.s, c.c_id, " +
-        "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-        "+ list_dot_product(c.ce, c.ce) AS d2 FROM sb v JOIN cb c ON v.s = c.s), " +
-        "r AS (SELECT vec_id, s, c_id, d2, row_number() OVER (PARTITION BY vec_id, s " +
-        "ORDER BY d2, c_id) AS rn FROM p) " +
-        "SELECT vec_id, CAST(count(*) AS BIGINT) AS n_subs, " +
-        "CAST(sum(c_id * (1::BIGINT << (3 * s))) AS BIGINT) AS code_word, " +
-        s"CAST(sum(${TextOps.roundBpSql("d2")}) AS BIGINT) AS l2sq_err_bp " +
-        "FROM r WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"),
+      s"WITH $duckPqRefineCtes, ${duckPqEncodeCtes("sb")} $duckPqCodeSelect ORDER BY vec_id",
     // mirrors SimOps.opqQuantize: integer-exact per-dim variance scores
     // (n·Σxb² − (Σxb)², bp longs — DuckDB sums BIGINT into HUGEINT, Spark
     // uses decimal(38,0): same integers), snake allocation, then the
@@ -4811,23 +4636,11 @@ object SparkEntry {
         "sb AS (SELECT d.vec_id, sp.s, list(d.x ORDER BY sp.spos) AS sub " +
         "FROM d JOIN sp USING (pos) GROUP BY d.vec_id, sp.s), " +
         "cb AS (SELECT s, vec_id AS c_id, sub AS ce FROM sb WHERE vec_id < 8), " +
-        "p AS (SELECT v.vec_id, v.s, c.c_id, " +
-        "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-        "+ list_dot_product(c.ce, c.ce) AS d2 FROM sb v JOIN cb c ON v.s = c.s), " +
-        "r AS (SELECT vec_id, s, c_id, d2, row_number() OVER (PARTITION BY vec_id, s " +
-        "ORDER BY d2, c_id) AS rn FROM p) " +
-        "SELECT vec_id, CAST(count(*) AS BIGINT) AS n_subs, " +
-        "CAST(sum(c_id * (1::BIGINT << (3 * s))) AS BIGINT) AS code_word, " +
-        s"CAST(sum(${TextOps.roundBpSql("d2")}) AS BIGINT) AS l2sq_err_bp " +
-        "FROM r WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"),
+        s"${duckPqEncodeCtes("sb")} $duckPqCodeSelect ORDER BY vec_id"),
     // mirrors SimOps.residualQuantize: coarse home cell by cosine (ties to
     // the smaller c_id), DOUBLE residual, then the q_embed_pq chain on rv
     "q_embed_pq_residual" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-        "FROM embeddings), " +
-        "c0 AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-        "WHERE vec_id BETWEEN 100 AND 115), " +
+      (s"WITH ${duckNormCte("n", "embeddings")}, ${duckSeedCte("c0", "n", duckFixtureCells)}, " +
         "rk AS (SELECT n.vec_id, c0.c_id, c0.ce, row_number() OVER " +
         "(PARTITION BY n.vec_id " +
         "ORDER BY list_dot_product(n.e, c0.ce) / (n.nrm * c0.cn) DESC, c0.c_id) AS crn " +
@@ -4840,24 +4653,13 @@ object SparkEntry {
         "sb AS (SELECT vec_id, s, list_slice(rv, s * 16 + 1, s * 16 + 16) AS sub " +
         "FROM rs, ss), " +
         "cb AS (SELECT vec_id AS c_id, s, list_slice(rv, s * 16 + 1, s * 16 + 16) AS ce " +
-        "FROM rs, ss WHERE vec_id < 8), " +
-        "p AS (SELECT v.vec_id, v.s, c.c_id, " +
-        "list_dot_product(v.sub, v.sub) - 2.0 * list_dot_product(v.sub, c.ce) " +
-        "+ list_dot_product(c.ce, c.ce) AS d2 FROM sb v JOIN cb c ON v.s = c.s), " +
-        "r AS (SELECT vec_id, s, c_id, d2, row_number() OVER (PARTITION BY vec_id, s " +
-        "ORDER BY d2, c_id) AS rn FROM p), " +
-        "g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_subs, " +
-        "CAST(sum(c_id * (1::BIGINT << (3 * s))) AS BIGINT) AS code_word, " +
-        s"CAST(sum(${TextOps.roundBpSql("d2")}) AS BIGINT) AS l2sq_err_bp " +
-        "FROM r WHERE rn = 1 GROUP BY vec_id) " +
+        s"FROM rs, ss WHERE vec_id < 8), ${duckPqEncodeCtes("sb")}, g AS ($duckPqCodeSelect) " +
         "SELECT g.vec_id, hm.cell_id, g.n_subs, g.code_word, g.l2sq_err_bp " +
         "FROM g JOIN hm USING (vec_id) ORDER BY vec_id"),
     // mirrors SimOps.ivfPqTopK: coarse probe (q_sim_ivf chain) + refined PQ
     // codes + per-query ADC tables + bp-summed approximate scores +
     // 32-deep exact-cosine rerank
-    "q_sim_ivfpq" -> duckIvfPqSql(
-      "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-        "WHERE vec_id BETWEEN 100 AND 115)"),
+    "q_sim_ivfpq" -> duckIvfPqSql(duckFixtureCellCte),
     // the full production composition: the same chain with the coarse
     // quantizer Lloyd-refined first (q_sim_ivf_kmeans's refinement CTEs)
     "q_sim_ivfpq_kmeans" -> duckIvfPqSql(duckKmeansCoarseCtes),
@@ -4866,26 +4668,18 @@ object SparkEntry {
     // exact-cosine top-10 scored against the brute-force top-10 (zero-hit
     // sweep rows preserved by the left join)
     "q_recall_audit_ivfpq" ->
-      (duckIvfPqScoreCtes(
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-          "WHERE vec_id BETWEEN 100 AND 115)") + ", " +
+      (duckIvfPqScoreCtes(duckFixtureCellCte) + ", " +
         "sw AS (SELECT unnest([8, 32]) AS shortlist), " +
         "slr AS (SELECT *, row_number() OVER (PARTITION BY q_id " +
         "ORDER BY adc_bp DESC, vec_id) AS srn FROM sc), " +
         "sl AS (SELECT sw.shortlist, slr.q_id, slr.vec_id FROM slr, sw " +
         "WHERE slr.srn <= sw.shortlist), " +
-        "qv AS (SELECT vec_id AS q_id, e AS qe, nrm AS qn2 FROM n WHERE vec_id < 5), " +
         "pp AS (SELECT sl.shortlist, sl.q_id, sl.vec_id, " +
-        "list_dot_product(qv.qe, n.e) / (qv.qn2 * n.nrm) AS cos " +
-        "FROM sl JOIN n USING (vec_id) JOIN qv ON qv.q_id = sl.q_id), " +
+        "list_dot_product(q.qe, n.e) / (q.qn * n.nrm) AS cos " +
+        "FROM sl JOIN n USING (vec_id) JOIN q ON q.q_id = sl.q_id), " +
         "it AS (SELECT shortlist, q_id, vec_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY shortlist, q_id ORDER BY cos DESC, vec_id) AS rnk FROM pp) " +
-        "WHERE rnk <= 10), " +
-        "bpq AS (SELECT q.q_id, m.vec_id, " +
-        "list_dot_product(q.qe, m.e) / (q.qn2 * m.nrm) AS cos " +
-        "FROM qv q JOIN n m ON m.vec_id <> q.q_id), " +
-        "bt AS (SELECT q_id, vec_id FROM (SELECT *, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY cos DESC, vec_id) AS rnk FROM bpq) WHERE rnk <= 10), " +
+        s"WHERE rnk <= 10), $duckBruteTruthCtes, " +
         "h AS (SELECT it.shortlist, CAST(count(*) AS BIGINT) AS n_hits FROM it " +
         "JOIN bt ON it.q_id = bt.q_id AND it.vec_id = bt.vec_id GROUP BY it.shortlist) " +
         "SELECT sw.shortlist, coalesce(h.n_hits, 0) AS n_hits, " +
@@ -4941,68 +4735,23 @@ object SparkEntry {
     // (hash60(id) % max(4, ceil(sqrt(count))) == 0), coarse assignment,
     // then a within-cell self-join ranked per source vector
     "q_knn_graph" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-        s"WHERE ${SimOps.sqrtCentroidPredSql("embeddings")}), " +
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-        "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-        "list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS cos " +
-        "FROM asg a JOIN asg b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id), " +
-        "r AS (SELECT id_a, id_b, cos, row_number() OVER (PARTITION BY id_a " +
-        "ORDER BY cos DESC, id_b) AS rank FROM p) " +
-        s"SELECT id_a, rank, id_b, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-        "FROM r WHERE rank <= 3 ORDER BY id_a, rank"),
+      (s"WITH ${duckNormCte("n", "embeddings")}, " +
+        s"${duckSeedCte("c", "n", SimOps.sqrtCentroidPredSql("embeddings"))}, " +
+        s"$duckFlatAssignCtes, ${duckKnnPairsCte("asg")}, ${duckKnnTopSql("p")}"),
     // mirrors SimOps.hardNegatives over plantedVectors: the q_knn_graph
     // chain on the planted corpus, pairs band-filtered to the bp-rounded
     // cosine < 9900 (semDedup's near-dup rule) before ranking
     "q_hard_negatives" ->
-      ("WITH base AS (SELECT vec_id, embedding FROM embeddings " +
-        s"UNION ALL SELECT vec_id + ${DedupOps.plantStepSql("embeddings", "vec_id")} " +
-        "AS vec_id, embedding " +
-        "FROM embeddings WHERE vec_id % 100 = 0), " +
-        "n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm " +
-        "FROM base), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-        s"WHERE ${SimOps.sqrtCentroidPredSql("base")}), " +
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-        "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-        "list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS cos " +
-        "FROM asg a JOIN asg b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id), " +
-        s"f AS (SELECT * FROM p WHERE ${TextOps.roundBpSql("cos")} < 9900), " +
-        "r AS (SELECT id_a, id_b, cos, row_number() OVER (PARTITION BY id_a " +
-        "ORDER BY cos DESC, id_b) AS rank FROM f) " +
-        s"SELECT id_a, rank, id_b, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-        "FROM r WHERE rank <= 3 ORDER BY id_a, rank"),
+      (s"WITH base AS (${duckPlantedVectors("embedding")}), ${duckNormCte("n", "base")}, " +
+        s"${duckSeedCte("c", "n", SimOps.sqrtCentroidPredSql("base"))}, " +
+        s"$duckFlatAssignCtes, ${duckKnnPairsCte("asg")}, " +
+        s"f AS (SELECT * FROM p WHERE ${TextOps.roundBpSql("cos")} < 9900), ${duckKnnTopSql("f")}"),
     // mirrors q_hard_negatives_text: the recall audits' anchor-postings
     // exact-Jaccard chain (anchd/ashx/shx/cidx), scored per candidate,
     // band-filtered below the q_dedup_verified >= 8000 bp rule, ranked
     // per anchor
     "q_hard_negatives_text" ->
-      (s"WITH corpus AS ($duckCorpus), " +
-        s"t AS (SELECT doc_id, $duckToks AS t FROM corpus), " +
-        s"sl AS (SELECT doc_id, list_distinct($duckShingles3) AS shs FROM t), " +
-        "anchd AS (SELECT doc_id AS a_id, shs AS a_shs FROM sl " +
-        s"WHERE ${DedupOps.anchorPredSql("doc_id", "corpus")}), " +
-        "ashx AS (SELECT a_id, unnest(a_shs) AS sx FROM anchd), " +
-        "shx AS (SELECT doc_id, unnest(shs) AS sx FROM sl), " +
-        "cidx AS (SELECT DISTINCT ashx.a_id, shx.doc_id FROM ashx " +
-        "JOIN shx ON ashx.sx = shx.sx AND shx.doc_id <> ashx.a_id), " +
-        "scd AS (SELECT cidx.a_id, cidx.doc_id, " +
-        s"${TextOps.roundBpSql(
-          "CAST(len(list_filter(anchd.a_shs, e -> list_contains(sl.shs, e))) AS DOUBLE) / " +
-            "CAST(len(list_distinct(list_concat(anchd.a_shs, sl.shs))) AS DOUBLE)")} AS jac_bp " +
-        "FROM cidx JOIN anchd ON cidx.a_id = anchd.a_id " +
-        "JOIN sl ON sl.doc_id = cidx.doc_id), " +
+      (s"WITH corpus AS ($duckCorpus), $duckShingleSetCtes, $duckAnchorPostingsCtes, " +
         "r AS (SELECT a_id, doc_id, jac_bp, row_number() OVER (PARTITION BY a_id " +
         "ORDER BY jac_bp DESC, doc_id) AS rank FROM scd WHERE jac_bp < 8000) " +
         "SELECT a_id, rank, doc_id, jac_bp FROM r WHERE rank <= 3 " +
@@ -5010,23 +4759,10 @@ object SparkEntry {
     // mirrors q_knn_graph_probe2: the SOURCE side takes its 2 nearest
     // cells (crn <= 2), candidates stay in their home cell (crn = 1)
     "q_knn_graph_probe2" ->
-      ("WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e, " +
-        "sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm FROM embeddings), " +
-        "c AS (SELECT vec_id AS c_id, e AS ce, nrm AS cn FROM n " +
-        s"WHERE ${SimOps.sqrtCentroidPredSql("embeddings")}), " +
-        "cs AS (SELECT n.vec_id, n.e, n.nrm, c.c_id, " +
-        "list_dot_product(n.e, c.ce) / (n.nrm * c.cn) AS csim FROM n CROSS JOIN c), " +
-        "rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY csim DESC, c_id) AS crn FROM cs), " +
-        "asg AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn = 1), " +
-        "pr AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn <= 2), " +
-        "p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-        "list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS cos " +
-        "FROM pr a JOIN asg b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id), " +
-        "r AS (SELECT id_a, id_b, cos, row_number() OVER (PARTITION BY id_a " +
-        "ORDER BY cos DESC, id_b) AS rank FROM p) " +
-        s"SELECT id_a, rank, id_b, ${TextOps.roundBpSql("cos")} AS cos_bp " +
-        "FROM r WHERE rank <= 3 ORDER BY id_a, rank"),
+      (s"WITH ${duckNormCte("n", "embeddings")}, " +
+        s"${duckSeedCte("c", "n", SimOps.sqrtCentroidPredSql("embeddings"))}, " +
+        s"$duckFlatAssignCtes, pr AS (SELECT vec_id, e, nrm, c_id FROM rk WHERE crn <= 2), " +
+        s"${duckKnnPairsCte("pr")}, ${duckKnnTopSql("p")}"),
     // mirrors SimOps.knnGraphHier: every per-th centroid (by c_id rank,
     // per = max(2, ceil(sqrt(nlist)))) is a supercenter; centroids argmax
     // into supercells; vectors argmax over supercenters then over ONLY
@@ -5103,10 +4839,7 @@ object SparkEntry {
     // mirrors TextOps.bpeEncode: trained state s3 -> word segment counts,
     // doc token stream joined against them
     "q_bpe_encode" ->
-      (duckBpeCtes(3) + ", " +
-        "wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS wlen FROM s3), " +
-        s"dk AS (SELECT doc_id, unnest($duckToks) AS word FROM documents) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, " +
+      (s"$duckBpeWordCtes SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, " +
         "CAST(sum(wlen) AS BIGINT) AS n_bpe_tokens " +
         "FROM dk JOIN wl USING (word) GROUP BY doc_id ORDER BY doc_id"),
     // mirrors GraphOps.pageRank (3 rounds, top-20, integer mass updates)
@@ -5488,14 +5221,11 @@ object SparkEntry {
         "greatest(CAST(1 AS BIGINT), (est_bytes + 16383) // 16384) AS n_files FROM g) " +
         "SELECT source, n_rows, est_bytes, n_files, " +
         "(n_rows + n_files - 1) // n_files AS rows_per_file FROM f ORDER BY source"),
-    // mirrors q_ivm_agg: the oracle aggregates the WHOLE table from
-    // scratch — equality proves the split+merge maintained the view
     // mirrors q_ivm_join: from-scratch join of the FULL tables — equality
     // proves the delta-join maintenance reproduced the recompute exactly
-    "q_ivm_join" ->
-      ("SELECT o_orderkey, c_custkey, c_name, o_totalprice AS price " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey " +
-        "ORDER BY o_orderkey"),
+    "q_ivm_join" -> duckOrderCustomerSql,
+    // mirrors q_ivm_agg: the oracle aggregates the WHOLE table from
+    // scratch — equality proves the split+merge maintained the view
     "q_ivm_agg" ->
       ("SELECT event_type, CAST(count(*) AS BIGINT) AS n_events, " +
         s"CAST(sum(${TextOps.roundBpSql("value")}) AS BIGINT) AS value_bp " +
@@ -5573,51 +5303,15 @@ object SparkEntry {
     // affected-cluster restriction) keyed on vector ids
     "q_embed_forget" ->
       (s"WITH RECURSIVE $duckNearDupCtes, " +
-        "tb AS (SELECT DISTINCT vec_id AS did FROM embeddings WHERE vec_id % 100 = 0), " +
-        "fe AS (SELECT id_a AS src, id_b AS dst FROM vp2 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp2), " +
-        "fnodes AS (SELECT DISTINCT src AS id FROM fe), " +
-        "freach AS (SELECT id, id AS lab FROM fnodes " +
-        "UNION SELECT fe.src AS id, freach.lab FROM fe JOIN freach ON fe.dst = freach.id), " +
-        "fcl AS (SELECT id AS vid, min(lab) AS cluster_id FROM freach GROUP BY id), " +
-        "vp3 AS (SELECT id_a, id_b FROM vp2 " +
-        "WHERE id_a NOT IN (SELECT did FROM tb) " +
-        "AND id_b NOT IN (SELECT did FROM tb)), " +
-        "fe2 AS (SELECT id_a AS src, id_b AS dst FROM vp3 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp3), " +
-        "fnodes2 AS (SELECT DISTINCT src AS id FROM fe2), " +
-        "freach2 AS (SELECT id, id AS lab FROM fnodes2 " +
-        "UNION SELECT fe2.src AS id, freach2.lab FROM fe2 JOIN freach2 ON fe2.dst = freach2.id), " +
-        "fcl2 AS (SELECT id AS vid, min(lab) AS nc FROM freach2 GROUP BY id), " +
-        "faff AS (SELECT DISTINCT cluster_id FROM fcl WHERE vid IN (SELECT did FROM tb)) " +
-        "SELECT fcl.vid AS vec_id, fcl.cluster_id AS old_cluster, " +
-        "coalesce(fcl2.nc, fcl.vid) AS new_cluster, " +
-        "CAST(CASE WHEN coalesce(fcl2.nc, fcl.vid) <> fcl.cluster_id " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS rep_changed, " +
-        "CAST(CASE WHEN fcl2.nc IS NULL THEN 1 ELSE 0 END AS BIGINT) AS now_singleton " +
-        "FROM fcl LEFT JOIN fcl2 USING (vid) " +
-        "WHERE fcl.cluster_id IN (SELECT cluster_id FROM faff) " +
-        "AND fcl.vid NOT IN (SELECT did FROM tb) ORDER BY vec_id"),
+        "tb AS (SELECT DISTINCT vec_id AS doc_id FROM embeddings WHERE vec_id % 100 = 0), " +
+        s"${duckForgetCtes("vp2", "tb")} " +
+        s"SELECT doc_id AS vec_id, $duckForgetCols FROM out ORDER BY vec_id"),
     // mirrors SimOps.nearDupRecallAudit: ~64 hash-chosen anchor reps
     // scored exactly against every rep (truth), the rp2 bucket pairing's
     // anchor-touching pairs divided in (found)
     "q_recall_audit_neardup" ->
-      (s"WITH $duckNearDupCtes, " +
-        "anch AS (SELECT vec_id AS a_id, e AS ae, nrm AS an FROM nrep " +
-        s"WHERE ${DedupOps.anchorPredSql("vec_id", "nrep")}), " +
-        "tp AS (SELECT DISTINCT least(n.vec_id, a.a_id) AS pa, " +
-        "greatest(n.vec_id, a.a_id) AS pb FROM nrep n CROSS JOIN anch a " +
-        "WHERE n.vec_id <> a.a_id AND " +
-        s"${TextOps.roundBpSql("list_dot_product(n.e, a.ae) / (n.nrm * a.an)")} >= 4000), " +
-        "fa AS (SELECT DISTINCT ra AS pa, rb AS pb FROM rp2 JOIN anch " +
-        "ON rp2.ra = anch.a_id OR rp2.rb = anch.a_id) " +
-        "SELECT (SELECT count(*) FROM anch) AS n_anchors, " +
-        "(SELECT count(*) FROM tp) AS n_truth, " +
-        "(SELECT count(*) FROM fa) AS n_found, " +
-        "CASE WHEN (SELECT count(*) FROM tp) > 0 THEN " +
-        TextOps.floorDivSql("(SELECT count(*) FROM fa) * 10000",
-          "(SELECT count(*) FROM tp)") +
-        " ELSE 10000 END AS recall_bp"),
+      (s"WITH $duckNearDupCtes, ${duckVecAnchorCtes("nrep", "rp2", 4000)} " +
+        duckRecallSql("anch", "fa")),
     // mirrors SimOps.nearDupPairsMulti at the DERIVED configuration:
     // floor(dim / nbits) tables of nbits bits over disjoint dim blocks,
     // per-(t, bucket) participation cap, pair dedup on (ra, rb, cos_bp),
@@ -5637,8 +5331,7 @@ object SparkEntry {
         "OVER (PARTITION BY t, bval ORDER BY vec_id) AS rk FROM mk) " +
         s"WHERE rk <= ${DedupOps.DefaultMaxBucket}), " +
         "rpm AS (SELECT DISTINCT ra, rb, cos_bp FROM (SELECT a.vec_id AS ra, " +
-        "b.vec_id AS rb, " +
-        s"${TextOps.roundBpSql("list_dot_product(a.e, b.e) / (a.nrm * b.nrm)")} AS cos_bp " +
+        s"b.vec_id AS rb, $duckPairCosBp AS cos_bp " +
         "FROM mcap a JOIN mcap b ON a.t = b.t AND a.bval = b.bval " +
         "AND a.vec_id < b.vec_id) WHERE cos_bp >= 4000), " +
         "crossm AS (SELECT least(ma.vec_id, mb.vec_id) AS id_a, " +
@@ -5650,12 +5343,7 @@ object SparkEntry {
     // mirrors q_embed_clusters: the near-dup pair CTE closed under the
     // recursive min-label reachability (the q_media_clusters pattern)
     "q_embed_clusters" ->
-      (s"WITH RECURSIVE $duckNearDupCtes, " +
-        "eg AS (SELECT id_a AS src, id_b AS dst FROM vp2 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp2), " +
-        "ndz AS (SELECT DISTINCT src AS id FROM eg), " +
-        "reach AS (SELECT id, id AS lab FROM ndz " +
-        "UNION SELECT eg.src AS id, reach.lab FROM eg JOIN reach ON eg.dst = reach.id) " +
+      (s"WITH RECURSIVE $duckNearDupCtes, ${duckReachCtes("vp2")} " +
         "SELECT id AS vec_id, min(lab) AS cluster_id FROM reach " +
         "GROUP BY id ORDER BY vec_id"),
     // mirrors q_embed_keep_best / SimOps.clusterKeepBest: the cluster CTE
@@ -5664,12 +5352,7 @@ object SparkEntry {
     // refineCentroids rule), cosine of every member against its cluster
     // mean, and the per-cluster argmax (cos DESC, vec_id)
     "q_embed_keep_best" ->
-      (s"WITH RECURSIVE $duckNearDupCtes, " +
-        "eg AS (SELECT id_a AS src, id_b AS dst FROM vp2 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM vp2), " +
-        "ndz AS (SELECT DISTINCT src AS id FROM eg), " +
-        "reach AS (SELECT id, id AS lab FROM ndz " +
-        "UNION SELECT eg.src AS id, reach.lab FROM eg JOIN reach ON eg.dst = reach.id), " +
+      (s"WITH RECURSIVE $duckNearDupCtes, ${duckReachCtes("vp2")}, " +
         "cl AS (SELECT id AS vec_id, min(lab) AS cluster_id FROM reach GROUP BY id), " +
         "mv AS (SELECT cl.cluster_id, cl.vec_id, b.embedding::DOUBLE[] AS e " +
         "FROM cl JOIN base b USING (vec_id)), " +
@@ -5859,12 +5542,7 @@ object SparkEntry {
     // mirrors q_media_clusters: the same phash pair CTE closed under the
     // recursive min-label reachability (the q_dedup_clusters pattern)
     "q_media_clusters" ->
-      (s"WITH RECURSIVE $duckPhashCtes, " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM pp " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM pp), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id, id AS lab FROM nodes " +
-        "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id) " +
+      (s"WITH RECURSIVE $duckPhashCtes, ${duckReachCtes("pp")} " +
         "SELECT id AS media_id, min(lab) AS cluster_id FROM reach " +
         "GROUP BY id ORDER BY media_id"),
     // mirrors q_media_forget: the phash pair CTE + the q_dedup_forget
@@ -5872,31 +5550,9 @@ object SparkEntry {
     // affected-cluster restriction) keyed on media ids
     "q_media_forget" ->
       (s"WITH RECURSIVE $duckPhashCtes, " +
-        "tb AS (SELECT DISTINCT media_id AS did FROM m WHERE media_id % 13 = 3), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM pp " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM pp), " +
-        "nodes AS (SELECT DISTINCT src AS id FROM e), " +
-        "reach AS (SELECT id, id AS lab FROM nodes " +
-        "UNION SELECT e.src AS id, reach.lab FROM e JOIN reach ON e.dst = reach.id), " +
-        "cl AS (SELECT id AS mid, min(lab) AS cluster_id FROM reach GROUP BY id), " +
-        "pp2 AS (SELECT id_a, id_b FROM pp " +
-        "WHERE id_a NOT IN (SELECT did FROM tb) " +
-        "AND id_b NOT IN (SELECT did FROM tb)), " +
-        "e2 AS (SELECT id_a AS src, id_b AS dst FROM pp2 " +
-        "UNION SELECT id_b AS src, id_a AS dst FROM pp2), " +
-        "nodes2 AS (SELECT DISTINCT src AS id FROM e2), " +
-        "reach2 AS (SELECT id, id AS lab FROM nodes2 " +
-        "UNION SELECT e2.src AS id, reach2.lab FROM e2 JOIN reach2 ON e2.dst = reach2.id), " +
-        "cl2 AS (SELECT id AS mid, min(lab) AS nc FROM reach2 GROUP BY id), " +
-        "aff AS (SELECT DISTINCT cluster_id FROM cl WHERE mid IN (SELECT did FROM tb)) " +
-        "SELECT cl.mid AS media_id, cl.cluster_id AS old_cluster, " +
-        "coalesce(cl2.nc, cl.mid) AS new_cluster, " +
-        "CAST(CASE WHEN coalesce(cl2.nc, cl.mid) <> cl.cluster_id " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS rep_changed, " +
-        "CAST(CASE WHEN cl2.nc IS NULL THEN 1 ELSE 0 END AS BIGINT) AS now_singleton " +
-        "FROM cl LEFT JOIN cl2 USING (mid) " +
-        "WHERE cl.cluster_id IN (SELECT cluster_id FROM aff) " +
-        "AND cl.mid NOT IN (SELECT did FROM tb) ORDER BY media_id"),
+        "tb AS (SELECT DISTINCT media_id AS doc_id FROM m WHERE media_id % 13 = 3), " +
+        s"${duckForgetCtes("pp", "tb")} " +
+        s"SELECT doc_id AS media_id, $duckForgetCols FROM out ORDER BY media_id"),
     // mirrors MultimodalOps.cdcChunks + cdcDuplicateChunks on the planted
     // dedup corpus: the oracle replays the rolling 4-byte window hash
     // (b0*27+b1*9+b2*3+b3 ≡ 0 mod 32, interior cuts only) over the SAME
@@ -5999,15 +5655,7 @@ object SparkEntry {
         "ORDER BY bucket, event_type"),
     // mirrors EventOps.ewmaHourly (span 8, power-of-two weights, bp longs)
     "q_events_ewma" -> EventOps.ewmaHourlySql(),
-    "q_events_sessions" ->
-      ("WITH e AS (SELECT user_id, epoch_us(ts) AS us, " +
-        "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev " +
-        "FROM events), " +
-        "s AS (SELECT user_id, CASE WHEN prev IS NULL OR us - prev > 1800000000 " +
-        "THEN 1 ELSE 0 END AS is_new FROM e) " +
-        "SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, " +
-        "CAST(count(*) AS BIGINT) AS n_events " +
-        "FROM s GROUP BY user_id ORDER BY user_id"),
+    "q_events_sessions" -> duckSessionsSql,
     // mirrors EventOps.runningStats: bp-quantized integer running sums
     // (window sum association differs between engines on doubles)
     "q_events_running" -> {
@@ -6023,15 +5671,7 @@ object SparkEntry {
     },
     // session_window merges touching windows — boundary-identical to the
     // lag formulation, so the oracle is q_events_sessions' SQL verbatim
-    "q_events_sessions_native" ->
-      ("WITH e AS (SELECT user_id, epoch_us(ts) AS us, " +
-        "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev " +
-        "FROM events), " +
-        "s AS (SELECT user_id, CASE WHEN prev IS NULL OR us - prev > 1800000000 " +
-        "THEN 1 ELSE 0 END AS is_new FROM e) " +
-        "SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, " +
-        "CAST(count(*) AS BIGINT) AS n_events " +
-        "FROM s GROUP BY user_id ORDER BY user_id"),
+    "q_events_sessions_native" -> duckSessionsSql,
     // each event lands in 2 windows (width 3600s, slide 1800s): starts
     // floor(t/1800)*1800 and that minus 1800
     "q_events_sliding" ->

@@ -178,22 +178,36 @@ object TextOps {
     "es" -> Seq("el", "la", "de", "que", "los", "es", "una"),
     "fr" -> Seq("le", "les", "des", "et", "est", "une", "dans"))
 
+  /** Every language's markers, distinct and sorted: the stopword list of
+    * [[gopherQuality]] and [[qualityScore]].
+    */
+  val stopwords: Seq[String] = langMarkers.flatMap(_._2).distinct.sorted
+
+  /** The language-ID rule over token array `toks`: one `score_<lang>`
+    * column per `langMarkers` entry (its marker-token hits), and the ladder
+    * over those columns that predicts the first language (in `langMarkers`
+    * order) whose score equals the max, or "unknown" when no marker hits.
+    * The ladder reads the score columns by name, so it goes in a select
+    * after the one that projects them.
+    */
+  private def langLadder(toks: Column): (Seq[Column], Column) = {
+    val scores = langMarkers.map { case (lang, ws) =>
+      size(filter(toks, t => t.isInCollection(ws))).as(s"score_$lang")
+    }
+    val maxScore = greatest(langMarkers.map { case (lang, _) => col(s"score_$lang") }: _*)
+    val ladder = langMarkers.reverse.foldLeft(lit("unknown")) { case (els, (lang, _)) =>
+      when(maxScore > 0 && col(s"score_$lang") === maxScore, lit(lang)).otherwise(els)
+    }
+    (scores, ladder)
+  }
+
   /** N-gram/stopword language-ID heuristic: score each language by marker-
     * token hits; predict the first language (in `langMarkers` order) whose
     * score equals the max, or "unknown" when no marker hits at all.
     */
   def langId(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = tokens(col(textCol))
-    val withScores = docs.select(
-      (col(idCol) +: langMarkers.map { case (lang, ws) =>
-        size(filter(toks, t => t.isInCollection(ws))).as(s"score_$lang")
-      }): _*)
-    val maxScore = greatest(langMarkers.map { case (lang, _) => col(s"score_$lang") }: _*)
-    // CASE ladder in declaration order: first max-scoring language wins
-    val ladder = langMarkers.reverse.foldLeft(lit("unknown")) { case (els, (lang, _)) =>
-      when(maxScore > 0 && col(s"score_$lang") === maxScore, lit(lang)).otherwise(els)
-    }
-    withScores
+    val (scores, ladder) = langLadder(tokens(col(textCol)))
+    docs.select((col(idCol) +: scores): _*)
       .select(col(idCol), ladder.as("lang_pred"))
       .orderBy(col(idCol))
   }
@@ -210,16 +224,8 @@ object TextOps {
     */
   def langConfusion(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    val toks = tokens(col(textCol))
-    val withScores = docs.select(
-      (col(langCol).as("lang_actual") +: langMarkers.map { case (lang, ws) =>
-        size(filter(toks, t => t.isInCollection(ws))).as(s"score_$lang")
-      }): _*)
-    val maxScore = greatest(langMarkers.map { case (lang, _) => col(s"score_$lang") }: _*)
-    val ladder = langMarkers.reverse.foldLeft(lit("unknown")) { case (els, (lang, _)) =>
-      when(maxScore > 0 && col(s"score_$lang") === maxScore, lit(lang)).otherwise(els)
-    }
-    withScores
+    val (scores, ladder) = langLadder(tokens(col(textCol)))
+    docs.select((col(langCol).as("lang_actual") +: scores): _*)
       .select(col("lang_actual"), ladder.as("lang_pred"))
       .groupBy(col("lang_actual"), col("lang_pred"))
       .agg(count(lit(1)).as("n_docs"))
@@ -330,7 +336,6 @@ object TextOps {
     * once per occurrence — measured 12 s at sf0.1 vs ~2.5 s for this form.
     */
   def gopherQuality(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val allStops = langMarkers.flatMap(_._2).distinct.sorted
     // token scalars (docs with zero tokens drop out, matching the
     // len(t) > 0 oracle filter)
     val scalars = docs
@@ -343,7 +348,7 @@ object TextOps {
         sum(length(col("tok"))).cast("long").as("sum_tok_chars"),
         count_if(col("tok").rlike("[a-z]")).as("n_alpha"),
         count_if(col("tok").rlike("[^a-z0-9]")).as("n_sym"),
-        count_if(col("tok").isInCollection(allStops)).as("n_stop"))
+        count_if(col("tok").isInCollection(stopwords)).as("n_stop"))
     // (doc, n-gram g) occurrence counts `cnt`, and their per-doc total and
     // distinct count
     def gramCounts(n: Int): DataFrame = docs
@@ -1404,11 +1409,10 @@ object TextOps {
     * across engines.
     */
   def qualityScore(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val allStops = langMarkers.flatMap(_._2).distinct.sorted
     val toks = tokens(col(textCol))
     val n = size(toks).cast("double")
     val distinctRatio = size(array_distinct(toks)).cast("double") / n
-    val stopRatio = size(filter(toks, t => t.isInCollection(allStops))).cast("double") / n
+    val stopRatio = size(filter(toks, t => t.isInCollection(stopwords))).cast("double") / n
     val lenTerm = least(n / lit(100.0), lit(1.0))
     docs
       .filter(size(toks) > 0)

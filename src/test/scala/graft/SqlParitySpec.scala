@@ -63,6 +63,15 @@ class SqlParitySpec extends SparkSpec {
     assert(nonEmpty >= 8, s"only $nonEmpty parity queries had rows at sf0.001")
   }
 
+  test("every declared query has an oracle and every oracle a declared query") {
+    val (declared, oracles) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
+    val noOracle = (declared -- oracles).toSeq.sorted
+    val noQuery = (oracles -- declared).toSeq.sorted
+    assert(noOracle.isEmpty && noQuery.isEmpty,
+      s"declared with no oracle: ${noOracle.mkString(", ")}; " +
+        s"oracle with no declared query: ${noQuery.mkString(", ")}")
+  }
+
   test("SQL text path optimizes like the DataFrame path: filters still pushed") {
     tables.foreach(t =>
       spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t))
