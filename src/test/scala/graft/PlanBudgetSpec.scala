@@ -239,7 +239,9 @@ class PlanBudgetSpec extends SparkSpec {
     "q_quality" -> Pin(1, 1, 0, 0),
     "q_quality_linreg" -> Pin(1, 0, 0, 0),
     "q_dedup_keep_best" -> Pin(3, 3, 0, 1),
-    "q_sample_weighted" -> Pin(1, 1, 0, 0))
+    "q_sample_weighted" -> Pin(1, 1, 0, 0),
+    // the semdedup audit over the plant plus its doubled near-duplicates
+    "q_recall_audit_semdedup" -> Pin(9, 7, 8, 8))
 
   private lazy val surface: Surface = {
     // another suite's cached frame would swap InMemoryRelation in for
